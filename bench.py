@@ -504,7 +504,7 @@ def main() -> None:
         pass  # first run / unreadable previous table: nothing to diff
 
     # Reproduce-or-retract (see confirm_regressions): each flagged
-    # query is re-run up to 2× in-process — warm, GC barrier, same
+    # query is re-run 3× in-process — warm, GC barrier, same
     # eager-build rule and scan config as the main pass (the extract
     # section restored maxPartitionBytes above).  Retracted flags move
     # to ambient_spikes and their table entry is repaired to the MEDIAN
@@ -519,7 +519,7 @@ def main() -> None:
             df = fn(spark, sf_dir)
             eager = _jobs() > j0
             samples: list[float] = []
-            for _ in range(2):
+            for _ in range(3):  # odd count: rerun_median is a true median
                 spark.sparkContext._jvm.System.gc()
                 t0 = time.time()
                 target = fn(spark, sf_dir) if eager else df

@@ -298,10 +298,14 @@ class Actuator:
           (params: ``table``, ``delta_dir``, ``n_buckets``; optional
           ``doclen_table`` + ``doclen_delta_dir`` fold the ranked-read
           doc-length stats in the same call);
-        - ``cdc``: retention ops on the generational snapshot store
-          (params: ``store_dir`` plus ``op``: ``purge_tombstones``
-          needs ``order_cols``/``horizon`` [+ ``op_col``]; ``retain``
-          needs ``retain_gens``).
+        - ``cdc``: retention ops on the generational snapshot store,
+          which folds its own per-batch deltas by the size-ratio
+          policy inside ``apply_cdc_batch`` (params: ``store_dir``
+          plus ``op``: ``purge_tombstones`` folds outstanding deltas,
+          then drops tombstones below the horizon, and needs
+          ``order_cols``/``horizon`` [+ ``op_col``]; ``retain`` needs
+          ``retain_gens`` and keeps every base and delta directory a
+          retained manifest references).
 
         ``mode`` (signature/ann/posting only): ``force`` (default)
         folds unconditionally; ``auto`` evaluates the size-ratio policy

@@ -14,7 +14,8 @@ Supported ``convertTo`` ops (reference semantics, SURVEY §1.3/§2.4):
 - ``map``     — map of JSON-string values → objects(worker.py:143-145)
 - ``timestamp`` — string → **epoch millis** (int); strptime format with
   default ``%Y-%m-%d %H:%M:%S.%f%z`` and ``Z``→``+0000`` normalization
-  (worker.py:146-148, app.py:307)
+  (worker.py:146-148, app.py:307).  A column that is already a
+  timestamp converts to its epoch millis directly (format ignored)
 - ``template:<expr>`` — expression over the row    (worker.py:149-150)
 - ``remove: true`` — drop column                   (worker.py:153-155)
 - ``renameTo``     — rename column                 (worker.py:110-121; we
@@ -297,7 +298,14 @@ def compile_table_spec(
             schema = cs.schema or _infer_json_schema(df, fname, "map")
             col = F.transform_values(col, _parse_json_value_fn(schema))
         elif conv == "timestamp":
-            col = _timestamp_to_epoch_millis(col, cs.timestamp_format)
+            if isinstance(df.schema[fname].dataType, (T.TimestampType, T.TimestampNTZType)):
+                # already a timestamp: the millis directly, not a
+                # format → strptime round trip (which fails on a
+                # whole-second value under ``.%f`` and on every row
+                # under the default ``%z``)
+                col = F.unix_millis(col.cast("timestamp"))
+            else:
+                col = _timestamp_to_epoch_millis(col, cs.timestamp_format)
         elif conv.startswith("template:"):
             col = _template_col(
                 df, conv[len("template:") :], spec.allow_python_templates

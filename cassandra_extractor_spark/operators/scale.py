@@ -16,7 +16,27 @@ enough:
 
 from __future__ import annotations
 
+import os
+import shutil
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
+
+
+def _warehouse_location(spark: SparkSession, table_name: str) -> str | None:
+    wh = spark.conf.get("spark.sql.warehouse.dir", "")
+    wh = wh[len("file:") :] if wh.startswith("file:") else wh
+    return os.path.join(wh, table_name.lower()) if wh else None
+
+
+def drop_managed_table(spark: SparkSession, table_name: str) -> None:
+    """Drop an (unqualified) managed table AND its warehouse directory,
+    also when this session's catalog has no such table.  Only for names
+    the caller owns: the catalog is per process, so another live
+    session's table of the same name looks exactly like an orphan."""
+    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
+    loc = _warehouse_location(spark, table_name)
+    if loc:
+        shutil.rmtree(loc, ignore_errors=True)
 
 
 def write_bucketed(
@@ -26,7 +46,22 @@ def write_bucketed(
     num_buckets: int = 32,
     sort_cols: list[str] | None = None,
 ) -> None:
-    """Persist as a bucketed (and optionally sorted) managed table."""
+    """Persist as a bucketed (and optionally sorted) managed table.
+
+    A location the catalog does not know and that holds no
+    ``_SUCCESS`` marker is what a run killed mid-write leaves behind;
+    it is removed first, else ``saveAsTable`` fails with
+    LOCATION_ALREADY_EXISTS.  A complete location is left alone (it may
+    be another live session's table) and the write still fails."""
+    spark = df.sparkSession
+    loc = _warehouse_location(spark, table_name)
+    if (
+        loc
+        and os.path.isdir(loc)
+        and not os.path.exists(os.path.join(loc, "_SUCCESS"))
+        and not spark.catalog.tableExists(table_name)
+    ):
+        shutil.rmtree(loc, ignore_errors=True)
     writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
     if sort_cols:
         writer = writer.sortBy(*sort_cols)

@@ -68,14 +68,17 @@ def _load_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _with_norm(e: DataFrame) -> DataFrame:
     """Norm-and-filter step shared by every cosine operator: attach the
-    L2 norm and drop zero-norm vectors (cosine is undefined for them —
-    0/0 → NaN, whose sort order is engine-specific; the embedding audit
-    is the gate that surfaces such rows).  A frame that already carries
+    L2 norm and drop zero-norm and NaN-norm vectors (cosine is undefined
+    for them — 0/0 → NaN, whose sort order is engine-specific; Spark
+    orders NaN above every number, so ``NaN > 0`` alone would keep a
+    vector with a NaN component; the embedding audit is the gate that
+    surfaces such rows).  A frame that already carries
     ``nrm`` (the session-shared ``shared_embeddings``) passes through
     untouched, so consumers never recompute the fold."""
     if "nrm" in e.columns:
         return e
-    return e.withColumn("nrm", norm(F.col("emb"))).where(F.col("nrm") > 0)
+    nrm = F.col("nrm")
+    return e.withColumn("nrm", norm(F.col("emb"))).where(~F.isnan(nrm) & (nrm > 0))
 
 
 def shared_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:

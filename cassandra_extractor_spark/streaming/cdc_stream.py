@@ -2,20 +2,36 @@
 ``cdc_apply`` (operators/relational.py, the MERGE-INTO shape): a
 change stream continuously maintains a latest-row-per-key snapshot.
 
-Architecture — BUCKETED generational store, the third member of the
-replay-safe store family (signature store: set-semantic, rollup store:
-partial-agg partitions, CDC store: keyed snapshot buckets):
+Architecture — BUCKETED generational store with per-batch deltas, the
+third member of the replay-safe store family (signature store:
+set-semantic, rollup store: partial-agg partitions, CDC store: keyed
+snapshot buckets), merged on read like the posting, signature and ANN
+stores:
 
-- the snapshot is hash-bucketed on the key (same discipline as the
-  persisted signature store, operators/dedup.py ``write_signature_store``);
-  each micro-batch merges ONLY the buckets its keys hash into and
-  writes them to a NEW immutable directory ``data/g<batch_id>/_b=<b>``
-  — write amplification is O(touched buckets), never O(|store|), and
-  nothing ever overwrites a directory a running plan is reading;
+- the base snapshot is hash-bucketed on the key (same discipline as
+  the persisted signature store, operators/dedup.py
+  ``write_signature_store``); each micro-batch is written, horizon
+  fenced but otherwise as it arrived, to a NEW immutable delta
+  directory ``data/s<seq>/_b=<b>``, named after the manifest seq that
+  will commit it (never a batch id: ids restart at 0 when a stream is
+  replayed from a lost checkpoint) — no store read, no shuffle,
+  write amplification ~1× the batch — and nothing ever overwrites a
+  directory a running plan is reading;
+- the size-ratio policy of ``streaming/maintenance.py`` (delta bytes
+  > 0.2 × base bytes, driver-side ``dir_bytes``) decides, before each
+  batch, whether to fold instead: last-writer-wins over base + deltas
+  + the batch, written as a new base generation in ONE exchange
+  (hash on ``_b``, window over ``(_b, key)``), deltas cleared;
+- reads (``read_cdc_view``) are a plain scan of the base when no delta
+  is outstanding, else the deltas' keys are broadcast: base rows of
+  other keys stream through an anti join, the touched ones (semi
+  join) meet the delta rows in a last-writer-wins — the base is
+  scanned twice but never shuffled, and the shuffled volume is the
+  deltas' (at most ~0.2× the base, which the fold threshold bounds);
 - visibility is an atomic MANIFEST commit: ``manifest/gen=<seq>.json``
-  (written tmp + ``os.replace``) maps every bucket to its current data
-  directory — touched buckets point at the new generation, untouched
-  buckets carry their existing directories forward untouched.  The
+  (written tmp + ``os.replace``) maps every bucket to its base data
+  directory (``buckets``) and to its outstanding delta directories
+  (``deltas``); a manifest without ``deltas`` reads as base only.  The
   current snapshot is the highest-seq manifest; a crash before the
   manifest commit leaves half-written data dirs UNREFERENCED and the
   previous snapshot intact (this is the format-free spelling of the
@@ -30,20 +46,24 @@ partial-agg partitions, CDC store: keyed snapshot buckets):
 - OUT-OF-ORDER safe across batches: the store retains ``order_cols``
   and tombstones (op='D' rows), so a late-arriving STALE change loses
   the per-key ordering against what the store already holds — a stale
-  update can never resurrect a deleted key;
+  update can never resurrect a deleted key.  Last-writer-wins is
+  associative, so merging base + deltas on read (or in a fold) elects
+  the same winner per key as merging each batch in turn would;
 - tombstones are retained until an explicit ``purge_tombstones``
   horizon: the purge records the horizon IN the manifest, and every
-  later merge drops incoming changes strictly below it — so a stale
-  update arriving after its fencing tombstone was purged is rejected
-  by the horizon contract instead of silently resurrecting the key;
+  later batch drops incoming changes strictly below it before they
+  are written — so a stale update arriving after its fencing
+  tombstone was purged is rejected by the horizon contract instead of
+  silently resurrecting the key.  The purge folds every delta first;
+  a stale update in a delta may be fenced only by a base tombstone;
 - old generations are cleaned best-effort after each commit
   (``retain_gens`` manifests kept; data dirs referenced by none of
   them are deleted).
 
-100 TB posture: per-trigger cost is one shuffle of the (small) batch
-plus a scan of the touched buckets only; bucket count is chosen so a
-bucket is a few GB (here a test-sized default).  Compaction of
-many-generation bucket lineages is the same new-dir + manifest swap.
+100 TB posture: a normal trigger costs one write of the (small)
+batch; a fold rewrites the whole store, so its cost amortizes over
+the ~threshold × |base| of change bytes between folds.  Bucket count
+is chosen so a bucket is a few GB (here a test-sized default).
 """
 
 from __future__ import annotations
@@ -51,14 +71,19 @@ from __future__ import annotations
 import json
 import os
 import shutil
+from functools import reduce
 from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from cassandra_extractor_spark.streaming.maintenance import dir_bytes, size_policy
 
-def _bucket_col(key: str, n_buckets: int) -> F.Column:
-    return F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+
+def _bucketed(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
+    return df.withColumn(
+        "_b", F.pmod(F.xxhash64(F.col(key)), F.lit(n_buckets)).cast("int")
+    )
 
 
 # ---------------------------------------------------------------- manifests
@@ -99,47 +124,90 @@ def _commit_manifest(store_dir: str, manifest: dict) -> None:
     os.replace(tmp, os.path.join(mdir, f"gen={manifest['seq']}.json"))
 
 
-def _bucket_paths(store_dir: str, manifest: dict, buckets=None) -> list[str]:
-    sel = manifest["buckets"]
-    if buckets is not None:
-        want = {str(b) for b in buckets}
-        sel = {b: p for b, p in sel.items() if b in want}
-    return [os.path.join(store_dir, "data", p) for p in sel.values()]
+def _rels(manifest: dict) -> tuple[list[str], list[str]]:
+    """(base paths, outstanding delta paths) of a manifest, relative to
+    ``data/``.  A manifest without ``deltas`` (written before the store
+    kept per-batch deltas) has none outstanding."""
+    deltas = [r for rels in manifest.get("deltas", {}).values() for r in rels]
+    return list(manifest["buckets"].values()), deltas
 
 
-def _read_buckets(
-    spark: SparkSession, store_dir: str, manifest: dict, buckets=None
-) -> DataFrame | None:
-    paths = _bucket_paths(store_dir, manifest, buckets)
+def _read_rels(spark: SparkSession, store_dir: str, rels: list[str]) -> DataFrame | None:
+    paths = [os.path.join(store_dir, "data", r) for r in rels]
     return spark.read.parquet(*paths) if paths else None
 
 
-def _read_current(spark: SparkSession, store_dir: str) -> DataFrame | None:
-    """Full current snapshot (all buckets of the highest manifest)."""
+def _rels_bytes(store_dir: str, rels: list[str]) -> int:
+    return sum(dir_bytes(os.path.join(store_dir, "data", r)) for r in rels)
+
+
+def _read_current(
+    spark: SparkSession, store_dir: str, op_col: str | None = None
+) -> DataFrame | None:
+    """Full current snapshot, tombstones included: a plain scan of the
+    base when no delta is outstanding, else ``_merge_deltas``."""
     m = _current_manifest(store_dir)
-    return _read_buckets(spark, store_dir, m) if m else None
-
-
-def _write_generation(
-    df: DataFrame, store_dir: str, gen_name: str, key: str, n_buckets: int
-) -> dict[str, str]:
-    """Write ``df`` bucketed by key under ``data/<gen_name>/_b=<b>`` and
-    return the bucket→relative-path map for the manifest.  The directory
-    is NEW per generation — never a path any reader references yet."""
-    out = os.path.join(store_dir, "data", gen_name)
-    (
-        df.withColumn("_b", _bucket_col(key, n_buckets))
-        # one bucket per shuffle partition → one file per bucket dir
-        .repartition(F.col("_b"))
-        .write.mode("overwrite")
-        .partitionBy("_b")
-        .parquet(out)
+    if m is None:
+        return None
+    base_rels, delta_rels = _rels(m)
+    base = _read_rels(spark, store_dir, base_rels)
+    if not delta_rels:
+        return base
+    return _merge_deltas(
+        base,
+        _read_rels(spark, store_dir, delta_rels),
+        m["key"],
+        m["order_cols"],
+        op_col or m.get("op_col", "op"),
+        m["payload_cols"],
     )
+
+
+def _merge_deltas(
+    base: DataFrame,
+    deltas: DataFrame,
+    key: str,
+    order_cols: Sequence[str],
+    op_col: str,
+    payload_cols: Sequence[str],
+) -> DataFrame:
+    """Last-writer-wins over base + deltas without shuffling the base:
+    the deltas' keys are broadcast, base rows of untouched keys pass
+    straight through (anti join), and only the touched ones (semi join)
+    meet the delta rows in a delta-sized last-writer-wins.  Same winners
+    as ``merge_cdc_batch`` over the union; the fold threshold keeps the
+    broadcast key set to about 0.2x the base."""
+    cols = [key, op_col, *order_cols, *payload_cols]
+    base, deltas = base.select(*cols), deltas.select(*cols)
+    keys = F.broadcast(deltas.select(F.col(key).alias("_k")))
+    hit = base[key].eqNullSafe(keys["_k"])
+    touched = base.join(keys, hit, "left_semi").unionByName(deltas)
+    return base.join(keys, hit, "left_anti").unionByName(
+        _latest(touched, key, order_cols, op_col, payload_cols)
+    )
+
+
+def _write_generation(df: DataFrame, store_dir: str, gen_name: str) -> dict[str, str]:
+    """Write ``df`` (carrying its bucket column ``_b``) under
+    ``data/<gen_name>/_b=<b>`` and return the bucket→relative-path map
+    for the manifest.  The directory is NEW per generation — never a
+    path any reader references yet."""
+    out = os.path.join(store_dir, "data", gen_name)
+    df.write.mode("overwrite").partitionBy("_b").parquet(out)
     return {
         d.split("=", 1)[1]: f"{gen_name}/{d}"
         for d in os.listdir(out)
         if d.startswith("_b=")
     }
+
+
+def _next_gen(cur: dict) -> str:
+    """Data directory for the generation the next manifest commits,
+    named after that manifest's seq.  No committed manifest can
+    reference it, so overwriting a leftover of a crashed attempt is
+    safe; a batch id is not, since ids restart at 0 when a stream is
+    replayed from a lost checkpoint."""
+    return f"s{cur['seq'] + 1}"
 
 
 def _cleanup(store_dir: str, retain_gens: int) -> tuple[int, int]:
@@ -154,8 +222,8 @@ def _cleanup(store_dir: str, retain_gens: int) -> tuple[int, int]:
     kept = _manifest_seqs(store_dir)
     referenced = set()
     for s in kept:
-        for rel in _read_manifest(store_dir, s)["buckets"].values():
-            referenced.add(rel.split("/", 1)[0])
+        for rels in _rels(_read_manifest(store_dir, s)):
+            referenced.update(rel.split("/", 1)[0] for rel in rels)
     removed_dirs = 0
     data_dir = os.path.join(store_dir, "data")
     if os.path.isdir(data_dir):
@@ -209,16 +277,24 @@ def init_cdc_store(
             f"columns ({list(order_cols)!r}) set to sentinel values older "
             "than any arriving change"
         )
-    buckets = _write_generation(base, store_dir, "g-1", key, n_buckets)
+    buckets = _write_generation(
+        _bucketed(base, key, n_buckets).repartition("_b"), store_dir, "g-1"
+    )
     _commit_manifest(
         store_dir,
         {
             "seq": 0,
             "batch_id": None,
             "key": key,
+            "op_col": op_col,
+            "order_cols": list(order_cols),
+            "payload_cols": [
+                c for c in base.columns if c not in (key, op_col, *order_cols)
+            ],
             "n_buckets": n_buckets,
             "horizon": None,
             "buckets": buckets,
+            "deltas": {},
         },
     )
 
@@ -257,24 +333,76 @@ def merge_cdc_batch(
     strictly below it are dropped — the fence that replaces purged
     tombstones (see ``purge_tombstones``)."""
     cols = [key, op_col, *order_cols, *payload_cols]
-    incoming = changes.select(*cols)
-    if horizon is not None:
-        incoming = incoming.where(
-            ~(F.struct(*order_cols) < _horizon_struct(incoming, order_cols, horizon))
-        )
-    all_rows = incoming
+    all_rows = _fence(changes.select(*cols), order_cols, horizon)
     if store is not None:
         all_rows = store.select(*cols).unionByName(all_rows)
+    return _latest(all_rows, key, order_cols, op_col, payload_cols)
+
+
+def _fence(changes: DataFrame, order_cols: Sequence[str], horizon: Sequence | None) -> DataFrame:
+    """Drop changes strictly below the recorded purge horizon."""
+    if horizon is None:
+        return changes
+    return changes.where(
+        ~(F.struct(*order_cols) < _horizon_struct(changes, order_cols, horizon))
+    )
+
+
+def _latest(
+    rows: DataFrame,
+    key: str,
+    order_cols: Sequence[str],
+    op_col: str,
+    payload_cols: Sequence[str],
+    by: Sequence[str] = (),
+) -> DataFrame:
+    """Keep one row per key: highest ``order_cols``, then the
+    deterministic (op, payload hash) tie-break.  ``by`` prefixes the
+    window's partitioning — a fold passes ``_b`` so that its hash
+    exchange on the bucket also clusters the window (one shuffle)."""
     tie = [F.col(op_col).desc()]
     if payload_cols:
         tie.append(
             F.xxhash64(F.struct(*[F.col(c) for c in payload_cols])).desc()
         )
-    w = W.partitionBy(key).orderBy(*[F.col(c).desc() for c in order_cols], *tie)
+    w = W.partitionBy(*by, key).orderBy(
+        *[F.col(c).desc() for c in order_cols], *tie
+    )
     return (
-        all_rows.withColumn("_rn", F.row_number().over(w))
+        rows.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)
         .drop("_rn")
+    )
+
+
+def _fold(
+    spark: SparkSession,
+    store_dir: str,
+    m: dict,
+    cols: Sequence[str],
+    extra: DataFrame | None = None,
+) -> DataFrame:
+    """Last-writer-wins over base + outstanding deltas (+ ``extra``),
+    bucketed and hash-partitioned on ``_b`` — ready for
+    ``_write_generation`` as a new base, in a single exchange."""
+    base_rels, delta_rels = _rels(m)
+    parts = [
+        df.select(*cols)
+        for df in (
+            _read_rels(spark, store_dir, base_rels),
+            _read_rels(spark, store_dir, delta_rels),
+            extra,
+        )
+        if df is not None
+    ]
+    rows = _bucketed(reduce(DataFrame.unionByName, parts), m["key"], m["n_buckets"])
+    return _latest(
+        rows.repartition("_b"),
+        m["key"],
+        m["order_cols"],
+        m.get("op_col", "op"),
+        m["payload_cols"],
+        by=["_b"],
     )
 
 
@@ -293,9 +421,14 @@ def apply_cdc_batch(
     the foreachBatch body of ``stream_cdc_apply``, public so a batch
     pipeline (or the control plane) can apply changes without a
     streaming query.  All the store's guarantees live here: idempotent
-    replay skip via the manifest-recorded batch_id, O(touched-buckets)
-    write amplification, horizon-fenced staleness rejection, atomic
-    manifest commit, best-effort generation cleanup."""
+    replay skip via the manifest-recorded batch_id, horizon-fenced
+    staleness rejection at write time, atomic manifest commit,
+    best-effort generation cleanup.
+
+    A normal batch is written as one delta generation (no store read,
+    no shuffle); once the outstanding deltas pass the size-ratio
+    policy (``maintenance.size_policy``) the batch is folded with base
+    + deltas into a new base generation instead."""
     cur = _current_manifest(store_dir)
     if cur is None:
         raise FileNotFoundError(
@@ -307,37 +440,35 @@ def apply_cdc_batch(
         # committed (driver died before the streaming checkpoint
         # did) — idempotent skip; the snapshot already reflects it
         return
-    n_buckets = cur["n_buckets"]
-    batch = batch_df.withColumn("_b", _bucket_col(key, n_buckets))
-    # bounded by n_buckets — a driver-side list, not a data collect
-    touched = sorted(
-        r["_b"] for r in batch.select("_b").distinct().collect()
-    )
-    if not touched:
-        new_buckets = dict(cur["buckets"])
+    cur = {
+        **cur,
+        "op_col": op_col,
+        "order_cols": list(order_cols),
+        "payload_cols": list(payload_cols),
+    }
+    cols = [key, op_col, *order_cols, *payload_cols]
+    batch = _fence(batch_df.select(*cols), order_cols, cur.get("horizon"))
+    gen = _next_gen(cur)
+    base_rels, delta_rels = _rels(cur)
+    if size_policy(
+        _rels_bytes(store_dir, base_rels), _rels_bytes(store_dir, delta_rels)
+    )["should_compact"]:
+        buckets = _write_generation(_fold(spark, store_dir, cur, cols, batch), store_dir, gen)
+        deltas: dict[str, list[str]] = {}
     else:
-        merged = merge_cdc_batch(
-            _read_buckets(spark, store_dir, cur, touched),
-            batch.drop("_b"),
-            key,
-            order_cols,
-            op_col,
-            payload_cols,
-            horizon=cur.get("horizon"),
-        )
-        written = _write_generation(
-            merged, store_dir, f"g{batch_id}", key, n_buckets
-        )
-        # untouched buckets carry their existing dirs forward —
-        # their files are never rewritten (O(touched), not O(store))
-        new_buckets = {**cur["buckets"], **written}
+        buckets = cur["buckets"]
+        deltas = dict(cur.get("deltas", {}))
+        written = _write_generation(_bucketed(batch, key, cur["n_buckets"]), store_dir, gen)
+        for b, rel in written.items():
+            deltas[b] = [*deltas.get(b, []), rel]
     _commit_manifest(
         store_dir,
         {
             **cur,
             "seq": cur["seq"] + 1,
             "batch_id": batch_id,
-            "buckets": new_buckets,
+            "buckets": buckets,
+            "deltas": deltas,
         },
     )
     _cleanup(store_dir, retain_gens)
@@ -397,14 +528,16 @@ def purge_tombstones(
 ) -> None:
     """Drop tombstones strictly below ``horizon`` (values matching
     ``order_cols``) and RECORD the horizon in the manifest: from now on
-    every merge rejects incoming changes below it, so a stale update
+    every batch drops incoming changes below it, so a stale update
     that would have been fenced by a purged tombstone is rejected by
     the horizon instead of resurrecting the key.  Only call with a
     horizon you are prepared to enforce (older changes are discarded).
 
-    Rewrites every bucket (an explicit maintenance pass, not a
-    per-trigger cost) into a new generation + manifest commit — the
-    same atomic-swap discipline as the merge path."""
+    Folds every outstanding delta and rewrites every bucket (an
+    explicit maintenance pass, not a per-trigger cost) into a new
+    generation + manifest commit — the same atomic-swap discipline as
+    the merge path.  Folding first matters: a tombstone in the base
+    may be all that fences a stale update sitting in a delta."""
     cur = _current_manifest(store_dir)
     if cur is None:
         raise FileNotFoundError(f"no manifest under {store_dir}")
@@ -414,14 +547,33 @@ def purge_tombstones(
             f"purge horizon {list(horizon)!r} must advance past the "
             f"recorded horizon {list(prev)!r}"
         )
-    snap = _read_buckets(spark, store_dir, cur)
+    payload = cur.get("payload_cols")
+    if payload is None:
+        # a store last written before manifests recorded its payload
+        # (such a store has no deltas): the base schema names it
+        fixed = (cur["key"], op_col, *order_cols)
+        payload = [
+            c
+            for c in _read_rels(spark, store_dir, _rels(cur)[0]).columns
+            if c not in fixed
+        ]
+    cols = [cur["key"], op_col, *order_cols, *payload]
+    snap = _fold(
+        spark,
+        store_dir,
+        {
+            **cur,
+            "op_col": op_col,
+            "order_cols": list(order_cols),
+            "payload_cols": payload,
+        },
+        cols,
+    )
     hz = _horizon_struct(snap, order_cols, horizon)
     kept = snap.where(
         (F.col(op_col) != "D") | ~(F.struct(*order_cols) < hz)
     )
-    written = _write_generation(
-        kept, store_dir, f"purge{cur['seq'] + 1}", cur["key"], cur["n_buckets"]
-    )
+    written = _write_generation(kept, store_dir, _next_gen(cur))
     _commit_manifest(
         store_dir,
         {
@@ -429,7 +581,9 @@ def purge_tombstones(
             "seq": cur["seq"] + 1,
             "batch_id": cur["batch_id"],
             "horizon": list(horizon),
+            "payload_cols": payload,
             "buckets": written,
+            "deltas": {},
         },
     )
 
@@ -437,11 +591,12 @@ def purge_tombstones(
 def read_cdc_view(
     spark: SparkSession, store_dir: str, op_col: str = "op"
 ) -> DataFrame:
-    """The served materialized view: the current snapshot minus
+    """The served materialized view: the current snapshot (base merged
+    with any outstanding deltas, see ``_read_current``) minus
     tombstones (tombstones stay IN the store to fence stale late
     arrivals; they leave only through ``purge_tombstones``, which
     installs a horizon fence in their place)."""
-    cur = _read_current(spark, store_dir)
+    cur = _read_current(spark, store_dir, op_col)
     if cur is None:
         raise FileNotFoundError(f"no complete generation under {store_dir}")
     return cur.where(F.col(op_col) != "D")

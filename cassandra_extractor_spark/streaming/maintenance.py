@@ -11,12 +11,15 @@ away from the pruned store shape they were designed around.
 This module makes the SAME policy callable from inside a streaming
 ingest's ``foreachBatch`` (config-gated, off by default — see the
 ``auto_compact`` parameter on ``stream_posting_ingest`` /
-``stream_ann_ingest`` / ``stream_incremental_dedup``).  Safety
-argument for folding mid-stream: ``foreachBatch`` bodies run serially
-(micro-batches never overlap within one query), so a fold inside the
-batch hook is exactly as isolated as one run between restarts; the
-crash window (base rewritten, delta not yet removed, batch replayed)
-leaves duplicate rows that every store's read path already tolerates
+``stream_ann_ingest`` / ``stream_incremental_dedup``).  The CDC
+store (``cdc_stream.apply_cdc_batch``) checks ``size_policy`` before
+every batch, always on, and folds its deltas together with that
+batch's write.  Safety argument for folding mid-stream:
+``foreachBatch`` bodies run serially (micro-batches never overlap
+within one query), so a fold inside the batch hook is exactly as
+isolated as one run between restarts; the crash window (base
+rewritten, delta not yet removed, batch replayed) leaves duplicate
+rows that every store's read path already tolerates
 by contract (MAX-collapse on postings/doclens, set-semantic candidate
 join on signatures, candidate dedup on ANN probes).
 

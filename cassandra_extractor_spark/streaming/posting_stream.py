@@ -427,14 +427,10 @@ def drop_session_bm25_store(spark: SparkSession, entry: tuple[str, str]) -> None
     the cache entry — without it every hypothesis/differential corpus
     left two orphaned ``bm25_*`` table directories behind, accruing
     without bound across runs."""
-    import shutil
+    from cassandra_extractor_spark.operators.scale import drop_managed_table
 
-    wh = spark.conf.get("spark.sql.warehouse.dir", "")
-    wh = wh[len("file:") :] if wh.startswith("file:") else wh
     for t in entry:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        if wh:
-            shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
+        drop_managed_table(spark, t)
 
 
 #: (store-cache dict, warehouse path) pairs whose tables the interpreter

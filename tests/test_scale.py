@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import Row, functions as F
 
 from cassandra_extractor_spark.operators.scale import (
@@ -942,3 +943,53 @@ def test_mixture_ops_materialize_the_corpus_pass_once(spark, sf_dir):
     # (n_domains rows), never over corpus rows
     opt = ns_waterfill_cap(spark, sf_dir)._jdf.queryExecution().optimizedPlan()
     assert _window_paths_pass_aggregate(opt), opt.toString()
+
+
+def _warehouse_path(spark, table):
+    import os
+
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    wh = wh[len("file:"):] if wh.startswith("file:") else wh
+    return os.path.join(wh, table)
+
+
+def test_write_bucketed_heals_orphan_table_location(spark):
+    """A run killed mid-write leaves ``<warehouse>/<table>`` behind with
+    no catalog row and no ``_SUCCESS`` marker; the next bucketed write
+    of that name must replace it instead of failing with
+    LOCATION_ALREADY_EXISTS."""
+    import os
+
+    table = "orphan_heal_b"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    orphan = _warehouse_path(spark, table)
+    os.makedirs(orphan, exist_ok=True)
+    with open(os.path.join(orphan, "part-00000-stale.parquet"), "w") as fh:
+        fh.write("left behind by a killed run")
+    try:
+        write_bucketed(spark.range(100).withColumnRenamed("id", "k"), table, ["k"], 4)
+        assert read_bucketed(spark, table).count() == 100
+        assert not os.path.exists(os.path.join(orphan, "part-00000-stale.parquet"))
+        assert os.path.exists(os.path.join(orphan, "_SUCCESS"))
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+def test_write_bucketed_keeps_a_complete_unknown_location(spark):
+    """A complete location this session's catalog does not know may be
+    another live session's table (the catalog is per process): the
+    write fails loudly and the data survives."""
+    import os
+
+    table = "foreign_live_b"
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    loc = _warehouse_path(spark, table)
+    spark.range(7).write.mode("overwrite").parquet(loc)  # ends with _SUCCESS
+    try:
+        with pytest.raises(Exception, match="LOCATION_ALREADY_EXISTS"):
+            write_bucketed(spark.range(100).withColumnRenamed("id", "k"), table, ["k"], 4)
+        assert spark.read.parquet(loc).count() == 7
+    finally:
+        import shutil
+
+        shutil.rmtree(loc, ignore_errors=True)

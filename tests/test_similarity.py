@@ -434,3 +434,17 @@ def test_kcenter_step_plan_shape(spark, sf_dir):
     # node (measured faster than the interpreted HOF fold); only the
     # row-at-a-time pickled path stays banned
     assert "BatchEvalPython" not in plan, plan[:2000]
+
+
+def test_norm_filter_drops_nan_and_zero_vectors(spark):
+    """Degenerate vectors: a NaN component gives a NaN norm, which Spark
+    orders above every number (``NaN > 0`` is true), and a zero vector
+    gives norm 0; cosine is undefined for both, so both are dropped."""
+    from cassandra_extractor_spark.operators.similarity import _with_norm
+
+    e = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [float("nan"), 1.0]), (3, [0.0, 0.0]), (4, [3.0, 4.0])],
+        "vec_id INT, emb ARRAY<DOUBLE>",
+    )
+    out = {r.vec_id: r.nrm for r in _with_norm(e).collect()}
+    assert out == {1: 1.0, 4: 5.0}

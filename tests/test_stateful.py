@@ -714,9 +714,9 @@ def test_stream_cdc_apply_view_parity_stale_and_replay(spark, tmp_path):
 
     # restart with LATE STALE changes: older update for k=1 (must not
     # regress 111) and an older update for deleted k=2 (tombstone wins).
-    # Bucketed-store contract: this batch touches only keys {1, 2} — the
-    # buckets of every OTHER key must carry their existing data dirs
-    # forward verbatim (files not rewritten: O(touched), not O(store)).
+    # Delta-store contract: this batch lands as a delta (the previous
+    # batch folded), so the base buckets of every OTHER key carry their
+    # existing data dirs forward verbatim (files not rewritten).
     from pyspark.sql import functions as F
 
     from cassandra_extractor_spark.streaming.cdc_stream import (

@@ -192,3 +192,21 @@ def test_template_python_fallback_requires_opt_in(spark):
             {"columns": [{"name": "name",
                           "convertTo": "template:name.split(' ')[0].upper()"}]},
         )
+
+
+def test_timestamp_column_converts_to_millis_under_any_format(spark):
+    """A TIMESTAMP input converts to its epoch millis directly: a
+    whole-second value under ``.%f`` and every value under the default
+    ``%z`` format failed the old format → strptime round trip."""
+    utc = datetime.timezone.utc
+    whole = datetime.datetime(2024, 1, 2, 3, 4, 5, tzinfo=utc)
+    frac = datetime.datetime(2024, 1, 2, 3, 4, 5, 678901, tzinfo=utc)
+    df = spark.createDataFrame([Row(id=1, ts=whole), Row(id=2, ts=frac)])
+    want = {1: int(whole.timestamp() * 1000), 2: int(frac.timestamp() * 1000)}
+    for fmt in ("%Y-%m-%d %H:%M:%S.%f", None):
+        col = {"name": "ts", "convertTo": "timestamp"}
+        if fmt:
+            col["timestamp_format"] = fmt
+        out = apply_table_spec(df, {"columns": [col]})
+        assert dict(out.dtypes)["ts"] == "bigint"
+        assert {r.id: r.ts for r in out.collect()} == want, fmt

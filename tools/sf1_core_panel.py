@@ -143,6 +143,8 @@ def run_arm(cpus: int) -> dict[str, float]:
 def main() -> None:
     if "--cpus" in sys.argv:
         cpus = int(sys.argv[sys.argv.index("--cpus") + 1])
+        # get_spark reads the master from here; unset it runs local[*]
+        os.environ["SPARK_GRAFT_CPUS"] = str(cpus)
         print(json.dumps({"cpus": cpus, "panel": run_arm(cpus)}))
         return
 
