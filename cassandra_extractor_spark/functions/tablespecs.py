@@ -156,7 +156,9 @@ def _infer_json_schema(df: DataFrame, name: str, kind: str, sample: int = 1000) 
     """Infer the struct schema of a JSON-text column from a sample.
 
     Driver-side, bounded sample — acceptable because it looks at ≤1000
-    strings once at plan time, never per-row at execution time.
+    strings once at plan time, never per-row at execution time.  Spark's
+    JSON reader merges the per-string schemas (keys unioned, int and
+    float widened to double).
     """
     rows = (
         df.select(F.col(name).alias("j"))
@@ -175,15 +177,8 @@ def _infer_json_schema(df: DataFrame, name: str, kind: str, sample: int = 1000) 
             texts.extend(x for x in v.values() if x is not None)
     if not texts:
         return T.StructType()
-    sdf = df.sparkSession.createDataFrame([(t,) for t in texts], "j string")
-    return _schema_of_many(sdf)
-
-
-def _schema_of_many(sdf: DataFrame) -> T.DataType:
-    """Merge JSON schemas across sampled strings via Spark's JSON reader."""
-    rdd = sdf.select("j").rdd.map(lambda r: r["j"])
-    parsed = sdf.sparkSession.read.json(rdd)
-    return parsed.schema
+    spark = df.sparkSession
+    return spark.read.json(spark.sparkContext.parallelize(texts, 1)).schema
 
 
 def _parse_json_fn(schema):

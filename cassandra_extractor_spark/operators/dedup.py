@@ -958,6 +958,14 @@ def norm(x: Column) -> Column:
     return F.sqrt(dot(x, x))
 
 
+def cosine_defined(nrm: Column) -> Column:
+    """True where a vector of L2 norm ``nrm`` has a cosine: the norm is
+    positive and not NaN; false (never null) otherwise, so the negation
+    also catches a null norm.  Spark orders NaN above every number, so
+    ``nrm > 0`` alone keeps a vector with a NaN component."""
+    return nrm.isNotNull() & ~F.isnan(nrm) & (nrm > 0)
+
+
 def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
@@ -1115,9 +1123,10 @@ def ns_neardup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("vec_id") < 300)
         .select("vec_id", F.col("embedding").cast("array<double>").alias("emb"))
     )
-    # zero-norm vectors excluded on BOTH engines (divergence #4):
-    # cosine is undefined for them and 0/0 throws under ANSI
-    e = e.withColumn("nrm", norm(F.col("emb"))).where(F.col("nrm") > 0)
+    # zero-norm and NaN-norm vectors excluded on BOTH engines
+    # (divergence #4): cosine is undefined for them and 0/0 throws
+    # under ANSI
+    e = e.withColumn("nrm", norm(F.col("emb"))).where(cosine_defined(F.col("nrm")))
     a, b = e.alias("a"), e.alias("b")
     return (
         a.join(b, F.col("a.vec_id") < F.col("b.vec_id"))

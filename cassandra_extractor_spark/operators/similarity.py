@@ -19,6 +19,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions 
 from pyspark.sql.types import ArrayType, LongType
 
 from cassandra_extractor_spark.operators.dedup import (
+    cosine_defined,
     cosine_prenormed,
     make_fold_arrow_kernel,
     materialize_once,
@@ -77,8 +78,7 @@ def _with_norm(e: DataFrame) -> DataFrame:
     untouched, so consumers never recompute the fold."""
     if "nrm" in e.columns:
         return e
-    nrm = F.col("nrm")
-    return e.withColumn("nrm", norm(F.col("emb"))).where(~F.isnan(nrm) & (nrm > 0))
+    return e.withColumn("nrm", norm(F.col("emb"))).where(cosine_defined(F.col("nrm")))
 
 
 def shared_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -949,7 +949,7 @@ def ns_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, "embeddings", sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("emb"), "label"
     )
-    e = e.withColumn("nrm", norm(F.col("emb"))).where(F.col("nrm") > 0)
+    e = _with_norm(e)
     queries = e.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
         F.col("emb").alias("q_emb"),
@@ -1574,9 +1574,7 @@ def ns_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.row_number().over(wl).cast("long").alias("lex_rank")
     )
 
-    e = _load_embeddings(spark, sf_dir).withColumn(
-        "nrm", norm(F.col("emb"))
-    ).where(F.col("nrm") > 0)
+    e = _with_norm(_load_embeddings(spark, sf_dir))
     q = e.where(F.col("vec_id") == 0).select(
         F.col("emb").alias("q_emb"), F.col("nrm").alias("q_nrm")
     )
@@ -1744,17 +1742,14 @@ def ns_cluster_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # zero-norm vectors are excluded on BOTH engines — cosine is
     # undefined for them (0/0 throws under ANSI, and NaN sort order is
     # engine-specific otherwise); the brute_topk/divergence-#4 posture
-    e = (
-        load_table(spark, "embeddings", sf_dir)
-        .select(
+    e = _with_norm(
+        load_table(spark, "embeddings", sf_dir).select(
             "vec_id",
             F.col("embedding").cast("array<double>").alias("emb"),
             in_encoding_contract(
                 F.col("label").cast("long"), 0, 99, "label"
             ).alias("label"),
         )
-        .withColumn("nrm", norm(F.col("emb")))
-        .where(F.col("nrm") > 0)
     )
     cent = e.where(F.col("vec_id") < N_KMEANS).select(
         F.col("vec_id").alias("c_id"), F.col("emb").alias("c_emb"), F.col("nrm").alias("c_nrm")

@@ -38,6 +38,7 @@ from pyspark.sql.utils import AnalysisException
 from cassandra_extractor_spark.operators.similarity import (
     TOP_K,
     IVF_PROBES,
+    cosine_defined,
     cosine_prenormed,
     norm,
 )
@@ -53,9 +54,9 @@ def init_ann_centroids(spark: SparkSession, centroids: DataFrame, store_dir: str
         F.col("c_id").cast("long").alias("c_id"),
         F.col("c_emb").cast("array<double>").alias("c_emb"),
     ).withColumn("c_nrm", norm(F.col("c_emb")))
-    bad = c.where(~(F.col("c_nrm") > 0)).count()
+    bad = c.where(~cosine_defined(F.col("c_nrm"))).count()
     if bad:
-        raise ValueError(f"{bad} zero-norm centroid(s) — fix the quantizer first")
+        raise ValueError(f"{bad} zero-norm or NaN centroid(s) — fix the quantizer first")
     c.write.mode("overwrite").parquet(f"{store_dir}/centroids")
 
 
@@ -75,7 +76,7 @@ def assign_cells(batch: DataFrame, cent: DataFrame, keep: int = 1) -> DataFrame:
             F.col("emb").cast("array<double>").alias("emb"),
         )
         .withColumn("nrm", norm(F.col("emb")))
-        .where(F.col("nrm") > 0)
+        .where(cosine_defined(F.col("nrm")))
     )
     scored = b.join(F.broadcast(cent)).select(
         "vec_id",

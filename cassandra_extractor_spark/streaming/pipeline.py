@@ -22,6 +22,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from cassandra_extractor_spark.sinks.fanout import fan_out
+
 
 @dataclass
 class KafkaSourceConfig:
@@ -142,15 +144,15 @@ def stream_extract(
         stream = transform(stream)
 
     def dispatch(batch_df: DataFrame, batch_id: int) -> None:
-        # multi-sink fan-out per micro-batch; persist so N sinks scan once
-        if len(sinks) > 1:
-            batch_df.persist()
-        try:
-            for write in sinks.values():
-                write(batch_df, batch_id)
-        finally:
-            if len(sinks) > 1:
-                batch_df.unpersist()
+        # the batch fan-out, each sink bound to this batch id; any sink
+        # error fails the micro-batch so it replays (at-least-once)
+        results = fan_out(
+            batch_df,
+            {name: (lambda d, w=write: w(d, batch_id)) for name, write in sinks.items()},
+        )
+        errors = [exc for exc in results.values() if exc is not None]
+        if errors:
+            raise errors[0]
 
     writer = (
         stream.writeStream.foreachBatch(dispatch)

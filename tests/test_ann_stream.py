@@ -168,6 +168,28 @@ def test_init_ann_centroids_rejects_zero_norm(spark, tmp_path):
         init_ann_centroids(spark, bad, str(tmp_path / "s"))
 
 
+def test_ann_store_rejects_nan_centroids_and_drops_nan_vectors(spark, tmp_path):
+    """``NaN > 0`` is true in Spark: a NaN centroid passed the zero-norm
+    guard, and a NaN vector was assigned a cell (its NaN cosine ranks
+    above every real one)."""
+    from cassandra_extractor_spark.streaming.ann_stream import _read_centroids, assign_cells
+
+    nan = float("nan")
+    # rows, not pandas: Arrow turns a NaN inside a pandas list into null
+    bad = spark.createDataFrame([(0, [1.0, 0.0]), (1, [nan, 1.0])], "c_id LONG, c_emb ARRAY<DOUBLE>")
+    with pytest.raises(ValueError, match="NaN"):
+        init_ann_centroids(spark, bad, str(tmp_path / "bad"))
+    store = str(tmp_path / "s")
+    init_ann_centroids(
+        spark, spark.createDataFrame(pd.DataFrame({"c_id": [0, 1], "c_emb": [[1.0, 0.0], [0.0, 1.0]]})), store
+    )
+    batch = spark.createDataFrame(
+        [(1, [0.2, 1.0]), (2, [nan, 1.0]), (3, [0.0, 0.0])], SCHEMA
+    )
+    cells = {r.vec_id: r.c_id for r in assign_cells(batch, _read_centroids(spark, store)).collect()}
+    assert cells == {1: 1}
+
+
 def test_auto_compaction_mid_stream_ann(spark, sf_dir, tmp_path, corpus_parts):
     """Round-12: an in-band auto_compact on the ANN ingest folds the
     cell-partitioned delta into the base exactly once at its cadence,

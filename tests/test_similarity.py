@@ -448,3 +448,54 @@ def test_norm_filter_drops_nan_and_zero_vectors(spark):
     )
     out = {r.vec_id: r.nrm for r in _with_norm(e).collect()}
     assert out == {1: 1.0, 4: 5.0}
+
+
+def _write_embeddings(path, rows) -> str:
+    """``embeddings.parquet`` of (vec_id, vector, label) rows under ``path``."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array([r[0] for r in rows], type=pa.int64()),
+            "embedding": pa.array([r[1] for r in rows], type=pa.list_(pa.float32())),
+            "label": pa.array([r[2] for r in rows], type=pa.int32()),
+        }),
+        path / "embeddings.parquet",
+    )
+    return str(path)
+
+
+NAN = float("nan")
+
+
+def test_embedding_neardup_drops_nan_vectors(spark, tmp_path):
+    """A NaN vector's cosine is NaN, and ``NaN >= 0.8`` is true in
+    Spark: without the norm filter it pairs with every vector."""
+    from cassandra_extractor_spark.operators.dedup import ns_neardup_embedding
+
+    sf = _write_embeddings(tmp_path, [
+        (0, [1.0, 0.0], 0), (1, [1.0, 0.01], 0), (2, [NAN, 1.0], 0), (3, [0.0, 0.0], 0),
+    ])
+    assert [(r.v1, r.v2) for r in ns_neardup_embedding(spark, sf).collect()] == [(0, 1)]
+
+
+def test_cosine_rankers_drop_nan_vectors(spark, tmp_path):
+    """Spark sorts NaN above every number, so a NaN cosine would rank
+    first: as the hardest negative, and as every vector's nearest
+    k-means centroid."""
+    from cassandra_extractor_spark.operators.similarity import (
+        ns_cluster_purity,
+        ns_hard_negatives,
+    )
+
+    # ids < N_QUERIES are queries and ids < N_KMEANS centroids (2 is NaN)
+    sf = _write_embeddings(tmp_path, [
+        (0, [1.0, 0.0], 0), (1, [0.0, 1.0], 1), (2, [NAN, 0.0], 1),
+        (20, [1.0, 0.1], 0), (21, [NAN, 1.0], 1), (22, [0.1, 1.0], 1),
+    ])
+    neg = {(r.q_id, r.rank): r.n_id for r in ns_hard_negatives(spark, sf).collect()}
+    assert neg == {(0, 0): 20, (0, 1): 22, (1, 0): 22, (1, 1): 20}
+    purity = {r.cluster_id: (r.n_members, r.majority_label)
+              for r in ns_cluster_purity(spark, sf).collect()}
+    assert purity == {0: (2, 0), 1: (2, 1)}

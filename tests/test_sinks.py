@@ -103,6 +103,155 @@ def test_fanout_isolated_failures(spark, tmp_path):
     assert seen["good"] == 10
 
 
+def test_fanout_frame_failure_reported_for_every_sink(spark):
+    """A frame that cannot be computed fails its materialization; every
+    sink reports that error and none is called."""
+    called = []
+    df = spark.range(3).select(F.raise_error(F.lit("bad frame")).alias("x"))
+    res = fan_out(df, {"a": called.append, "b": called.append})
+    assert called == []
+    assert set(res) == {"a", "b"} and all("bad frame" in str(e) for e in res.values())
+    assert not df.storageLevel.useMemory
+
+
+def test_fanout_single_sink_writes_directly_unpersisted(spark):
+    df = _df(spark)
+    seen = {}
+
+    def only(d):
+        seen["cached"] = d.is_cached
+        seen["rows"] = d.count()
+
+    assert fan_out(df, {"only": only}) == {"only": None}
+    assert seen == {"cached": False, "rows": 10}
+    assert not df.is_cached and not df.storageLevel.useMemory
+
+
+def test_fanout_observation_counts_every_row(spark, tmp_path):
+    """The Observation on the input frame must see every row even when
+    a sink that only reads cached blocks finishes first.  Handshake:
+    the slow sink's tasks consume their partition, touch a flag file
+    and sleep; the fast sink waits for the flag, then reads.  Without
+    the lone materialization before the sinks start, the slow sink's
+    tasks build the cache, and the fast reader's query ends (and sets
+    the Observation) before their counts are merged."""
+    import os
+    import time
+
+    from pyspark.sql import Observation
+
+    n = 4000
+    for rep in range(3):
+        flag = str(tmp_path / f"flag{rep}")
+
+        def slow(d, flag=flag):
+            def part(rows):
+                for _ in rows:
+                    pass
+                open(flag, "a").close()
+                time.sleep(2)
+
+            d.foreachPartition(part)
+
+        def fast(d, flag=flag):
+            deadline = time.time() + 30
+            while not os.path.exists(flag) and time.time() < deadline:
+                time.sleep(0.05)
+            d.write.format("noop").mode("overwrite").save()
+
+        obs = Observation(f"fanout_rows_{rep}")
+        df = spark.range(0, n, 1, 4).observe(obs, F.count(F.lit(1)).alias("rows"))
+        assert fan_out(df, {"slow": slow, "fast": fast}) == {"slow": None, "fast": None}
+        assert obs.get["rows"] == n, rep
+
+
+def test_fanout_sinks_overlap(spark):
+    """Sink ``a`` waits for an event only sink ``b`` sets: a sequential
+    fan-out would time ``a`` out before ``b`` ever starts.  The cache
+    outlives every sink."""
+    import threading
+
+    df = _df(spark)
+    ev = threading.Event()
+    seen = {}
+
+    def a(d):
+        seen["a_saw_b"] = ev.wait(10)
+        seen["a_rows"] = d.count()
+        seen["a_cached"] = d.storageLevel.useMemory
+
+    def b(d):
+        seen["b_rows"] = d.count()
+        ev.set()
+
+    assert fan_out(df, {"a": a, "b": b}) == {"a": None, "b": None}
+    assert seen == {"a_saw_b": True, "a_rows": 10, "a_cached": True, "b_rows": 10}
+    assert not df.storageLevel.useMemory
+
+
+def test_fanout_sinks_inherit_job_group_and_pool(spark, tmp_path):
+    """Every sink job runs under the caller's job group and FAIR pool,
+    so ``cancelJobGroup`` from another thread cancels a blocked sink
+    while the other sinks finish."""
+    import os
+    import threading
+    import time
+
+    sc = spark.sparkContext
+    group, pool = "fanout-test-group", "fanout-test-pool"
+    started, release = str(tmp_path / "started"), str(tmp_path / "release")
+    probed = threading.Event()
+    seen = {}
+
+    def props(name):
+        seen[name] = (sc.getLocalProperty("spark.jobGroup.id"),
+                      sc.getLocalProperty("spark.scheduler.pool"))
+
+    def probe(d):
+        props("probe")
+        d.count()
+        probed.set()
+
+    def blocked(d):
+        props("blocked")
+
+        def part(rows):
+            open(started, "a").close()
+            deadline = time.time() + 60
+            while not os.path.exists(release) and time.time() < deadline:
+                time.sleep(0.05)
+
+        d.coalesce(1).foreachPartition(part)  # holds one task slot
+
+    def cancel():
+        # only the blocked job is left in the group once the probe is done
+        probed.wait(60)
+        deadline = time.time() + 60
+        while not os.path.exists(started) and time.time() < deadline:
+            time.sleep(0.05)
+        sc.cancelJobGroup(group)
+
+    canceller = threading.Thread(target=cancel)
+    sc.setJobGroup(group, "fan-out test")
+    sc.setLocalProperty("spark.scheduler.pool", pool)
+    try:
+        canceller.start()
+        t0 = time.time()
+        res = fan_out(_df(spark), {"probe": probe, "blocked": blocked})
+        elapsed = time.time() - t0
+    finally:
+        open(release, "a").close()
+        canceller.join()
+        for key in ("spark.scheduler.pool", "spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert seen == {"probe": (group, pool), "blocked": (group, pool)}
+    assert res["probe"] is None
+    assert res["blocked"] is not None and "cancel" in str(res["blocked"]).lower()
+    assert elapsed < 45
+    assert sc.statusTracker().getJobIdsForGroup(group)
+
+
 def test_jdbc_partition_ddl_hostile_values():
     """Data-derived identifiers are whitelisted: quotes/semicolons/parens
     cannot reach the DDL as raw SQL."""

@@ -79,3 +79,50 @@ def test_stream_extract_fanout_rate_limit_and_checkpoint_resume(spark, tmp_path)
     a3: list[int] = []
     _run(spark, src, ckpt, a3, a3, [])
     assert a3 == []
+
+
+def test_stream_extract_sink_error_fails_the_batch_and_replays(spark, tmp_path):
+    """One of two sinks raises: the micro-batch fails with that error
+    and its offsets are not committed, so a rerun on the same checkpoint
+    with the sink fixed delivers the batch to both sinks (at-least-once;
+    the sink that had succeeded sees it again)."""
+    import pytest
+    from pyspark.errors import StreamingQueryException
+
+    src = tmp_path / "src"
+    ckpt = tmp_path / "ckpt"
+    src.mkdir()
+    _write_file(spark, tmp_path / "stage", 0, range(0, 6))
+    next((tmp_path / "stage" / "f0").glob("*.parquet")).rename(src / "data_0.parquet")
+
+    got: dict[str, list[int]] = {"a": [], "b": []}
+    broken = {"b": True}
+
+    def sink(name):
+        def write(df, batch_id):
+            if broken.get(name):
+                raise RuntimeError(f"sink {name} is down")
+            got[name].extend(r["event_id"] for r in df.select("event_id").collect())
+
+        return write
+
+    def run():
+        q = stream_extract(
+            spark,
+            source_path=str(src),
+            schema=SCHEMA,
+            sinks={"a": sink("a"), "b": sink("b")},
+            checkpoint_dir=str(ckpt),
+            path_glob="*.parquet",
+        )
+        q.awaitTermination(120)
+        return q
+
+    with pytest.raises(StreamingQueryException, match="sink b is down"):
+        run()
+    assert got == {"a": list(range(6)), "b": []}
+
+    broken["b"] = False
+    run()
+    assert sorted(got["a"]) == sorted(list(range(6)) * 2)
+    assert sorted(got["b"]) == list(range(6))

@@ -5,7 +5,7 @@ from __future__ import annotations
 
 import datetime
 
-from pyspark.sql import Row, functions as F
+from pyspark.sql import Row, functions as F, types as T
 
 from cassandra_extractor_spark.functions.tablespecs import (
     TableSpec,
@@ -210,3 +210,76 @@ def test_timestamp_column_converts_to_millis_under_any_format(spark):
         out = apply_table_spec(df, {"columns": [col]})
         assert dict(out.dtypes)["ts"] == "bigint"
         assert {r.id: r.ts for r in out.collect()} == want, fmt
+
+
+def _inferred(spark, rows, ddl, spec_col):
+    df = spark.createDataFrame(rows, ddl)
+    return apply_table_spec(df, {"columns": [spec_col]})
+
+
+def test_object_convert_infers_schema_from_sample(spark):
+    """No ``schema``: the struct is inferred from the column's values.
+    An int in one row and a float in another widen to double, keys are
+    unioned across rows, nested objects stay structs."""
+    out = _inferred(
+        spark,
+        [(1, '{"a": 1, "o": {"x": 1}}'), (2, '{"a": 2.5, "b": "s"}'), (3, None)],
+        "id int, j string",
+        {"name": "j", "convertTo": "object"},
+    )
+    want = T.StructType([
+        T.StructField("a", T.DoubleType()),
+        T.StructField("b", T.StringType()),
+        T.StructField("o", T.StructType([T.StructField("x", T.LongType())])),
+    ])
+    assert out.schema["j"].dataType == want
+    got = {r.id: r.j for r in out.collect()}
+    assert got[1].a == 1.0 and got[1].o.x == 1 and got[1].b is None
+    assert got[2].a == 2.5 and got[2].b == "s" and got[2].o is None
+    assert got[3] is None
+
+
+def test_list_convert_infers_schema_from_elements(spark):
+    out = _inferred(
+        spark,
+        [(1, ['{"a": 1}', None, '{"n": {"y": "q"}}']), (2, ['{"a": 0.5}'])],
+        "id int, j array<string>",
+        {"name": "j", "convertTo": "list"},
+    )
+    elem = out.schema["j"].dataType.elementType
+    assert elem == T.StructType([
+        T.StructField("a", T.DoubleType()),
+        T.StructField("n", T.StructType([T.StructField("y", T.StringType())])),
+    ])
+    got = {r.id: r.j for r in out.collect()}
+    assert got[1][0].a == 1.0 and got[1][2].n.y == "q"
+    assert got[2][0].a == 0.5
+
+
+def test_map_convert_infers_schema_from_values(spark):
+    out = _inferred(
+        spark,
+        [(1, {"k1": '{"a": 3}', "k2": '{"b": [1, 2]}'}), (2, {"k3": '{"a": 1.25}'})],
+        "id int, j map<string,string>",
+        {"name": "j", "convertTo": "map"},
+    )
+    val = out.schema["j"].dataType.valueType
+    assert val == T.StructType([
+        T.StructField("a", T.DoubleType()),
+        T.StructField("b", T.ArrayType(T.LongType())),
+    ])
+    got = {r.id: r.j for r in out.collect()}
+    assert got[1]["k1"].a == 3.0 and got[1]["k2"].b == [1, 2]
+    assert got[2]["k3"].a == 1.25
+
+
+def test_all_null_column_infers_empty_struct(spark):
+    empty = T.StructType()
+    for ddl, kind, want in (
+        ("j string", "object", empty),
+        ("j array<string>", "list", T.ArrayType(empty)),
+        ("j map<string,string>", "map", T.MapType(T.StringType(), empty)),
+    ):
+        out = _inferred(spark, [(None,), (None,)], ddl, {"name": "j", "convertTo": kind})
+        assert out.schema["j"].dataType == want, kind
+        assert [r.j for r in out.collect()] == [None, None]
