@@ -20,6 +20,7 @@ import sys
 
 from cassandra_extractor_spark.actuator import Actuator, ExtractionJob
 from cassandra_extractor_spark.config import load_properties, load_table_properties, resolve
+from cassandra_extractor_spark.functions.tablespecs import nested_to_json
 from cassandra_extractor_spark.metrics import MetricsRegistry
 from cassandra_extractor_spark.plans.spec import ExtractionSpec
 from cassandra_extractor_spark.session import get_spark
@@ -139,7 +140,9 @@ def main(argv: list[str] | None = None) -> int:
                 "parquet": lambda d, t=table: d.write.mode("overwrite").parquet(
                     f"{output}/{t}_parquet"
                 ),
-                "csv": lambda d, t=table: d.write.mode("overwrite")
+                # CSV has no nested type: structs, arrays, maps and
+                # VARIANT go out as JSON text
+                "csv": lambda d, t=table: nested_to_json(d).write.mode("overwrite")
                 .option("header", "true")
                 .csv(f"{output}/{t}_csv"),
             }

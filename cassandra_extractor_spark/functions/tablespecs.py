@@ -24,8 +24,11 @@ Supported ``convertTo`` ops (reference semantics, SURVEY §1.3/§2.4):
 
 Spark-first compilation: the whole spec becomes a single ``select`` of
 Column expressions, so Catalyst sees one projection (column pruning +
-whole-stage codegen apply; nothing is per-row Python).  JSON parsing
-uses ``from_json`` with an explicit or sampled schema; timestamps use
+whole-stage codegen apply; nothing is per-row Python) and compiling it
+runs no Spark job, so it applies to a streaming frame too.  JSON
+parsing uses ``from_json`` under an explicit ``schema``, else
+``try_parse_json`` to VARIANT (every key and number kept, malformed
+text → null; sinks render it back as JSON); timestamps use
 ``to_timestamp``/``unix_millis``; templates go through ``expr()`` when
 the expression is valid Spark SQL, with a sandboxed-Python pandas-UDF
 fallback (flagged slow in logs) for the reference's ``template:<pyexpr>``
@@ -100,7 +103,8 @@ class ColumnSpec:
     rename_to: str | None = None
     convert_to: str | None = None
     timestamp_format: str | None = None
-    schema: str | T.DataType | None = None  # target schema for object/list/map
+    #: target schema for object/list/map; None parses to VARIANT
+    schema: str | T.DataType | None = None
     remove: bool = False
 
     @classmethod
@@ -152,43 +156,15 @@ def _timestamp_to_epoch_millis(col: Column, fmt: str | None) -> Column:
     return F.unix_millis(F.to_timestamp(_normalize_z(col), spark_fmt))
 
 
-def _infer_json_schema(df: DataFrame, name: str, kind: str, sample: int = 1000) -> T.DataType:
-    """Infer the struct schema of a JSON-text column from a sample.
-
-    Driver-side, bounded sample — acceptable because it looks at ≤1000
-    strings once at plan time, never per-row at execution time.  Spark's
-    JSON reader merges the per-string schemas (keys unioned, int and
-    float widened to double).
-    """
-    rows = (
-        df.select(F.col(name).alias("j"))
-        .where(F.col("j").isNotNull())
-        .limit(sample)
-        .collect()
-    )
-    texts: list[str] = []
-    for r in rows:
-        v = r["j"]
-        if kind == "object":
-            texts.append(v)
-        elif kind == "list" and isinstance(v, list):
-            texts.extend(x for x in v if x is not None)
-        elif kind == "map" and isinstance(v, dict):
-            texts.extend(x for x in v.values() if x is not None)
-    if not texts:
-        return T.StructType()
-    spark = df.sparkSession
-    return spark.read.json(spark.sparkContext.parallelize(texts, 1)).schema
-
-
 def _parse_json_fn(schema):
-    """Single-param closure (extra lambda params would bind the array
-    index in ``transform``)."""
-    return lambda x: F.from_json(x, schema)
-
-
-def _parse_json_value_fn(schema):
-    return lambda k, v: F.from_json(v, schema)
+    """JSON text → ``from_json`` under an explicit ``schema``, else
+    VARIANT: ``try_parse_json`` keeps every key and number as written
+    and gives null for a malformed string, like the reference's
+    per-row ``json.loads`` (worker.py:136-145).  Single-param closure
+    (extra lambda params would bind the array index in ``transform``)."""
+    if schema:
+        return lambda x: F.from_json(x, schema)
+    return lambda x: F.try_parse_json(x)
 
 
 def _template_col(
@@ -284,14 +260,12 @@ def compile_table_spec(
         if conv is None:
             pass
         elif conv == "object":
-            schema = cs.schema or _infer_json_schema(df, fname, "object")
-            col = F.from_json(col, schema)
+            col = _parse_json_fn(cs.schema)(col)
         elif conv == "list":
-            schema = cs.schema or _infer_json_schema(df, fname, "list")
-            col = F.transform(col, _parse_json_fn(schema))
+            col = F.transform(col, _parse_json_fn(cs.schema))
         elif conv == "map":
-            schema = cs.schema or _infer_json_schema(df, fname, "map")
-            col = F.transform_values(col, _parse_json_value_fn(schema))
+            parse = _parse_json_fn(cs.schema)
+            col = F.transform_values(col, lambda _k, v: parse(v))
         elif conv == "timestamp":
             if isinstance(df.schema[fname].dataType, (T.TimestampType, T.TimestampNTZType)):
                 # already a timestamp: the millis directly, not a
@@ -334,6 +308,21 @@ def to_json_rows(df: DataFrame) -> DataFrame:
     """T10: serialize each row to a JSON text column (reference
     ``json.dumps`` fallback, jsonworker.py:37)."""
     return df.select(F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("value"))
+
+
+#: column types a flat format (CSV, a JDBC table) has no column type for
+_NESTED_TYPES = (T.StructType, T.ArrayType, T.MapType, T.VariantType)
+
+
+def nested_to_json(df: DataFrame) -> DataFrame:
+    """Render every struct/array/map/VARIANT column as JSON text, for the
+    sinks whose format holds only flat columns (CSV, JDBC); the others
+    pass through unchanged."""
+    return df.select(*[
+        F.to_json(F.col(f.name)).alias(f.name) if isinstance(f.dataType, _NESTED_TYPES)
+        else F.col(f.name)
+        for f in df.schema.fields
+    ])
 
 
 _TEMPLATE_TOKEN = re.compile(r"%\((\w+)\)([sd])")

@@ -30,10 +30,9 @@ class ExtractionSpec:
     solr_filter: str | None = None  # Solr-subset syntax (translated, §7.3.5)
     solr_default_field: str | None = None  # bare full-text terms → CONTAINS here
     sort: list[str] = field(default_factory=list)  # O1
-    limit: int | None = None  # pages × fetch_size cap (S6)
+    limit: int | None = None  # row cap (S6: the reference's pages × fetch size)
     table_spec: dict[str, Any] | None = None  # T1-T10 transforms
     hwm_column: str | None = None  # P3 incremental column
-    fetch_size: int = 10_000  # partition-sizing hint
     #: set by build() when an HWM store is used; run AFTER sinks succeed
     _hwm_commit: Any = None
 

@@ -21,6 +21,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, functions as F
 
+from cassandra_extractor_spark.functions.tablespecs import nested_to_json
+
 
 @dataclass
 class JdbcSinkConfig:
@@ -91,12 +93,13 @@ def ensure_partitions(df: DataFrame, cfg: JdbcSinkConfig, execute) -> list[str]:
 
 
 def write_jdbc(df: DataFrame, cfg: JdbcSinkConfig, ddl_execute=None) -> None:
-    """Bulk JDBC write; optional partition pre-pass first."""
+    """Bulk JDBC write; optional partition pre-pass first.  Nested
+    columns (struct/array/map/VARIANT) are written as JSON text."""
     if cfg.partition_column and ddl_execute is not None:
         ensure_partitions(df, cfg, ddl_execute)
     props = {"batchsize": str(cfg.batch_size), **cfg.properties}
     try:
-        df.write.jdbc(cfg.url, cfg.table, mode=cfg.mode, properties=props)
+        nested_to_json(df).write.jdbc(cfg.url, cfg.table, mode=cfg.mode, properties=props)
     except Exception as exc:  # pragma: no cover - no JDBC driver in tests
         # setup hint only for the missing-driver case; real write errors
         # (auth, constraint violations, connectivity) propagate as-is

@@ -12,9 +12,11 @@ stores:
   the persisted signature store, operators/dedup.py
   ``write_signature_store``); each micro-batch is written, horizon
   fenced but otherwise as it arrived, to a NEW immutable delta
-  directory ``data/s<seq>/_b=<b>``, named after the manifest seq that
-  will commit it (never a batch id: ids restart at 0 when a stream is
-  replayed from a lost checkpoint) — no store read, no shuffle,
+  directory ``data/s<seq>-<attempt>/_b=<b>``, named after the manifest
+  seq that will commit it (never a batch id: ids restart at 0 when a
+  stream is replayed from a lost checkpoint) plus a random per-attempt
+  suffix (two writers aiming at the same seq never share a directory)
+  — no store read, no shuffle,
   write amplification ~1× the batch — and nothing ever overwrites a
   directory a running plan is reading;
 - the size-ratio policy of ``streaming/maintenance.py`` (delta bytes
@@ -28,8 +30,12 @@ stores:
   join) meet the delta rows in a last-writer-wins — the base is
   scanned twice but never shuffled, and the shuffled volume is the
   deltas' (at most ~0.2× the base, which the fold threshold bounds);
-- visibility is an atomic MANIFEST commit: ``manifest/gen=<seq>.json``
-  (written tmp + ``os.replace``) maps every bucket to its base data
+- visibility is an atomic, exclusive MANIFEST commit:
+  ``manifest/gen=<seq>.json`` (written to a temp file, then hard-linked
+  into place; the link fails if the seq is taken, so of two writers
+  that read the same manifest — a purge racing an apply — one commits
+  and the other raises ``ManifestConflict`` and removes its own data
+  directory) maps every bucket to its base data
   directory (``buckets``) and to its outstanding delta directories
   (``deltas``); a manifest without ``deltas`` reads as base only.  The
   current snapshot is the highest-seq manifest; a crash before the
@@ -58,7 +64,8 @@ stores:
   a stale update in a delta may be fenced only by a base tombstone;
 - old generations are cleaned best-effort after each commit
   (``retain_gens`` manifests kept; data dirs referenced by none of
-  them are deleted).
+  them are deleted, except those named after a seq past the newest
+  manifest: another writer may still be writing one).
 
 100 TB posture: a normal trigger costs one write of the (small)
 batch; a fold rewrites the whole store, so its cost amortizes over
@@ -70,7 +77,10 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import shutil
+import tempfile
+import uuid
 from functools import reduce
 from typing import Sequence
 
@@ -113,15 +123,39 @@ def _current_manifest(store_dir: str) -> dict | None:
     return _read_manifest(store_dir, seqs[-1]) if seqs else None
 
 
+class ManifestConflict(RuntimeError):
+    """Another writer committed the manifest seq this commit was for:
+    both read the same manifest, and the first to commit won."""
+
+
 def _commit_manifest(store_dir: str, manifest: dict) -> None:
-    """Atomic visibility: the rename IS the commit — readers either see
-    the previous manifest or this one, never a torn state."""
+    """Atomic, exclusive visibility: the hard link IS the commit —
+    readers either see the previous manifest or this one, never a torn
+    state, and the link fails if another writer already took the seq,
+    so no commit overwrites one it did not read."""
     mdir = _manifest_dir(store_dir)
     os.makedirs(mdir, exist_ok=True)
-    tmp = os.path.join(mdir, f".tmp.gen={manifest['seq']}.json")
-    with open(tmp, "w") as fh:
-        json.dump(manifest, fh)
-    os.replace(tmp, os.path.join(mdir, f"gen={manifest['seq']}.json"))
+    fd, tmp = tempfile.mkstemp(prefix=f".tmp.gen={manifest['seq']}.", dir=mdir)
+    try:
+        with os.fdopen(fd, "w") as fh:
+            json.dump(manifest, fh)
+        os.link(tmp, os.path.join(mdir, f"gen={manifest['seq']}.json"))
+    except FileExistsError:
+        raise ManifestConflict(
+            f"{store_dir}: manifest seq {manifest['seq']} was committed by another writer"
+        ) from None
+    finally:
+        os.remove(tmp)
+
+
+def _commit_generation(store_dir: str, manifest: dict, gen: str) -> None:
+    """Commit ``manifest``, which references the new data directory
+    ``gen``; a commit that loses the seq removes ``gen`` and re-raises."""
+    try:
+        _commit_manifest(store_dir, manifest)
+    except ManifestConflict:
+        shutil.rmtree(os.path.join(store_dir, "data", gen), ignore_errors=True)
+        raise
 
 
 def _rels(manifest: dict) -> tuple[list[str], list[str]]:
@@ -202,12 +236,22 @@ def _write_generation(df: DataFrame, store_dir: str, gen_name: str) -> dict[str,
 
 
 def _next_gen(cur: dict) -> str:
-    """Data directory for the generation the next manifest commits,
-    named after that manifest's seq.  No committed manifest can
-    reference it, so overwriting a leftover of a crashed attempt is
-    safe; a batch id is not, since ids restart at 0 when a stream is
-    replayed from a lost checkpoint."""
-    return f"s{cur['seq'] + 1}"
+    """Data directory for the generation the next manifest commits:
+    that manifest's seq (not a batch id, which restarts at 0 when a
+    stream is replayed from a lost checkpoint) plus a random suffix of
+    this attempt, so a concurrent writer that read the same manifest
+    never writes into it."""
+    return f"s{cur['seq'] + 1}-{uuid.uuid4().hex[:8]}"
+
+
+_GEN_SEQ = re.compile(r"s(\d+)(?:-|$)")
+
+
+def _in_flight(gen: str, newest_seq: int) -> bool:
+    """True for a generation named after a seq past the newest manifest:
+    a writer that read that manifest may still be writing it."""
+    m = _GEN_SEQ.match(gen)
+    return m is not None and int(m.group(1)) > newest_seq
 
 
 def _cleanup(store_dir: str, retain_gens: int) -> tuple[int, int]:
@@ -220,6 +264,7 @@ def _cleanup(store_dir: str, retain_gens: int) -> tuple[int, int]:
     for s in drop:
         os.remove(os.path.join(_manifest_dir(store_dir), f"gen={s}.json"))
     kept = _manifest_seqs(store_dir)
+    newest = kept[-1] if kept else -1
     referenced = set()
     for s in kept:
         for rels in _rels(_read_manifest(store_dir, s)):
@@ -228,7 +273,7 @@ def _cleanup(store_dir: str, retain_gens: int) -> tuple[int, int]:
     data_dir = os.path.join(store_dir, "data")
     if os.path.isdir(data_dir):
         for d in os.listdir(data_dir):
-            if d not in referenced:
+            if d not in referenced and not _in_flight(d, newest):
                 shutil.rmtree(os.path.join(data_dir, d), ignore_errors=True)
                 removed_dirs += 1
     return len(drop), removed_dirs
@@ -277,10 +322,11 @@ def init_cdc_store(
             f"columns ({list(order_cols)!r}) set to sentinel values older "
             "than any arriving change"
         )
+    gen = _next_gen({"seq": -1})
     buckets = _write_generation(
-        _bucketed(base, key, n_buckets).repartition("_b"), store_dir, "g-1"
+        _bucketed(base, key, n_buckets).repartition("_b"), store_dir, gen
     )
-    _commit_manifest(
+    _commit_generation(
         store_dir,
         {
             "seq": 0,
@@ -296,6 +342,7 @@ def init_cdc_store(
             "buckets": buckets,
             "deltas": {},
         },
+        gen,
     )
 
 
@@ -428,7 +475,12 @@ def apply_cdc_batch(
     A normal batch is written as one delta generation (no store read,
     no shuffle); once the outstanding deltas pass the size-ratio
     policy (``maintenance.size_policy``) the batch is folded with base
-    + deltas into a new base generation instead."""
+    + deltas into a new base generation instead.
+
+    Raises ``ManifestConflict`` when another writer (a purge) committed
+    after this batch read the manifest; nothing of the batch is kept,
+    and running it again applies it on top of that commit (a stream
+    replays the failed batch on restart)."""
     cur = _current_manifest(store_dir)
     if cur is None:
         raise FileNotFoundError(
@@ -461,7 +513,7 @@ def apply_cdc_batch(
         written = _write_generation(_bucketed(batch, key, cur["n_buckets"]), store_dir, gen)
         for b, rel in written.items():
             deltas[b] = [*deltas.get(b, []), rel]
-    _commit_manifest(
+    _commit_generation(
         store_dir,
         {
             **cur,
@@ -470,6 +522,7 @@ def apply_cdc_batch(
             "buckets": buckets,
             "deltas": deltas,
         },
+        gen,
     )
     _cleanup(store_dir, retain_gens)
 
@@ -537,7 +590,9 @@ def purge_tombstones(
     explicit maintenance pass, not a per-trigger cost) into a new
     generation + manifest commit — the same atomic-swap discipline as
     the merge path.  Folding first matters: a tombstone in the base
-    may be all that fences a stale update sitting in a delta."""
+    may be all that fences a stale update sitting in a delta.  Raises
+    ``ManifestConflict``, keeping nothing, when a batch committed after
+    the purge read the manifest."""
     cur = _current_manifest(store_dir)
     if cur is None:
         raise FileNotFoundError(f"no manifest under {store_dir}")
@@ -573,8 +628,9 @@ def purge_tombstones(
     kept = snap.where(
         (F.col(op_col) != "D") | ~(F.struct(*order_cols) < hz)
     )
-    written = _write_generation(kept, store_dir, _next_gen(cur))
-    _commit_manifest(
+    gen = _next_gen(cur)
+    written = _write_generation(kept, store_dir, gen)
+    _commit_generation(
         store_dir,
         {
             **cur,
@@ -585,6 +641,7 @@ def purge_tombstones(
             "buckets": written,
             "deltas": {},
         },
+        gen,
     )
 
 

@@ -6,12 +6,15 @@ from __future__ import annotations
 import json
 import os
 import random
+import sys
+import threading
 
 import pandas as pd
 import pytest
 
 from cassandra_extractor_spark.streaming import cdc_stream
 from cassandra_extractor_spark.streaming.cdc_stream import (
+    ManifestConflict,
     _current_manifest,
     _fold,
     apply_cdc_batch,
@@ -127,7 +130,9 @@ def test_purge_folds_stale_delta_under_base_tombstone(spark, tmp_path):
 
 def test_uncommitted_delta_is_invisible_and_cleaned(spark, tmp_path, monkeypatch):
     """A crash between the delta write and the manifest commit leaves
-    the previous view intact; retention then removes the orphan dir."""
+    the previous view intact.  Retention keeps the orphan while its seq
+    is past the newest manifest (a live writer's generation looks the
+    same) and removes it once a later commit passes that seq."""
     store = str(tmp_path / "store")
     _init(spark, store, [(1, "U", 0, 100), (2, "U", 0, 200)])
 
@@ -138,15 +143,99 @@ def test_uncommitted_delta_is_invisible_and_cleaned(spark, tmp_path, monkeypatch
     with pytest.raises(RuntimeError, match="killed"):
         _apply(spark, store, [(1, "D", 5, 0), (3, "U", 5, 300)], 0)
     monkeypatch.undo()
-    orphan = os.path.join(store, "data", "s1")
-    assert os.path.isdir(orphan)
+    [orphan] = [d for d in os.listdir(os.path.join(store, "data")) if d.startswith("s1-")]
+    orphan = os.path.join(store, "data", orphan)
     assert _current_manifest(store)["seq"] == 0
     assert _view(spark, store) == {1: 100, 2: 200}
 
     rep = cleanup_generations(store, retain_gens=1)
-    assert rep["removed_generations"] == 1
+    assert rep["removed_generations"] == 0
+    assert os.path.isdir(orphan)
+
+    _apply(spark, store, [(2, "U", 6, 222)], 1)
+    assert _current_manifest(store)["seq"] == 1
     assert not os.path.exists(orphan)
-    assert _view(spark, store) == {1: 100, 2: 200}
+    assert _view(spark, store) == {1: 100, 2: 222}
+
+
+@pytest.mark.parametrize("winner", ["purge", "apply"])
+def test_racing_purge_and_apply_commit_once(spark, tmp_path, monkeypatch, winner):
+    """A purge and an apply read the same manifest.  The other one
+    commits while the loser writes its generation: the loser's commit
+    raises, its directory is removed, and the view is last-writer-wins
+    over the winner's inputs alone.  Run again, the loser applies on
+    top of the winner."""
+    store = str(tmp_path / "store")
+    _init(spark, store, [(1, "U", 0, 100), (2, "D", 3, 0), (3, "U", 0, 300)])
+    batch = [(1, "U", 5, 111), (4, "U", 5, 400)]
+    runs = {
+        "purge": lambda: purge_tombstones(spark, store, ["seq"], "op", horizon=[5]),
+        "apply": lambda: _apply(spark, store, batch, 0),
+    }
+    loser = "apply" if winner == "purge" else "purge"
+    write = cdc_stream._write_generation
+    loser_gens = []
+
+    def write_after_the_winner_commits(df, store_dir, gen):
+        monkeypatch.setattr(cdc_stream, "_write_generation", write)
+        loser_gens.append(gen)
+        runs[winner]()
+        return write(df, store_dir, gen)
+
+    monkeypatch.setattr(cdc_stream, "_write_generation", write_after_the_winner_commits)
+    with pytest.raises(ManifestConflict):
+        runs[loser]()
+    m = _current_manifest(store)
+    assert m["seq"] == 1 and m["horizon"] == ([5] if winner == "purge" else None)
+    assert not os.path.exists(os.path.join(store, "data", loser_gens[0]))
+    referenced = {
+        rel.split("/", 1)[0]
+        for seq in cdc_stream._manifest_seqs(store)
+        for rels in cdc_stream._rels(cdc_stream._read_manifest(store, seq))
+        for rel in rels
+    }
+    assert set(os.listdir(os.path.join(store, "data"))) == referenced
+    if winner == "purge":
+        assert {r.k for r in cdc_stream._read_current(spark, store).collect()} == {1, 3}
+        assert _view(spark, store) == {1: 100, 3: 300}
+    else:
+        assert _view(spark, store) == {1: 111, 3: 300, 4: 400}
+
+    runs[loser]()
+    assert _current_manifest(store)["seq"] == 2
+    assert _view(spark, store) == {1: 111, 3: 300, 4: 400}
+
+
+def test_concurrent_manifest_commits_of_one_seq_have_one_winner(tmp_path):
+    """More committers than cores race for the same seq: exactly one
+    commit lands, every other raises, and the manifest is the winner's."""
+    store = str(tmp_path / "store")
+    n = 4 * (os.cpu_count() or 1)
+    start = threading.Barrier(n, timeout=30)
+    won, lost = [], []
+
+    def commit(i):
+        start.wait()
+        try:
+            cdc_stream._commit_manifest(store, {"seq": 1, "writer": i})
+            won.append(i)
+        except ManifestConflict:
+            lost.append(i)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=commit, args=(i,)) for i in range(n)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=30)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert len(won) == 1 and len(lost) == n - 1
+    assert cdc_stream._read_manifest(store, 1) == {"seq": 1, "writer": won[0]}
+    assert os.listdir(os.path.join(store, "manifest")) == ["gen=1.json"]
 
 
 def test_replayed_batch_id_writes_nothing(spark, tmp_path):

@@ -5,6 +5,8 @@ scans, checkpoint restart, replay overwrite, and idempotent compaction
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -20,6 +22,8 @@ from cassandra_extractor_spark.streaming.posting_stream import (
 )
 
 SCHEMA = "doc_id LONG, text STRING"
+#: the checkout these tests live in; the subprocess sessions import it
+ROOT = Path(__file__).resolve().parent.parent
 
 
 def _write_batch(spark, tmp_path, src, file_no: int, df) -> None:
@@ -144,7 +148,7 @@ def test_exiting_process_releases_its_session_store(spark, sf_dir):
 
     script = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {str(ROOT)!r})
 from cassandra_extractor_spark.session import get_spark
 from cassandra_extractor_spark.streaming.posting_stream import (
     ensure_session_bm25_store)
@@ -158,7 +162,7 @@ print("TABLES", *tables)
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     theirs = next(
@@ -397,7 +401,7 @@ def test_two_process_store_isolation(spark, sf_dir):
     # only its own app-id-tagged tables) and exit
     script = f"""
 import sys
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, {str(ROOT)!r})
 from cassandra_extractor_spark.operators.dedup import invalidate_dedup_chain
 from cassandra_extractor_spark.session import get_spark
 from cassandra_extractor_spark.streaming.posting_stream import (
@@ -415,7 +419,7 @@ spark.stop()
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=ROOT,
     )
     assert out.returncode == 0, out.stderr[-2000:]
     lines = dict(

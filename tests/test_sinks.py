@@ -7,7 +7,12 @@ import json
 from pyspark.sql import Row
 
 from cassandra_extractor_spark.sinks.fanout import fan_out
-from cassandra_extractor_spark.sinks.jdbc import JdbcSinkConfig, ensure_partitions, partition_ddl
+from cassandra_extractor_spark.sinks.jdbc import (
+    JdbcSinkConfig,
+    ensure_partitions,
+    partition_ddl,
+    write_jdbc,
+)
 from cassandra_extractor_spark.sinks.jsonl import write_json_array_file, write_jsonl
 from cassandra_extractor_spark.sinks.kafka import (
     KafkaSinkConfig,
@@ -77,6 +82,43 @@ def test_jdbc_partition_ddl(spark):
     assert any("FOR VALUES IN ('a')" in s for s in issued)
     assert any("PARTITION OF tgt" in s for s in issued)
     assert partition_ddl("t", "c", ["x'y"])[0].count("''") == 1  # escaping
+
+
+def test_write_jdbc_sends_nested_columns_as_json_text(spark, monkeypatch):
+    """A JDBC table has no struct or VARIANT column type: the writer
+    gets those columns as JSON text (no database needed: the JDBC
+    write itself is captured)."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    sent = []
+    monkeypatch.setattr(DataFrameWriter, "jdbc", lambda self, *a, **k: sent.append(self._df))
+    df = spark.sql(
+        """SELECT 1 AS id, named_struct('k', 7) AS st, parse_json('{"v": 2.5}') AS var"""
+    )
+    write_jdbc(df, JdbcSinkConfig(url="jdbc:x", table="t"))
+    [frame] = sent
+    assert frame.dtypes == [("id", "int"), ("st", "string"), ("var", "string")]
+    r = frame.first()
+    assert (r.id, r.st, r.var) == (1, '{"k":7}', '{"v":2.5}')
+
+
+def test_app_csv_sink_writes_a_schema_less_object_column_as_json(spark, sf_dir, tmp_path):
+    """The CSV sink of ``app.main`` takes a ``convertTo: "object"``
+    column without a schema (VARIANT) and writes it as JSON text."""
+    import pyarrow.parquet as pq
+
+    from cassandra_extractor_spark import app as app_mod
+
+    spec = tmp_path / "spec.json"
+    spec.write_text(json.dumps({"columns": [{"name": "props", "convertTo": "object"}]}))
+    out = str(tmp_path / "out")
+    rc = app_mod.main(["-T", "events", "--sf-dir", sf_dir, "--output", out,
+                       "--sinks", "csv", "--table-specs", str(spec)])
+    assert rc == 0
+    back = spark.read.option("header", "true").csv(f"{out}/events_csv")
+    got = {int(r.event_id): json.loads(r.props) for r in back.select("event_id", "props").collect()}
+    src = pq.read_table(f"{sf_dir}/events.parquet", columns=["event_id", "props"]).to_pylist()
+    assert got == {r["event_id"]: json.loads(r["props"]) for r in src}
 
 
 def test_s3_frame_keying(spark):

@@ -126,3 +126,30 @@ def test_stream_extract_sink_error_fails_the_batch_and_replays(spark, tmp_path):
     run()
     assert sorted(got["a"]) == sorted(list(range(6)) * 2)
     assert sorted(got["b"]) == list(range(6))
+
+
+def test_app_streaming_with_schema_less_object_column(spark, sf_dir, tmp_path):
+    """``app.main --streaming`` with a schema-less ``convertTo: "object"``:
+    the table spec builds on the streaming frame (nothing to sample)
+    and every row arrives with its JSON object as written."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+
+    from cassandra_extractor_spark import app as app_mod
+
+    spec = tmp_path / "spec.json"
+    spec.write_text(json.dumps({"columns": [{"name": "props", "convertTo": "object"}]}))
+    out = tmp_path / "out"
+    rc = app_mod.main(["-T", "events", "--sf-dir", sf_dir, "--output", str(out),
+                       "--streaming", "--table-specs", str(spec)])
+    assert rc == 0
+    got = {}
+    for f in glob.glob(f"{out}/events/batch=*/*.json"):
+        with open(f) as fh:
+            for line in fh:
+                row = json.loads(line)
+                got[row["event_id"]] = row["props"]
+    src = pq.read_table(f"{sf_dir}/events.parquet", columns=["event_id", "props"]).to_pylist()
+    assert got == {r["event_id"]: json.loads(r["props"]) for r in src}

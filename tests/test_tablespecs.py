@@ -4,6 +4,8 @@ against events, reference edge semantics locked in."""
 from __future__ import annotations
 
 import datetime
+import json
+import uuid
 
 from pyspark.sql import Row, functions as F, types as T
 
@@ -11,6 +13,7 @@ from cassandra_extractor_spark.functions.tablespecs import (
     TableSpec,
     apply_table_spec,
     default_id,
+    nested_to_json,
     render_template,
     strptime_to_spark,
     to_json_rows,
@@ -212,74 +215,133 @@ def test_timestamp_column_converts_to_millis_under_any_format(spark):
         assert {r.id: r.ts for r in out.collect()} == want, fmt
 
 
-def _inferred(spark, rows, ddl, spec_col):
+def _converted(spark, rows, ddl, spec_col):
     df = spark.createDataFrame(rows, ddl)
     return apply_table_spec(df, {"columns": [spec_col]})
 
 
-def test_object_convert_infers_schema_from_sample(spark):
-    """No ``schema``: the struct is inferred from the column's values.
-    An int in one row and a float in another widen to double, keys are
-    unioned across rows, nested objects stay structs."""
-    out = _inferred(
+def _rendered(out, tmp_path):
+    """``j`` of each row as JSON, rendered twice: by ``to_json`` (the
+    Kafka/S3 path) and by ``write.json`` (the JSONL path)."""
+    by_to_json = {
+        r.id: None if r.j is None else json.loads(r.j)
+        for r in out.select("id", F.to_json("j").alias("j")).collect()
+    }
+    out.write.mode("overwrite").json(str(tmp_path / "jsonl"))
+    by_write_json = {}
+    for f in (tmp_path / "jsonl").glob("*.json"):
+        for line in f.read_text().splitlines():
+            row = json.loads(line)
+            by_write_json[row["id"]] = row.get("j")
+    return by_to_json, by_write_json
+
+
+def test_object_convert_parses_to_variant(spark):
+    """No ``schema``: the object parses to VARIANT, keeping every key
+    and every number as written (the reference's ``json.loads`` then
+    ``json.dumps``); malformed text and null give null."""
+    out = _converted(
         spark,
-        [(1, '{"a": 1, "o": {"x": 1}}'), (2, '{"a": 2.5, "b": "s"}'), (3, None)],
+        [(1, '{"a": 1, "o": {"x": 1}}'), (2, '{"a": 2.5, "b": "s"}'), (3, None),
+         (4, '{"x":1}'), (5, '{"x":2.5}'), (6, "{not json"), (7, "{}")],
         "id int, j string",
         {"name": "j", "convertTo": "object"},
     )
-    want = T.StructType([
-        T.StructField("a", T.DoubleType()),
-        T.StructField("b", T.StringType()),
-        T.StructField("o", T.StructType([T.StructField("x", T.LongType())])),
-    ])
-    assert out.schema["j"].dataType == want
-    got = {r.id: r.j for r in out.collect()}
-    assert got[1].a == 1.0 and got[1].o.x == 1 and got[1].b is None
-    assert got[2].a == 2.5 and got[2].b == "s" and got[2].o is None
-    assert got[3] is None
+    assert out.schema["j"].dataType == T.VariantType()
+    got = {r.id: r.j for r in out.select("id", F.to_json("j").alias("j")).collect()}
+    assert json.loads(got[1]) == {"a": 1, "o": {"x": 1}}
+    assert json.loads(got[2]) == {"a": 2.5, "b": "s"}
+    assert got[4] == '{"x":1}' and got[5] == '{"x":2.5}'
+    assert got[3] is None and got[6] is None
+    assert got[7] == "{}"
 
 
-def test_list_convert_infers_schema_from_elements(spark):
-    out = _inferred(
+def test_object_convert_keeps_a_key_first_seen_after_row_1000(spark):
+    rows = [(i, '{"a": %d}' % i) for i in range(1500)]
+    rows[1200] = (1200, '{"a": 1200, "late": "x"}')
+    out = _converted(spark, rows, "id int, j string", {"name": "j", "convertTo": "object"})
+    got = {
+        r.id: json.loads(r.j)
+        for r in out.select("id", F.to_json("j").alias("j")).where("id in (0, 1200)").collect()
+    }
+    assert got == {0: {"a": 0}, 1200: {"a": 1200, "late": "x"}}
+
+
+def test_list_convert_parses_elements_to_variant(spark, tmp_path):
+    out = _converted(
         spark,
-        [(1, ['{"a": 1}', None, '{"n": {"y": "q"}}']), (2, ['{"a": 0.5}'])],
+        [(1, ['{"a": 1}', None, '{"n": {"y": "q"}}']), (2, ['{"a": 0.5}', "[oops"]), (3, [])],
         "id int, j array<string>",
         {"name": "j", "convertTo": "list"},
     )
-    elem = out.schema["j"].dataType.elementType
-    assert elem == T.StructType([
-        T.StructField("a", T.DoubleType()),
-        T.StructField("n", T.StructType([T.StructField("y", T.StringType())])),
-    ])
-    got = {r.id: r.j for r in out.collect()}
-    assert got[1][0].a == 1.0 and got[1][2].n.y == "q"
-    assert got[2][0].a == 0.5
+    assert out.schema["j"].dataType == T.ArrayType(T.VariantType())
+    want = {1: [{"a": 1}, None, {"n": {"y": "q"}}], 2: [{"a": 0.5}, None], 3: []}
+    assert _rendered(out, tmp_path) == (want, want)
 
 
-def test_map_convert_infers_schema_from_values(spark):
-    out = _inferred(
+def test_map_convert_parses_values_to_variant(spark, tmp_path):
+    out = _converted(
         spark,
-        [(1, {"k1": '{"a": 3}', "k2": '{"b": [1, 2]}'}), (2, {"k3": '{"a": 1.25}'})],
+        [(1, {"k1": '{"a": 3}', "k2": '{"b": [1, 2.5]}'}), (2, {"k3": "nope", "k4": None})],
         "id int, j map<string,string>",
         {"name": "j", "convertTo": "map"},
     )
-    val = out.schema["j"].dataType.valueType
-    assert val == T.StructType([
-        T.StructField("a", T.DoubleType()),
-        T.StructField("b", T.ArrayType(T.LongType())),
-    ])
-    got = {r.id: r.j for r in out.collect()}
-    assert got[1]["k1"].a == 3.0 and got[1]["k2"].b == [1, 2]
-    assert got[2]["k3"].a == 1.25
+    assert out.schema["j"].dataType == T.MapType(T.StringType(), T.VariantType())
+    want = {1: {"k1": {"a": 3}, "k2": {"b": [1, 2.5]}}, 2: {"k3": None, "k4": None}}
+    assert _rendered(out, tmp_path) == (want, want)
 
 
-def test_all_null_column_infers_empty_struct(spark):
-    empty = T.StructType()
+def test_all_null_column_parses_to_null_variants(spark):
     for ddl, kind, want in (
-        ("j string", "object", empty),
-        ("j array<string>", "list", T.ArrayType(empty)),
-        ("j map<string,string>", "map", T.MapType(T.StringType(), empty)),
+        ("j string", "object", T.VariantType()),
+        ("j array<string>", "list", T.ArrayType(T.VariantType())),
+        ("j map<string,string>", "map", T.MapType(T.StringType(), T.VariantType())),
     ):
-        out = _inferred(spark, [(None,), (None,)], ddl, {"name": "j", "convertTo": kind})
+        out = _converted(spark, [(None,), (None,)], ddl, {"name": "j", "convertTo": kind})
         assert out.schema["j"].dataType == want, kind
         assert [r.j for r in out.collect()] == [None, None]
+
+
+def test_schema_less_build_runs_no_spark_job(spark):
+    """Building an extraction with schema-less object/list/map
+    conversions is plan-only: no job in the caller's job group until
+    an action runs."""
+    from cassandra_extractor_spark.plans.spec import ExtractionSpec
+
+    df = spark.createDataFrame(
+        [(1, '{"a": 1}', ['{"b": 2}'], {"k": '{"c": 3}'})],
+        "id int, o string, l array<string>, m map<string,string>",
+    )
+    spec = ExtractionSpec(table="t", table_spec={"columns": [
+        {"name": "o", "convertTo": "object"},
+        {"name": "l", "convertTo": "list"},
+        {"name": "m", "convertTo": "map"},
+    ]})
+    sc = spark.sparkContext
+    group = f"spec-build-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "spec.build")
+    try:
+        out = spec.build(spark, source_df=df)
+        at_build = list(sc.statusTracker().getJobIdsForGroup(group))
+        out.count()  # an action in the same group is counted
+        after_action = list(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        sc._jsc.clearJobGroup()
+    assert at_build == []
+    assert after_action
+
+
+def test_nested_to_json_flattens_every_nested_column(spark):
+    """CSV and JDBC hold flat columns only: structs, arrays, maps and
+    VARIANT become JSON text, flat columns pass through unchanged."""
+    df = spark.sql(
+        """SELECT 1 AS id, 'x' AS s, named_struct('k', 7) AS st, array(1, 2) AS arr,
+                  map('a', 1.5) AS mp, parse_json('{"v": [1, 2.5]}') AS var"""
+    )
+    out = nested_to_json(df)
+    assert out.dtypes == [("id", "int"), ("s", "string"), ("st", "string"),
+                          ("arr", "string"), ("mp", "string"), ("var", "string")]
+    r = out.first()
+    assert (r.id, r.s) == (1, "x")
+    assert [json.loads(v) for v in (r.st, r.arr, r.mp, r.var)] == [
+        {"k": 7}, [1, 2], {"a": 1.5}, {"v": [1, 2.5]}]

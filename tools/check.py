@@ -20,11 +20,12 @@ import hashlib
 import math
 import sys
 import time
+from pathlib import Path
 
 import duckdb
 import numpy as np
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 
 def canon_cell(v) -> str:

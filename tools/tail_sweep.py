@@ -18,8 +18,9 @@ Usage: python tools/tail_sweep.py [sf_dir]
 """
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from cassandra_extractor_spark.session import get_spark
 
