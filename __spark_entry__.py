@@ -9,11 +9,15 @@ from __future__ import annotations
 
 import sys
 from collections.abc import Callable
+from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-if "/root/repo" not in sys.path:
-    sys.path.insert(0, "/root/repo")
+#: the checkout this file lives in: its package is imported, never
+#: another copy that happens to be installed or on the path
+_ROOT = str(Path(__file__).resolve().parent)
+if _ROOT not in sys.path:
+    sys.path.insert(0, _ROOT)
 
 
 def entry(spark: SparkSession) -> DataFrame:

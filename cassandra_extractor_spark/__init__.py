@@ -7,7 +7,7 @@ Kafka / S3 / JDBC / JSONL sinks — rebuilt on Spark DataFrames so that
 Catalyst/Tungsten (pushdown, pruning, AQE, codegen) do the physical
 planning, plus the full relational query surface (joins, aggregates,
 windows, set ops) and large-scale training-data-pipeline operators
-(dedup, similarity search, text analysis, multimodal columns).
+(dedup, similarity search, text analysis, binary payload metadata).
 
 Design stance (SURVEY §7.0): DataFrame/SQL first, no RDDs, no custom
 Catalyst rules; Python stays out of the hot path (built-in functions >

@@ -29,6 +29,12 @@ from cassandra_extractor_spark.sinks.jsonl import write_jsonl
 from cassandra_extractor_spark.streaming.hwm import HighWaterMarkStore
 
 
+def _truthy(v) -> bool:
+    """A config flag: ``True`` from the CLI, or a true-looking string
+    from env/properties."""
+    return v is True or str(v).strip().lower() in ("true", "1", "yes")
+
+
 def build_parser() -> argparse.ArgumentParser:
     p = argparse.ArgumentParser(description="PySpark-native extraction engine")
     p.add_argument("-T", "--tables", help="comma-separated table list")
@@ -79,10 +85,6 @@ def main(argv: list[str] | None = None) -> int:
     def cfg(key: str, default=None, cast=None):
         return resolve(key, cli, props, default=default, cast=cast)
 
-    def cfg_flag(key: str) -> bool:
-        v = cfg(key)
-        return v is True or str(v).strip().lower() in ("true", "1", "yes")
-
     tables = (cfg("tables") or "").split(",")
     if not tables or not tables[0]:
         print("no tables given (-T)", file=sys.stderr)
@@ -94,7 +96,7 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("extractor-app")
     metrics = MetricsRegistry()
     actuator = Actuator(spark, metrics)
-    actuator.masked_config = {k: v for k, v in {**props, **cli}.items()}
+    actuator.masked_config = {**props, **cli}
     actuator.hwm_store = hwm_store
 
     def build_job(table: str, extra_props: dict | None = None) -> ExtractionJob:
@@ -108,12 +110,8 @@ def main(argv: list[str] | None = None) -> int:
         if extra_props:
             tprops = {**tprops, **extra_props}
 
-        def tcfg(key: str, default=None, cast=None, _p=tprops):
-            return resolve(key, cli, _p, default=default, cast=cast)
-
-        def tcfg_flag(key: str, _p=tprops) -> bool:
-            v = resolve(key, cli, _p)
-            return v is True or str(v).strip().lower() in ("true", "1", "yes")
+        def tcfg(key: str, default=None, cast=None):
+            return resolve(key, cli, tprops, default=default, cast=cast)
 
         table_spec = None
         if tcfg("table.specs"):
@@ -134,37 +132,27 @@ def main(argv: list[str] | None = None) -> int:
 
         sink_names = (tcfg("sinks", default="jsonl") or "jsonl").split(",")
 
-        def make_sinks(table: str, sink_names=sink_names):  # bind now (loop rebinds)
+        def make_sinks():
             writers = {
-                "jsonl": lambda d, t=table: write_jsonl(d, f"{output}/{t}"),
-                "parquet": lambda d, t=table: d.write.mode("overwrite").parquet(
-                    f"{output}/{t}_parquet"
+                "jsonl": lambda d: write_jsonl(d, f"{output}/{table}"),
+                "parquet": lambda d: d.write.mode("overwrite").parquet(
+                    f"{output}/{table}_parquet"
                 ),
                 # CSV has no nested type: structs, arrays, maps and
                 # VARIANT go out as JSON text
-                "csv": lambda d, t=table: nested_to_json(d).write.mode("overwrite")
+                "csv": lambda d: nested_to_json(d).write.mode("overwrite")
                 .option("header", "true")
-                .csv(f"{output}/{t}_csv"),
+                .csv(f"{output}/{table}_csv"),
             }
             unknown = set(sink_names) - set(writers)
             if unknown:
                 raise ValueError(f"unknown sinks: {sorted(unknown)}")
             return {n: writers[n] for n in sink_names}
 
-        def run(
-            job: ExtractionJob,
-            spec=spec,
-            table=table,
-            # default-arg binding kept from the loop-body days; inside
-            # build_job each call already gets a fresh closure scope
-            tcfg=tcfg,
-            tcfg_flag=tcfg_flag,
-            sink_names=sink_names,
-            make_sinks=make_sinks,
-        ):
+        def run(job: ExtractionJob):
             from pyspark.sql import Observation, functions as F
 
-            if tcfg_flag("streaming"):
+            if _truthy(tcfg("streaming")):
                 from cassandra_extractor_spark.sources.catalog import DEFAULT_SF_DIR
                 from cassandra_extractor_spark.streaming.pipeline import stream_extract
 
@@ -180,14 +168,14 @@ def main(argv: list[str] | None = None) -> int:
                 stream_spec = dataclasses.replace(spec, sort=[], limit=None, hwm_column=None)
                 batch_counts: list[int] = []
 
-                def dispatch(d, batch_id, t=table):
+                def dispatch(d, batch_id):
                     # foreachBatch is at-least-once: a crash between the
                     # write and the checkpoint commit re-runs the batch,
                     # so each batch overwrites its OWN batch_id path —
                     # the replay is idempotent
                     d = d.persist()
                     batch_counts.append(d.count())
-                    d.write.mode("overwrite").json(f"{output}/{t}/batch={batch_id}")
+                    d.write.mode("overwrite").json(f"{output}/{table}/batch={batch_id}")
                     d.unpersist()
 
                 q = stream_extract(
@@ -215,7 +203,7 @@ def main(argv: list[str] | None = None) -> int:
             # processed counter, metrics.py:5-35) — no second scan
             obs = Observation(f"extract_{table}")
             df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            results = fan_out(df, make_sinks(table))
+            results = fan_out(df, make_sinks())
             failed = {k: str(v) for k, v in results.items() if v is not None}
             if failed:
                 raise RuntimeError(f"sink failures: {failed}")
@@ -229,7 +217,7 @@ def main(argv: list[str] | None = None) -> int:
     actuator.job_factory = build_job
     for table in tables:
         actuator.create(build_job(table))
-        if not cfg_flag("no.auto.start"):
+        if not _truthy(cfg("no.auto.start")):
             actuator.start(table)
 
     server = actuator.serve(cfg("actuator.port", cast=int)) if cfg("actuator.port") is not None else None

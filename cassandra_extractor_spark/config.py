@@ -81,14 +81,3 @@ def load_table_properties(
         if os.path.exists(path):
             merged.update(load_properties(path))
     return merged
-
-
-def resolve_all(
-    keys: dict[str, tuple[Any, Any]],
-    cli_args: dict[str, Any] | None = None,
-    properties: dict[str, str] | None = None,
-) -> dict[str, Any]:
-    """Resolve ``{key: (default, cast)}`` in one pass."""
-    return {
-        k: resolve(k, cli_args, properties, default=d, cast=c) for k, (d, c) in keys.items()
-    }

@@ -304,12 +304,6 @@ def default_id(df: DataFrame, id_col: str = "id") -> DataFrame:
     return df.withColumn(id_col, F.expr("uuid()"))
 
 
-def to_json_rows(df: DataFrame) -> DataFrame:
-    """T10: serialize each row to a JSON text column (reference
-    ``json.dumps`` fallback, jsonworker.py:37)."""
-    return df.select(F.to_json(F.struct(*[F.col(c) for c in df.columns])).alias("value"))
-
-
 #: column types a flat format (CSV, a JDBC table) has no column type for
 _NESTED_TYPES = (T.StructType, T.ArrayType, T.MapType, T.VariantType)
 

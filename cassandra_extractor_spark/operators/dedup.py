@@ -3,10 +3,10 @@ MinHash-LSH, SimHash, and embedding-cosine near-dup.
 
 Scale design (100 TB posture):
 
-- **Signatures are per-row projections** — MinHash/SimHash/fingerprint
-  are computed with built-in array/hash functions inside whole-stage
-  codegen; no explode, no shuffle, no Python.  A 100 TB corpus gets its
-  signatures in one map-only pass.
+- **Signatures are built-in hash functions inside whole-stage codegen**
+  — no Python.  Fingerprints are per-row; MinHash and SimHash fold the
+  corpus's exploded shingles (``exploded_shingles``, one explode per
+  session via ``shared_shingles``) with a groupBy per document.
 - **Candidate generation is a band-signature self-join** — the classic
   shuffle-on-bucket-key LSH join.  Shuffle volume is O(#bands × rows),
   keys are md5-uniform so there is no inherent skew; degenerate buckets
@@ -27,7 +27,7 @@ import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.types import DoubleType
 
-from cassandra_extractor_spark.operators.text import distinct_tokens, doc_fingerprint_col, tokens
+from cassandra_extractor_spark.operators.text import doc_fingerprint_col, tokens
 from cassandra_extractor_spark.sources.catalog import _norm_dir, load_table
 
 NUM_PERM = 8  #: minhash permutations
@@ -63,71 +63,6 @@ def _mh_perm(h1: Column, h2: Column, s: int) -> Column:
     return F.pmod(h1 + F.lit(s) * h2, F.lit(MH_MOD))
 
 
-def minhash_signature(text: Column, num_perm: int = NUM_PERM) -> list[Column]:
-    """MinHash signature over 3-word shingles: per permutation, min of
-    double-hashed shingle values.
-
-    Shingles (not unigrams) keep the signature discriminative — unigram
-    signatures over a small vocabulary collide for nearly every pair.
-    Computed entirely per-row (array_min over transform) — map-only.
-
-    Permutations use Kirsch-Mitzenmacher double hashing
-    (g_s = h1 + s·h2 mod 2^40, both halves of ONE md5): one md5 per
-    shingle instead of NUM_PERM — md5 dominated the signature pass
-    (8× fewer digests measured ~4× faster end-to-end at sf0.1); the
-    per-permutation combination is pure codegen integer arithmetic.
-    """
-    def pair(t):
-        # single-param closure: a 2-param lambda would make Spark bind
-        # the second param to the array index
-        h1, h2 = _mh_base_hashes(t)
-        return F.struct(h1.alias("h1"), h2.alias("h2"))
-
-    # md5 once per shingle into (h1, h2) pairs; the 8 permutation mins
-    # then fold the pair array with integer arithmetic only
-    pairs = F.transform(_shingles(text), pair)
-
-    def perm_min(s: int):
-        return lambda p: _mh_perm(p["h1"], p["h2"], s)
-
-    return [
-        F.array_min(F.transform(pairs, perm_min(s))).alias(f"mh{s}")
-        for s in range(num_perm)
-    ]
-
-
-def simhash_col(text: Column, bits: int = SIMHASH_BITS) -> Column:
-    """SimHash: sign of per-bit vote sums over 3-shingle hashes, per-row.
-
-    ``aggregate`` folds the shingle array once, accumulating all bit
-    votes in an int array — no explode, no shuffle.
-    """
-    # hash once per shingle, then fold the hash array accumulating all
-    # bit votes at once (bit positions unrolled in Python: shift amounts
-    # must be literals)
-    hashes = F.transform(_shingles(text), lambda t: _md5_hash64(t, "sh"))
-    votes = F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(0), bits),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.array(
-                *[
-                    F.when(F.shiftright(h, b).bitwiseAND(1) == 1, F.lit(1)).otherwise(F.lit(-1))
-                    for b in range(bits)
-                ]
-            ),
-            lambda a, v: a + v,
-        ),
-    )
-    sig = F.lit(0).cast("long")
-    for b in range(bits):
-        sig = sig + F.when(
-            F.element_at(votes, b + 1) > 0, F.lit(1 << b).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-    return sig
-
-
 # --- queries() entries -------------------------------------------------
 
 
@@ -153,22 +88,6 @@ def ns_dedup_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.min("doc_id").alias("keep_id"), F.count("*").alias("dup_cnt"))
         .orderBy("keep_id")
     )
-
-
-def _shingles(text: Column, n: int = 3) -> Column:
-    """Word n-gram shingles as a distinct array (per-row)."""
-    toks = tokens(text)
-    # guard: Spark sequence(1, 0) counts DOWN, so short docs need an
-    # explicit empty-array branch
-    return F.when(
-        F.size(toks) >= n,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(1), F.size(toks) - (n - 1)),
-                lambda i: F.concat_ws(" ", F.slice(toks, i, n)),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
 
 
 def ns_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,8 +160,8 @@ def exploded_shingles(d: DataFrame, n: int = 3) -> DataFrame:
     guide §2.1: the previous posexplode+lead-window spelling paid a
     corpus-token-volume shuffle for ordering the window already had in
     the array).  ``sequence``/``slice``/``concat_ws`` are all
-    whole-stage-codegen'd; the array-lambda `_shingles` spelling runs
-    interpreted and is an order of magnitude slower.  Output is NOT
+    whole-stage-codegen'd; an array-lambda (``transform``) spelling
+    runs interpreted and is an order of magnitude slower.  Output is NOT
     distinct — callers that need set semantics (simhash votes) dedupe;
     MIN-based consumers (minhash) don't have to, since MIN is
     duplicate-insensitive.
@@ -793,8 +712,7 @@ def ns_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     # session-shared DISTINCT shingles (votes must count each shingle
     # once, matching the oracle's list_distinct; docs with <3 tokens
     # produce zero shingles, so the old ≥3-token pre-filter is implied)
-    # → md5 → 32 vote-sum aggs (simhash_col is the map-only per-row
-    # variant for pipelines that cannot afford the shuffles)
+    # → md5 → 32 vote-sum aggs
     exploded = shared_shingles(spark, sf_dir)
     h = exploded.select("doc_id", _md5_hash64(F.col("sh"), "sh").alias("hv"))
     votes = h.groupBy("doc_id").agg(
@@ -964,10 +882,6 @@ def cosine_defined(nrm: Column) -> Column:
     also catches a null norm.  Spark orders NaN above every number, so
     ``nrm > 0`` alone keeps a vector with a NaN component."""
     return nrm.isNotNull() & ~F.isnan(nrm) & (nrm > 0)
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 def connected_components(

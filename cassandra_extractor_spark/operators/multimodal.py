@@ -1,813 +1,16 @@
-"""Multimodal column handling: opaque binary payloads + typed metadata.
+"""Multimodal column handling: the metadata of an opaque binary payload.
 
-Images/audio/video travel as ``binary`` columns with a metadata struct.
-The Spark-side plumbing (schemas, Arrow-batched ``mapInPandas`` UDFs,
-partition-sized batches) is real and tested.  REAL ``real=True`` paths,
-all pure-stdlib(+numpy): PNG decode (``decode_png``: inflate + unfilter
-+ palette expansion, written from the public spec), baseline JPEG
-decode/encode (``jpegcodec``: Huffman entropy decode, dequant, IDCT,
-chroma upsample, written from ITU-T T.81), nearest-neighbor resize for
-both formats, and RIFF/WAV audio features (stdlib ``wave``: true
-rate/frames/RMS), MP4 container metadata (``parse_mp4_meta``), and
-video frame sampling for Motion-JPEG MP4s (``build_mjpeg_mp4`` /
-``demux_mp4_samples`` / ``sample_frames(real=True)``: the container's
-own sample table yields per-frame byte ranges and each sampled frame
-is fully Huffman+IDCT-decoded).  Inter-coded bitstreams (H.264 …)
-remain honestly out of scope; every operator is paired with a
-clearly-marked deterministic fake exercising the identical plumbing.
-
-Scale notes: binary payloads never pass through Python row-at-a-time —
-``mapInPandas`` receives Arrow record batches; batch size is governed by
-``spark.sql.execution.arrow.maxRecordsPerBatch``.  Decode/resize is
-embarrassingly parallel; keep partitions at ~128 MB of payload via
-``spark.sql.files.maxPartitionBytes`` so one task's batch fits executor
-memory.
+A payload column travels as ``binary``; what the engine computes over it
+is its byte length and content hash, with Spark built-ins only (no UDF,
+no decoding).  Decoding images, audio or video is out of scope for an
+extractor: the payload is carried to the sinks unchanged.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame, SparkSession, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cassandra_extractor_spark.sources.catalog import load_table
-
-#: metadata struct attached to every binary payload column
-MEDIA_META_SCHEMA = T.StructType(
-    [
-        T.StructField("n_bytes", T.LongType()),
-        T.StructField("content_md5", T.StringType()),
-        T.StructField("mime", T.StringType()),
-    ]
-)
-
-DECODED_IMAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("channels", T.IntegerType()),
-    ]
-)
-
-_MAGIC = [
-    (b"\x89PNG", "image/png"),
-    (b"\xff\xd8\xff", "image/jpeg"),
-    (b"RIFF", "audio/wav"),
-    (b"\x00\x00\x00", "video/mp4"),
-]
-
-
-def attach_media_metadata(df: DataFrame, binary_col: str, out: str = "meta") -> DataFrame:
-    """Attach the typed metadata struct to a binary column — pure
-    built-in functions (JVM-side), no UDF."""
-    col = F.col(binary_col)
-    mime = F.lit("application/octet-stream")
-    for magic, m in reversed(_MAGIC):
-        mime = F.when(
-            F.substring(col, 1, len(magic)) == F.lit(magic), F.lit(m)
-        ).otherwise(mime)
-    return df.withColumn(
-        out,
-        F.struct(
-            F.octet_length(col).cast("long").alias("n_bytes"),
-            F.md5(col).alias("content_md5"),
-            mime.alias("mime"),
-        ),
-    )
-
-
-#: PNG color type → channel count (palette expands to RGB)
-_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
-
-
-def _png_unfilter(raw: bytes, width: int, height: int, bpp: int, stride: int) -> bytearray:
-    """Reverse PNG scanline filtering (spec §9: None/Sub/Up/Average/
-    Paeth).  ``raw`` is the inflated IDAT stream: height scanlines of
-    1 filter byte + ``stride`` pixel bytes."""
-    out = bytearray()
-    prev = bytearray(stride)
-    pos = 0
-    for _ in range(height):
-        ftype = raw[pos]
-        line = bytearray(raw[pos + 1 : pos + 1 + stride])
-        pos += 1 + stride
-        if ftype == 1:  # Sub
-            for i in range(bpp, stride):
-                line[i] = (line[i] + line[i - bpp]) & 0xFF
-        elif ftype == 2:  # Up
-            for i in range(stride):
-                line[i] = (line[i] + prev[i]) & 0xFF
-        elif ftype == 3:  # Average
-            for i in range(stride):
-                a = line[i - bpp] if i >= bpp else 0
-                line[i] = (line[i] + ((a + prev[i]) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for i in range(stride):
-                a = line[i - bpp] if i >= bpp else 0
-                b = prev[i]
-                c = prev[i - bpp] if i >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                line[i] = (line[i] + pred) & 0xFF
-        elif ftype != 0:
-            raise ValueError(f"PNG: unknown filter type {ftype}")
-        out += line
-        prev = line
-    return out
-
-
-def decode_png(data: bytes) -> tuple[int, int, int, bytes]:
-    """Pure-stdlib PNG decode → (width, height, channels, pixel bytes).
-
-    A REAL decoder (zlib inflate + per-scanline unfilter + palette
-    expansion), not a header sniff — implemented from the public PNG
-    spec because no image library exists in this container.  Supports
-    the common subset: 8-bit depth, color types 0/2/3/4/6,
-    non-interlaced.  Pixel bytes are row-major, ``channels`` per pixel
-    (palette images expand to RGB, 3 channels).
-    """
-    import struct
-    import zlib
-
-    if data[:8] != b"\x89PNG\r\n\x1a\n":
-        raise ValueError("not a PNG payload")
-    pos, idat, plte = 8, [], None
-    width = height = depth = ctype = interlace = None
-    while pos < len(data):
-        (length,) = struct.unpack(">I", data[pos : pos + 4])
-        ctag = data[pos + 4 : pos + 8]
-        body = data[pos + 8 : pos + 8 + length]
-        pos += 12 + length  # length + tag + body + crc
-        if ctag == b"IHDR":
-            width, height, depth, ctype, _comp, _filt, interlace = struct.unpack(
-                ">IIBBBBB", body
-            )
-        elif ctag == b"PLTE":
-            plte = body
-        elif ctag == b"IDAT":
-            idat.append(body)
-        elif ctag == b"IEND":
-            break
-    if width is None:
-        raise ValueError("PNG: missing IHDR")
-    if depth != 8 or interlace != 0 or ctype not in _PNG_CHANNELS:
-        raise NotImplementedError(
-            f"PNG subset: 8-bit non-interlaced types 0/2/3/4/6 "
-            f"(got depth={depth} type={ctype} interlace={interlace})"
-        )
-    bpp = _PNG_CHANNELS[ctype]
-    stride = width * bpp
-    raw = zlib.decompress(b"".join(idat))
-    if len(raw) != (stride + 1) * height:
-        raise ValueError("PNG: IDAT size does not match dimensions")
-    pixels = _png_unfilter(raw, width, height, bpp, stride)
-    if ctype == 3:  # palette → RGB
-        if plte is None:
-            raise ValueError("PNG: palette image without PLTE")
-        pixels = bytearray(b for idx in pixels for b in plte[idx * 3 : idx * 3 + 3])
-        bpp = 3
-    return width, height, bpp, bytes(pixels)
-
-
-#: channel count → PNG color type for encoding
-_PNG_CTYPE = {1: 0, 2: 4, 3: 2, 4: 6}
-
-
-def encode_png(width: int, height: int, channels: int, pixels: bytes) -> bytes:
-    """Minimal stdlib PNG encoder (8-bit, filter 0 on every scanline) —
-    the inverse of ``decode_png`` for the supported subset; used by the
-    real resize path so resized payloads stay self-describing PNGs."""
-    import struct
-    import zlib
-
-    if channels not in _PNG_CTYPE:
-        raise ValueError(f"unsupported channel count {channels}")
-    stride = width * channels
-    if len(pixels) != stride * height:
-        raise ValueError("pixel buffer does not match dimensions")
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, _PNG_CTYPE[channels], 0, 0, 0)
-    raw = b"".join(
-        b"\x00" + pixels[y * stride : (y + 1) * stride] for y in range(height)
-    )
-    return (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-
-
-def resize_nearest(
-    width: int, height: int, channels: int, pixels: bytes, out_w: int, out_h: int
-) -> bytes:
-    """Nearest-neighbor resample of a row-major 8-bit pixel buffer
-    (``src = floor(dst · src_dim / dst_dim)`` — the standard mapping)."""
-    out = bytearray(out_w * out_h * channels)
-    stride = width * channels
-    pos = 0
-    for y in range(out_h):
-        sy = y * height // out_h
-        row = sy * stride
-        for x in range(out_w):
-            sx = (x * width // out_w) * channels
-            out[pos : pos + channels] = pixels[row + sx : row + sx + channels]
-            pos += channels
-    return bytes(out)
-
-
-def sniff_image_format(data: bytes) -> str:
-    """'png' | 'jpeg' by magic — the ONE place the dispatch rule lives."""
-    if data[:4] == b"\x89PNG":
-        return "png"
-    if data[:3] == b"\xff\xd8\xff":
-        return "jpeg"
-    raise ValueError("unsupported image format (PNG and baseline JPEG only)")
-
-
-def decode_image_auto(data: bytes) -> tuple[int, int, int, bytes]:
-    """Magic-sniffing image decode: PNG → ``decode_png``, JPEG →
-    ``jpegcodec.decode_jpeg``; anything else fails loudly."""
-    if sniff_image_format(data) == "png":
-        return decode_png(data)
-    from cassandra_extractor_spark.operators.jpegcodec import decode_jpeg
-
-    return decode_jpeg(data)
-
-
-def decode_images(df: DataFrame, id_col: str, binary_col: str, real: bool = False) -> DataFrame:
-    """Decode image payloads → (id, width, height, channels).
-
-    ``real=True`` dispatches on the payload magic: PNG → in-repo
-    stdlib decoder (``decode_png``: actual inflate + unfilter), JPEG →
-    in-repo baseline decoder (``jpegcodec.decode_jpeg``: actual Huffman
-    + IDCT); other formats raise ``ValueError``.  The default remains
-    the clearly-marked deterministic fake (dimensions derived from
-    payload length) whose job is exercising the Arrow/mapInPandas
-    plumbing — schema, batching, column wiring — identically to the
-    real path.
-    """
-    if real:
-
-        def real_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids, ws, hs, cs = [], [], [], []
-                for doc_id, payload in zip(pdf[id_col], pdf[binary_col]):
-                    w, h, c, _px = decode_image_auto(bytes(payload))
-                    ids.append(doc_id)
-                    ws.append(w)
-                    hs.append(h)
-                    cs.append(c)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids, dtype="int64"),
-                        "width": pd.Series(ws, dtype="int32"),
-                        "height": pd.Series(hs, dtype="int32"),
-                        "channels": pd.Series(cs, dtype="int32"),
-                    }
-                )
-
-        return df.select(F.col(id_col), F.col(binary_col)).mapInPandas(
-            real_decode, schema=DECODED_IMAGE_SCHEMA
-        )
-
-    def fake_decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            n = pdf[binary_col].map(lambda b: len(b) if b is not None else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf[id_col].astype("int64"),
-                    # FAKE decode: deterministic dims from byte length
-                    "width": (n % 640 + 1).astype("int32"),
-                    "height": (n % 480 + 1).astype("int32"),
-                    "channels": pd.Series([3] * len(pdf), dtype="int32"),
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(binary_col)).mapInPandas(
-        fake_decode, schema=DECODED_IMAGE_SCHEMA
-    )
-
-
-def _mp4_boxes(data: bytes, start: int, end: int):
-    """Iterate ISO BMFF boxes in ``data[start:end]`` → (type, body_start,
-    body_end).  Handles 32-bit size, 64-bit largesize (size==1), and
-    to-end-of-file (size==0) per ISO/IEC 14496-12 §4.2."""
-    import struct as _s
-
-    pos = start
-    while pos + 8 <= end:
-        (size,) = _s.unpack(">I", data[pos : pos + 4])
-        btype = data[pos + 4 : pos + 8].decode("latin-1")
-        body = pos + 8
-        if size == 1:
-            (size,) = _s.unpack(">Q", data[pos + 8 : pos + 16])
-            body = pos + 16
-        elif size == 0:
-            size = end - pos
-        if size < 8 or pos + size > end:
-            raise ValueError(f"MP4: malformed box '{btype}' at {pos}")
-        yield btype, body, pos + size
-        pos += size
-
-
-def parse_mp4_meta(data: bytes) -> dict:
-    """REAL MP4/ISO-BMFF container metadata parse (pure stdlib, from the
-    public ISO/IEC 14496-12 spec): brand, movie timescale/duration,
-    per-track handler + dimensions + sample-entry fourcc.  This is
-    container parsing, not frame decoding — codec bitstreams stay
-    honestly out of scope (``sample_frames(real=True)`` raises)."""
-    import struct as _s
-
-    if data[4:8] != b"ftyp":
-        raise ValueError("not an MP4 payload (no ftyp)")
-    meta = {"brand": data[8:12].decode("latin-1"), "tracks": []}
-    for btype, body, bend in _mp4_boxes(data, 0, len(data)):
-        if btype != "moov":
-            continue
-        for mtype, mbody, mend in _mp4_boxes(data, body, bend):
-            if mtype == "mvhd":
-                ver = data[mbody]
-                if ver == 1:
-                    ts, dur = _s.unpack(">IQ", data[mbody + 20 : mbody + 32])
-                else:
-                    ts, dur = _s.unpack(">II", data[mbody + 12 : mbody + 20])
-                meta["timescale"] = ts
-                meta["duration_s"] = dur / ts if ts else 0.0
-            elif mtype == "trak":
-                trk: dict = {}
-                for ttype, tbody, tend in _mp4_boxes(data, mbody, mend):
-                    if ttype == "tkhd":
-                        ver = data[tbody]
-                        off = tbody + (96 if ver == 1 else 84)
-                        w16, h16 = _s.unpack(">II", data[off - 8 : off])
-                        trk["width"] = w16 >> 16  # 16.16 fixed point
-                        trk["height"] = h16 >> 16
-                    elif ttype == "mdia":
-                        for dtype, dbody, dend in _mp4_boxes(data, tbody, tend):
-                            if dtype == "hdlr":
-                                trk["handler"] = data[dbody + 8 : dbody + 12].decode(
-                                    "latin-1"
-                                )
-                            elif dtype == "minf":
-                                for st, sb, se in _mp4_boxes(data, dbody, dend):
-                                    if st != "stbl":
-                                        continue
-                                    for s2, b2, e2 in _mp4_boxes(data, sb, se):
-                                        if s2 == "stsd":
-                                            trk["codec"] = data[
-                                                b2 + 12 : b2 + 16
-                                            ].decode("latin-1")
-                meta["tracks"].append(trk)
-    if "timescale" not in meta:
-        raise ValueError("MP4: no moov/mvhd found")
-    return meta
-
-
-VIDEO_META_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("brand", T.StringType()),
-        T.StructField("duration_s", T.DoubleType()),
-        T.StructField("n_tracks", T.IntegerType()),
-        T.StructField("video_codec", T.StringType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-    ]
-)
-
-
-def extract_video_meta(df: DataFrame, id_col: str, binary_col: str) -> DataFrame:
-    """Per-payload MP4 metadata → (id, brand, duration, tracks, codec,
-    dims) via ``parse_mp4_meta`` inside ``mapInPandas`` — a REAL parse
-    of the container (the part of 'video support' that needs no codec),
-    same executor-side batch shape as ``decode_images``."""
-
-    def parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "brand", "duration_s", "n_tracks", "video_codec", "width", "height")}
-            for doc_id, payload in zip(pdf[id_col], pdf[binary_col]):
-                m = parse_mp4_meta(bytes(payload))
-                vid = next(
-                    (t for t in m["tracks"] if t.get("handler") == "vide"), {}
-                )
-                out["doc_id"].append(int(doc_id))
-                out["brand"].append(m["brand"])
-                out["duration_s"].append(float(m["duration_s"]))
-                out["n_tracks"].append(len(m["tracks"]))
-                out["video_codec"].append(vid.get("codec"))
-                out["width"].append(vid.get("width"))
-                out["height"].append(vid.get("height"))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "brand": out["brand"],
-                    "duration_s": pd.Series(out["duration_s"], dtype="float64"),
-                    "n_tracks": pd.Series(out["n_tracks"], dtype="int32"),
-                    "video_codec": out["video_codec"],
-                    "width": pd.Series(out["width"], dtype="Int32"),
-                    "height": pd.Series(out["height"], dtype="Int32"),
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(binary_col)).mapInPandas(
-        parse, schema=VIDEO_META_SCHEMA
-    )
-
-
-def _full_box(btype: bytes, body: bytes) -> bytes:
-    import struct as _s
-
-    return _s.pack(">I", 8 + len(body)) + btype + body
-
-
-def build_mjpeg_mp4(
-    frames: list[tuple[int, int, int, bytes]], fps: int = 30, quality: int = 90
-) -> bytes:
-    """Mux frames (each ``(width, height, channels, pixels)``) into a
-    REAL Motion-JPEG MP4: each sample is an in-repo ``encode_jpeg``
-    bitstream; the container carries the full sample table (``stsd``
-    'jpeg' VisualSampleEntry + ``stts``/``stsc``/``stsz``/``stco``) per
-    ISO/IEC 14496-12 §8.5-8.7, so any demuxer — ours included — can
-    recover exact per-frame byte ranges.  Pure stdlib + the in-repo
-    JPEG encoder; built from the public spec (reference parity:
-    the reference treats media as opaque blobs end-to-end,
-    `worker.py` row loop; this is the decode surface it lacks)."""
-    import struct as _s
-
-    from cassandra_extractor_spark.operators.jpegcodec import encode_jpeg
-
-    if not frames:
-        raise ValueError("MJPEG mux: need at least one frame")
-    w0, h0 = frames[0][0], frames[0][1]
-    samples = [encode_jpeg(w, h, c, px, quality=quality) for (w, h, c, px) in frames]
-    ftyp = _full_box(b"ftyp", b"isom" + _s.pack(">I", 512) + b"isommp42")
-    timescale = fps
-    duration = len(samples)
-    mvhd = _full_box(
-        b"mvhd",
-        b"\x00" * 4 + _s.pack(">IIII", 0, 0, timescale, duration) + b"\x00" * 80,
-    )
-    tkhd = _full_box(
-        b"tkhd",
-        b"\x00" * 4
-        + _s.pack(">IIII", 0, 0, 1, 0)
-        + _s.pack(">I", duration)
-        + b"\x00" * 16
-        + b"\x00" * 36
-        + _s.pack(">II", w0 << 16, h0 << 16),
-    )
-    mdhd = _full_box(
-        b"mdhd",
-        b"\x00" * 4
-        + _s.pack(">IIII", 0, 0, timescale, duration)
-        + _s.pack(">HH", 0x55C4, 0),  # language 'und', pre_defined
-    )
-    hdlr = _full_box(b"hdlr", b"\x00" * 8 + b"vide" + b"\x00" * 12 + b"\x00")
-    vmhd = _full_box(b"vmhd", b"\x00\x00\x00\x01" + b"\x00" * 8)
-    dref = _full_box(
-        b"dref",
-        b"\x00" * 4 + _s.pack(">I", 1) + _full_box(b"url ", b"\x00\x00\x00\x01"),
-    )
-    dinf = _full_box(b"dinf", dref)
-    # VisualSampleEntry('jpeg'): 6 reserved + data_ref_idx, 16 predefined,
-    # dims, 72 dpi fixed-point, frame_count=1, 32-byte name, depth, -1
-    entry = _full_box(
-        b"jpeg",
-        b"\x00" * 6
-        + _s.pack(">H", 1)
-        + b"\x00" * 16
-        + _s.pack(">HH", w0, h0)
-        + _s.pack(">II", 72 << 16, 72 << 16)
-        + b"\x00" * 4
-        + _s.pack(">H", 1)
-        + b"\x00" * 32
-        + _s.pack(">Hh", 24, -1),
-    )
-    stsd = _full_box(b"stsd", b"\x00" * 4 + _s.pack(">I", 1) + entry)
-    stts = _full_box(b"stts", b"\x00" * 4 + _s.pack(">III", 1, len(samples), 1))
-    stsc = _full_box(b"stsc", b"\x00" * 4 + _s.pack(">IIII", 1, 1, len(samples), 1))
-    stsz = _full_box(
-        b"stsz",
-        b"\x00" * 4
-        + _s.pack(">II", 0, len(samples))
-        + b"".join(_s.pack(">I", len(sm)) for sm in samples),
-    )
-    # stco holds the absolute offset of the single chunk (mdat body);
-    # moov size is known once stco's own fixed size is counted in.
-    stbl_wo_stco = stsd + stts + stsc + stsz
-    stco_size = 8 + 4 + 4 + 4
-    minf_sz = 8 + len(vmhd) + len(dinf) + (8 + len(stbl_wo_stco) + stco_size)
-    mdia_sz = 8 + len(mdhd) + len(hdlr) + minf_sz
-    trak_sz = 8 + len(tkhd) + mdia_sz
-    moov_sz = 8 + len(mvhd) + trak_sz
-    chunk_off = len(ftyp) + moov_sz + 8
-    stco = _full_box(b"stco", b"\x00" * 4 + _s.pack(">II", 1, chunk_off))
-    stbl = _full_box(b"stbl", stbl_wo_stco + stco)
-    minf = _full_box(b"minf", vmhd + dinf + stbl)
-    mdia = _full_box(b"mdia", mdhd + hdlr + minf)
-    trak = _full_box(b"trak", tkhd + mdia)
-    moov = _full_box(b"moov", mvhd + trak)
-    assert len(moov) == moov_sz, (len(moov), moov_sz)
-    mdat = _full_box(b"mdat", b"".join(samples))
-    return ftyp + moov + mdat
-
-
-def demux_mp4_samples(data: bytes) -> list[bytes]:
-    """REAL sample demux: walk moov→trak('vide')→stbl, read the
-    ``stsz`` size table + ``stco`` chunk offset (single-chunk layout,
-    the shape ``build_mjpeg_mp4`` writes and most MJPEG muxers use) and
-    slice each sample's exact byte range out of ``mdat``."""
-    import struct as _s
-
-    if data[4:8] != b"ftyp":
-        raise ValueError("not an MP4 payload (no ftyp)")
-    sizes: list[int] | None = None
-    offset: int | None = None
-    for btype, body, bend in _mp4_boxes(data, 0, len(data)):
-        if btype != "moov":
-            continue
-        for mtype, mbody, mend in _mp4_boxes(data, body, bend):
-            if mtype != "trak":
-                continue
-            handler, tsizes, toff, nchunks = None, None, None, None
-            for ttype, tbody, tend in _mp4_boxes(data, mbody, mend):
-                if ttype != "mdia":
-                    continue
-                for dtype, dbody, dend in _mp4_boxes(data, tbody, tend):
-                    if dtype == "hdlr":
-                        handler = data[dbody + 8 : dbody + 12]
-                    elif dtype == "minf":
-                        for st, sb, se in _mp4_boxes(data, dbody, dend):
-                            if st != "stbl":
-                                continue
-                            for s2, b2, e2 in _mp4_boxes(data, sb, se):
-                                if s2 == "stsz":
-                                    fixed, n = _s.unpack(">II", data[b2 + 4 : b2 + 12])
-                                    if fixed:
-                                        tsizes = [fixed] * n
-                                    else:
-                                        tsizes = list(
-                                            _s.unpack(
-                                                f">{n}I", data[b2 + 12 : b2 + 12 + 4 * n]
-                                            )
-                                        )
-                                elif s2 == "stco":
-                                    (nchunks,) = _s.unpack(">I", data[b2 + 4 : b2 + 8])
-                                    (toff,) = _s.unpack(">I", data[b2 + 8 : b2 + 12])
-            if handler != b"vide":
-                continue  # audio/other traks may use any chunk layout
-            # the chunk-layout restriction applies only to the trak we
-            # actually demux, so an interleaved audio trak can't abort
-            # a valid video trak
-            if nchunks is not None and nchunks != 1:
-                raise ValueError("demux: only single-chunk video stco supported")
-            if tsizes is not None and toff is not None:
-                sizes, offset = tsizes, toff
-    if sizes is None or offset is None:
-        raise ValueError("demux: no video track with stsz+stco found")
-    out, pos = [], offset
-    for sz in sizes:
-        out.append(bytes(data[pos : pos + sz]))
-        pos += sz
-    return out
-
-
-def sample_frames(
-    df: DataFrame, id_col: str, binary_col: str, every_n: int = 30, real: bool = False
-) -> DataFrame:
-    """Sample every-nth video frame → (id, frame_idx, frame binary).
-
-    ``real=True`` is a REAL demux+decode path for Motion-JPEG MP4s:
-    per-frame byte ranges come from the container's own sample table
-    (``demux_mp4_samples``), every n-th sample's JPEG bitstream is
-    fully decoded with the in-repo baseline decoder (actual Huffman +
-    IDCT — validating the frame, not sniffing it), and the emitted
-    ``frame`` binary is the verbatim JPEG sample, ready for
-    ``decode_images(real=True)`` downstream.  Inter-coded codecs
-    (H.264 etc.) are out of scope — the demux raises on missing JPEG
-    magic rather than emitting garbage.  The default fake emits
-    deterministic hash-slices so the Arrow fan-out shape (one input
-    row → many frame rows) is exercised without any codec.
-    """
-    schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("frame_idx", T.IntegerType()),
-            T.StructField("frame", T.BinaryType()),
-        ]
-    )
-    if real:
-
-        def real_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from cassandra_extractor_spark.operators.jpegcodec import decode_jpeg
-
-            for pdf in batches:
-                ids, idxs, frames = [], [], []
-                for doc_id, payload in zip(pdf[id_col], pdf[binary_col]):
-                    samples = demux_mp4_samples(bytes(payload))
-                    for i in range(0, len(samples), max(every_n, 1)):
-                        decode_jpeg(samples[i])  # full decode or raise
-                        ids.append(int(doc_id))
-                        idxs.append(i)
-                        frames.append(samples[i])
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids, dtype="int64"),
-                        "frame_idx": pd.Series(idxs, dtype="int32"),
-                        "frame": frames,
-                    }
-                )
-
-        return df.select(F.col(id_col), F.col(binary_col)).mapInPandas(
-            real_frames, schema=schema
-        )
-
-    def fake_frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for _, row in pdf.iterrows():
-                payload = row[binary_col] or b""
-                n_frames = max(1, len(payload) // max(every_n, 1) // 16)
-                for i in range(min(n_frames, 8)):
-                    ids.append(row[id_col])
-                    idxs.append(i * every_n)
-                    # FAKE frame: deterministic slice of the payload
-                    frames.append(bytes(payload[i * 16 : i * 16 + 16]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "frame": frames,
-                }
-            )
-
-    return df.select(F.col(id_col), F.col(binary_col)).mapInPandas(fake_frames, schema=schema)
-
-
-def resize_images(
-    df: DataFrame,
-    id_col: str,
-    binary_col: str,
-    width: int = 224,
-    height: int = 224,
-    real: bool = False,
-) -> DataFrame:
-    """Resize image payloads to (width, height) → (id, resized binary).
-
-    ``real=True``: PNG or baseline JPEG in → nearest-neighbor resample
-    (``decode_image_auto`` → ``resize_nearest`` → re-encode in the
-    SOURCE format, so payloads stay self-describing); other formats
-    fail loudly.  The deterministic fake emits a payload of exactly
-    width*height bytes derived from the input (so downstream
-    batch-shape/size logic is exercised identically).
-    """
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("resized", T.BinaryType())]
-    )
-    if real:
-
-        def real_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            from cassandra_extractor_spark.operators.jpegcodec import encode_jpeg
-
-            for pdf in batches:
-                ids, payloads = [], []
-                for doc_id, payload in zip(pdf[id_col], pdf[binary_col]):
-                    raw = bytes(payload)
-                    fmt = sniff_image_format(raw)
-                    w, h, c, px = decode_image_auto(raw)
-                    resized = resize_nearest(w, h, c, px, width, height)
-                    ids.append(int(doc_id))
-                    if fmt == "jpeg":
-                        payloads.append(
-                            encode_jpeg(width, height, c, resized, quality=90)
-                        )
-                    else:
-                        payloads.append(encode_png(width, height, c, resized))
-                yield pd.DataFrame(
-                    {"doc_id": pd.Series(ids, dtype="int64"), "resized": payloads}
-                )
-
-        return df.select(F.col(id_col), F.col(binary_col)).mapInPandas(real_resize, schema)
-    n_out = width * height
-
-    def fake_resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            resized = [
-                # FAKE resize: tile the payload to the target byte size
-                bytes((b or b"\x00") * (n_out // max(len(b or b"\x00"), 1) + 1))[:n_out]
-                for b in pdf[binary_col]
-            ]
-            yield pd.DataFrame(
-                {"doc_id": pdf[id_col].astype("int64"), "resized": resized}
-            )
-
-    return df.select(F.col(id_col), F.col(binary_col)).mapInPandas(fake_resize, schema)
-
-
-AUDIO_FEATURES_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("duration_s", T.DoubleType()),
-        T.StructField("rms", T.DoubleType()),
-        T.StructField("n_frames", T.IntegerType()),
-    ]
-)
-
-
-def extract_audio_features(
-    df: DataFrame, id_col: str, binary_col: str, sample_rate: int = 16_000, real: bool = False
-) -> DataFrame:
-    """Audio feature extraction → (id, duration, rms, n_frames).
-
-    ``real=True`` parses RIFF/WAV PCM via the stdlib ``wave`` module —
-    true sample rate, frame count, duration, and RMS over the decoded
-    samples (8/16/32-bit int PCM; channels averaged into the RMS).
-    Compressed formats (mp3/ogg/flac) have no codec here and raise.
-    The fake path derives deterministic features from byte content so
-    schema/batching is tested identically.
-    """
-    if real:
-
-        def real_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            import array
-            import io
-            import math
-            import wave
-
-            width_code = {1: "b", 2: "h", 4: "i"}
-            for pdf in batches:
-                rows = []
-                for i, b in zip(pdf[id_col], pdf[binary_col]):
-                    with wave.open(io.BytesIO(bytes(b))) as w:
-                        rate, n_fr = w.getframerate(), w.getnframes()
-                        sw = w.getsampwidth()
-                        pcm = w.readframes(n_fr)
-                    if sw not in width_code:
-                        raise NotImplementedError(f"WAV sample width {sw} unsupported")
-                    samples = array.array(width_code[sw], pcm)
-                    rms = (
-                        math.sqrt(sum(s * s for s in samples) / len(samples))
-                        if samples
-                        else 0.0
-                    )
-                    rows.append(
-                        {
-                            "doc_id": int(i),
-                            "duration_s": n_fr / rate if rate else 0.0,
-                            "rms": rms,
-                            "n_frames": n_fr,
-                        }
-                    )
-                yield pd.DataFrame(
-                    rows, columns=["doc_id", "duration_s", "rms", "n_frames"]
-                ).astype(
-                    {
-                        "doc_id": "int64",
-                        "duration_s": "float64",
-                        "rms": "float64",
-                        "n_frames": "int32",
-                    }
-                )
-
-        return df.select(F.col(id_col), F.col(binary_col)).mapInPandas(
-            real_features, AUDIO_FEATURES_SCHEMA
-        )
-
-    def fake_features(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for i, b in zip(pdf[id_col], pdf[binary_col]):
-                payload = b or b""
-                n = len(payload)
-                rows.append(
-                    {
-                        "doc_id": int(i),
-                        # FAKE: 2 bytes/sample mono PCM
-                        "duration_s": n / 2 / sample_rate,
-                        "rms": (sum(x * x for x in payload[:256]) / max(min(n, 256), 1)) ** 0.5,
-                        "n_frames": n // 512,
-                    }
-                )
-            yield pd.DataFrame(rows, columns=["doc_id", "duration_s", "rms", "n_frames"]).astype(
-                {"doc_id": "int64", "duration_s": "float64", "rms": "float64", "n_frames": "int32"}
-            )
-
-    return df.select(F.col(id_col), F.col(binary_col)).mapInPandas(
-        fake_features, AUDIO_FEATURES_SCHEMA
-    )
 
 
 def ns_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -823,145 +26,4 @@ def ns_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5(payload).alias("content_md5"),
         )
         .orderBy("doc_id")
-    )
-
-
-# ---------------------------------------------------------------- dHash
-
-
-def _box_resize_gray(g, out_w: int, out_h: int):
-    """Area-mean (box) resample of a 2-D grayscale array via an
-    integral image — stable under codec noise, unlike nearest."""
-    import numpy as np
-
-    h, w = g.shape
-    if h < out_h or w < out_w:
-        # upsample-by-index first: the box formula would produce
-        # zero-area cells (NaN hash bits) below the target grid
-        g = g[
-            (np.arange(out_h) * h // out_h)[:, None].clip(0, h - 1),
-            (np.arange(out_w) * w // out_w)[None, :].clip(0, w - 1),
-        ]
-        h, w = g.shape
-    ys = np.arange(out_h + 1) * h // out_h
-    xs = np.arange(out_w + 1) * w // out_w
-    ii = np.zeros((h + 1, w + 1), dtype=np.float64)
-    ii[1:, 1:] = g.cumsum(axis=0).cumsum(axis=1)
-    tot = (
-        ii[ys[1:, None], xs[None, 1:]]
-        - ii[ys[:-1, None], xs[None, 1:]]
-        - ii[ys[1:, None], xs[None, :-1]]
-        + ii[ys[:-1, None], xs[None, :-1]]
-    )
-    areas = (ys[1:, None] - ys[:-1, None]) * (xs[None, 1:] - xs[None, :-1])
-    return tot / areas
-
-
-def dhash64(width: int, height: int, channels: int, pixels: bytes) -> int:
-    """64-bit difference hash (dHash) of a decoded image: integer-luma
-    grayscale → 9×8 box resample → horizontal-gradient sign bits.
-    Invariant to global brightness/contrast shifts and codec noise —
-    the standard perceptual near-dup signature.  Returned as a SIGNED
-    64-bit value so it round-trips through a Spark ``long``."""
-    import numpy as np
-
-    img = np.frombuffer(pixels, dtype=np.uint8).reshape(height, width, channels)
-    if channels >= 3:
-        g = (
-            299 * img[:, :, 0].astype(np.int64)
-            + 587 * img[:, :, 1].astype(np.int64)
-            + 114 * img[:, :, 2].astype(np.int64)
-        ) // 1000
-    else:
-        g = img[:, :, 0].astype(np.int64)
-    small = _box_resize_gray(g.astype(np.float64), 9, 8)
-    bits = (small[:, 1:] > small[:, :-1]).flatten()
-    v = 0
-    for i, b in enumerate(bits):
-        if b:
-            v |= 1 << i
-    return int(np.uint64(v).astype(np.int64))
-
-
-IMAGE_HASH_SCHEMA = T.StructType(
-    [T.StructField("doc_id", T.LongType()), T.StructField("dhash", T.LongType())]
-)
-
-
-def image_dhash(df: DataFrame, id_col: str, binary_col: str, real: bool = False) -> DataFrame:
-    """Per-image perceptual hash → (doc_id, dhash).  ``real=True``
-    decodes PNG/JPEG payloads with the in-repo codecs and hashes actual
-    pixels; the fake path hashes payload bytes (md5-folded — plumbing
-    only, no perceptual meaning), clearly marked as such."""
-    if real:
-
-        def hash_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                ids, hs = [], []
-                for doc_id, payload in zip(pdf[id_col], pdf[binary_col]):
-                    w, h, c, px = decode_image_auto(bytes(payload))
-                    ids.append(int(doc_id))
-                    hs.append(dhash64(w, h, c, px))
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series(ids, dtype="int64"),
-                        "dhash": pd.Series(hs, dtype="int64"),
-                    }
-                )
-
-        return df.select(F.col(id_col), F.col(binary_col)).mapInPandas(
-            hash_batches, schema=IMAGE_HASH_SCHEMA
-        )
-    # FAKE: fold md5(payload) to 64 bits — exercises identical plumbing
-    return df.select(
-        F.col(id_col).alias("doc_id"),
-        F.conv(F.substring(F.md5(F.col(binary_col)), 1, 15), 16, 10)
-        .cast("long")
-        .alias("dhash"),
-    )
-
-
-def image_neardup_pairs(hashes: DataFrame, max_ham: int = 4) -> DataFrame:
-    """Near-duplicate image pairs from dHash signatures: 8×8-bit
-    chunk-banded hamming self-join (pigeonhole: ham ≤ 7 ⇒ at least one
-    of 8 byte-chunks equal, so max_ham ≤ 7 loses nothing) — shuffle is
-    O(8·rows) on chunk buckets, never all-pairs.  Same scale shape as
-    ``ns_dedup_simhash``."""
-    if max_ham > 7:
-        raise ValueError("chunk banding guarantees recall only for max_ham <= 7")
-    chunks = hashes.select(
-        "doc_id",
-        "dhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("dhash"), c * 8)
-                        .bitwiseAND(255)
-                        .alias("val"),
-                    )
-                    for c in range(8)
-                ]
-            )
-        ).alias("ck"),
-    ).select(
-        "doc_id", "dhash", F.col("ck.chunk").alias("chunk"), F.col("ck.val").alias("val")
-    )
-    a, b = chunks.alias("a"), chunks.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.val") == F.col("b.val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("d1"),
-            F.col("b.doc_id").alias("d2"),
-            F.bit_count(F.expr("a.dhash ^ b.dhash")).cast("long").alias("ham"),
-        )
-        .where(F.col("ham") <= max_ham)
-        .distinct()
-        .orderBy("d1", "d2")
     )

@@ -2146,12 +2146,6 @@ def q90_time_rollup(spark, sf_dir):
     partial aggregates (ROLLUP expands grouping sets inside the
     aggregate, not as N self-reads).  Value sums integerize to cents
     first so the DOUBLE fold order can't drift between engines.
-
-    100 TB: this is the backfill form of a streaming continuous
-    aggregate — the live variant is `streaming.stateful.
-    stream_time_rollup` (watermarked tumbling windows, same cents
-    integerization); batch backfill + streaming tail serve one
-    definition.
     """
     e = _t(spark, sf_dir, "events")
     d = F.to_date("ts")

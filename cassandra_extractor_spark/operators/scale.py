@@ -1,17 +1,16 @@
-"""Scale techniques: bucketed co-located joins and salted skew joins.
+"""Bucketed managed tables for co-located joins, and salted aggregation.
 
-These are the knobs a 100 TB deployment turns when AQE alone isn't
-enough:
+``write_bucketed`` persists a table bucketed by its join key, so
+repeated joins on that key (read back with ``spark.table``) shuffle
+NEITHER side: SortMergeJoin with no Exchange, asserted in tests.  This
+is how a fact table joined daily against the same dimension key should
+live.  ``drop_managed_table`` removes such a table with its warehouse
+directory.
 
-- ``write_bucketed`` / ``read_bucketed``: persist a table bucketed by
-  its join key so repeated joins on that key shuffle NEITHER side
-  (SortMergeJoin with no Exchange — asserted in tests).  This is how a
-  fact table joined daily against the same dimension key should live.
-- ``salted_join``: explode a hot key into ``salt_n`` sub-keys so one
-  skewed key's rows spread over many tasks instead of one straggler.
-  AQE's skew-join splitting handles sort-merge skew automatically;
-  salting is the explicit fallback for aggregations and for joins AQE
-  can't split (e.g. bucketed inputs).
+``salted_aggregate`` is the explicit skew fallback for a group-by: a
+hot key's rows spread over ``salt_n`` partial groups before the final
+merge (the join form of salting is the registry query
+``q88_salted_join``).
 """
 
 from __future__ import annotations
@@ -66,71 +65,6 @@ def write_bucketed(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table_name)
-
-
-def read_bucketed(spark: SparkSession, table_name: str) -> DataFrame:
-    return spark.table(table_name)
-
-
-def write_layout_optimized(
-    df: DataFrame,
-    path: str,
-    key: str,
-    num_files: int = 32,
-    extra_sort: list[str] | None = None,
-) -> None:
-    """Write parquet range-partitioned + sorted by ``key`` so filters on
-    the key prune whole files (min/max footer stats) and row groups.
-
-    The 100 TB layout move: a fact table queried by key range should be
-    written this way once, making every later scan skip all but the
-    matching key range — verified in tests by counting the distinct
-    input files a filtered scan actually touches.
-    """
-    (
-        df.repartitionByRange(num_files, key)
-        .sortWithinPartitions(key, *(extra_sort or []))
-        .write.mode("overwrite")
-        .parquet(path)
-    )
-
-
-def files_touched(df: DataFrame) -> int:
-    """Distinct input files a (filtered) scan reads — the observable
-    effect of file pruning."""
-    return df.select(F.input_file_name().alias("f")).distinct().count()
-
-
-def salted_join(
-    left: DataFrame,
-    right: DataFrame,
-    key: str,
-    salt_n: int = 16,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-resistant equi join: the (smaller) right side is replicated
-    ``salt_n`` times, the left side spreads uniformly over the salts,
-    and the join key becomes (key, salt) — a hot key's rows land on
-    ``salt_n`` tasks instead of one.
-
-    Result is row-identical to ``left.join(right, key, how)`` for
-    inner/left joins.  Right/full-outer would multiply unmatched right
-    rows by ``salt_n`` (each replica is unmatched independently), so
-    those modes are rejected.
-    """
-    if how not in ("inner", "left", "leftouter", "left_outer"):
-        raise ValueError(f"salted_join supports inner/left joins, not {how!r}")
-    # salt from a per-row counter, NOT a row hash: byte-identical rows
-    # (the common real-world hot-key shape) must still spread
-    salted_left = left.withColumn(
-        "__salt", F.pmod(F.monotonically_increasing_id(), F.lit(salt_n)).cast("int")
-    )
-    salted_right = right.withColumn(
-        "__salt", F.explode(F.array(*[F.lit(i) for i in range(salt_n)]))
-    )
-    return (
-        salted_left.join(salted_right, [key, "__salt"], how).drop("__salt")
-    )
 
 
 def salted_aggregate(

@@ -190,65 +190,6 @@ def ns_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("vec_id")
 
 
-def cosine_topk_vectorized(
-    corpus: DataFrame,
-    query_vectors: list[tuple[int, list[float]]],
-    k: int = TOP_K,
-    id_col: str = "vec_id",
-    emb_col: str = "embedding",
-) -> DataFrame:
-    """Arrow-vectorized brute-force top-k: the performance path.
-
-    The declared ``ns_ann_cosine_topk`` keeps scalar fold arithmetic for
-    bit-exact oracle parity; this variant does the same math as one
-    numpy matmul per Arrow batch (~10-100× less per-row overhead), for
-    pipelines where throughput matters more than cross-engine hashing.
-    The corpus is scanned once, queries ride along as a broadcast
-    numpy matrix, and the per-batch partial top-k keeps the shuffle to
-    ``batches × k`` rows before the final global top-k.
-    """
-    import numpy as np
-    import pandas as pd
-
-    q_ids = [int(q) for q, _ in query_vectors]
-    q_mat = np.asarray([v for _, v in query_vectors], dtype=np.float64)
-    q_norm = np.linalg.norm(q_mat, axis=1)
-    schema = "q_id long, n_id long, cos double"
-
-    def score(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            mat = np.asarray(pdf[emb_col].tolist(), dtype=np.float64)
-            norms = np.linalg.norm(mat, axis=1)
-            # zero-norm rows are excluded, matching brute_topk
-            keep = norms > 0
-            if not keep.all():
-                pdf = pdf[keep].reset_index(drop=True)
-                mat, norms = mat[keep], norms[keep]
-            if not len(pdf):
-                continue
-            sims = (mat @ q_mat.T) / np.outer(norms, q_norm)
-            out = []
-            for j, q_id in enumerate(q_ids):
-                col = sims[:, j]
-                top = np.argsort(-col)[:k]  # partial top-k per batch
-                out.append(
-                    pd.DataFrame(
-                        {"q_id": q_id, "n_id": pdf["vec_id"].values[top], "cos": col[top]}
-                    )
-                )
-            yield pd.concat(out, ignore_index=True)
-
-    partial = corpus.select(id_col, emb_col).mapInPandas(score, schema)
-    w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
-    return (
-        partial.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= k)
-        .orderBy("q_id", "rank")
-    )
-
-
 def _projection_component(plane: int, dim: int, salt: int = 0) -> float:
     """Deterministic pseudo-random hyperplane component in [-1, 1),
     derived from md5 so any engine can reproduce the planes."""

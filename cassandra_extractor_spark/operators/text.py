@@ -1304,8 +1304,7 @@ BPE_TOP_PAIRS = 50  #: pairs reported by the BPE training-step query
 def ns_bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One BPE TRAINING step, distributed: corpus-weighted adjacent
     symbol-pair frequencies (Sennrich et al. 2016, the merge-selection
-    statistic), complementing ``operators/bpe.py`` which *applies* an
-    existing merge table.
+    statistic).
 
     The standard two-level scale shape: pair counting runs over the
     DISTINCT-word vocabulary weighted by word frequency (Zipf: the

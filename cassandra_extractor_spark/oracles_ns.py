@@ -2312,8 +2312,8 @@ NS_ORACLES["ns_preference_pairs"] = _preference_pairs_sql()
 
 
 def _hist_quantile_sql() -> str:
-    """Mirror of ``q122_hist_quantile`` (the batch spelling of
-    ``stream_quantile``'s histogram estimate): clamped equi-width
+    """Mirror of ``q122_hist_quantile`` (the fixed-bin histogram
+    quantile estimate): clamped equi-width
     binning, cumulative counts, first bin reaching ``ceil(pct·n/100)``
     — integers end to end."""
     from cassandra_extractor_spark.streaming.quantile import BIN_CENTS, NBINS

@@ -1,1 +1,1 @@
-from cassandra_extractor_spark.plans.spec import ExtractionSpec, run_extraction  # noqa: F401
+from cassandra_extractor_spark.plans.spec import ExtractionSpec  # noqa: F401

@@ -54,7 +54,7 @@ class ExtractionSpec:
 
             df = df.where(solr_to_sql(self.solr_filter, self.solr_default_field))
         if self.hwm_column and hwm_store is not None:
-            # mark commit is deferred: run_extraction calls it only
+            # mark commit is deferred: the caller runs _hwm_commit only
             # after every sink write succeeded (crash-safe window)
             df, self._hwm_commit = plan_incremental(
                 df, self.hwm_column, self.table, hwm_store
@@ -66,20 +66,3 @@ class ExtractionSpec:
         if self.limit is not None:
             df = df.limit(self.limit)
         return df
-
-
-def run_extraction(
-    spark: SparkSession,
-    spec: ExtractionSpec,
-    sinks,
-    sf_dir: str | None = None,
-    hwm_store: HighWaterMarkStore | None = None,
-):
-    """Full reference flow: scan → transforms → multi-sink fan-out."""
-    from cassandra_extractor_spark.sinks.fanout import fan_out
-
-    df = spec.build(spark, sf_dir, hwm_store)
-    results = fan_out(df, sinks)
-    if spec._hwm_commit is not None and all(v is None for v in results.values()):
-        spec._hwm_commit()  # advance the mark only after a clean write
-    return results

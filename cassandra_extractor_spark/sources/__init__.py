@@ -1,1 +1,1 @@
-from cassandra_extractor_spark.sources.catalog import TABLES, load_table, register_views  # noqa: F401
+from cassandra_extractor_spark.sources.catalog import TABLES, load_table  # noqa: F401

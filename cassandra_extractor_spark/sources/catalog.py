@@ -143,9 +143,3 @@ def read_source(
     if fmt == "csv" and "header" not in (options or {}):
         reader = reader.option("header", "true").option("inferSchema", schema is None)
     return reader.format(fmt).load(path)
-
-
-def register_views(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Register every test table as a temp view for the SQL entry point."""
-    for name in TABLES:
-        load_table(spark, name, sf_dir).createOrReplaceTempView(name)

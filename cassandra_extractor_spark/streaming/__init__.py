@@ -1,1 +1,1 @@
-from cassandra_extractor_spark.streaming.hwm import HighWaterMarkStore, incremental_extract  # noqa: F401
+from cassandra_extractor_spark.streaming.hwm import HighWaterMarkStore  # noqa: F401

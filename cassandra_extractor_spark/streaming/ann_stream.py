@@ -158,159 +158,6 @@ def stream_ann_ingest(
     )
 
 
-def semantic_candidate_pairs(
-    spark: SparkSession,
-    store_dir: str,
-    assigned: DataFrame,
-    tau: float,
-    exclude_batch: int | None = None,
-) -> DataFrame:
-    """(new_id, dup_of, cos): cosine-≥τ near-duplicate pairs of an
-    assigned batch ``(vec_id, emb, nrm, c_id)`` against the three
-    candidate sources — compacted base, earlier-batch delta (the
-    ``exclude_batch`` partition is skipped: a replayed batch must not
-    see its own half-written delta), and earlier vectors of the same
-    batch.  Split out of the gate's ``foreachBatch`` body so the plan
-    shape is directly assertable: the store scan carries
-    ``c_id IN (batch cells)`` as a PARTITION filter (driver-side cell
-    list inlined — only the batch's cell directories are opened), the
-    batch side of both joins is broadcast, and the vec_id inequality
-    plus final ``.distinct()`` make replay and crash-window duplicates
-    harmless."""
-    batch_cells = [r["c_id"] for r in assigned.select("c_id").distinct().collect()]
-    cand_parts = []
-    try:
-        cand_parts.append(
-            spark.read.parquet(f"{store_dir}/base").select(*_STORE_COLS)
-        )
-    except AnalysisException:
-        pass
-    try:
-        delta = spark.read.parquet(f"{store_dir}/delta")
-        if exclude_batch is not None:
-            delta = delta.where(F.col("batch") != exclude_batch)
-        cand_parts.append(delta.select(*_STORE_COLS))
-    except AnalysisException:
-        pass
-    new = assigned.select(
-        F.col("vec_id").alias("new_id"),
-        F.col("emb").alias("n_emb"),
-        F.col("nrm").alias("n_nrm"),
-        "c_id",
-    )
-    sim = F.round(
-        cosine_prenormed(F.col("emb"), F.col("n_emb"), F.col("nrm"), F.col("n_nrm")),
-        6,
-    )
-    pair_frames = []
-    if cand_parts:
-        store = cand_parts[0]
-        for p in cand_parts[1:]:
-            store = store.unionByName(p)
-        # partition-pruned candidate scan: only the batch's cells
-        store = store.where(F.col("c_id").isin(batch_cells))
-        pair_frames.append(
-            store.join(F.broadcast(new), "c_id")
-            .where(F.col("vec_id") < F.col("new_id"))
-            .where(sim >= tau)
-            .select("new_id", F.col("vec_id").alias("dup_of"), sim.alias("cos"))
-        )
-    earlier = assigned.select(F.col("vec_id"), F.col("emb"), F.col("nrm"), "c_id")
-    pair_frames.append(
-        earlier.join(F.broadcast(new), "c_id")
-        .where(F.col("vec_id") < F.col("new_id"))
-        .where(sim >= tau)
-        .select("new_id", F.col("vec_id").alias("dup_of"), sim.alias("cos"))
-    )
-    pairs = pair_frames[0]
-    for p in pair_frames[1:]:
-        pairs = pairs.unionByName(p)
-    return pairs.distinct()
-
-
-def stream_semantic_dedup(
-    spark: SparkSession,
-    source_path: str,
-    schema: str,
-    store_dir: str,
-    pairs_sink: Callable[[DataFrame, int], None],
-    checkpoint_dir: str,
-    tau: float | None = None,
-    max_files_per_trigger: int = 1,
-    path_glob: str = "*.parquet",
-    auto_compact: dict | None = None,
-) -> StreamingQuery:
-    """Streaming SemDeDup gate — the embedding twin of the MinHash
-    gate (``streaming/dedup_stream.stream_incremental_dedup``): each
-    arriving ``(vec_id, emb)`` batch is checked for semantic
-    near-duplicates (cosine ≥ ``tau`` within the same quantizer cell)
-    against the corpus ingested so far, then absorbed into the
-    cell-partitioned ANN store.  On ordered arrival the emitted drop
-    set is row-identical to the batch ``operators/dedup
-    .ns_semantic_dedup`` over the same vectors, centroids and τ
-    (pinned by the parity test).
-
-    ``pairs_sink(pairs_df, batch_id)`` receives the
-    (new_id, dup_of, cos) frame per micro-batch, where ``dup_of`` may
-    come from the compacted base, an earlier streamed batch (via the
-    delta), or an earlier vector of the same batch — the three
-    candidate sources every gate must cover.  ALL arriving vectors are
-    appended to the store (SemDeDup checks against every lower-id
-    member, not just keepers), so the gate doubles as the ANN ingest.
-
-    100 TB shape: the candidate probe reads ONLY the store partitions
-    for cells present in the batch (driver-side cell list inlined as a
-    partition filter — the ``ann_store_topk`` discipline), the batch
-    side of both joins is broadcast, and the intra-batch check is
-    quadratic only in the per-cell batch population.  Replay safety:
-    the vec_id inequality means a replayed batch joining a store that
-    already holds its own vectors can never self-report; the delta
-    read excludes the batch's own partition.
-
-    ``auto_compact`` (off by default) runs the size-ratio policy
-    in-band (keys: ``every_n_batches``, ``threshold``) — same contract
-    as ``stream_ann_ingest``."""
-    if tau is None:
-        from cassandra_extractor_spark.operators.dedup import SEM_TAU
-
-        tau = SEM_TAU
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("pathGlobFilter", path_glob)
-        .parquet(source_path)
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        cent = _read_centroids(spark, store_dir)
-        assigned = assign_cells(batch_df, cent).localCheckpoint(eager=True)
-        pairs = semantic_candidate_pairs(
-            spark, store_dir, assigned, tau, exclude_batch=batch_id
-        )
-        pairs_sink(pairs, batch_id)
-        (
-            assigned.write.mode("overwrite")
-            .partitionBy("c_id")
-            .parquet(f"{store_dir}/delta/batch={batch_id}")
-        )
-        from cassandra_extractor_spark.streaming.maintenance import (
-            batch_due,
-            maybe_compact_ann,
-        )
-
-        if batch_due(auto_compact, batch_id):
-            maybe_compact_ann(
-                spark, store_dir, threshold=float(auto_compact.get("threshold", 0.2))
-            )
-
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def _read_store(spark: SparkSession, store_dir: str) -> DataFrame:
     """Base ∪ delta, both cell-partitioned; either side may not exist
     yet.  ``c_id`` is a PARTITION column in both layouts, so a probe

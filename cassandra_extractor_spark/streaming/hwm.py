@@ -121,17 +121,3 @@ def plan_incremental(
             store.set(table, mark)
 
     return out, commit
-
-
-def incremental_extract(
-    df: DataFrame,
-    ts_col: str,
-    table: str,
-    store: HighWaterMarkStore,
-) -> DataFrame:
-    """One incremental run with IMMEDIATE mark commit — only safe when
-    the caller's write cannot fail or duplicates are acceptable; sink
-    paths should use ``plan_incremental`` and commit after the write."""
-    out, commit = plan_incremental(df, ts_col, table, store)
-    commit()
-    return out

@@ -1,20 +1,13 @@
-"""Streaming quantile sketch — mergeable fixed-bin histogram state.
+"""Fixed-bin histogram quantile estimate per key.
 
-The batch side of this engine ships the exact-quantile family
-(``q44_percentile``, ``q89_grouped_quantiles``, ``q101_weighted_median``);
-this is the LIVE half: per-key state is a fixed equi-width histogram —
-``NBINS`` counters over ``[0, NBINS·BIN_CENTS)`` integer cents plus one
-clamp bin — O(NBINS) per key FOREVER, folded per micro-batch with
-``applyInPandasWithState`` and surviving checkpoint restarts exactly
-like ``stream_hll_distinct``'s registers.
-
-Why a histogram and not a GK/KLL sketch: the histogram is EXACTLY
-mergeable (counts add, fold order never matters), so the streaming
-estimate after any partition of the rows into micro-batches is
-bit-identical to the batch estimate over the same rows — a provable
-batch-parity contract (``quantile_hist_batch``), which the
-rank-adaptive sketches cannot pin.  The price is a fixed value domain
-and an additive error of one bin width.
+The exact-quantile family (``q44_percentile``,
+``q89_grouped_quantiles``, ``q101_weighted_median``) sorts every key's
+values; this estimate bins them instead: ``NBINS`` equi-width counters
+over ``[0, NBINS·BIN_CENTS)`` integer cents plus one clamp bin, so the
+shuffle carries at most ``keys·(NBINS+1)`` rows whatever the input
+size.  The histogram is exactly mergeable (counts add), so the estimate
+does not depend on how the rows are partitioned.  The price is a fixed
+value domain and an additive error of one bin width.
 
 Estimate contract (asserted in ``tests/test_quantile_stream.py``):
 
@@ -22,159 +15,32 @@ Estimate contract (asserted in ``tests/test_quantile_stream.py``):
   whose cumulative count reaches ``ceil(q·n)``: for in-domain values
   ``true ≤ reported ≤ true + BIN_CENTS`` (upper edge inclusive when
   the true value sits exactly on a bin's lower edge);
-- merge(h1, h2) = hist(rows1 ++ rows2) ⇒ streaming == batch for any
-  micro-batch split, including across a checkpoint restart;
+- values are rounded half away from zero to integer cents;
 - out-of-domain values saturate into the clamp bins (index 0 below,
   ``NBINS`` above); a saturated upper estimate reports
   ``(NBINS+1)·BIN_CENTS`` and ``n_clamped`` exposes how many rows the
   domain missed.
-
-Reference parity: the reference has no streaming analytics at all
-(SURVEY §2.5); this operator exists for the training-data-pipeline
-surface (live latency/length percentiles over an unbounded extract).
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import numpy as np
-import pandas as pd
-
-from pyspark.sql import DataFrame, Window as W, functions as F, types as T
+from pyspark.sql import DataFrame, Window as W, functions as F
 
 NBINS = 512  #: in-domain bins; events.value tops out ~490.00 at every SF
 BIN_CENTS = 100  #: bin width = 1.00 in value units
-QUANTILES = (50, 95)  #: emitted percentiles (integer percent)
-
-_QT_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("group_key", T.StringType()),
-        T.StructField("n_seen", T.LongType()),
-        T.StructField("p50_ub_cents", T.LongType()),
-        T.StructField("p95_ub_cents", T.LongType()),
-        T.StructField("n_clamped", T.LongType()),
-    ]
-)
-
-_QT_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("counts", T.ArrayType(T.LongType())),
-        T.StructField("n_seen", T.LongType()),
-        T.StructField("n_clamped", T.LongType()),
-    ]
-)
-
-
-def _bin_of_cents(cents: int) -> int:
-    """Clamped equi-width bin index (python side, one int op per row)."""
-    b = cents // BIN_CENTS
-    return 0 if b < 0 else (NBINS if b > NBINS else b)
-
-
-def _quantile_ub(counts: list[int], n: int, pct: int) -> int:
-    """Upper-edge estimate: first bin whose cumulative count reaches
-    ceil(pct·n/100), as integer cents.  Pure-integer arithmetic so the
-    streaming and batch spellings cannot drift."""
-    target = (pct * n + 99) // 100
-    cum = 0
-    for b, c in enumerate(counts):
-        cum += c
-        if cum >= target:
-            return (b + 1) * BIN_CENTS
-    return (NBINS + 1) * BIN_CENTS  # pragma: no cover - n==0 guard
-
-
-def stream_quantile(
-    events: DataFrame,
-    key_col: str = "event_type",
-    value_col: str = "value",
-) -> DataFrame:
-    """Streaming per-key quantile estimates with bounded state.
-
-    Emits one summary row per key per micro-batch (running totals, not
-    per-batch deltas).  State is the NBINS+1 histogram — no row
-    retention, no sort, no per-item memory growth.
-    """
-
-    def update(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        if state.hasTimedOut:  # pragma: no cover - no timeout configured
-            state.remove()
-            return
-        if state.exists:
-            counts = list(state.get[0])
-            n_seen, n_clamped = int(state.get[1]), int(state.get[2])
-        else:
-            counts, n_seen, n_clamped = [0] * (NBINS + 1), 0, 0
-        for pdf in pdf_iter:
-            # NULL measurements carry no value — ignored on all three
-            # spellings (stream, batch, oracle), like any aggregate.
-            # Rounding is HALF_UP (half away from zero) to mirror the
-            # batch spelling (Spark F.round) and the DuckDB oracle —
-            # pandas .round() is half-even, which bins values whose
-            # v*100 lands exactly on .5 in double (e.g. -0.005 →
-            # -0.5 cents, exactly representable) differently and
-            # breaks the documented bit-identical stream==batch parity.
-            v = pdf[value_col].dropna().astype(float) * 100
-            cents = (np.sign(v) * np.floor(np.abs(v) + 0.5)).astype("int64")
-            n_seen += len(cents)
-            for c in cents:
-                b = _bin_of_cents(int(c))
-                counts[b] += 1
-                if b != c // BIN_CENTS:
-                    n_clamped += 1
-        state.update((counts, n_seen, n_clamped))
-        if n_seen == 0:
-            # key has produced only NULLs so far: no observations, no
-            # summary (matches the batch side, where the key is absent)
-            return
-        yield pd.DataFrame(
-            [
-                {
-                    "group_key": key[0],
-                    "n_seen": n_seen,
-                    "p50_ub_cents": _quantile_ub(counts, n_seen, 50),
-                    "p95_ub_cents": _quantile_ub(counts, n_seen, 95),
-                    "n_clamped": n_clamped,
-                }
-            ],
-            columns=[
-                "group_key",
-                "n_seen",
-                "p50_ub_cents",
-                "p95_ub_cents",
-                "n_clamped",
-            ],
-        )
-
-    return (
-        events.select(
-            F.col(key_col).cast("string").alias("group_key"),
-            F.col(value_col).cast("double").alias(value_col),
-        )
-        .groupBy("group_key")
-        .applyInPandasWithState(
-            update,
-            outputStructType=_QT_OUT_SCHEMA,
-            stateStructType=_QT_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        )
-    )
 
 
 def quantile_hist_batch(
     df: DataFrame, key_col: str = "event_type", value_col: str = "value"
 ) -> DataFrame:
-    """Batch spelling of the SAME histogram estimate — the parity
-    contract for ``stream_quantile`` and a registry query in its own
-    right (``q122_hist_quantile``).
+    """Per-key fixed-bin histogram quantile estimate — the registry
+    query ``q122_hist_quantile``.
 
     Scale shape: one map-side-combined groupBy on (key, bin) — the
     histogram is the aggregate, so the shuffle carries at most
     ``keys·(NBINS+1)`` rows regardless of input size — then a bounded
     per-key cumulative window over ≤ NBINS+1 rows.  Pure integers end
-    to end (the same ``ceil(pct·n/100)`` spelling as the stream side).
+    to end; the target rank is ``ceil(pct·n/100)``.
     """
     cents = F.round(F.col(value_col) * 100).cast("long")
     b = F.floor(cents / F.lit(BIN_CENTS)).cast("long")
@@ -227,7 +93,7 @@ def quantile_hist_batch(
 
 def q122_hist_quantile(spark, sf_dir: str) -> DataFrame:
     """Registry entry: the batch histogram-quantile over the events
-    table (the driver-checkable half of ``stream_quantile``)."""
+    table."""
     from cassandra_extractor_spark.sources.catalog import load_table
 
     return quantile_hist_batch(load_table(spark, "events", sf_dir))

@@ -1,43 +1,16 @@
-"""Custom stateful operators.
+"""Sessionization — the canonical custom stateful op the reference has
+no analogue for, included because real event-extraction pipelines need
+it.
 
-Sessionization — the canonical custom stateful op the reference has no
-analogue for, included because real event-extraction pipelines need it:
-
-- ``sessionize`` (batch): lag/cumsum window formulation — one
-  shuffle+sort per key, linear, oracle-checkable, the 100 TB path for
-  backfills.
-- ``sessionize_stream`` (streaming): ``applyInPandasWithState`` with a
-  processing-time timeout — the same fold over an unbounded stream,
-  state = open session per user, flushed on timeout (see the function
-  docstring for the event-time trade-off).
+``sessionize`` is the lag/cumsum window formulation: one shuffle+sort
+per key, linear, oracle-checkable.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
-
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F, types as T
+from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 
 SESSION_GAP_MIN = 30
-
-SESSION_SCHEMA = T.StructType(
-    [
-        T.StructField("user_id", T.LongType()),
-        T.StructField("session_start_ms", T.LongType()),
-        T.StructField("session_end_ms", T.LongType()),
-        T.StructField("n_events", T.LongType()),
-    ]
-)
-
-_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("start_ms", T.LongType()),
-        T.StructField("end_ms", T.LongType()),
-        T.StructField("n", T.LongType()),
-    ]
-)
 
 
 def sessionize(df: DataFrame, gap_min: int = SESSION_GAP_MIN) -> DataFrame:
@@ -73,561 +46,4 @@ def ns_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return sessionize(load_table(spark, "events", sf_dir)).orderBy(
         "user_id", "session_start_ms"
-    )
-
-
-def _fold_key(
-    user_id: int,
-    ts_chunks: list[pd.Series],
-    prior: tuple[int, int, int] | None,
-    gap_ms: int,
-) -> tuple[list[dict], tuple[int, int, int] | None]:
-    """Pure per-key session fold over UNORDERED epoch-ms chunks.
-
-    Concatenates all chunks and sorts the union once — per-chunk sorts
-    would let an out-of-order later chunk move ``end_ms`` backwards or
-    mis-split sessions.  The sort only covers ONE batch, so an event in
-    a LATER micro-batch that is older than the open session's end takes
-    the merge branch; the min/max clamps there keep the state invariant
-    ``start_ms ≤ end_ms = max(seen)`` across batches (a plain
-    ``end_ms = ts_ms`` would move the session end backwards).  A late
-    event more than ``gap_ms`` older than the open session still merges
-    rather than retro-splitting it — reconcile with the batch
-    ``sessionize`` for exact event-time semantics.  Returns (closed
-    sessions, open-session state).
-    """
-    start_ms = end_ms = None
-    n = 0
-    if prior is not None:
-        start_ms, end_ms, n = prior
-    out: list[dict] = []
-    all_ts = (
-        pd.concat(ts_chunks, ignore_index=True).sort_values() if ts_chunks else []
-    )
-    for ts_ms in all_ts:
-        ts_ms = int(ts_ms)
-        if start_ms is None:
-            start_ms, end_ms, n = ts_ms, ts_ms, 1
-        elif ts_ms - end_ms > gap_ms:
-            out.append(
-                {"user_id": user_id, "session_start_ms": start_ms, "session_end_ms": end_ms, "n_events": n}
-            )
-            start_ms, end_ms, n = ts_ms, ts_ms, 1
-        else:
-            # within-batch the sort guarantees ts_ms >= end_ms; the
-            # clamps matter only for cross-batch late arrivals
-            start_ms, end_ms, n = min(start_ms, ts_ms), max(end_ms, ts_ms), n + 1
-    state = (start_ms, end_ms, n) if start_ms is not None else None
-    return out, state
-
-
-def sessionize_stream(events: DataFrame, gap_min: int = SESSION_GAP_MIN) -> DataFrame:
-    """Streaming sessionization with per-user state + PROCESSING-time
-    timeout.  Input must be a streaming frame with (user_id, ts).
-
-    Trade-off (deliberate): the 60 s processing-time timeout flushes an
-    open session when no batch for that user arrives for 60 s of wall
-    clock — an event delayed longer than that lands in a NEW session,
-    diverging from the batch ``sessionize`` result.  Event-time
-    correctness would need ``EventTimeTimeout`` + a watermark ≥ the
-    session gap, which delays every emission by the gap (30 min);
-    extraction pipelines prefer the fast flush.  Re-running the batch
-    ``sessionize`` over the landed data reconciles exactly.
-    """
-    gap_ms = gap_min * 60 * 1000
-
-    def update(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:
-            start_ms, end_ms, n = state.get
-            state.remove()
-            yield pd.DataFrame(
-                [{"user_id": user_id, "session_start_ms": start_ms, "session_end_ms": end_ms, "n_events": n}]
-            )
-            return
-        prior = tuple(state.get) if state.exists else None
-        chunks = [pdf["ts"].astype("int64") // 10**6 for pdf in pdf_iter]
-        out, new_state = _fold_key(user_id, chunks, prior, gap_ms)
-        if new_state is not None:
-            state.update(new_state)
-            state.setTimeoutDuration(60_000)
-        yield pd.DataFrame(out)
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=SESSION_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="ProcessingTimeTimeout",
-    )
-
-
-_PACK_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("source", T.StringType()),
-        T.StructField("n_tokens", T.LongType()),
-        T.StructField("seq_id", T.LongType()),
-        T.StructField("seq_offset", T.LongType()),
-    ]
-)
-
-_PACK_STATE_SCHEMA = T.StructType([T.StructField("cum", T.LongType())])
-
-
-def stream_pack(docs: DataFrame, budget: int | None = None) -> DataFrame:
-    """Streaming sequence packing — the streaming twin of batch
-    ``ns_sequence_pack``: as curated documents arrive, each is assigned
-    its training-sequence id and offset from a per-source-shard
-    cumulative token counter carried as state, so a live ingest packs
-    incrementally instead of re-windowing the whole corpus nightly.
-
-    Contract: assignment is ARRIVAL-ordered (micro-batch rows are
-    sorted by doc_id within the batch; state carries the running total
-    across batches and restarts).  When arrival order is doc_id order
-    — the usual case for an ordered ingest, and what the parity test
-    lands — the output is ROW-IDENTICAL to the batch pack.  A shuffled
-    arrival still yields a valid packing (offsets exactly partition
-    the token stream), just a different doc→sequence assignment, the
-    same guarantee any online packer gives.
-
-    State is ONE long per source shard — bounded by the shard count,
-    independent of stream length; no timeout (a counter has nothing to
-    flush).  Input: streaming frame (doc_id, source, n_tokens) — token
-    counting is the upstream map stage, exactly as in the batch
-    spelling.
-    """
-    from cassandra_extractor_spark.operators.extraction import SEQ_BUDGET
-
-    b = budget or SEQ_BUDGET
-
-    def update(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        (source,) = key
-        cum = int(state.get[0]) if state.exists else 0
-        rows = pd.concat(list(pdf_iter), ignore_index=True).sort_values("doc_id")
-        out = []
-        for r in rows.itertuples():
-            out.append(
-                {
-                    "doc_id": int(r.doc_id),
-                    "source": source,
-                    "n_tokens": int(r.n_tokens),
-                    "seq_id": cum // b,
-                    "seq_offset": cum % b,
-                }
-            )
-            cum += int(r.n_tokens)
-        state.update((cum,))
-        yield pd.DataFrame(out, columns=[f.name for f in _PACK_SCHEMA.fields])
-
-    return docs.groupBy("source").applyInPandasWithState(
-        update,
-        outputStructType=_PACK_SCHEMA,
-        stateStructType=_PACK_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
-
-
-def stream_dedup(stream: DataFrame, fp_col: str = "fp") -> DataFrame:
-    """Streaming cross-batch exact dedup: emit each fingerprint's FIRST
-    occurrence across the whole stream, suppress every later one — the
-    streaming counterpart of ``ns_dedup_exact`` for continuously-
-    ingested corpora (state = seen fingerprint set, maintained by
-    Spark's streaming aggregation state store, persisted in the
-    checkpoint so dedup survives restarts).
-
-    Spark-first: this is the built-in ``dropDuplicates`` on an
-    unbounded stream — no custom state code; the state store shards by
-    fingerprint hash, so it scales horizontally like any keyed state.
-    UNBOUNDED state caveat: without a watermark the seen-set grows
-    forever.  For corpus dedup that is the SEMANTICS (a year-old dup is
-    still a dup); bound memory by fingerprinting (16-byte md5 keys),
-    RocksDB state store at production scale, or pass an event-time
-    ``watermark``-ed stream and use ``within_watermark=True`` to dedup
-    only within the lateness horizon (bounded state, the CDC shape).
-    """
-    return stream.dropDuplicates([fp_col])
-
-
-def stream_dedup_within_watermark(
-    stream: DataFrame, fp_col: str = "fp", ts_col: str = "ts", delay: str = "10 minutes"
-) -> DataFrame:
-    """Bounded-state variant: dedup only among rows whose event times
-    fall within the watermark horizon (``dropDuplicatesWithinWatermark``
-    — state for a fingerprint is dropped once the watermark passes it).
-    The right shape when duplicates are caused by at-least-once
-    delivery (CDC replays, producer retries) rather than true content
-    duplication: state is O(horizon), not O(corpus)."""
-    return stream.withWatermark(ts_col, delay).dropDuplicatesWithinWatermark([fp_col])
-
-
-def stream_attribution_join(
-    views: DataFrame,
-    clicks: DataFrame,
-    key: str = "user_id",
-    ts_col: str = "ts",
-    attribution_window: str = "1 hour",
-    watermark: str = "10 minutes",
-) -> DataFrame:
-    """Watermarked stream-stream inner join — the attribution pattern:
-    each click joins the view(s) by the same key that happened AT MOST
-    ``attribution_window`` before it (and not after).
-
-    This is Spark's built-in stream-stream join: both sides buffer in
-    the state store; the time-range condition plus the watermarks give
-    the engine a provable bound for evicting buffered rows, so state is
-    O(window + lateness) per key — without the range condition the
-    buffers grow forever and Spark rejects the query in append mode.
-    The reference has no streaming joins at all (its workers are
-    row-at-a-time); this is the capability a continuously-extracted
-    event table needs for enrichment without a batch re-join.
-    """
-    v = views.select(
-        F.col(key).alias("v_key"),
-        F.col(ts_col).alias("view_ts"),
-    ).withWatermark("view_ts", watermark)
-    c = clicks.select(
-        F.col(key).alias("c_key"),
-        F.col(ts_col).alias("click_ts"),
-    ).withWatermark("click_ts", watermark)
-    return v.join(
-        c,
-        F.expr(
-            f"v_key = c_key AND click_ts >= view_ts "
-            f"AND click_ts <= view_ts + INTERVAL {attribution_window}"
-        ),
-    ).select(
-        F.col("v_key").alias(key),
-        "view_ts",
-        "click_ts",
-        (F.unix_millis("click_ts") - F.unix_millis("view_ts")).alias("lag_ms"),
-    )
-
-
-ZSCORE_FRAME = 20  #: sliding frame length (matches batch q76)
-ZSCORE_MIN_N = 10
-
-_ZS_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("event_id", T.LongType()),
-        T.StructField("user_id", T.LongType()),
-        T.StructField("n_win", T.LongType()),
-        T.StructField("s_win", T.LongType()),
-        T.StructField("ss_win", T.LongType()),
-        T.StructField("is_outlier", T.BooleanType()),
-    ]
-)
-
-_ZS_STATE_SCHEMA = T.StructType(
-    [T.StructField("vals", T.ArrayType(T.LongType()))]
-)
-
-
-def stream_zscore(events: DataFrame) -> DataFrame:
-    """Streaming rolling z-score — the stateful-operator spelling of
-    batch ``q76_rolling_zscore``: per-user state is the last
-    ``ZSCORE_FRAME-1`` integerized values (a bounded ring, O(frame) per
-    key forever), each event is flagged by the same cross-multiplied
-    integer inequality, so on time-ordered arrival the streaming output
-    is ROW-IDENTICAL to the batch operator (asserted in
-    ``test_stream_zscore_matches_batch``).
-
-    Out-of-order arrival *within* a batch is repaired by the one-batch
-    sort below; an event arriving in a LATER batch than a newer one
-    uses the state as-of its arrival (documented divergence — the same
-    trade-off ``sessionize_stream`` makes; re-run the batch operator
-    over landed data to reconcile exactly).
-    """
-
-    def update(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        (user_id,) = key
-        if state.hasTimedOut:  # pragma: no cover - no timeout configured
-            state.remove()
-            return
-        vals: list[int] = list(state.get[0]) if state.exists else []
-        pdf = pd.concat(list(pdf_iter), ignore_index=True)
-        pdf = pdf.sort_values(["ts", "event_id"])
-        out = []
-        for event_id, value in zip(pdf["event_id"], pdf["value"]):
-            x = int(round(float(value) * 100))
-            window = vals[-(ZSCORE_FRAME - 1) :] + [x]
-            n = len(window)
-            s = sum(window)
-            ss = sum(v * v for v in window)
-            out.append(
-                {
-                    "event_id": int(event_id),
-                    "user_id": int(user_id),
-                    "n_win": n,
-                    "s_win": s,
-                    "ss_win": ss,
-                    "is_outlier": (n * x - s) ** 2 > 4 * (n * ss - s * s),
-                }
-            )
-            vals = window
-        state.update((vals[-(ZSCORE_FRAME - 1) :],))
-        yield pd.DataFrame(
-            [r for r in out if r["n_win"] >= ZSCORE_MIN_N],
-            columns=["event_id", "user_id", "n_win", "s_win", "ss_win", "is_outlier"],
-        )
-
-    return events.groupBy("user_id").applyInPandasWithState(
-        update,
-        outputStructType=_ZS_OUT_SCHEMA,
-        stateStructType=_ZS_STATE_SCHEMA,
-        outputMode="append",
-        timeoutConf="NoTimeout",
-    )
-
-
-def stream_time_rollup(
-    events: DataFrame,
-    bucket: str = "1 day",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Streaming continuous aggregate — the live half of batch
-    ``q90_time_rollup``: watermarked tumbling-window counts + cent sums
-    per (window, event_type).  In append mode a window row is emitted
-    exactly once, when the watermark closes it; the batch rollup over
-    the same landed data reproduces every closed row
-    (``test_streaming_windowed_agg_with_watermark``), which is what
-    makes backfill + live serving from one definition coherent.
-
-    State is one partial aggregate per open (window, type) — bounded
-    by the watermark horizon, independent of stream length.
-    """
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", bucket).alias("w"), "event_type")
-        .agg(
-            F.count("*").cast("long").alias("n_events"),
-            F.sum(F.round(F.col("value") * 100).cast("long")).alias("value_cents"),
-        )
-    )
-
-
-def stream_session_rollup(
-    events: DataFrame,
-    gap_min: int = SESSION_GAP_MIN,
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Native session windows — the BUILT-IN-operator twin of
-    ``sessionize_stream`` (which demonstrates the custom
-    ``applyInPandasWithState`` spelling of the same semantics) and the
-    streaming half of batch ``ns_sessionize``: events gapped ≤
-    ``gap_min`` minutes merge into one session per user.
-
-    ``F.session_window`` keeps the state machine (window merging,
-    watermark eviction) entirely JVM-side — prefer it in production
-    over the Pandas-state spelling whenever the aggregate is
-    expressible as built-in functions; the custom-state version exists
-    for session payloads Spark's aggregates can't express.  In append
-    mode a session row is emitted exactly once, when the watermark
-    passes its close.
-
-    Output matches ``ns_sessionize``'s contract: session_window.end is
-    last-event + gap, so ``session_end_ms`` subtracts the gap back to
-    the last event's timestamp — making stream rows directly
-    comparable to the batch lag/cumsum spelling (the parity test does
-    exactly that).
-    """
-    gap_ms = gap_min * 60 * 1000
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(
-            F.session_window("ts", f"{gap_min} minutes").alias("w"), "user_id"
-        )
-        .agg(F.count("*").cast("long").alias("n_events"))
-        .select(
-            "user_id",
-            F.unix_millis(F.col("w.start")).alias("session_start_ms"),
-            (F.unix_millis(F.col("w.end")) - F.lit(gap_ms)).alias("session_end_ms"),
-            "n_events",
-        )
-    )
-
-
-# --- streaming HLL distinct (mergeable sketch state, round 7) --------
-
-_HLL_OUT_SCHEMA = T.StructType(
-    [
-        T.StructField("group_key", T.StringType()),
-        T.StructField("n_seen", T.LongType()),
-        T.StructField("n_hit", T.LongType()),
-        T.StructField("ssum", T.LongType()),
-        T.StructField("hll_est", T.DoubleType()),
-    ]
-)
-
-_HLL_STATE_SCHEMA = T.StructType(
-    [
-        T.StructField("regs", T.ArrayType(T.LongType())),
-        T.StructField("n_seen", T.LongType()),
-    ]
-)
-
-
-def _hll_prep(df: DataFrame, key_col: str, token_col: str) -> DataFrame:
-    """Spark-side (bucket, rho) — the IDENTICAL md5 register arithmetic
-    as batch ``ns_hll_manual`` (operators/text.py), so stream and batch
-    sketch the same values to the same registers."""
-    from cassandra_extractor_spark.operators.dedup import _md5_hash64
-    from cassandra_extractor_spark.operators.text import HLL_BUCKETS, HLL_VALUE_BITS
-
-    h = _md5_hash64(F.col(token_col).cast("string"), "hll")
-    return (
-        df.select(F.col(key_col).cast("string").alias("group_key"), h.alias("h"))
-        .withColumn("bucket", F.pmod(F.col("h"), F.lit(HLL_BUCKETS)))
-        .withColumn("v", F.expr(f"h div {HLL_BUCKETS}"))
-        .select(
-            "group_key",
-            "bucket",
-            F.when(
-                F.col("v") > 0,
-                F.lit(HLL_VALUE_BITS + 1)
-                - F.length(F.conv(F.col("v").cast("string"), 10, 2)),
-            )
-            .otherwise(F.lit(HLL_VALUE_BITS + 1))
-            .cast("long")
-            .alias("rho"),
-        )
-    )
-
-
-def _hll_estimate(ssum: int, n_hit: int):
-    """Estimate from the EXACT integer register summary — Flajolet raw
-    harmonic estimate + the small-range linear-counting branch, the
-    same operation order as the batch operator's double expressions."""
-    import math
-
-    from cassandra_extractor_spark.operators.text import (
-        HLL_ALPHA,
-        HLL_BUCKETS,
-        HLL_VALUE_BITS,
-    )
-
-    raw = (
-        HLL_ALPHA
-        * float(HLL_BUCKETS)
-        * float(HLL_BUCKETS)
-        * float(2**HLL_VALUE_BITS)
-        / float(ssum)
-    )
-    zeros = HLL_BUCKETS - n_hit
-    if raw <= 2.5 * HLL_BUCKETS and zeros > 0:
-        return float(HLL_BUCKETS) * math.log(float(HLL_BUCKETS) / float(zeros))
-    return raw
-
-
-def stream_hll_distinct(
-    events: DataFrame, key_col: str = "event_type", token_col: str = "user_id"
-) -> DataFrame:
-    """Streaming distinct-count sketch — the MERGEABLE-STATE op the
-    round-6 verdict asked for: per-key state is the 256-register HLL
-    (a few KB, bounded FOREVER no matter how many events flow), each
-    micro-batch folds in via register MAX — the same merge a 1000-node
-    shuffle combiner or a cross-datacenter rollup would use, which is
-    exactly why the state survives any batch split and any checkpoint
-    restart bit-for-bit (``test_stream_hll_checkpoint_restart``).
-
-    Emits one row per key per micro-batch: cumulative rows seen, the
-    EXACT integer register summary (n_hit, ssum = Σ 2^(52−M_j) — fits
-    int64: ≤ 256·2^52 = 2^60), and the double estimate.  Batch parity:
-    ``hll_distinct_batch`` over the same landed rows produces the
-    identical (n_seen, n_hit, ssum) integers and the same estimate.
-    """
-
-    def update(key, pdf_iter: Iterator[pd.DataFrame], state) -> Iterator[pd.DataFrame]:
-        from cassandra_extractor_spark.operators.text import (
-            HLL_BUCKETS,
-            HLL_VALUE_BITS,
-        )
-
-        if state.hasTimedOut:  # pragma: no cover - no timeout configured
-            state.remove()
-            return
-        if state.exists:
-            regs, n_seen = list(state.get[0]), int(state.get[1])
-        else:
-            regs, n_seen = [0] * HLL_BUCKETS, 0
-        for pdf in pdf_iter:
-            n_seen += len(pdf)
-            for b, r in zip(pdf["bucket"], pdf["rho"]):
-                b = int(b)
-                if r > regs[b]:
-                    regs[b] = int(r)
-        state.update((regs, n_seen))
-        ssum = sum(1 << (HLL_VALUE_BITS - m) for m in regs)
-        n_hit = sum(1 for m in regs if m > 0)
-        yield pd.DataFrame(
-            [
-                {
-                    "group_key": key[0],
-                    "n_seen": n_seen,
-                    "n_hit": n_hit,
-                    "ssum": ssum,
-                    "hll_est": _hll_estimate(ssum, n_hit),
-                }
-            ]
-        )
-
-    return (
-        _hll_prep(events, key_col, token_col)
-        .groupBy("group_key")
-        .applyInPandasWithState(
-            update,
-            outputStructType=_HLL_OUT_SCHEMA,
-            stateStructType=_HLL_STATE_SCHEMA,
-            outputMode="update",
-            timeoutConf="NoTimeout",
-        )
-    )
-
-
-def hll_distinct_batch(
-    df: DataFrame, key_col: str = "event_type", token_col: str = "user_id"
-) -> DataFrame:
-    """Batch reference for ``stream_hll_distinct`` — same registers,
-    same integer summary, same estimate branch, computed as grouped
-    DataFrame aggregates (map-side-combined MAX per (key, bucket),
-    then one row per key)."""
-    from cassandra_extractor_spark.operators.text import (
-        HLL_ALPHA,
-        HLL_BUCKETS,
-        HLL_VALUE_BITS,
-    )
-
-    prep = _hll_prep(df, key_col, token_col)
-    counts = prep.groupBy("group_key").agg(F.count("*").alias("n_seen"))
-    regs = prep.groupBy("group_key", "bucket").agg(F.max("rho").alias("m"))
-    s = regs.groupBy("group_key").agg(
-        F.sum(F.expr(f"cast(pow(2.0d, {HLL_VALUE_BITS} - m) as decimal(38,0))")).alias(
-            "sp"
-        ),
-        F.count("*").cast("long").alias("n_hit"),
-    )
-    s = s.withColumn(
-        "ssum",
-        (
-            F.col("sp")
-            + (F.lit(HLL_BUCKETS) - F.col("n_hit")).cast("decimal(38,0)")
-            * F.lit(2**HLL_VALUE_BITS).cast("decimal(38,0)")
-        ).cast("long"),
-    )
-    raw = (
-        F.lit(HLL_ALPHA)
-        * F.lit(float(HLL_BUCKETS))
-        * F.lit(float(HLL_BUCKETS))
-        * F.lit(float(2**HLL_VALUE_BITS))
-        / F.col("ssum").cast("double")
-    )
-    zeros = F.lit(HLL_BUCKETS) - F.col("n_hit")
-    est = F.when(
-        (raw <= F.lit(2.5 * HLL_BUCKETS)) & (zeros > 0),
-        F.lit(float(HLL_BUCKETS))
-        * F.log(F.lit(float(HLL_BUCKETS)) / zeros.cast("double")),
-    ).otherwise(raw)
-    return s.join(counts, "group_key").select(
-        "group_key", "n_seen", "n_hit", "ssum", est.alias("hll_est")
     )

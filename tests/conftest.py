@@ -16,8 +16,16 @@ SF_DIR = "/root/testdata/sf0.001"
 
 
 @pytest.fixture(scope="session")
-def spark():
-    sp = get_spark("tests", master="local[8]", shuffle_partitions=8)
+def spark(tmp_path_factory):
+    # a warehouse of this run's own: managed-table directories that a
+    # killed run left in the checkout cannot make saveAsTable fail here
+    warehouse = tmp_path_factory.mktemp("spark-warehouse")
+    sp = get_spark(
+        "tests",
+        master="local[8]",
+        shuffle_partitions=8,
+        extra_conf={"spark.sql.warehouse.dir": str(warehouse)},
+    )
     yield sp
 
 

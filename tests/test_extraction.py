@@ -5,7 +5,8 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from cassandra_extractor_spark.config import load_properties, resolve
-from cassandra_extractor_spark.plans.spec import ExtractionSpec, run_extraction
+from cassandra_extractor_spark.plans.spec import ExtractionSpec
+from cassandra_extractor_spark.sinks.fanout import fan_out
 from cassandra_extractor_spark.sinks.jsonl import write_jsonl
 from cassandra_extractor_spark.streaming.pipeline import stream_extract
 
@@ -38,9 +39,7 @@ def test_full_extract_to_jsonl(spark, sf_dir, tmp_path):
         },
     )
     out = str(tmp_path / "events_out")
-    results = run_extraction(
-        spark, spec, {"jsonl": lambda df: write_jsonl(df, out)}, sf_dir
-    )
+    results = fan_out(spec.build(spark, sf_dir), {"jsonl": lambda df: write_jsonl(df, out)})
     assert results == {"jsonl": None}
     back = spark.read.json(out)
     assert back.count() == 1000

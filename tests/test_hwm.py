@@ -10,7 +10,7 @@ from cassandra_extractor_spark.streaming.hwm import (
     HighWaterMarkStore,
     capture_hwm,
     hwm_filter,
-    incremental_extract,
+    plan_incremental,
 )
 
 
@@ -39,8 +39,6 @@ def test_capture(spark):
 def test_plan_incremental_defers_commit(spark, tmp_path):
     """Crash safety: the mark must not advance until commit() is called
     after a successful write (a crashed run re-extracts its window)."""
-    from cassandra_extractor_spark.streaming.hwm import plan_incremental
-
     store = HighWaterMarkStore(str(tmp_path / "hwm.json"))
     df = _df(spark, 1, 5, 10)
     out, commit = plan_incremental(df, "ts", "t", store)
@@ -57,10 +55,11 @@ def test_plan_incremental_defers_commit(spark, tmp_path):
 def test_incremental_two_runs(spark, tmp_path):
     store = HighWaterMarkStore(str(tmp_path / "hwm.json"))
     first = _df(spark, 1, 5, 10)
-    out1 = incremental_extract(first, "ts", "t", store)
+    out1, commit1 = plan_incremental(first, "ts", "t", store)
     assert out1.count() == 3  # first run: everything
+    commit1()
     # second run: only rows at/after the persisted mark
     second = _df(spark, 1, 5, 10, 20, 25)
-    out2 = incremental_extract(second, "ts", "t", store)
+    out2, _ = plan_incremental(second, "ts", "t", store)
     got = sorted(r["ts"].day for r in out2.collect())
     assert got == [20, 25]  # old rows not re-extracted

@@ -5,45 +5,76 @@ from __future__ import annotations
 from pyspark.sql import Row, functions as F
 
 from cassandra_extractor_spark.operators.dedup import (
-    cosine,
-    minhash_signature,
-    simhash_col,
+    cosine_prenormed,
+    minhash_signatures_for,
+    norm,
+    ns_dedup_simhash,
 )
-from cassandra_extractor_spark.operators.multimodal import (
-    attach_media_metadata,
-    decode_images,
-    sample_frames,
-)
+from cassandra_extractor_spark.operators.multimodal import ns_multimodal_meta
 from cassandra_extractor_spark.operators.text import doc_fingerprint_col, lang_id_col
+
+
+def _write_documents(spark, sf_dir, rows):
+    spark.createDataFrame(rows, "doc_id long, text string").write.mode(
+        "overwrite"
+    ).parquet(f"{sf_dir}/documents.parquet")
 
 
 def test_minhash_identical_texts_identical_sig(spark):
     df = spark.createDataFrame(
-        [Row(t="a b c d e f g"), Row(t="a b c d e f g"), Row(t="x y z w v u t")]
+        [(0, "a b c d e f g"), (1, "a b c d e f g"), (2, "x y z w v u t")],
+        "doc_id long, text string",
     )
-    sigs = df.select(*minhash_signature(F.col("t"))).collect()
-    assert tuple(sigs[0]) == tuple(sigs[1])
-    assert tuple(sigs[0]) != tuple(sigs[2])
+    sigs = {
+        r["doc_id"]: tuple(r[1:])
+        for r in minhash_signatures_for(df).orderBy("doc_id").collect()
+    }
+    assert sigs[0] == sigs[1]
+    assert sigs[0] != sigs[2]
 
 
-def test_simhash_near_texts_close(spark):
-    df = spark.createDataFrame(
+def test_simhash_near_texts_close(spark, tmp_path):
+    """Two texts that differ in their last word land within the hamming
+    bound and pair up; an unrelated text pairs with neither."""
+    from cassandra_extractor_spark.operators.dedup import HAMMING_MAX
+
+    stem = " ".join(f"w{i}" for i in range(40))
+    _write_documents(
+        spark,
+        tmp_path,
         [
-            Row(i=0, t="the quick brown fox jumps over the lazy dog again today"),
-            Row(i=1, t="the quick brown fox jumps over the lazy dog again tonight"),
-            Row(i=2, t="completely different words appear in this sentence here now"),
-        ]
+            (0, stem + " today"),
+            (1, stem + " tonight"),
+            (2, " ".join(f"z{i}" for i in range(41))),
+        ],
     )
-    out = {r["i"]: r["sh"] for r in df.select("i", simhash_col(F.col("t")).alias("sh")).collect()}
-    ham01 = bin(out[0] ^ out[1]).count("1")
-    ham02 = bin(out[0] ^ out[2]).count("1")
-    assert ham01 < ham02
+    pairs = {(r["d1"], r["d2"]): r["ham"] for r in ns_dedup_simhash(spark, str(tmp_path)).collect()}
+    assert set(pairs) == {(0, 1)}
+    assert pairs[(0, 1)] <= HAMMING_MAX
 
 
 def test_cosine_self_is_one(spark):
     df = spark.createDataFrame([Row(v=[1.0, 2.0, 3.0])])
-    r = df.select(cosine(F.col("v"), F.col("v")).alias("c")).first()
+    nrm = norm(F.col("v"))
+    r = df.select(cosine_prenormed(F.col("v"), F.col("v"), nrm, nrm).alias("c")).first()
     assert abs(r["c"] - 1.0) < 1e-12
+
+
+def test_media_metadata_mime(spark, tmp_path):
+    """The payload is opaque: no MIME type is sniffed, and what the
+    engine computes is the payload's byte length and md5, multi-byte
+    utf-8 included."""
+    import hashlib
+
+    texts = {0: "plain", 1: "caf\u00e9 \u2603", 2: ""}
+    _write_documents(spark, tmp_path, sorted(texts.items()))
+    out = ns_multimodal_meta(spark, str(tmp_path))
+    assert out.columns == ["doc_id", "n_bytes", "content_md5"]
+    got = {r["doc_id"]: (r["n_bytes"], r["content_md5"]) for r in out.collect()}
+    assert got == {
+        i: (len(t.encode()), hashlib.md5(t.encode()).hexdigest()) for i, t in texts.items()
+    }
+    assert got[1][0] == 9  # 6 characters, two of them multi-byte
 
 
 def test_fingerprint_normalization(spark):
@@ -161,200 +192,6 @@ def test_incremental_dedup_matches_full(spark, sf_dir):
     assert new_bands.select("doc_id").distinct().count() == new.where(
         F.size(F.split(F.trim(F.lower(F.col("text"))), r"\s+")) >= 3
     ).count()
-
-
-def test_media_metadata_mime(spark):
-    df = spark.createDataFrame(
-        [Row(i=0, b=b"\x89PNG1234"), Row(i=1, b=b"\xff\xd8\xffrest"), Row(i=2, b=b"plain")]
-    )
-    out = {r["i"]: r["meta"] for r in attach_media_metadata(df, "b").collect()}
-    assert out[0]["mime"] == "image/png"
-    assert out[1]["mime"] == "image/jpeg"
-    assert out[2]["mime"] == "application/octet-stream"
-    assert out[0]["n_bytes"] == 8 and len(out[0]["content_md5"]) == 32
-
-
-def test_decode_images_plumbing(spark):
-    df = spark.createDataFrame([Row(doc_id=1, payload=b"x" * 100), Row(doc_id=2, payload=b"y" * 50)])
-    out = decode_images(df, "doc_id", "payload")
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert out.schema.simpleString() == "struct<doc_id:bigint,width:int,height:int,channels:int>"
-    assert rows[1]["width"] == 101 and rows[2]["width"] == 51  # deterministic fake
-    import pytest
-
-    # real=True is a REAL decoder now: non-PNG payloads fail loudly at
-    # action time (no JPEG codec in this container)
-    with pytest.raises(Exception, match="PNG"):
-        decode_images(df, "doc_id", "payload", real=True).collect()
-
-
-def test_decode_images_real_png_fixtures(spark):
-    """real=True decodes actual checked-in PNGs (grayscale, palette,
-    RGBA — independent encoders, so Sub/Up/Average/Paeth unfiltering
-    and palette expansion run against real-world files) through the
-    same Arrow/mapInPandas plumbing as the fake path."""
-    import os
-
-    fx = os.path.join(os.path.dirname(__file__), "fixtures")
-    rows_in = [
-        Row(doc_id=1, payload=open(os.path.join(fx, "gray_2x2.png"), "rb").read()),
-        Row(doc_id=2, payload=open(os.path.join(fx, "palette_16x16.png"), "rb").read()),
-        Row(doc_id=3, payload=open(os.path.join(fx, "rgba_32x32.png"), "rb").read()),
-    ]
-    out = decode_images(spark.createDataFrame(rows_in), "doc_id", "payload", real=True)
-    got = {r["doc_id"]: (r["width"], r["height"], r["channels"]) for r in out.collect()}
-    assert got == {1: (2, 2, 1), 2: (16, 16, 3), 3: (32, 32, 4)}
-
-
-def test_decode_png_pixels_and_filters():
-    """Pixel-exact decoder checks without an external codec:
-    (a) encode→decode round-trip at filter 0; (b) hand-built scanlines
-    for each filter type (Sub/Up/Average/Paeth) against hand-computed
-    expected bytes; (c) real fixture invariants (pixel count, palette
-    bounds)."""
-    import os
-    import struct
-    import zlib
-
-    from cassandra_extractor_spark.operators.multimodal import decode_png
-
-    def chunk(tag: bytes, body: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(body))
-            + tag
-            + body
-            + struct.pack(">I", zlib.crc32(tag + body))
-        )
-
-    def png(width, height, ctype, channels, scanlines: bytes) -> bytes:
-        ihdr = struct.pack(">IIBBBBB", width, height, 8, ctype, 0, 0, 0)
-        return (
-            b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(scanlines))
-            + chunk(b"IEND", b"")
-        )
-
-    # (a) filter-0 RGB round-trip
-    px = bytes(range(2 * 2 * 3))  # 2x2 RGB, distinct bytes
-    data = png(2, 2, 2, 3, b"\x00" + px[:6] + b"\x00" + px[6:])
-    assert decode_png(data) == (2, 2, 3, px)
-
-    # (b) per-filter scanlines, 3px wide, 1 channel (bpp=1)
-    # row0 filter 0: raw [10, 20, 30]
-    # row1 filter 1 (Sub): deltas [5, 5, 5] → [5, 10, 15]
-    # row2 filter 2 (Up): deltas [1, 1, 1] → [6, 11, 16]
-    # row3 filter 3 (Avg): stored x + floor((left + up)/2)
-    #      [3, ?, ?]: p0 = 3 + (0+6)//2 = 6; p1 = 4 + (6+11)//2 = 12;
-    #      p2 = 5 + (12+16)//2 = 19
-    # row4 filter 4 (Paeth): pred = nearest of (a,b,c) to a+b-c
-    #      p0: a=0,b=6,c=0 → pred 6; 2+6=8
-    #      p1: a=8,b=12,c=6 → p=14, pa=6,pb=2,pc=8 → pred 12; 1+12=13
-    #      p2: a=13,b=19,c=12 → p=20, pa=7,pb=1,pc=8 → pred 19; 0+19=19
-    lines = (
-        b"\x00" + bytes([10, 20, 30])
-        + b"\x01" + bytes([5, 5, 5])
-        + b"\x02" + bytes([1, 1, 1])
-        + b"\x03" + bytes([3, 4, 5])
-        + b"\x04" + bytes([2, 1, 0])
-    )
-    w, h, c, pixels = decode_png(png(3, 5, 0, 1, lines))
-    assert (w, h, c) == (3, 5, 1)
-    assert list(pixels) == [10, 20, 30, 5, 10, 15, 6, 11, 16, 6, 12, 19, 8, 13, 19]
-
-    # (c) real-world fixtures: byte-count invariant
-    fx = os.path.join(os.path.dirname(__file__), "fixtures")
-    for name, exp in [
-        ("gray_2x2.png", (2, 2, 1)),
-        ("palette_16x16.png", (16, 16, 3)),
-        ("rgba_32x32.png", (32, 32, 4)),
-    ]:
-        w, h, c, pixels = decode_png(open(os.path.join(fx, name), "rb").read())
-        assert (w, h, c) == exp
-        assert len(pixels) == w * h * c
-
-
-def test_resize_and_audio_stubs(spark):
-    import pytest
-
-    from cassandra_extractor_spark.operators.multimodal import (
-        extract_audio_features,
-        resize_images,
-    )
-
-    df = spark.createDataFrame([Row(doc_id=1, payload=b"abc" * 100), Row(doc_id=2, payload=b"")])
-    resized = {r["doc_id"]: r["resized"] for r in resize_images(df, "doc_id", "payload", 8, 4).collect()}
-    assert len(resized[1]) == 32 and len(resized[2]) == 32  # exact target bytes
-    feats = {r["doc_id"]: r for r in extract_audio_features(df, "doc_id", "payload").collect()}
-    assert feats[1]["duration_s"] > 0 and feats[2]["duration_s"] == 0.0
-    assert feats[1]["n_frames"] == 0  # 300 bytes < one 512-byte frame
-    # real paths exist now but reject non-PNG / non-WAV payloads loudly
-    with pytest.raises(Exception):
-        resize_images(df, "doc_id", "payload", real=True).collect()
-    with pytest.raises(Exception):
-        extract_audio_features(df, "doc_id", "payload", real=True).collect()
-
-
-def test_resize_images_real_nearest_neighbor(spark):
-    """real=True resize: decode → nearest-neighbor resample → re-encode;
-    output is a valid PNG of the target dimensions with pixels matching
-    the hand-computed nearest-neighbor mapping."""
-    import os
-
-    from cassandra_extractor_spark.operators.multimodal import (
-        decode_png,
-        encode_png,
-        resize_images,
-    )
-
-    # synthetic 2x2 gray: upscale 2x2 -> 4x4 duplicates each pixel 2x2
-    px = bytes([10, 20, 30, 40])
-    src = encode_png(2, 2, 1, px)
-    df = spark.createDataFrame([Row(doc_id=1, payload=src)])
-    out = {r["doc_id"]: r["resized"] for r in
-           resize_images(df, "doc_id", "payload", 4, 4, real=True).collect()}
-    w, h, c, rpx = decode_png(bytes(out[1]))
-    assert (w, h, c) == (4, 4, 1)
-    assert list(rpx) == [10, 10, 20, 20, 10, 10, 20, 20,
-                         30, 30, 40, 40, 30, 30, 40, 40]
-    # real fixture: RGBA 32x32 -> 8x8 keeps channels, halves to target
-    fx = os.path.join(os.path.dirname(__file__), "fixtures", "rgba_32x32.png")
-    df2 = spark.createDataFrame([Row(doc_id=2, payload=open(fx, "rb").read())])
-    out2 = resize_images(df2, "doc_id", "payload", 8, 8, real=True).collect()[0]["resized"]
-    w2, h2, c2, rpx2 = decode_png(bytes(out2))
-    assert (w2, h2, c2) == (8, 8, 4) and len(rpx2) == 8 * 8 * 4
-
-
-def test_extract_audio_features_real_wav(spark):
-    """real=True audio: a stdlib-generated 16-bit PCM WAV with known
-    constant amplitude decodes to exact duration, frame count, and
-    RMS == |amplitude|."""
-    import io
-    import wave
-
-    from cassandra_extractor_spark.operators.multimodal import extract_audio_features
-
-    buf = io.BytesIO()
-    rate, n = 8000, 4000  # 0.5 s
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(1)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(b"".join((1000).to_bytes(2, "little", signed=True) for _ in range(n)))
-    df = spark.createDataFrame([Row(doc_id=1, payload=buf.getvalue())])
-    r = extract_audio_features(df, "doc_id", "payload", real=True).collect()[0]
-    assert r["n_frames"] == n
-    assert abs(r["duration_s"] - 0.5) < 1e-12
-    assert abs(r["rms"] - 1000.0) < 1e-9
-
-
-def test_sample_frames_fanout(spark):
-    df = spark.createDataFrame([Row(doc_id=1, payload=bytes(range(256)) * 8)])
-    out = sample_frames(df, "doc_id", "payload", every_n=30)
-    rows = out.collect()
-    assert len(rows) > 1  # one input row fans out to many frames
-    assert rows[0]["frame_idx"] == 0 and rows[1]["frame_idx"] == 30
-    assert all(len(r["frame"]) == 16 for r in rows)
 
 
 def test_repetition_filter_fracs_and_verdict(spark, sf_dir):

@@ -146,13 +146,17 @@ def test_exiting_process_releases_its_session_store(spark, sf_dir):
         ensure_session_bm25_store,
     )
 
+    # the child session shares this session's warehouse
+    wh = spark.conf.get("spark.sql.warehouse.dir")
+    wh = wh[len("file:") :] if wh.startswith("file:") else wh
     script = f"""
 import sys
 sys.path.insert(0, {str(ROOT)!r})
 from cassandra_extractor_spark.session import get_spark
 from cassandra_extractor_spark.streaming.posting_stream import (
     ensure_session_bm25_store)
-spark = get_spark("leaky-session", master="local[4]", shuffle_partitions=4)
+spark = get_spark("leaky-session", master="local[4]", shuffle_partitions=4,
+                  extra_conf={{"spark.sql.warehouse.dir": {wh!r}}})
 tables = ensure_session_bm25_store(spark, {sf_dir!r})
 print("TABLES", *tables)
 # exit WITHOUT invalidating: the atexit hook must clean up
@@ -168,8 +172,6 @@ print("TABLES", *tables)
     theirs = next(
         l.split()[1:] for l in out.stdout.splitlines() if l.startswith("TABLES")
     )
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    wh = wh[len("file:") :] if wh.startswith("file:") else wh
     for t in theirs:
         assert not os.path.isdir(os.path.join(wh, t)), t
     # in-process spelling of the same contract: the hook drops this
@@ -396,9 +398,10 @@ def test_two_process_store_isolation(spark, sf_dir):
     want = [(r.doc_id, r.bm25) for r in ns_bm25(spark, sf_dir).collect()]
     assert [(r.doc_id, r.bm25) for r in ns_bm25_store(spark, sf_dir).collect()] == want
     mine = ensure_session_bm25_store(spark, sf_dir)
-    # second session, SAME cwd → same default warehouse dir: build the
-    # store for the SAME corpus, read it, then invalidate (dropping
-    # only its own app-id-tagged tables) and exit
+    # second session, SAME warehouse dir: build the store for the SAME
+    # corpus, read it, then invalidate (dropping only its own
+    # app-id-tagged tables) and exit
+    wh = spark.conf.get("spark.sql.warehouse.dir")
     script = f"""
 import sys
 sys.path.insert(0, {str(ROOT)!r})
@@ -406,7 +409,8 @@ from cassandra_extractor_spark.operators.dedup import invalidate_dedup_chain
 from cassandra_extractor_spark.session import get_spark
 from cassandra_extractor_spark.streaming.posting_stream import (
     ensure_session_bm25_store, ns_bm25_store)
-spark = get_spark("second-session", master="local[4]", shuffle_partitions=4)
+spark = get_spark("second-session", master="local[4]", shuffle_partitions=4,
+                  extra_conf={{"spark.sql.warehouse.dir": {wh!r}}})
 tables = ensure_session_bm25_store(spark, {sf_dir!r})
 n = ns_bm25_store(spark, {sf_dir!r}).count()
 invalidate_dedup_chain(spark, {sf_dir!r})

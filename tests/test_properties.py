@@ -113,54 +113,6 @@ def test_solr_grammar_always_translates(q):
 
 
 @given(
-    width=st.integers(min_value=1, max_value=12),
-    height=st.integers(min_value=1, max_value=12),
-    channels=st.sampled_from([1, 2, 3, 4]),
-    data=st.data(),
-)
-@settings(max_examples=60, deadline=None)
-def test_png_encode_decode_round_trip(width, height, channels, data):
-    """Property: encode_png → decode_png is the identity on any 8-bit
-    pixel buffer, for every supported channel count."""
-    from cassandra_extractor_spark.operators.multimodal import decode_png, encode_png
-
-    n = width * height * channels
-    pixels = bytes(
-        data.draw(st.lists(st.integers(0, 255), min_size=n, max_size=n))
-    )
-    w, h, c, out = decode_png(encode_png(width, height, channels, pixels))
-    assert (w, h, c) == (width, height, channels)
-    assert out == pixels
-
-
-@given(
-    st.integers(min_value=1, max_value=24),
-    st.integers(min_value=1, max_value=24),
-    st.sampled_from([1, 3]),
-    st.integers(min_value=0, max_value=2**32 - 1),
-)
-@settings(max_examples=25, deadline=None)
-def test_jpeg_q100_roundtrip_error_bounded(w, h, c, seed):
-    """Property: encode(q=100) → decode is within DCT/color rounding
-    (≤3/channel) for ANY dims (incl non-multiples of 8) and channel
-    count — the whole padded-edge/MCU geometry space."""
-    import numpy as np
-
-    from cassandra_extractor_spark.operators.jpegcodec import decode_jpeg, encode_jpeg
-
-    rng = np.random.default_rng(seed)
-    # smooth-ish content: random low-frequency field (pure noise at
-    # q100 still bounds at ~±3 but needs wider DCT tolerance on 1x1 MCUs)
-    base = rng.integers(0, 256, (max(1, h // 8 + 1), max(1, w // 8 + 1), c))
-    img = np.kron(base, np.ones((8, 8, 1)))[:h, :w, :].astype(np.uint8)
-    data = encode_jpeg(w, h, c, img.tobytes(), quality=100)
-    w2, h2, c2, px = decode_jpeg(data)
-    assert (w2, h2, c2) == (w, h, c)
-    out = np.frombuffer(px, dtype=np.uint8).reshape(h, w, c)
-    assert int(np.abs(out.astype(int) - img.astype(int)).max()) <= 3
-
-
-@given(
     st.text(alphabet=st.characters(min_codepoint=97, max_codepoint=122), min_size=1, max_size=12),
     st.lists(
         st.tuples(

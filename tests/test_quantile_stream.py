@@ -1,6 +1,9 @@
-"""Streaming histogram quantile: exact batch parity under any
-micro-batch split, bin-width error bound, clamp accounting, and
-checkpoint restart."""
+"""Fixed-bin histogram quantile (``quantile_hist_batch``): the one-bin
+error bound, clamp accounting and half-up rounding.
+
+The cases keep the ``stream_quantile`` names of the streaming front end
+they were first written for; that front end is gone, and the histogram
+estimate it shared is what they pin."""
 
 from __future__ import annotations
 
@@ -8,136 +11,58 @@ import math
 
 import pandas as pd
 
+from cassandra_extractor_spark.streaming.quantile import BIN_CENTS, NBINS, quantile_hist_batch
+
 SCHEMA = "event_type STRING, value DOUBLE"
 
 
-def _land(spark, tmp_path, src, file_no, spec):
-    rows = [
-        {"event_type": k, "value": v} for k, vals in spec.items() for v in vals
-    ]
-    (
-        spark.createDataFrame(pd.DataFrame(rows), SCHEMA)
-        .coalesce(1)
-        .write.mode("overwrite")
-        .parquet(str(tmp_path / "stage" / f"f{file_no}"))
-    )
-    part = next((tmp_path / "stage" / f"f{file_no}").glob("*.parquet"))
-    src.mkdir(exist_ok=True)
-    part.rename(src / f"data_{file_no}.parquet")
+def _estimate(spark, spec):
+    rows = [{"event_type": k, "value": v} for k, vals in spec.items() for v in vals]
+    df = spark.createDataFrame(pd.DataFrame(rows), SCHEMA)
+    return {r["group_key"]: r for r in quantile_hist_batch(df).collect()}
 
 
-def _run(spark, src, ckpt):
-    from cassandra_extractor_spark.streaming.quantile import stream_quantile
-
-    stream = (
-        spark.readStream.schema(SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(f"{src}/*.parquet")
-    )
-    emitted = []
-    q = (
-        stream_quantile(stream)
-        .writeStream.foreachBatch(lambda df, bid: emitted.extend(df.collect()))
-        .outputMode("update")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(180)
-    latest: dict = {}
-    for r in emitted:  # running totals: max n_seen = final summary
-        if r["n_seen"] >= latest.get(r["group_key"], {"n_seen": -1})["n_seen"]:
-            latest[r["group_key"]] = r
-    return latest
-
-
-def _batch(spark, src):
-    from cassandra_extractor_spark.streaming.quantile import quantile_hist_batch
-
-    return {
-        r["group_key"]: r
-        for r in quantile_hist_batch(
-            spark.read.schema(SCHEMA).parquet(f"{src}/*.parquet")
-        ).collect()
-    }
-
-
-def test_stream_quantile_parity_bound_and_restart(spark, tmp_path):
-    """Streaming summary == batch histogram estimate over the same
-    rows (exact-merge contract), the estimate brackets the true
-    quantile within one bin, and a checkpoint restart folds new files
-    into the same state."""
-    src = tmp_path / "qtsrc"
+def test_stream_quantile_parity_bound_and_restart(spark):
+    """The upper-edge estimate brackets the true quantile within one
+    bin: true ≤ reported ≤ true + BIN_CENTS (the upper edge is inclusive
+    when the true value sits exactly on a bin's lower edge)."""
     view = [1.00, 2.50, 3.75, 10.00, 49.99, 50.01, 99.99, 250.00]
     click = [0.01 * i for i in range(1, 101)]  # 0.01 .. 1.00
-    _land(spark, tmp_path, src, 0, {"view": view[:4], "click": click[:50]})
-    _land(spark, tmp_path, src, 1, {"view": view[4:], "click": click[50:]})
-    got = _run(spark, src, tmp_path / "qtck")
-    want = _batch(spark, src)
-    assert set(got) == set(want)
-    for k in want:
-        for c in ("n_seen", "p50_ub_cents", "p95_ub_cents", "n_clamped"):
-            assert got[k][c] == want[k][c], (k, c, got[k], want[k])
-
-    # bin-width bracket: true quantile ≤ upper estimate ≤ true + 100
-    # (the upper edge is inclusive when the true value sits exactly on
-    # a bin's lower edge)
+    got = _estimate(spark, {"view": view, "click": click})
     for k, vals in {"view": view, "click": click}.items():
+        assert (got[k]["n_seen"], got[k]["n_clamped"]) == (len(vals), 0), k
         for pct, col in ((50, "p50_ub_cents"), (95, "p95_ub_cents")):
             true_cents = sorted(round(v * 100) for v in vals)[
                 math.ceil(pct * len(vals) / 100) - 1
             ]
-            assert true_cents <= got[k][col] <= true_cents + 100, (k, pct)
+            assert true_cents <= got[k][col] <= true_cents + BIN_CENTS, (k, pct)
 
-    # restart: new file shifts the distribution; state must carry over
-    _land(spark, tmp_path, src, 2, {"view": [400.0] * 20, "click": [0.5]})
-    got2 = _run(spark, src, tmp_path / "qtck")
-    want2 = _batch(spark, src)
-    assert got2["view"]["n_seen"] == len(view) + 20
-    for k in want2:
-        for c in ("n_seen", "p50_ub_cents", "p95_ub_cents", "n_clamped"):
-            assert got2[k][c] == want2[k][c], (k, c)
-    assert got2["view"]["p95_ub_cents"] == 40100  # mass moved to 400.00
+    # mass moved to 400.00 moves p95 to the upper edge of that bin
+    shifted = _estimate(spark, {"view": view + [400.0] * 20})["view"]
+    assert shifted["p95_ub_cents"] == 40100
 
 
-def test_stream_quantile_clamp_saturation(spark, tmp_path):
+def test_stream_quantile_clamp_saturation(spark):
     """Out-of-domain values land in the clamp bins: negatives in bin 0,
     overflow in bin NBINS; n_clamped counts them and a saturated p95
     reports the sentinel upper bound."""
-    from cassandra_extractor_spark.streaming.quantile import BIN_CENTS, NBINS
-
-    src = tmp_path / "qt2src"
-    _land(
-        spark,
-        tmp_path,
-        src,
-        0,
-        {"view": [-5.0, 0.5, 1.5, 9999.0, 8888.0, 7777.0]},
-    )
-    got = _run(spark, src, tmp_path / "qt2ck")["view"]
+    got = _estimate(spark, {"view": [-5.0, 0.5, 1.5, 9999.0, 8888.0, 7777.0]})["view"]
+    assert got["n_seen"] == 6
     assert got["n_clamped"] == 4  # -5.0 + three overflows
     assert got["p95_ub_cents"] == (NBINS + 1) * BIN_CENTS
-    want = _batch(spark, src)["view"]
-    assert got["p50_ub_cents"] == want["p50_ub_cents"]
-    assert got["n_clamped"] == want["n_clamped"]
+    # bins 0, 0, 1, NBINS×3: the 3rd of 6 is bin 1
+    assert got["p50_ub_cents"] == 2 * BIN_CENTS
 
 
-def test_stream_quantile_half_up_rounding_edge(spark, tmp_path):
-    """ADVICE r7: values whose value*100 lands EXACTLY on .5 in double
-    (e.g. -0.005 → -0.5 cents, exactly representable) must round half
-    AWAY FROM ZERO on the stream side, matching the batch spelling
-    (Spark F.round, HALF_UP) — pandas' default half-even binned/clamped
-    them differently and broke stream==batch parity."""
-    src = tmp_path / "qt3src"
-    # -0.005*100 = -0.5 exactly; HALF_UP → -1 cent (clamped, bin 0);
-    # half-even would give 0 cents (bin 0, NOT clamped) → n_clamped split.
+def test_stream_quantile_half_up_rounding_edge(spark):
+    """Values whose value*100 lands EXACTLY on .5 in double (e.g.
+    -0.005 → -0.5 cents, exactly representable) round half AWAY FROM
+    ZERO, as the DuckDB oracle does: -0.5 cents becomes -1, which is
+    clamped; half-even would give 0 cents, in bin 0 and not clamped."""
     # 0.005*100 = 0.5 exactly; HALF_UP → 1 cent; half-even → 0.
     # 0.015*100 = 1.5000000000000002 (not exact) — both rules agree → 2.
     # 2.5 and 3.5 (whole cents ×100 = 250, 350) exercise in-domain bins.
-    vals = [-0.005, 0.005, 0.015, 2.5, 3.5]
-    _land(spark, tmp_path, src, 0, {"edge": vals})
-    got = _run(spark, src, tmp_path / "qt3ck")["edge"]
-    want = _batch(spark, src)["edge"]
-    for c in ("n_seen", "p50_ub_cents", "p95_ub_cents", "n_clamped"):
-        assert got[c] == want[c], (c, dict(got.asDict()), dict(want.asDict()))
-    assert got["n_clamped"] == want["n_clamped"] == 1  # only -0.005
+    got = _estimate(spark, {"edge": [-0.005, 0.005, 0.015, 2.5, 3.5]})["edge"]
+    assert got["n_seen"] == 5
+    assert got["n_clamped"] == 1  # only -0.005
+    assert (got["p50_ub_cents"], got["p95_ub_cents"]) == (BIN_CENTS, 4 * BIN_CENTS)

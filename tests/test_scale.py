@@ -1,16 +1,12 @@
-"""Scale techniques: bucketed shuffle-free joins, salted skew handling."""
+"""Scale techniques: bucketed shuffle-free joins, salted skew handling,
+skew-bounded plans."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import Row, functions as F
+from pyspark.sql import functions as F
 
-from cassandra_extractor_spark.operators.scale import (
-    read_bucketed,
-    salted_aggregate,
-    salted_join,
-    write_bucketed,
-)
+from cassandra_extractor_spark.operators.scale import salted_aggregate, write_bucketed
 from cassandra_extractor_spark.sources.catalog import load_table
 
 
@@ -22,7 +18,7 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
         customer.withColumnRenamed("c_custkey", "o_custkey"), "customer_b", ["o_custkey"], 8,
         sort_cols=["o_custkey"],
     )
-    a, b = read_bucketed(spark, "orders_b"), read_bucketed(spark, "customer_b")
+    a, b = spark.table("orders_b"), spark.table("customer_b")
     # disable broadcast so the join strategy decision is about shuffles
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -36,19 +32,42 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
         spark.sql("DROP TABLE IF EXISTS customer_b")
 
 
-def test_layout_optimized_write_prunes_files(spark, sf_dir, tmp_path):
-    from cassandra_extractor_spark.operators.scale import files_touched, write_layout_optimized
-
+def test_layout_optimized_write_prunes_files(spark, sf_dir):
+    """A table bucketed on its key serves a point lookup on that key
+    from one bucket's files: the scan prunes the other buckets."""
     orders = load_table(spark, "orders", sf_dir)
-    path = str(tmp_path / "orders_ranged")
-    write_layout_optimized(orders, path, "o_orderkey", num_files=16)
-    back = spark.read.parquet(path)
-    total = files_touched(back)
-    narrow = files_touched(back.where((F.col("o_orderkey") >= 100) & (F.col("o_orderkey") < 200)))
-    assert total >= 8  # layout actually split into many files
-    assert narrow <= 2  # narrow key range touches ~1 file, not all
-    # correctness preserved
-    assert back.count() == orders.count()
+    write_bucketed(orders, "orders_layout", ["o_orderkey"], 16)
+    try:
+        back = spark.table("orders_layout")
+        key = orders.select(F.min("o_orderkey")).first()[0]
+        point = back.where(F.col("o_orderkey") == key)
+        plan = point._jdf.queryExecution().executedPlan().toString()
+        assert "SelectedBucketsCount: 1 out of 16" in plan, plan
+        assert point.count() == 1
+        assert back.count() == orders.count()  # correctness preserved
+    finally:
+        spark.sql("DROP TABLE IF EXISTS orders_layout")
+
+
+def test_salted_join_matches_plain(spark, sf_dir):
+    """q88's salted join (orders replicated over the salts, lineitem on
+    a deterministic salt) returns exactly the plain join's per-order
+    totals."""
+    from cassandra_extractor_spark.operators.relational import q88_salted_join
+
+    o = load_table(spark, "orders", sf_dir).where(F.col("o_orderkey") <= 4000)
+    li = load_table(spark, "lineitem", sf_dir)
+    plain = (
+        li.join(o, li.l_orderkey == o.o_orderkey)
+        .groupBy("o_orderkey", "o_orderdate")
+        .agg(
+            F.count("*").cast("long").alias("n_items"),
+            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("revenue_cents"),
+        )
+    )
+    want = sorted(tuple(r) for r in plain.collect())
+    assert want
+    assert sorted(tuple(r) for r in q88_salted_join(spark, sf_dir).collect()) == want
 
 
 def _skewed(spark):
@@ -56,16 +75,6 @@ def _skewed(spark):
     hot = spark.range(10_000).select(F.lit(1).alias("k"), F.col("id").alias("v"))
     rest = spark.range(100).select((F.col("id") + 2).alias("k"), F.col("id").alias("v"))
     return hot.union(rest)
-
-
-def test_salted_join_matches_plain(spark):
-    left = _skewed(spark)
-    right = spark.createDataFrame([Row(k=1, name="hot"), Row(k=50, name="cold")])
-    plain = left.join(right, "k").groupBy("name").count().collect()
-    salted = salted_join(left, right, "k").groupBy("name").count().collect()
-    assert sorted((r["name"], r["count"]) for r in plain) == sorted(
-        (r["name"], r["count"]) for r in salted
-    )
 
 
 def test_salted_aggregate_matches_plain(spark):
@@ -968,7 +977,7 @@ def test_write_bucketed_heals_orphan_table_location(spark):
         fh.write("left behind by a killed run")
     try:
         write_bucketed(spark.range(100).withColumnRenamed("id", "k"), table, ["k"], 4)
-        assert read_bucketed(spark, table).count() == 100
+        assert spark.table(table).count() == 100
         assert not os.path.exists(os.path.join(orphan, "part-00000-stale.parquet"))
         assert os.path.exists(os.path.join(orphan, "_SUCCESS"))
     finally:

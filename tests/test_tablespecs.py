@@ -16,7 +16,6 @@ from cassandra_extractor_spark.functions.tablespecs import (
     nested_to_json,
     render_template,
     strptime_to_spark,
-    to_json_rows,
 )
 
 FIXTURE_SPEC = {
@@ -103,9 +102,15 @@ def test_render_template(spark):
     assert out.first()["r"] == 'key=n1 num=5 quote="'
 
 
-def test_to_json_rows(spark):
+def test_to_json_rows(spark, tmp_path):
+    """A row serializes as one compact JSON object, columns in order:
+    the text the JSON-array file sink writes per record."""
+    from cassandra_extractor_spark.sinks.jsonl import write_json_array_file
+
     df = spark.createDataFrame([Row(a=1, b="x")])
-    assert to_json_rows(df).first()["value"] == '{"a":1,"b":"x"}'
+    path = tmp_path / "rows.json"
+    assert write_json_array_file(df, str(path), header="", footer="") == 1
+    assert path.read_text(encoding="utf-8") == '{"a":1,"b":"x"}'
 
 
 def test_list_and_map_convert(spark):
