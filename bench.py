@@ -18,6 +18,66 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def noop(df) -> None:
+    """Run ``df`` to completion through the noop sink (full computation,
+    nothing collected to the driver)."""
+    df.write.format("noop").mode("overwrite").save()
+
+
+def median(samples: list[float]) -> float:
+    """The middle sample (the upper middle of an even count)."""
+    return sorted(samples)[len(samples) // 2]
+
+
+def measure(fn, n: int = 3, fresh_build=None, reset=None) -> list[float]:
+    """``n`` wall-clock samples (s) of one timing protocol — the only
+    timing loop of the bench and the probe tools.  Each sample starts
+    after ``reset()`` (untimed; a cold-cache protocol drops its caches
+    there) and a full JVM GC: without the barrier a sample can carry
+    seconds of heap debt from earlier work (observed 10.9 s against a
+    3.9 s steady state).
+
+    Without ``fresh_build`` a sample times ``fn()``.  With it, ``fn``
+    runs what ``fresh_build()`` built.  Python-side plan construction is
+    client work — a production pipeline builds its plan once and
+    re-executes it — so a lazy build is hoisted out of the clock and
+    every sample runs the same target.  A build that ran Spark jobs (a
+    localCheckpoint, a bounded plan-time pre-pass) did engine work that
+    a reused target would skip, so each sample then times a fresh build
+    plus the run; the probing build is the first sample.
+    """
+    from pyspark.sql import SparkSession
+
+    sc = SparkSession.active().sparkContext
+    tracker = sc.statusTracker()
+
+    def last_job() -> int:
+        # HIGHEST job id, not the count: the status store evicts old
+        # jobs past its retention limit (~1000), so a count can DROP
+        # over a long run and an eager build would pass for lazy
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    samples: list[float] = []
+    target, eager = None, True
+    for _ in range(n):
+        if reset is not None:
+            reset()
+        sc._jvm.System.gc()
+        t0 = time.time()
+        if fresh_build is None:
+            fn()
+        else:
+            if eager:
+                j0 = last_job()
+                target = fresh_build()
+                if not samples and last_job() == j0:
+                    eager = False
+                    t0 = time.time()
+            fn(target)
+        samples.append(round(time.time() - t0, 3))
+    return samples
+
+
 def diff_regressions(
     prev: dict[str, float] | list[dict[str, float]], cur: dict[str, float]
 ) -> list[dict]:
@@ -64,12 +124,11 @@ def _ratio_stats(
     tables = [prev] if isinstance(prev, dict) else list(prev)
     base: dict[str, float] = {}
     for name in cur:
-        vals = sorted(t[name] for t in tables if t.get(name, 0) > 0)
+        vals = [t[name] for t in tables if t.get(name, 0) > 0]
         if vals:
-            base[name] = vals[len(vals) // 2]
+            base[name] = median(vals)
     ratios = {n: cur[n] / base[n] for n in base if cur[n] > 0 and base[n] > 0}
-    rs = sorted(ratios.values())
-    drift = max(1.0, rs[len(rs) // 2]) if rs else 1.0
+    drift = max(1.0, median(list(ratios.values()))) if ratios else 1.0
     return base, ratios, drift
 
 
@@ -107,8 +166,7 @@ def confirm_regressions(
         # repaired).  The flag decision still uses the min (a flag
         # should only survive if even the BEST re-measurement
         # reproduces it); the pre-repair value stays in ``cur_sec``.
-        srt = sorted(samples)
-        reg["rerun_median"] = srt[len(srt) // 2]
+        reg["rerun_median"] = median(samples)
         reproduced = (
             rerun_min >= 0.3 and rerun_min / reg["base_sec"] > 1.5 * drift
         )
@@ -209,95 +267,38 @@ def main() -> None:
     assert not missing, f"warm-up queries renamed/removed from registry: {missing}"
     for wname in warmup_names:
         try:
-            QUERIES[wname](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
+            noop(QUERIES[wname](spark, sf_dir))
         except Exception as exc:  # noqa: BLE001
             print(f"# warmup {wname} ERROR: {exc}", file=sys.stderr)
 
-    # The corpus-family pipelines share one materialized signature→LSH→
-    # components chain + token stream per session (the in-session analog
-    # of the persisted signature store — see operators/dedup.session_memo).
-    # Charge that one-time build EXPLICITLY: drop whatever the warm-up
-    # cached, rebuild under the clock, and record it as its own line item
-    # ("shared_dedup_chain_build") in the total.  Consumer queries then
-    # time their honest MARGINAL cost over the store, exactly as a real
-    # multi-query session (or the nightly pipeline reading the persisted
-    # store) would pay it — the build is counted once, not hidden and
-    # not multiply charged.
+    # The corpus-family, ANN and quality pipelines and ns_bm25_store
+    # share session-built frames (operators/dedup.SHARED_FRAMES: the
+    # in-session analog of the persisted signature, index and posting
+    # stores).  Charge each group's one-time build EXPLICITLY as its own
+    # line item, in the declared order (a group never pays for a frame
+    # of a later one): drop whatever the warm-up cached, then time
+    # median-of-3 cold builds of the group.  Consumer queries then time
+    # their honest MARGINAL cost over the built frames, exactly as a
+    # real multi-query session would pay it — each build counted once,
+    # not hidden and not multiply charged.
     from cassandra_extractor_spark.operators.dedup import (
+        build_shared,
+        drop_shared,
         invalidate_dedup_chain,
-        shared_clusters,
-        shared_kgrams,
-        shared_pairs,
+        shared_groups,
     )
-    from cassandra_extractor_spark.operators.text import shared_token_stream
 
     invalidate_dedup_chain(spark)
-    t0 = time.time()
-    shared_pairs(spark, sf_dir)  # builds shared_shingles + shared_bands too
-    shared_pairs(spark, sf_dir, max_bucket=64)
-    shared_clusters(spark, sf_dir)
-    shared_token_stream(spark, sf_dir)
-    shared_kgrams(spark, sf_dir)
-    chain_build_sec = round(time.time() - t0, 3)
-
-    # Same discipline for the ANN family (round-10 verdict #1): the
-    # normed-embedding frame, the IVF inverted file (corpus→cell
-    # assignment), the IVF-PQ codebook + encoded corpus, and the exact
-    # ground-truth top-k are built ONCE per session and charged here as
-    # "shared_ann_build"; the six-query ANN family then times its honest
-    # marginal cost over the shared index, exactly as a serving layer
-    # reading a persisted index would pay it.
-    from cassandra_extractor_spark.operators.similarity import (
-        shared_ann_cells,
-        shared_ann_codes,
-        shared_brute_topk,
-        shared_embeddings,
-    )
-
-    t0 = time.time()
-    shared_embeddings(spark, sf_dir)
-    shared_ann_cells(spark, sf_dir)
-    shared_ann_codes(spark, sf_dir)  # builds shared_ann_codebook too
-    shared_brute_topk(spark, sf_dir)
-    ann_build_sec = round(time.time() - t0, 3)
-
-    # Session-shared quality frames (optimization r14, the r13 verdict's
-    # top item): the tokenize+score quality projection, the classifier
-    # score aggregation and the repetition verdicts are each built ONCE
-    # per session and read by every consumer (funnel, gate agreement,
-    # training corpus, corpus select/stats, calibration, frontier,
-    # budget select, quality×dup, dedup savings, the standalone
-    # queries).  Same charging discipline as the chains above: the
-    # builds run under the clock as their own line item
-    # ("shared_quality_build"); consumers then time their honest
-    # marginal cost.  Charged BEFORE the BM25 store build below, which
-    # reads the quality frame for its doclens (r14).  NOTE: this is the
-    # one bench.py change (besides the repair-to-median fix below) this
-    # round — it ADDS a queries entry, never removes or renames one.
-    from cassandra_extractor_spark.operators.text import (
-        shared_clf_scores,
-        shared_rep_flags,
-        shared_text_quality,
-    )
-
-    t0 = time.time()
-    shared_text_quality(spark, sf_dir)
-    shared_clf_scores(spark, sf_dir)
-    shared_rep_flags(spark, sf_dir)
-    quality_build_sec = round(time.time() - t0, 3)
-
-    # And the session posting+doclen store backing ns_bm25_store (the
-    # durable-on-disk chain): built once, charged once, consumers time
-    # their marginal cost over the persisted index.
-    from cassandra_extractor_spark.streaming.posting_stream import (
-        ensure_session_bm25_store,
-    )
-
-    t0 = time.time()
-    ensure_session_bm25_store(spark, sf_dir)
-    bm25_store_build_sec = round(time.time() - t0, 3)
+    timings: dict[str, float] = {}
+    for charge, frames in shared_groups().items():
+        timings[charge] = median(
+            measure(
+                lambda frames=frames: build_shared(spark, sf_dir, frames),
+                reset=lambda frames=frames: drop_shared(
+                    spark, [f.key for f in frames], sf_dir
+                ),
+            )
+        )
 
     cached = []
     if profile:
@@ -306,105 +307,42 @@ def main() -> None:
             df.count()
             cached.append(df)
 
-    # median-of-3: single-pass numbers on this box are ±2x noisy (JVM/GC),
-    # and the HOST itself drifts ±15% between whole runs (observed: two
-    # identical-code runs at 137.4 s vs 118.3 s, with the map-only
-    # extract swinging 507k vs 410k rows/s — ambient, not engine).
-    # The median absorbs one GC/JIT outlier in either direction, where
-    # best-of understates and mean overstates — this matches the
-    # BASELINE.md protocol ("median of 3"); run-level drift is
-    # documented in PARITY.md.
-    runs = 3
-    timings: dict[str, float] = {
-        "shared_dedup_chain_build": chain_build_sec,
-        "shared_ann_build": ann_build_sec,
-        "shared_bm25_store_build": bm25_store_build_sec,
-        "shared_quality_build": quality_build_sec,
-    }
-    # Build-vs-execute split: Python-side plan construction (registry
-    # fn + eager schema resolutions, 0.05-0.6 s for the deep ns_*
-    # trees) is client authoring overhead, not engine work — a
-    # production pipeline constructs its plan once and re-executes it
-    # per batch, so LAZY builds hoist out of the timed region and the
-    # clock starts at .write submission (which still pays the full
-    # engine path every run: analysis, Catalyst, AQE, execution).
-    # EXCEPTION: a build that ran Spark jobs (localCheckpoint
-    # materialization in the iterative dedup/graph pipelines, bounded
-    # plan-time pre-passes) did real engine work, and a hoisted
-    # re-write would reuse the materialized intermediate — so any
-    # query whose build triggered jobs is timed END-TO-END with a
-    # FRESH build every run, recomputing from the source tables.
-    tracker = spark.sparkContext.statusTracker()
-
-    def _jobs() -> int:
-        # HIGHEST job id, not the count: the status store evicts old
-        # jobs past its retention limit (~1000), so len() can DECREASE
-        # over a long run — late eager-build queries then misdetect as
-        # lazy and their timed write re-reads the build's checkpointed
-        # blocks (observed: ns_dedup_clusters "0.099 s" in r7 vs ~3 s
-        # honest).  Job ids are monotonically increasing, so max() is
-        # eviction-proof.
-        return max(tracker.getJobIdsForGroup(None), default=-1)
+    # median-of-3 (``measure``): single-pass numbers on this box are ±2x
+    # noisy (JVM/GC), and the HOST itself drifts ±15% between whole runs
+    # (observed: two identical-code runs at 137.4 s vs 118.3 s, with the
+    # map-only extract swinging 507k vs 410k rows/s — ambient, not
+    # engine).  The median absorbs one GC/JIT outlier in either
+    # direction, where best-of understates and mean overstates — this
+    # matches the BASELINE.md protocol ("median of 3"); run-level drift
+    # is documented in PARITY.md.  A query's clock starts at .write
+    # submission unless its build ran Spark jobs (see ``measure``).
+    def _time_query(name: str) -> list[float]:
+        fn = QUERIES[name]
+        return measure(noop, fresh_build=lambda: fn(spark, sf_dir))
 
     # Sorted-name iteration: the registry's dict order leads with the
     # driver-evidence rotation prefix, which CHANGES every round — tying
     # bench order to it made round-over-round totals incomparable
     # (whatever ran first absorbed residual warm-up).  Name order is
     # stable across rotations.
-    for name, fn in sorted(QUERIES.items()):
-        samples: list[float] = []
+    for name in sorted(QUERIES):
         try:
-            j0 = _jobs()
-            t0 = time.time()
-            df = fn(spark, sf_dir)
-            build_ran_jobs = _jobs() > j0
-            if build_ran_jobs:
-                # probe build did engine work: charge it + the write as
-                # run 1, then fresh end-to-end builds for the rest
-                df.write.format("noop").mode("overwrite").save()
-                samples.append(round(time.time() - t0, 3))
-                for _ in range(runs - 1):
-                    t0 = time.time()
-                    fn(spark, sf_dir).write.format("noop").mode(
-                        "overwrite"
-                    ).save()
-                    samples.append(round(time.time() - t0, 3))
-            else:
-                for _ in range(runs):
-                    t0 = time.time()
-                    df.write.format("noop").mode("overwrite").save()
-                    samples.append(round(time.time() - t0, 3))
+            timings[name] = median(_time_query(name))
         except Exception as exc:  # noqa: BLE001
             print(f"# {name} ERROR: {exc}", file=sys.stderr)
-        timings[name] = sorted(samples)[len(samples) // 2] if samples else -1.0
+            timings[name] = -1.0
 
     # Stabilize the tail: driver-vs-builder same-commit runs diverge
     # ~8% with occasional 3x single-query noise (JVM/GC), which reads
     # as a phantom regression every round.  Re-time the slowest 25
-    # with MEDIAN-of-3 — the median absorbs one GC/JIT outlier in
-    # either direction, where best-of understates and mean overstates.
+    # with the same protocol.
     slowest = sorted(
         (k for k, v in timings.items() if v >= 0 and k in QUERIES),
         key=lambda k: timings[k],
         reverse=True,
     )[:25]
     for name in slowest:
-        runs3 = []
-        j0 = _jobs()
-        df = QUERIES[name](spark, sf_dir)
-        eager = _jobs() > j0
-        for _ in range(3):
-            # GC barrier: without it the first sample can carry several
-            # seconds of accumulated heap debt from the main pass
-            # (observed 10.9 s vs a 3.9 s steady state)
-            spark.sparkContext._jvm.System.gc()
-            t0 = time.time()
-            # same eager-build rule as the main pass: a checkpointing
-            # pipeline re-times end-to-end from a fresh build
-            target = QUERIES[name](spark, sf_dir) if eager else df
-            target.write.format("noop").mode("overwrite").save()
-            runs3.append(round(time.time() - t0, 3))
-        timings[name] = sorted(runs3)[1]
+        timings[name] = median(_time_query(name))
 
     # end-to-end extract throughput (BASELINE.md protocol): orders →
     # table-spec transforms → JSONL sink, rows/s
@@ -446,13 +384,8 @@ def main() -> None:
         #   drift-banded steady-state throughput.  The scan split
         #   layout is already fixed by the deterministic
         #   maxPartitionBytes formula above.
-        ext_samples = []
-        for _ in range(8):
-            t0 = time.time()
-            write_jsonl(df, out_dir)
-            ext_samples.append(round(time.time() - t0, 3))
-        legacy = sorted(ext_samples[:3])
-        extract_sec = legacy[len(legacy) // 2]
+        ext_samples = measure(lambda: write_jsonl(df, out_dir), 8)
+        extract_sec = median(ext_samples[:3])
         # r14 measurement fix (r13 verdict #7, declared in
         # OPTIMIZATION_r14.md): the r13 raw samples show the JSON
         # writer's JIT warm-up persisting through writes 2-4
@@ -464,10 +397,9 @@ def main() -> None:
         # the r12/r13 definition, and the raw per-write list
         # (extract_warm_samples) stays, so a GC/IO outlier inflating
         # the band is visible as such.
-        warm = sorted(ext_samples[1:])
-        extract_sec_warm_median = warm[len(warm) // 2]
-        steady = sorted(ext_samples[-4:])
-        extract_sec_pinned = steady[len(steady) // 2]
+        extract_sec_warm_median = median(ext_samples[1:])
+        steady = ext_samples[-4:]
+        extract_sec_pinned = median(steady)
         extract_band = round(
             max(abs(s - extract_sec_pinned) for s in steady)
             / extract_sec_pinned,
@@ -511,21 +443,10 @@ def main() -> None:
     # of the re-runs (r13 verdict #2) so one spike can't poison the
     # next round's baseline median either.
     def _rerun(name: str) -> list[float] | None:
-        fn = QUERIES.get(name)
-        if fn is None:  # shared_* build line items: not re-runnable solo
+        if name not in QUERIES:  # shared_* build line items: not re-runnable solo
             return None
         try:
-            j0 = _jobs()
-            df = fn(spark, sf_dir)
-            eager = _jobs() > j0
-            samples: list[float] = []
-            for _ in range(3):  # odd count: rerun_median is a true median
-                spark.sparkContext._jvm.System.gc()
-                t0 = time.time()
-                target = fn(spark, sf_dir) if eager else df
-                target.write.format("noop").mode("overwrite").save()
-                samples.append(round(time.time() - t0, 3))
-            return samples
+            return _time_query(name)  # odd count: rerun_median is a true median
         except Exception as exc:  # noqa: BLE001
             print(f"# rerun {name} ERROR: {exc}", file=sys.stderr)
             return None  # can't disprove it: keep the flag

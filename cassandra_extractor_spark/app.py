@@ -172,11 +172,13 @@ def main(argv: list[str] | None = None) -> int:
                     # foreachBatch is at-least-once: a crash between the
                     # write and the checkpoint commit re-runs the batch,
                     # so each batch overwrites its OWN batch_id path —
-                    # the replay is idempotent
-                    d = d.persist()
-                    batch_counts.append(d.count())
-                    d.write.mode("overwrite").json(f"{output}/{table}/batch={batch_id}")
-                    d.unpersist()
+                    # the replay is idempotent.  The row count rides the
+                    # write (one Spark job per micro-batch)
+                    obs = Observation(f"stream_{table}_{batch_id}")
+                    d.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
+                        "overwrite"
+                    ).json(f"{output}/{table}/batch={batch_id}")
+                    batch_counts.append(int(obs.get["rows"]))
 
                 q = stream_extract(
                     spark,

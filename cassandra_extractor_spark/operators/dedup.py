@@ -22,6 +22,9 @@ Scale design (100 TB posture):
 
 from __future__ import annotations
 
+import importlib
+from dataclasses import dataclass
+
 import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, SparkSession, Window as W, functions as F
@@ -341,13 +344,11 @@ def materialize_once(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True)
 
 
-#: cap for the per-session shared-chain cache: one sf_dir uses ~17
-#: slots (dedup: tok_leads, shingles, kgrams, bands, pair_base,
-#: pairs×2 bucket policies, clusters, token_stream; quality:
-#: text_quality, clf_scores, rep_flags; ANN: normed embeddings, cells,
-#: codebook, codes, brute ground truth); 48 lets two standard sf dirs
-#: coexist while one-shot differential tmp dirs churn through the tail
-#: (same rationale as catalog._TABLE_CACHE_CAP)
+#: cap for the per-session shared-chain cache: one sf_dir uses 16
+#: slots (the 15 memo-backed ``SHARED_FRAMES``, ``pairs`` twice: one per
+#: bucket policy); 48 lets two standard sf dirs coexist while one-shot
+#: differential tmp dirs churn through the tail (same rationale as
+#: catalog._TABLE_CACHE_CAP)
 _CHAIN_CACHE_CAP = 48
 
 
@@ -366,7 +367,8 @@ def session_memo(spark: SparkSession, key: tuple, builder) -> DataFrame:
     disk; in-session, localCheckpoint blocks play that role.  The cache
     lives ON the session object (a replaced session can't serve stale
     JVM handles) and is LRU-capped; evicted frames are reclaimed by
-    Spark's ContextCleaner once unreferenced.
+    Spark's ContextCleaner once unreferenced.  ``key[0]`` must be the
+    ``key`` of an entry in ``SHARED_FRAMES``.
     """
     cache: dict = spark.__dict__.setdefault("_ce_dedup_chain", {})
     # key convention: key[1] is the corpus directory — normalize it so
@@ -383,40 +385,98 @@ def session_memo(spark: SparkSession, key: tuple, builder) -> DataFrame:
     return df
 
 
-def invalidate_dedup_chain(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Drop memoized chain frames — required after rewriting a corpus
-    directory in place (mirrors ``invalidate_table_cache``), and used by
-    the bench to charge the one-time chain build explicitly."""
-    cache = spark.__dict__.get("_ce_dedup_chain")
-    # the session BM25 store cache (streaming/posting_stream.
-    # ensure_session_bm25_store) memoizes DISK tables derived from the
-    # same corpus dirs — invalidate it under the same contract, and
-    # DROP the managed tables so the warehouse disk is released with
-    # the cache entry (not orphaned)
-    stores = spark.__dict__.get("_ce_posting_store")
-    dropped: list[tuple[str, str]] = []
-    if sf_dir is None:
-        if cache:
-            cache.clear()
-        if stores:
-            dropped = list(stores.values())
-            stores.clear()
-    else:
-        norm = _norm_dir(sf_dir)
-        if cache:
-            for key in [k for k in cache if k[1] == norm]:
-                del cache[key]
-        if stores:
-            entry = stores.pop(norm, None)
-            if entry is not None:
-                dropped = [entry]
-    if dropped:
-        from cassandra_extractor_spark.streaming.posting_stream import (
-            drop_session_bm25_store,
-        )
+@dataclass(frozen=True)
+class SharedFrame:
+    """One session-shared frame.  ``key`` names it (its ``session_memo``
+    key is ``(key, sf_dir, ...)``); ``deps`` are the frames its build
+    reads; ``builder`` is the function of ``module`` (under the package)
+    that builds it through the memo, called as ``fn(spark, sf_dir)``;
+    ``charge`` is the bench line item that pays for the build.  A frame
+    kept outside the memo names the ``release`` function of ``module``
+    that drops it, called as ``fn(spark, normalized_sf_dir_or_None)``."""
 
-        for entry in dropped:
-            drop_session_bm25_store(spark, entry)
+    key: str
+    deps: tuple[str, ...]
+    module: str
+    builder: str
+    charge: str
+    release: str | None = None
+
+    def fn(self, name: str):
+        module = importlib.import_module(f"cassandra_extractor_spark.{self.module}")
+        return getattr(module, name)
+
+
+_DEDUP, _SIM = "operators.dedup", "operators.similarity"
+_TEXT, _POSTING = "operators.text", "streaming.posting_stream"
+_CHAIN, _ANN = "shared_dedup_chain_build", "shared_ann_build"
+_QUALITY, _BM25 = "shared_quality_build", "shared_bm25_store_build"
+
+#: every session-shared frame, each after the frames it builds on; the
+#: bench charges the ``charge`` groups in this order, so a group never
+#: pays for a frame of a later one
+SHARED_FRAMES = (
+    SharedFrame("tok_leads", (), _DEDUP, "shared_tok_leads", _CHAIN),
+    SharedFrame("shingles", ("tok_leads",), _DEDUP, "shared_shingles", _CHAIN),
+    SharedFrame("bands", ("shingles",), _DEDUP, "shared_bands", _CHAIN),
+    SharedFrame("pair_base", ("bands",), _DEDUP, "_shared_pair_base", _CHAIN),
+    # the uncapped policy here; clusters builds the capped one
+    SharedFrame("pairs", ("pair_base",), _DEDUP, "shared_pairs", _CHAIN),
+    SharedFrame("clusters", ("pairs",), _DEDUP, "shared_clusters", _CHAIN),
+    SharedFrame("kgrams", (), _DEDUP, "shared_kgrams", _CHAIN),
+    SharedFrame("ann_emb", (), _SIM, "shared_embeddings", _ANN),
+    SharedFrame("ann_cells", ("ann_emb",), _SIM, "shared_ann_cells", _ANN),
+    SharedFrame("ann_codebook", ("ann_emb", "ann_cells"), _SIM, "shared_ann_codebook", _ANN),
+    SharedFrame(
+        "ann_codes", ("ann_emb", "ann_cells", "ann_codebook"), _SIM, "shared_ann_codes", _ANN
+    ),
+    SharedFrame("ann_brute", ("ann_emb",), _SIM, "shared_brute_topk", _ANN),
+    SharedFrame("text_quality", (), _TEXT, "shared_text_quality", _QUALITY),
+    SharedFrame("clf_scores", ("tok_leads",), _TEXT, "shared_clf_scores", _QUALITY),
+    SharedFrame("rep_flags", ("tok_leads",), _TEXT, "shared_rep_flags", _QUALITY),
+    # managed tables on disk, not memo blocks
+    SharedFrame(
+        "bm25_store", ("tok_leads", "text_quality"), _POSTING,
+        "ensure_session_bm25_store", _BM25, release="release_session_bm25_stores",
+    ),
+)
+
+
+def shared_groups() -> dict[str, list[SharedFrame]]:
+    """The bench line items in charge order, each with its frames."""
+    groups: dict[str, list[SharedFrame]] = {}
+    for frame in SHARED_FRAMES:
+        groups.setdefault(frame.charge, []).append(frame)
+    return groups
+
+
+def build_shared(spark: SparkSession, sf_dir: str, frames) -> None:
+    """Build ``frames`` for ``sf_dir`` (a memo hit costs nothing)."""
+    for frame in frames:
+        frame.fn(frame.builder)(spark, sf_dir)
+
+
+def drop_shared(spark: SparkSession, keys, sf_dir: str | None = None) -> None:
+    """Drop the shared frames named in ``keys`` and every frame built on
+    them, for ``sf_dir`` (every corpus when None)."""
+    drop = set(keys)
+    for frame in SHARED_FRAMES:  # deps come first: one pass closes the set
+        if drop.intersection(frame.deps):
+            drop.add(frame.key)
+    norm = None if sf_dir is None else _norm_dir(sf_dir)
+    memo = spark.__dict__.get("_ce_dedup_chain") or {}
+    for key in [k for k in memo if k[0] in drop and norm in (None, k[1])]:
+        del memo[key]
+    for frame in SHARED_FRAMES:
+        if frame.release and frame.key in drop:
+            frame.fn(frame.release)(spark, norm)
+
+
+def invalidate_dedup_chain(spark: SparkSession, sf_dir: str | None = None) -> None:
+    """Drop every shared frame of ``sf_dir`` (of every corpus when None)
+    — required after rewriting a corpus directory in place (mirrors
+    ``invalidate_table_cache``)."""
+    drop_shared(spark, [frame.key for frame in SHARED_FRAMES], sf_dir)
 
 
 def shared_tok_leads(spark: SparkSession, sf_dir: str) -> DataFrame:

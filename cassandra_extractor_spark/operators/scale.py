@@ -1,16 +1,12 @@
-"""Bucketed managed tables for co-located joins, and salted aggregation.
+"""Bucketed managed tables for co-located joins.
 
 ``write_bucketed`` persists a table bucketed by its join key, so
 repeated joins on that key (read back with ``spark.table``) shuffle
 NEITHER side: SortMergeJoin with no Exchange, asserted in tests.  This
 is how a fact table joined daily against the same dimension key should
 live.  ``drop_managed_table`` removes such a table with its warehouse
-directory.
-
-``salted_aggregate`` is the explicit skew fallback for a group-by: a
-hot key's rows spread over ``salt_n`` partial groups before the final
-merge (the join form of salting is the registry query
-``q88_salted_join``).
+directory.  Salting a skewed join key is the registry query
+``q88_salted_join``.
 """
 
 from __future__ import annotations
@@ -18,7 +14,7 @@ from __future__ import annotations
 import os
 import shutil
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 
 def _warehouse_location(spark: SparkSession, table_name: str) -> str | None:
@@ -65,29 +61,3 @@ def write_bucketed(
     if sort_cols:
         writer = writer.sortBy(*sort_cols)
     writer.saveAsTable(table_name)
-
-
-def salted_aggregate(
-    df: DataFrame,
-    key: str,
-    aggs: dict[str, str],
-    salt_n: int = 16,
-) -> DataFrame:
-    """Two-stage aggregation for skewed group keys: partial aggregate on
-    (key, salt), then final on key.  ``aggs`` maps column → one of
-    sum/count/min/max (re-aggregable functions only)."""
-    salted = df.withColumn(
-        "__salt", F.pmod(F.monotonically_increasing_id(), F.lit(salt_n)).cast("int")
-    )
-    partial_exprs, final_exprs = [], []
-    for col, fn in aggs.items():
-        if fn == "count":
-            partial_exprs.append(F.count(col).alias(f"__p_{col}"))
-            final_exprs.append(F.sum(f"__p_{col}").alias(f"{fn}_{col}"))
-        elif fn in ("sum", "min", "max"):
-            partial_exprs.append(getattr(F, fn)(col).alias(f"__p_{col}"))
-            final_exprs.append(getattr(F, fn)(f"__p_{col}").alias(f"{fn}_{col}"))
-        else:
-            raise ValueError(f"{fn} is not re-aggregable; use sum/count/min/max")
-    partial = salted.groupBy(key, "__salt").agg(*partial_exprs)
-    return partial.groupBy(key).agg(*final_exprs)

@@ -324,7 +324,7 @@ def init_cdc_store(
         )
     gen = _next_gen({"seq": -1})
     buckets = _write_generation(
-        _bucketed(base, key, n_buckets).repartition("_b"), store_dir, gen
+        _bucketed(base, key, n_buckets).repartition(n_buckets, "_b"), store_dir, gen
     )
     _commit_generation(
         store_dir,
@@ -431,7 +431,9 @@ def _fold(
 ) -> DataFrame:
     """Last-writer-wins over base + outstanding deltas (+ ``extra``),
     bucketed and hash-partitioned on ``_b`` — ready for
-    ``_write_generation`` as a new base, in a single exchange."""
+    ``_write_generation`` as a new base, in a single exchange.  The
+    exchange names its partition count (one per bucket): AQE coalesces
+    a bare ``repartition("_b")`` of a small store into one task."""
     base_rels, delta_rels = _rels(m)
     parts = [
         df.select(*cols)
@@ -444,7 +446,7 @@ def _fold(
     ]
     rows = _bucketed(reduce(DataFrame.unionByName, parts), m["key"], m["n_buckets"])
     return _latest(
-        rows.repartition("_b"),
+        rows.repartition(m["n_buckets"], "_b"),
         m["key"],
         m["order_cols"],
         m.get("op_col", "op"),

@@ -347,10 +347,11 @@ def ensure_session_bm25_store(spark: SparkSession, sf_dir: str) -> tuple[str, st
     doc-length stats stores for ``sf_dir``'s documents table and return
     their table names — the durable-on-disk analog of the dedup/ANN
     session chains, backing the ``ns_bm25_store`` registry entry.
-    Invalidation rides the shared-chain invalidator
-    (``dedup.invalidate_dedup_chain`` clears this cache too, and — via
-    ``drop_session_bm25_store`` — drops the managed tables themselves,
-    so a forgotten store releases its disk instead of orphaning).
+    It is the ``bm25_store`` entry of ``dedup.SHARED_FRAMES``, so the
+    shared-frame invalidation forgets it and — via
+    ``release_session_bm25_stores`` — drops the managed tables
+    themselves: a forgotten store releases its disk instead of
+    orphaning.
 
     The table tag folds in the session's ``applicationId``: the store
     is a SESSION store, and keying the on-disk name by corpus alone let
@@ -431,6 +432,14 @@ def drop_session_bm25_store(spark: SparkSession, entry: tuple[str, str]) -> None
 
     for t in entry:
         drop_managed_table(spark, t)
+
+
+def release_session_bm25_stores(spark: SparkSession, sf_dir: str | None) -> None:
+    """Forget this session's store for the (normalized) ``sf_dir`` —
+    every store when None — and drop its tables."""
+    cache: dict = spark.__dict__.get("_ce_posting_store") or {}
+    for key in [k for k in cache if sf_dir in (None, k)]:
+        drop_session_bm25_store(spark, cache.pop(key))
 
 
 #: (store-cache dict, warehouse path) pairs whose tables the interpreter

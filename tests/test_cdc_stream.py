@@ -106,6 +106,27 @@ def test_fold_is_a_single_exchange(spark, tmp_path):
     assert plan.count("Exchange") == 1, plan
 
 
+def test_fold_reduce_runs_one_task_per_bucket(spark, tmp_path):
+    """The fold's sort and last-writer-wins run in one task per bucket.
+    A small store is far below AQE's advisory partition size, so an
+    exchange without a partition count would be coalesced to one task
+    while the other cores sit idle."""
+    store = str(tmp_path / "store")
+    _init(spark, store, [(k, "U", 0, k) for k in range(200)])
+    _apply(spark, store, [(k, "U", 5, -k) for k in range(0, 200, 7)], 0)
+    folded = _fold(spark, store, _current_manifest(store), ["k", "op", "seq", "bal"])
+    sc = spark.sparkContext
+    sc.setJobGroup("cdc-fold-width", "fold reduce width")
+    try:
+        folded.write.format("noop").mode("overwrite").save()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup("cdc-fold-width"))
+    reduce_stage = max(tracker.getJobInfo(last_job).stageIds)
+    assert tracker.getStageInfo(reduce_stage).numTasks == 4
+
+
 def test_purge_folds_stale_delta_under_base_tombstone(spark, tmp_path):
     """A stale update sitting in an outstanding delta is fenced only by
     the base tombstone; purging that tombstone must fold the delta

@@ -112,32 +112,6 @@ def test_solr_grammar_always_translates(q):
     # every generated query is inside the supported subset → never raises
 
 
-@given(
-    st.text(alphabet=st.characters(min_codepoint=97, max_codepoint=122), min_size=1, max_size=12),
-    st.lists(
-        st.tuples(
-            st.text(alphabet="abcd", min_size=1, max_size=2),
-            st.text(alphabet="abcd", min_size=1, max_size=2),
-        ),
-        max_size=8,
-    ),
-)
-@settings(max_examples=100, deadline=None)
-def test_bpe_pieces_always_reconstruct_word(word, merges):
-    """Property: however the merge table is shaped, concatenating the
-    output pieces (END stripped) reconstructs the input word exactly —
-    BPE is a segmentation, never a rewrite."""
-    from cassandra_extractor_spark.operators.bpe import END, bpe_encode_word
-
-    ranks = {}
-    for pair in merges:
-        ranks.setdefault(tuple(pair), len(ranks))
-    pieces = bpe_encode_word(word, ranks)
-    joined = "".join(pieces)
-    assert joined.replace(END, "") == word
-    assert joined.count(END) == 1 and joined.endswith(END) or pieces[-1].endswith(END)
-
-
 # --- CDC merge algebra: the properties the generational store's replay
 # safety rests on (streaming/cdc_stream.py) -------------------------------
 

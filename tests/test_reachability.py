@@ -53,11 +53,6 @@ ALLOWED_UNREACHED = {
     "operators/text.py": {"token_stream"},
     "operators/dedup.py": {"lsh_candidate_pairs"},
     "operators/similarity.py": {"lsh_bucket"},
-    # library operators no registry query calls: applying a BPE merge
-    # table (the training step is ns_bpe_pair_counts) and the skew
-    # fallback for a group-by (the join form is q88_salted_join)
-    "operators/bpe.py": {"bpe_encode_word", "bpe_pieces_for_words", "bpe_tokenize_corpus"},
-    "operators/scale.py": {"salted_aggregate"},
 }
 
 _DEF = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)

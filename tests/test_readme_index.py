@@ -1,7 +1,8 @@
 """The README operator index is generated (tools/gen_index.py) and
 must match a fresh render of the live registry — a renamed, added, or
-moved query that skips regeneration fails here, so the index cannot
-drift from the code (round-12 verdict #5)."""
+re-homed (moved to another module) query that skips regeneration fails
+here, so the index cannot drift from the code.  Line numbers are not
+part of the index, so an edit inside a module never stales it."""
 
 from __future__ import annotations
 

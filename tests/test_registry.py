@@ -68,3 +68,82 @@ def test_session_memo_lru_and_invalidation(tmp_path):
     assert ("bands", "/d1") not in spark.__dict__["_ce_dedup_chain"]
     invalidate_dedup_chain(spark)
     assert spark.__dict__["_ce_dedup_chain"] == {}
+
+
+def _memo_key_names() -> dict[str, list[str]]:
+    """Every ``session_memo(spark, ("<name>", ...), ...)`` call in the
+    package: key name → the files that use it."""
+    import ast
+    from pathlib import Path
+
+    import cassandra_extractor_spark
+
+    found: dict[str, list[str]] = {}
+    for path in Path(cassandra_extractor_spark.__file__).parent.rglob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and getattr(node.func, "id", None) == "session_memo"
+                and len(node.args) >= 2
+            ):
+                key = node.args[1]
+                assert isinstance(key, ast.Tuple) and isinstance(key.elts[0], ast.Constant), (
+                    f"{path}:{node.lineno}: memo key must be a tuple led by a literal name"
+                )
+                found.setdefault(key.elts[0].value, []).append(path.name)
+    return found
+
+
+def test_every_memo_key_is_declared_once():
+    """The shared frames are declared once (``dedup.SHARED_FRAMES``):
+    the bench charges, and the invalidation drops, exactly what the
+    declaration lists, so a memo key missing from it would be built
+    uncharged and survive invalidation, and a key declared twice would
+    sit in two charge groups."""
+    from cassandra_extractor_spark.operators.dedup import SHARED_FRAMES
+
+    used = _memo_key_names()
+    declared = [f.key for f in SHARED_FRAMES]
+    assert sorted(set(used) - set(declared)) == []
+    assert len(declared) == len(set(declared)), declared
+    memo_backed = {f.key for f in SHARED_FRAMES if f.release is None}
+    assert memo_backed == set(used), sorted(memo_backed ^ set(used))
+
+
+def test_shared_frames_follow_their_deps():
+    """Each frame's deps are declared before it, and a charge group is
+    one contiguous run: charging the groups in declared order never
+    builds a frame of a later group inside an earlier group's clock."""
+    from cassandra_extractor_spark.operators.dedup import SHARED_FRAMES, shared_groups
+
+    seen: set[str] = set()
+    for frame in SHARED_FRAMES:
+        assert set(frame.deps) <= seen, (frame.key, set(frame.deps) - seen)
+        seen.add(frame.key)
+    charges = [f.charge for f in SHARED_FRAMES]
+    runs = [c for i, c in enumerate(charges) if i == 0 or charges[i - 1] != c]
+    assert runs == list(shared_groups()) == [
+        "shared_dedup_chain_build",
+        "shared_ann_build",
+        "shared_quality_build",
+        "shared_bm25_store_build",
+    ]
+
+
+def test_drop_shared_takes_the_frames_built_on_it():
+    from cassandra_extractor_spark.operators.dedup import drop_shared, session_memo
+
+    class FakeSession:  # session_memo only touches __dict__
+        pass
+
+    spark = FakeSession()
+    for name in ("tok_leads", "shingles", "bands", "kgrams", "clf_scores", "ann_emb"):
+        for d in ("/a", "/b"):
+            session_memo(spark, (name, d), lambda: object())
+    drop_shared(spark, ["shingles"], "/a")
+    left = {k for k in spark.__dict__["_ce_dedup_chain"] if k[1] == "/a"}
+    assert left == {("tok_leads", "/a"), ("kgrams", "/a"), ("clf_scores", "/a"), ("ann_emb", "/a")}
+    drop_shared(spark, ["tok_leads"])
+    assert set(spark.__dict__["_ce_dedup_chain"]) == {
+        ("kgrams", "/a"), ("ann_emb", "/a"), ("kgrams", "/b"), ("ann_emb", "/b")
+    }

@@ -1,4 +1,4 @@
-"""Scale techniques: bucketed shuffle-free joins, salted skew handling,
+"""Scale techniques: bucketed shuffle-free joins, salted skew joins,
 skew-bounded plans."""
 
 from __future__ import annotations
@@ -6,7 +6,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from cassandra_extractor_spark.operators.scale import salted_aggregate, write_bucketed
+from cassandra_extractor_spark.operators.scale import write_bucketed
 from cassandra_extractor_spark.sources.catalog import load_table
 
 
@@ -68,28 +68,6 @@ def test_salted_join_matches_plain(spark, sf_dir):
     want = sorted(tuple(r) for r in plain.collect())
     assert want
     assert sorted(tuple(r) for r in q88_salted_join(spark, sf_dir).collect()) == want
-
-
-def _skewed(spark):
-    # 10k rows of one hot key + 100 spread keys
-    hot = spark.range(10_000).select(F.lit(1).alias("k"), F.col("id").alias("v"))
-    rest = spark.range(100).select((F.col("id") + 2).alias("k"), F.col("id").alias("v"))
-    return hot.union(rest)
-
-
-def test_salted_aggregate_matches_plain(spark):
-    df = _skewed(spark)
-    plain = {
-        r["k"]: (r["s"], r["c"])
-        for r in df.groupBy("k").agg(F.sum("v").alias("s"), F.count("v").alias("c")).collect()
-    }
-    salted = {
-        r["k"]: (r["sum_v"], r["count_v"])
-        for r in salted_aggregate(df, "k", {"v": "sum"}).join(
-            salted_aggregate(df, "k", {"v": "count"}), "k"
-        ).collect()
-    }
-    assert plain == salted
 
 
 def test_range_join_bucketing_bounds_hot_user_intermediate(spark):

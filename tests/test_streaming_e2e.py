@@ -153,3 +153,57 @@ def test_app_streaming_with_schema_less_object_column(spark, sf_dir, tmp_path):
                 got[row["event_id"]] = row["props"]
     src = pq.read_table(f"{sf_dir}/events.parquet", columns=["event_id", "props"]).to_pylist()
     assert got == {r["event_id"]: json.loads(r["props"]) for r in src}
+
+
+def test_app_streaming_runs_one_job_per_micro_batch(spark, sf_dir, tmp_path, monkeypatch):
+    """``app.main --streaming`` counts a micro-batch's rows on its write
+    (an ``Observation``), so each micro-batch is ONE Spark job, and
+    ``job.processed`` is the number of rows delivered."""
+    import glob
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    from cassandra_extractor_spark import app as app_mod
+
+    runs: list[str] = []
+
+    class _Runs(StreamingQueryListener):
+        def onQueryStarted(self, event):
+            runs.append(str(event.runId))
+
+        def onQueryProgress(self, event):
+            pass
+
+        def onQueryIdle(self, event):
+            pass
+
+        def onQueryTerminated(self, event):
+            pass
+
+    actuators = []
+
+    class _Actuator(app_mod.Actuator):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            actuators.append(self)
+
+    monkeypatch.setattr(app_mod, "Actuator", _Actuator)
+    listener = _Runs()
+    spark.streams.addListener(listener)
+    out = tmp_path / "out"
+    try:
+        rc = app_mod.main(["-T", "events", "--sf-dir", sf_dir, "--output", str(out),
+                           "--streaming"])
+    finally:
+        spark.streams.removeListener(listener)
+    assert rc == 0 and len(runs) == 1
+    batches = glob.glob(f"{out}/events/batch=*")
+    delivered = 0
+    for f in glob.glob(f"{out}/events/batch=*/*.json"):
+        with open(f) as fh:
+            delivered += sum(1 for _ in fh)
+    # the stream execution runs every job of its query in the job group
+    # named after the query's run id
+    jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(runs[0])
+    assert batches and len(jobs) == len(batches)
+    assert actuators[0].jobs["events"].processed == delivered > 0

@@ -9,11 +9,12 @@ Usage: python tools/capture_plans.py <round_dir> <tag> [query ...]
 
 from __future__ import annotations
 
-import io
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from bench import noop  # noqa: E402
 
 # the bench's slowest-25 line items (BENCH_r12) that are registry
 # queries, plus the shared-build components' consumers
@@ -43,14 +44,24 @@ DEFAULT_SET = [
 ]
 
 
+def plan_text(df, executed: bool = False) -> str:
+    """``df``'s physical plan as text: the formatted plan Catalyst would
+    run, or — ``executed`` — the plan tree after one run through the
+    noop sink (post-AQE)."""
+    if executed:
+        noop(df)
+        return df._jdf.queryExecution().executedPlan().toString()
+    return df.sparkSession._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
 def main() -> None:
     out_dir = sys.argv[1]
     tag = sys.argv[2]
     names = sys.argv[3:] or DEFAULT_SET
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     os.makedirs(out_dir, exist_ok=True)
-
-    from contextlib import redirect_stdout
 
     from cassandra_extractor_spark.registry import QUERIES
     from cassandra_extractor_spark.session import get_spark
@@ -61,13 +72,9 @@ def main() -> None:
         if fn is None:
             print(f"# unknown query {name}", file=sys.stderr)
             continue
-        df = fn(spark, sf_dir)
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
         path = os.path.join(out_dir, f"{name}_{tag}.txt")
         with open(path, "w") as f:
-            f.write(buf.getvalue())
+            f.write(plan_text(fn(spark, sf_dir)) + "\n")
         print(f"wrote {path}")
 
 

@@ -1,6 +1,6 @@
 """Generate the README operator index (round-12 verdict #5): 270
 registry queries across ~20 modules need a navigable map — operator →
-registry name → source file:line → whether EXPLAIN.md has a plan
+registry name → source file → whether EXPLAIN.md has a plan
 section and SCALING.md a measured row.  The table is GENERATED from
 the live registry (introspection, not hand-maintenance) and a test
 pins README against a fresh render, so the index cannot drift.
@@ -50,11 +50,10 @@ def render_index() -> str:
 
     explained = _explained_names()
     scaled = _scaling_names()
-    by_module: dict[str, list[tuple[str, int]]] = {}
+    by_module: dict[str, list[str]] = {}
     for name, fn in QUERIES.items():
         src = os.path.relpath(inspect.getsourcefile(fn), ROOT)
-        line = inspect.getsourcelines(fn)[1]
-        by_module.setdefault(src, []).append((name, line))
+        by_module.setdefault(src, []).append(name)
 
     lines = [
         BEGIN,
@@ -76,12 +75,12 @@ def render_index() -> str:
         entries = sorted(by_module[src])
         lines.append(f"### `{src}` — {len(entries)} queries")
         lines.append("")
-        lines.append("| query | line | plan | scaling |")
-        lines.append("|---|---|---|---|")
-        for name, line_no in entries:
+        lines.append("| query | plan | scaling |")
+        lines.append("|---|---|---|")
+        for name in entries:
             p = "EXPLAIN" if name in explained else ""
             s = "SCALING" if name in scaled else ""
-            lines.append(f"| {name} | {line_no} | {p} | {s} |")
+            lines.append(f"| {name} | {p} | {s} |")
         lines.append("")
     lines.append(END)
     return "\n".join(lines)

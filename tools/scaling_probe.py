@@ -18,10 +18,10 @@ median-of-3 per point).
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from bench import measure, median, noop  # noqa: E402
 from cassandra_extractor_spark.operators.dedup import invalidate_dedup_chain  # noqa: E402
 from cassandra_extractor_spark.registry import QUERIES  # noqa: E402
 from cassandra_extractor_spark.session import get_spark  # noqa: E402
@@ -90,25 +90,17 @@ def main() -> None:
     # JVM/codegen warm-up
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     for name in PROBES:
-        QUERIES[name](spark, "/root/testdata/sf0.001").write.format("noop").mode(
-            "overwrite"
-        ).save()
+        noop(QUERIES[name](spark, "/root/testdata/sf0.001"))
 
     results: dict[str, dict[str, float]] = {}
     for name in PROBES:
         results[name] = {}
+        cold = (lambda: invalidate_dedup_chain(spark)) if name in CHAIN_QUERIES else None
         for sf in SFS:
             sf_dir = f"/root/testdata/sf{sf}"
-            samples = []
-            for _ in range(3):
-                if name in CHAIN_QUERIES:
-                    invalidate_dedup_chain(spark)
-                t0 = time.time()
-                QUERIES[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                samples.append(time.time() - t0)
-            results[name][sf] = round(sorted(samples)[1], 3)
+            results[name][sf] = median(
+                measure(lambda: noop(QUERIES[name](spark, sf_dir)), reset=cold)
+            )
 
     lines = [
         "# SCALING — measured per-plan-class scaling (median of 3)",

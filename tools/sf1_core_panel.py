@@ -30,7 +30,6 @@ import json
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -75,13 +74,12 @@ def ensure_panel_tier(spark, regen: bool = False) -> str:
 
 
 def run_arm(cpus: int) -> dict[str, float]:
+    from bench import measure, median, noop
     from cassandra_extractor_spark.operators.dedup import (
+        build_shared,
         invalidate_dedup_chain,
-        shared_clusters,
-        shared_kgrams,
-        shared_pairs,
+        shared_groups,
     )
-    from cassandra_extractor_spark.operators.text import shared_token_stream
     from cassandra_extractor_spark.registry import QUERIES
     from cassandra_extractor_spark.session import get_spark
 
@@ -108,35 +106,22 @@ def run_arm(cpus: int) -> dict[str, float]:
     advisory = max(512 * 1024, total // (cpus * 2))
     spark.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", str(advisory))
 
-    def chain_build() -> None:
-        shared_pairs(spark, sf_dir)
-        shared_pairs(spark, sf_dir, max_bucket=64)
-        shared_clusters(spark, sf_dir)
-        shared_token_stream(spark, sf_dir)
-        shared_kgrams(spark, sf_dir)
-
+    chain = shared_groups()["shared_dedup_chain_build"]
     results: dict[str, float] = {}
     # warm-up: one untimed cold build absorbs JIT/classloading
     invalidate_dedup_chain(spark)
-    chain_build()
-
-    samples = []
-    for _ in range(3):
-        invalidate_dedup_chain(spark)
-        t0 = time.time()
-        chain_build()
-        samples.append(time.time() - t0)
-    results["shared_dedup_chain_build"] = round(sorted(samples)[1], 3)
+    build_shared(spark, sf_dir, chain)
+    results["shared_dedup_chain_build"] = median(
+        measure(
+            lambda: build_shared(spark, sf_dir, chain),
+            reset=lambda: invalidate_dedup_chain(spark),
+        )
+    )
 
     for qname in ("q116_spearman", "tpch_q01", "ns_semantic_dedup"):
         fn = QUERIES[qname]
-        fn(spark, sf_dir).write.format("noop").mode("overwrite").save()  # warm
-        samples = []
-        for _ in range(3):
-            t0 = time.time()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples.append(time.time() - t0)
-        results[qname] = round(sorted(samples)[1], 3)
+        noop(fn(spark, sf_dir))  # warm
+        results[qname] = median(measure(lambda: noop(fn(spark, sf_dir))))
     return results
 
 

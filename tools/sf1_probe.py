@@ -38,7 +38,6 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
@@ -148,13 +147,12 @@ def _size_session_to(spark: SparkSession, sf_dir: str) -> None:
 
 
 def main() -> None:
+    from bench import measure, median, noop
     from cassandra_extractor_spark.operators.dedup import (
+        build_shared,
         invalidate_dedup_chain,
-        shared_clusters,
-        shared_kgrams,
-        shared_pairs,
+        shared_groups,
     )
-    from cassandra_extractor_spark.operators.text import shared_token_stream
     from cassandra_extractor_spark.registry import QUERIES
     from cassandra_extractor_spark.session import get_spark
 
@@ -165,58 +163,33 @@ def main() -> None:
         tag: ensure_tier(spark, tag, factor, regen)
         for tag, factor in FACTORS.items()
     }
-
-    def chain_build(sf_dir: str) -> None:
-        shared_pairs(spark, sf_dir)
-        shared_pairs(spark, sf_dir, max_bucket=64)
-        shared_clusters(spark, sf_dir)
-        shared_token_stream(spark, sf_dir)
-        shared_kgrams(spark, sf_dir)
-
+    chain = shared_groups()["shared_dedup_chain_build"]
     results: dict[str, dict[str, float]] = {}
-
-    def record(name: str, tag: str, sec: float) -> None:
-        results.setdefault(name, {})[tag] = round(sec, 3)
 
     for tag, sf_dir in tiers.items():
         _size_session_to(spark, sf_dir)
         # warm-up: one untimed cold chain build per tier absorbs
         # first-touch JIT/classloading (the bench warm-up discipline)
         invalidate_dedup_chain(spark)
-        chain_build(sf_dir)
+        build_shared(spark, sf_dir, chain)
 
         # 1. dedup chain build — COLD per run, the bench's
         # shared_dedup_chain_build line item end-to-end
-        samples = []
-        for _ in range(3):
-            invalidate_dedup_chain(spark)
-            t0 = time.time()
-            chain_build(sf_dir)
-            samples.append(time.time() - t0)
-        record("shared_dedup_chain_build", tag, sorted(samples)[1])
+        results.setdefault("shared_dedup_chain_build", {})[tag] = median(
+            measure(
+                lambda: build_shared(spark, sf_dir, chain),
+                reset=lambda: invalidate_dedup_chain(spark),
+            )
+        )
 
         # 2. ns_dedup_simhash — WARM-chain marginal (its bench shape);
-        # the chain is already built by the last timed run above
-        samples = []
-        for _ in range(3):
-            t0 = time.time()
-            QUERIES["ns_dedup_simhash"](spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            samples.append(time.time() - t0)
-        record("ns_dedup_simhash", tag, sorted(samples)[1])
-
+        # the chain is already built by the last timed run above.
         # 3. plain median-of-3 probes: the remaining hot classes whose
         # inputs the tier carries (lineitem-only plans)
-        for qname in ("q116_spearman", "q101_weighted_median", "tpch_q01"):
-            samples = []
-            for _ in range(3):
-                t0 = time.time()
-                QUERIES[qname](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                samples.append(time.time() - t0)
-            record(qname, tag, sorted(samples)[1])
+        for qname in ("ns_dedup_simhash", "q116_spearman", "q101_weighted_median", "tpch_q01"):
+            results.setdefault(qname, {})[tag] = median(
+                measure(lambda: noop(QUERIES[qname](spark, sf_dir)))
+            )
 
     lines = [
         "## sf1 probe — the hot classes at 10× sf0.1 (round 13)",

@@ -28,12 +28,12 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, SparkSession, functions as F  # noqa: E402
 
+from bench import measure, median, noop  # noqa: E402
 from tools.sf1_probe import BASE, FACTORS, ensure_tier  # noqa: E402
 
 SRC = "/root/testdata/sf0.1"
@@ -56,15 +56,6 @@ def gen_embeddings(spark: SparkSession, out_dir: str, factor: int) -> None:
         ).alias("emb"),
     )
     out.write.mode("overwrite").parquet(f"{out_dir}/embeddings_tier.parquet")
-
-
-def _median3(fn) -> float:
-    samples = []
-    for _ in range(3):
-        t0 = time.time()
-        fn()
-        samples.append(time.time() - t0)
-    return round(sorted(samples)[1], 3)
 
 
 def main() -> None:
@@ -94,6 +85,15 @@ def main() -> None:
     spark = get_spark("store-scale-probe", shuffle_partitions=16)
     spark.range(1_000_000).selectExpr("sum(id)").collect()
     warmed = False
+    results: dict[str, dict[str, float]] = {}
+
+    def probe(name: str, tag: str, build) -> None:
+        if not warmed:
+            # one untimed pass per probe shape absorbs first-touch JIT
+            # (without this, the x1 point measures codegen compilation
+            # and the ratio reads BELOW 1 — observed 0.8)
+            noop(build())
+        results.setdefault(name, {})[tag] = median(measure(lambda: noop(build())))
 
     # the FIXED probe inputs, identical at both store sizes: a 500-doc
     # "arriving batch" (sf0.001 documents, ids shifted clear of every
@@ -115,7 +115,6 @@ def main() -> None:
         F.col("vec_id").alias("c_id"), F.col("emb").alias("c_emb")
     )
 
-    results: dict[str, dict[str, float]] = {}
     for tag, factor in FACTORS.items():
         tier = ensure_tier(spark, tag, factor, regen=False)
         emb_marker = os.path.join(BASE, tag, "_EMB_COMPLETE")
@@ -135,35 +134,20 @@ def main() -> None:
         write_signature_store(
             bands_for(minhash_signatures_for(docs)), sig_table, n_buckets=16
         )
-        if not warmed:
-            # one untimed pass per probe shape absorbs first-touch JIT
-            # (without this, the x1 point measures codegen compilation
-            # and the ratio reads BELOW 1 — observed 0.8)
-            incremental_dedup_against_store(spark, sig_table, probe_docs)[0].write.format(
-                "noop"
-            ).mode("overwrite").save()
-        results.setdefault("dedup_gate_fixed_batch", {})[tag] = _median3(
-            lambda: incremental_dedup_against_store(spark, sig_table, probe_docs)[0]
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
+        probe(
+            "dedup_gate_fixed_batch",
+            tag,
+            lambda: incremental_dedup_against_store(spark, sig_table, probe_docs)[0],
         )
 
         # --- posting + doclen store: fixed ranked query vs store size
         post_table, dl_table = f"ssp_post_{tag}", f"ssp_dl_{tag}"
         write_posting_store(build_postings(docs), post_table, n_buckets=16)
         write_doclen_store(build_doclens(docs), dl_table, n_buckets=16)
-        if not warmed:
-            bm25_query_against_store(
-                spark, post_table, None, dl_table, None
-            ).write.format("noop").mode("overwrite").save()
-        results.setdefault("bm25_fixed_query", {})[tag] = _median3(
-            lambda: bm25_query_against_store(
-                spark, post_table, None, dl_table, None
-            )
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
+        probe(
+            "bm25_fixed_query",
+            tag,
+            lambda: bm25_query_against_store(spark, post_table, None, dl_table, None),
         )
 
         # --- ANN store: fixed 10-query probe vs store size
@@ -174,17 +158,10 @@ def main() -> None:
                 "overwrite"
             ).partitionBy("c_id").parquet(f"{store_dir}/delta/batch=0")
             compact_ann_store(spark, store_dir)
-        if not warmed:
-            ann_store_topk(spark, store_dir, queries).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            warmed = True
-        results.setdefault("ann_probe_fixed_queries", {})[tag] = _median3(
-            lambda: ann_store_topk(spark, store_dir, queries)
-            .write.format("noop")
-            .mode("overwrite")
-            .save()
+        probe(
+            "ann_probe_fixed_queries", tag, lambda: ann_store_topk(spark, store_dir, queries)
         )
+        warmed = True
 
         for t in (sig_table, post_table, dl_table):
             spark.sql(f"DROP TABLE IF EXISTS {t}")

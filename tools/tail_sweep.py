@@ -23,6 +23,7 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 from cassandra_extractor_spark.session import get_spark
+from tools.capture_plans import plan_text
 
 import __spark_entry__ as entry
 
@@ -36,10 +37,7 @@ def main() -> int:
     t0 = time.time()
     for name, fn in qs.items():
         try:
-            df = fn(spark, sf_dir)
-            plan = spark._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
+            plan = plan_text(fn(spark, sf_dir))
         except Exception as e:  # noqa: BLE001 - report, keep sweeping
             flags_by_q[name] = [f"ERROR:{type(e).__name__}"]
             continue
