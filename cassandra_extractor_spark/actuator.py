@@ -288,7 +288,8 @@ class Actuator:
         streams may also invoke the same folds in-band from their own
         serial ``foreachBatch`` hook (``auto_compact``) — what remains
         forbidden is an EXTERNAL fold concurrent with an active ingest
-        (safety argument in ``streaming/maintenance.py``):
+        (safety argument in ``streaming/maintenance.py``), except on the
+        CDC store, whose folds commit by compare-and-set:
 
         - ``signature``: fold the streamed band delta into the bucketed
           LSH base (params: ``table``, ``delta_dir``, ``n_buckets``);
@@ -298,14 +299,17 @@ class Actuator:
           (params: ``table``, ``delta_dir``, ``n_buckets``; optional
           ``doclen_table`` + ``doclen_delta_dir`` fold the ranked-read
           doc-length stats in the same call);
-        - ``cdc``: retention ops on the generational snapshot store,
-          which folds its own per-batch deltas by the size-ratio
-          policy inside ``apply_cdc_batch`` (params: ``store_dir``
-          plus ``op``: ``purge_tombstones`` folds outstanding deltas,
-          then drops tombstones below the horizon, and needs
-          ``order_cols``/``horizon`` [+ ``op_col``]; ``retain`` needs
-          ``retain_gens`` and keeps every base and delta directory a
-          retained manifest references).
+        - ``cdc``: maintenance ops on the generational snapshot store,
+          whose applies start a background fold of their per-batch
+          deltas when the size-ratio policy says so (params:
+          ``store_dir`` plus ``op``: ``fold`` waits for a running
+          background fold, then folds what is outstanding — a settled
+          store [+ ``retain_gens``]; ``purge_tombstones`` waits the
+          same way, folds outstanding deltas, then drops tombstones
+          below the horizon, and needs ``order_cols``/``horizon``
+          [+ ``op_col``]; ``retain`` needs ``retain_gens`` and keeps
+          every base and delta directory a retained manifest
+          references, and every one still being written).
 
         ``mode`` (signature/ann/posting only): ``force`` (default)
         folds unconditionally; ``auto`` evaluates the size-ratio policy
@@ -371,10 +375,16 @@ class Actuator:
         elif kind == "cdc":
             from cassandra_extractor_spark.streaming.cdc_stream import (
                 cleanup_generations,
+                fold_cdc_store,
                 purge_tombstones,
             )
 
             op = params.get("op", "")
+            if op == "fold":
+                rep = fold_cdc_store(
+                    self.spark, params["store_dir"], int(params.get("retain_gens", 3))
+                )
+                return {"status": "folded", "store": kind, **rep}
             if op == "purge_tombstones":
                 purge_tombstones(
                     self.spark,

@@ -162,7 +162,15 @@ def main(argv: list[str] | None = None) -> int:
                         f"got --sinks {','.join(sink_names)}"
                     )
                 src_dir = sf_dir or DEFAULT_SF_DIR
-                schema = spark.read.parquet(os.path.join(src_dir, f"{table}.parquet")).schema
+                table_path = os.path.join(src_dir, f"{table}.parquet")
+                schema = spark.read.parquet(table_path).schema
+                # the file source reads a directory: a table stored as
+                # one file is picked out of its parent by name, a table
+                # stored as a directory is that directory's files
+                if os.path.isdir(table_path):
+                    stream_dir, path_glob = table_path, "*.parquet"
+                else:
+                    stream_dir, path_glob = src_dir, f"{table}.parquet"
                 # sort/limit are batch-only; streaming applies the
                 # projection/filter/transform subset of the spec
                 stream_spec = dataclasses.replace(spec, sort=[], limit=None, hwm_column=None)
@@ -182,7 +190,7 @@ def main(argv: list[str] | None = None) -> int:
 
                 q = stream_extract(
                     spark,
-                    src_dir,
+                    stream_dir,
                     schema,
                     {"jsonl": dispatch},
                     tcfg("checkpoint", default=f"{output}/_ckpt/{table}"),
@@ -190,7 +198,7 @@ def main(argv: list[str] | None = None) -> int:
                     if (spec.columns or spec.filter or spec.solr_filter or spec.table_spec)
                     else None,
                     ts_col=spec.hwm_column,
-                    path_glob=f"{table}.parquet",
+                    path_glob=path_glob,
                 )
                 q.awaitTermination()
                 # rows processed THIS run (not the cumulative output dir)

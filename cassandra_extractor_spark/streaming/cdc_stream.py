@@ -2,46 +2,64 @@
 ``cdc_apply`` (operators/relational.py, the MERGE-INTO shape): a
 change stream continuously maintains a latest-row-per-key snapshot.
 
-Architecture — BUCKETED generational store with per-batch deltas, the
-third member of the replay-safe store family (signature store:
-set-semantic, rollup store: partial-agg partitions, CDC store: keyed
-snapshot buckets), merged on read like the posting, signature and ANN
-stores:
+Architecture — BUCKETED generational store with per-batch deltas and
+background folds (LSM-style compaction), the third member of the
+replay-safe store family (signature store: set-semantic, rollup store:
+partial-agg partitions, CDC store: keyed snapshot buckets), merged on
+read like the posting, signature and ANN stores:
 
 - the base snapshot is hash-bucketed on the key (same discipline as
   the persisted signature store, operators/dedup.py
-  ``write_signature_store``); each micro-batch is written, horizon
-  fenced but otherwise as it arrived, to a NEW immutable delta
-  directory ``data/s<seq>-<attempt>/_b=<b>``, named after the manifest
-  seq that will commit it (never a batch id: ids restart at 0 when a
-  stream is replayed from a lost checkpoint) plus a random per-attempt
-  suffix (two writers aiming at the same seq never share a directory)
-  — no store read, no shuffle,
-  write amplification ~1× the batch — and nothing ever overwrites a
-  directory a running plan is reading;
-- the size-ratio policy of ``streaming/maintenance.py`` (delta bytes
-  > 0.2 × base bytes, driver-side ``dir_bytes``) decides, before each
-  batch, whether to fold instead: last-writer-wins over base + deltas
-  + the batch, written as a new base generation in ONE exchange
-  (hash on ``_b``, window over ``(_b, key)``), deltas cleared;
+  ``write_signature_store``): ``data/<gen>/_b=<b>``;
+- an apply does O(batch) work and nothing else: it writes its batch,
+  horizon fenced but otherwise as it arrived, as ONE unpartitioned
+  delta generation ``data/<gen>`` (one file per write task: no bucket
+  dirs, no sort, no store read, no shuffle) and commits it as one more
+  entry of the manifest's flat ``deltas`` list.  A generation is named
+  ``s<seq>-<8 hex>``: the seq of the manifest that was current when
+  its writer started, plus one (never a batch id: ids restart at 0
+  when a stream is replayed from a lost checkpoint), plus a random
+  per-attempt suffix, so two writers never share a directory and
+  nothing ever overwrites a directory a running plan is reading;
+- after its commit the apply checks the size-ratio policy of
+  ``streaming/maintenance.py`` (delta bytes > 0.2 x base bytes,
+  driver-side ``dir_bytes``); when a fold is due and none is running
+  for the store in this process, it starts one on a daemon thread
+  (its jobs in the job group and FAIR pool ``cdc-fold``) and returns.
+  The fold reads the manifest of seq S, writes last-writer-wins over
+  the base and S's deltas as a new base generation in ONE exchange
+  (hash on ``_b``, window over ``(_b, key)``), and commits the current
+  manifest with that base and with S's deltas taken out of its
+  ``deltas``; the deltas applies committed since S stay outstanding.
+  (The seed is written the same way.)  If a purge or
+  another fold replaced the base (or moved the horizon) meanwhile,
+  the fold drops its output.  ``fold_cdc_store`` (the control plane's
+  ``op: "fold"``) waits for a running fold, then folds what is
+  outstanding in the calling thread;
 - reads (``read_cdc_view``) are a plain scan of the base when no delta
   is outstanding, else the deltas' keys are broadcast: base rows of
   other keys stream through an anti join, the touched ones (semi
   join) meet the delta rows in a last-writer-wins — the base is
   scanned twice but never shuffled, and the shuffled volume is the
-  deltas' (at most ~0.2× the base, which the fold threshold bounds);
+  deltas' (about 0.2x the base, which the fold threshold bounds);
 - visibility is an atomic, exclusive MANIFEST commit:
-  ``manifest/gen=<seq>.json`` (written to a temp file, then hard-linked
-  into place; the link fails if the seq is taken, so of two writers
-  that read the same manifest — a purge racing an apply — one commits
-  and the other raises ``ManifestConflict`` and removes its own data
-  directory) maps every bucket to its base data
-  directory (``buckets``) and to its outstanding delta directories
-  (``deltas``); a manifest without ``deltas`` reads as base only.  The
-  current snapshot is the highest-seq manifest; a crash before the
-  manifest commit leaves half-written data dirs UNREFERENCED and the
-  previous snapshot intact (this is the format-free spelling of the
-  Delta/Iceberg manifest dance);
+  ``manifest/gen=<seq>.json`` is written to a temp file, then
+  hard-linked into place; the link fails if the seq is taken, so of
+  two writers that read the same manifest one commits and the other
+  gets ``ManifestConflict``.  The loser re-reads and commits on top:
+  an apply adds its delta to the new manifest, a fold takes its
+  deltas out of it.  Only a purge that moved the horizon meanwhile
+  makes an apply give up (its batch was fenced by the old horizon),
+  and a purge always gives up; a writer that gives up removes its own
+  data directory and raises.  The manifest maps every bucket to its
+  base directory (``buckets``) and lists the outstanding delta
+  directories (``deltas``; the per-bucket ``{bucket: [dirs]}`` form
+  older stores wrote still reads, folds, purges and cleans, and a
+  manifest without ``deltas`` reads as base only).  The current
+  snapshot is the highest-seq manifest; a crash before the commit
+  leaves half-written data dirs UNREFERENCED and the previous snapshot
+  intact (this is the format-free spelling of the Delta/Iceberg
+  manifest dance);
 - replay-safe twice over: the manifest records the ``batch_id`` it
   committed, so a foreachBatch replay of an already-committed batch
   (driver died between manifest commit and streaming-checkpoint
@@ -54,40 +72,59 @@ stores:
   the per-key ordering against what the store already holds — a stale
   update can never resurrect a deleted key.  Last-writer-wins is
   associative, so merging base + deltas on read (or in a fold) elects
-  the same winner per key as merging each batch in turn would;
+  the same winner per key as merging each batch in turn would, and a
+  fold may run while later deltas land;
 - tombstones are retained until an explicit ``purge_tombstones``
   horizon: the purge records the horizon IN the manifest, and every
   later batch drops incoming changes strictly below it before they
   are written — so a stale update arriving after its fencing
   tombstone was purged is rejected by the horizon contract instead of
-  silently resurrecting the key.  The purge folds every delta first;
-  a stale update in a delta may be fenced only by a base tombstone;
+  silently resurrecting the key.  The purge waits for a running fold,
+  then folds every delta first; a stale update in a delta may be
+  fenced only by a base tombstone;
 - old generations are cleaned best-effort after each commit
   (``retain_gens`` manifests kept; data dirs referenced by none of
-  them are deleted, except those named after a seq past the newest
-  manifest: another writer may still be writing one).
+  them are deleted).  A generation still being written is never
+  deleted: this process keeps a registry of the directories its
+  writers have open (from the write until the commit or removal), and
+  a directory named after a seq past the newest manifest is kept too,
+  since another process may still be writing it.  The cleanup lists
+  the data dirs BEFORE it reads that registry and the manifests, so a
+  directory that left the registry had its commit visible by then.
 
-100 TB posture: a normal trigger costs one write of the (small)
-batch; a fold rewrites the whole store, so its cost amortizes over
-the ~threshold × |base| of change bytes between folds.  Bucket count
-is chosen so a bucket is a few GB (here a test-sized default).
+Shutdown: a fold still running when the session stops fails quietly
+(its Spark job is cancelled or its next call into the stopped session
+raises), commits nothing and leaves at most an orphan directory for
+the next cleanup; its thread is a daemon and ends with the failure.
+
+100 TB posture: a trigger costs one write of the (small) batch and
+never waits for a fold; a fold rewrites the whole store, so its cost
+amortizes over the ~threshold x |base| of change bytes between folds.
+Bucket count is chosen so a bucket is a few GB (here a test-sized
+default).
 """
 
 from __future__ import annotations
 
+import contextlib
 import json
+import logging
 import os
 import re
 import shutil
 import tempfile
+import threading
 import uuid
 from functools import reduce
 from typing import Sequence
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from cassandra_extractor_spark.streaming.maintenance import dir_bytes, size_policy
+
+logger = logging.getLogger(__name__)
 
 
 def _bucketed(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
@@ -148,22 +185,47 @@ def _commit_manifest(store_dir: str, manifest: dict) -> None:
         os.remove(tmp)
 
 
-def _commit_generation(store_dir: str, manifest: dict, gen: str) -> None:
-    """Commit ``manifest``, which references the new data directory
-    ``gen``; a commit that loses the seq removes ``gen`` and re-raises."""
+#: what this process has open on the stores it writes, keyed by the
+#: absolute store dir: the generation dirs its writers are writing
+#: (store, gen), and each store's running fold (set when it ends).
+#: Module state on purpose: every writer of a store in this process —
+#: stream, control plane, background fold — must see the same registry
+_LOCK = threading.Lock()
+_WRITING: set[tuple[str, str]] = set()
+_FOLDS: dict[str, threading.Event] = {}
+#: the job group and FAIR scheduler pool of background folds' jobs
+FOLD_POOL = "cdc-fold"
+
+
+@contextlib.contextmanager
+def _generation(store_dir: str, cur: dict):
+    """Name the data directory of the commit after manifest ``cur`` and
+    keep it in this process's in-flight registry while the block writes
+    and commits it, so no cleanup deletes it meanwhile.  A
+    ``ManifestConflict`` out of the block removes the directory."""
+    gen = _next_gen(cur)
+    entry = (os.path.abspath(store_dir), gen)
+    with _LOCK:
+        _WRITING.add(entry)
     try:
-        _commit_manifest(store_dir, manifest)
+        yield gen
     except ManifestConflict:
         shutil.rmtree(os.path.join(store_dir, "data", gen), ignore_errors=True)
         raise
+    finally:
+        with _LOCK:
+            _WRITING.discard(entry)
 
 
 def _rels(manifest: dict) -> tuple[list[str], list[str]]:
     """(base paths, outstanding delta paths) of a manifest, relative to
-    ``data/``.  A manifest without ``deltas`` (written before the store
-    kept per-batch deltas) has none outstanding."""
-    deltas = [r for rels in manifest.get("deltas", {}).values() for r in rels]
-    return list(manifest["buckets"].values()), deltas
+    ``data/``.  ``deltas`` is a flat list; a store written when deltas
+    were bucketed keeps a ``{bucket: [paths]}`` map instead, and one
+    written before the store kept deltas has none outstanding."""
+    deltas = manifest.get("deltas", [])
+    if isinstance(deltas, dict):
+        deltas = [r for rels in deltas.values() for r in rels]
+    return list(manifest["buckets"].values()), list(deltas)
 
 
 def _read_rels(spark: SparkSession, store_dir: str, rels: list[str]) -> DataFrame | None:
@@ -221,12 +283,17 @@ def _merge_deltas(
     )
 
 
-def _write_generation(df: DataFrame, store_dir: str, gen_name: str) -> dict[str, str]:
-    """Write ``df`` (carrying its bucket column ``_b``) under
-    ``data/<gen_name>/_b=<b>`` and return the bucket→relative-path map
-    for the manifest.  The directory is NEW per generation — never a
-    path any reader references yet."""
+def _write_generation(df: DataFrame, store_dir: str, gen_name: str) -> dict[str, str] | str:
+    """Write ``df`` as the generation ``data/<gen_name>``.  A base (a
+    frame carrying its bucket column ``_b``) goes under
+    ``data/<gen_name>/_b=<b>`` and the bucket→relative-path map is
+    returned; a delta is written unpartitioned, one file per write
+    task, and its relative path is returned.  The directory is NEW per
+    generation — never a path any reader references yet."""
     out = os.path.join(store_dir, "data", gen_name)
+    if "_b" not in df.columns:
+        df.write.mode("overwrite").parquet(out)
+        return gen_name
     df.write.mode("overwrite").partitionBy("_b").parquet(out)
     return {
         d.split("=", 1)[1]: f"{gen_name}/{d}"
@@ -236,10 +303,11 @@ def _write_generation(df: DataFrame, store_dir: str, gen_name: str) -> dict[str,
 
 
 def _next_gen(cur: dict) -> str:
-    """Data directory for the generation the next manifest commits:
-    that manifest's seq (not a batch id, which restarts at 0 when a
-    stream is replayed from a lost checkpoint) plus a random suffix of
-    this attempt, so a concurrent writer that read the same manifest
+    """Data directory for a generation written on top of manifest
+    ``cur``: the seq of the commit after it (not a batch id, which
+    restarts at 0 when a stream is replayed from a lost checkpoint;
+    a commit that retries lands at a later seq) plus a random suffix
+    of this attempt, so a concurrent writer that read the same manifest
     never writes into it."""
     return f"s{cur['seq'] + 1}-{uuid.uuid4().hex[:8]}"
 
@@ -249,33 +317,46 @@ _GEN_SEQ = re.compile(r"s(\d+)(?:-|$)")
 
 def _in_flight(gen: str, newest_seq: int) -> bool:
     """True for a generation named after a seq past the newest manifest:
-    a writer that read that manifest may still be writing it."""
+    a writer in another process that read that manifest may still be
+    writing it (this process's own writers are in ``_WRITING``)."""
     m = _GEN_SEQ.match(gen)
     return m is not None and int(m.group(1)) > newest_seq
 
 
 def _cleanup(store_dir: str, retain_gens: int) -> tuple[int, int]:
     """Drop manifests beyond the retained window, then any data
-    generation directory referenced by NO retained manifest.  Returns
-    (manifests removed, generation dirs removed) for the maintenance
-    report."""
+    generation directory referenced by NO retained manifest and not in
+    flight.  Returns (manifests removed, generation dirs removed) for
+    the maintenance report.
+
+    The data dirs are listed before the in-flight registry and the
+    manifests are read: a listed directory whose writer has left the
+    registry by then has its commit, if any, among those manifests."""
+    data_dir = os.path.join(store_dir, "data")
+    listed = os.listdir(data_dir) if os.path.isdir(data_dir) else []
+    store = os.path.abspath(store_dir)
+    with _LOCK:
+        writing = {gen for s, gen in _WRITING if s == store}
     seqs = _manifest_seqs(store_dir)
     drop = seqs[:-retain_gens] if retain_gens else []
     for s in drop:
-        os.remove(os.path.join(_manifest_dir(store_dir), f"gen={s}.json"))
+        with contextlib.suppress(FileNotFoundError):  # a concurrent cleanup removed it
+            os.remove(os.path.join(_manifest_dir(store_dir), f"gen={s}.json"))
     kept = _manifest_seqs(store_dir)
     newest = kept[-1] if kept else -1
     referenced = set()
     for s in kept:
-        for rels in _rels(_read_manifest(store_dir, s)):
+        try:
+            m = _read_manifest(store_dir, s)
+        except FileNotFoundError:  # dropped by a concurrent cleanup
+            continue
+        for rels in _rels(m):
             referenced.update(rel.split("/", 1)[0] for rel in rels)
     removed_dirs = 0
-    data_dir = os.path.join(store_dir, "data")
-    if os.path.isdir(data_dir):
-        for d in os.listdir(data_dir):
-            if d not in referenced and not _in_flight(d, newest):
-                shutil.rmtree(os.path.join(data_dir, d), ignore_errors=True)
-                removed_dirs += 1
+    for d in listed:
+        if d not in referenced and d not in writing and not _in_flight(d, newest):
+            shutil.rmtree(os.path.join(data_dir, d), ignore_errors=True)
+            removed_dirs += 1
     return len(drop), removed_dirs
 
 
@@ -283,8 +364,8 @@ def cleanup_generations(store_dir: str, retain_gens: int) -> dict:
     """Operational retention entry point (the control plane's CDC
     maintenance op): keep the newest ``retain_gens`` manifests, delete
     unreferenced generation data.  Same invariant as the per-trigger
-    best-effort cleanup — the CURRENT manifest and everything it
-    references always survive."""
+    best-effort cleanup — the CURRENT manifest, everything it
+    references and every generation still being written survive."""
     if retain_gens < 1:
         raise ValueError("retain_gens must be >= 1: the current manifest must survive")
     removed_manifests, removed_dirs = _cleanup(store_dir, retain_gens)
@@ -310,6 +391,8 @@ def init_cdc_store(
     """Seed the store from a base snapshot.  The caller supplies
     ``order_cols`` values older than any change that will ever arrive
     (epoch zero / sentinel), so every real change outranks the seed.
+    The seed is written the way a fold writes a base: last-writer-wins
+    per key, so a snapshot that repeats a key stores one row for it.
 
     Fails fast if the key/op/order columns are missing from ``base`` —
     otherwise the first micro-batch would die inside the merge with an
@@ -322,28 +405,21 @@ def init_cdc_store(
             f"columns ({list(order_cols)!r}) set to sentinel values older "
             "than any arriving change"
         )
-    gen = _next_gen({"seq": -1})
-    buckets = _write_generation(
-        _bucketed(base, key, n_buckets).repartition(n_buckets, "_b"), store_dir, gen
-    )
-    _commit_generation(
-        store_dir,
-        {
-            "seq": 0,
-            "batch_id": None,
-            "key": key,
-            "op_col": op_col,
-            "order_cols": list(order_cols),
-            "payload_cols": [
-                c for c in base.columns if c not in (key, op_col, *order_cols)
-            ],
-            "n_buckets": n_buckets,
-            "horizon": None,
-            "buckets": buckets,
-            "deltas": {},
-        },
-        gen,
-    )
+    m = {
+        "seq": 0,
+        "batch_id": None,
+        "key": key,
+        "op_col": op_col,
+        "order_cols": list(order_cols),
+        "payload_cols": [c for c in base.columns if c not in (key, op_col, *order_cols)],
+        "n_buckets": n_buckets,
+        "horizon": None,
+        "deltas": [],
+    }
+    cols = [key, op_col, *order_cols, *m["payload_cols"]]
+    with _generation(store_dir, {"seq": -1}) as gen:
+        buckets = _write_generation(_as_base(base.select(*cols), m), store_dir, gen)
+        _commit_manifest(store_dir, {**m, "buckets": buckets})
 
 
 def _horizon_struct(df: DataFrame, order_cols: Sequence[str], horizon: Sequence) -> F.Column:
@@ -427,24 +503,28 @@ def _fold(
     store_dir: str,
     m: dict,
     cols: Sequence[str],
-    extra: DataFrame | None = None,
 ) -> DataFrame:
-    """Last-writer-wins over base + outstanding deltas (+ ``extra``),
-    bucketed and hash-partitioned on ``_b`` — ready for
-    ``_write_generation`` as a new base, in a single exchange.  The
-    exchange names its partition count (one per bucket): AQE coalesces
-    a bare ``repartition("_b")`` of a small store into one task."""
+    """The base and outstanding deltas of manifest ``m`` as a new base
+    (``_as_base``)."""
     base_rels, delta_rels = _rels(m)
     parts = [
         df.select(*cols)
         for df in (
             _read_rels(spark, store_dir, base_rels),
             _read_rels(spark, store_dir, delta_rels),
-            extra,
         )
         if df is not None
     ]
-    rows = _bucketed(reduce(DataFrame.unionByName, parts), m["key"], m["n_buckets"])
+    return _as_base(reduce(DataFrame.unionByName, parts), m)
+
+
+def _as_base(rows: DataFrame, m: dict) -> DataFrame:
+    """Last-writer-wins over ``rows``, bucketed and hash-partitioned on
+    ``_b`` as manifest ``m`` says — ready for ``_write_generation`` as a
+    base, in a single exchange.  The exchange names its partition count
+    (one per bucket): AQE coalesces a bare ``repartition("_b")`` of a
+    small store into one task."""
+    rows = _bucketed(rows, m["key"], m["n_buckets"])
     return _latest(
         rows.repartition(m["n_buckets"], "_b"),
         m["key"],
@@ -474,15 +554,17 @@ def apply_cdc_batch(
     staleness rejection at write time, atomic manifest commit,
     best-effort generation cleanup.
 
-    A normal batch is written as one delta generation (no store read,
-    no shuffle); once the outstanding deltas pass the size-ratio
-    policy (``maintenance.size_policy``) the batch is folded with base
-    + deltas into a new base generation instead.
+    The batch is written as one delta generation (no store read, no
+    shuffle) and committed; a commit that loses to a fold re-reads the
+    manifest and commits on top of it.  Then, if the outstanding deltas
+    pass the size-ratio policy (``maintenance.size_policy``), a
+    background fold starts (``_fold_if_due``); the apply never waits
+    for it.
 
-    Raises ``ManifestConflict`` when another writer (a purge) committed
-    after this batch read the manifest; nothing of the batch is kept,
-    and running it again applies it on top of that commit (a stream
-    replays the failed batch on restart)."""
+    Raises ``ManifestConflict`` when a purge committed after this batch
+    read the manifest; nothing of the batch is kept, and running it
+    again applies it on top of that commit (a stream replays the failed
+    batch on restart)."""
     cur = _current_manifest(store_dir)
     if cur is None:
         raise FileNotFoundError(
@@ -494,39 +576,156 @@ def apply_cdc_batch(
         # committed (driver died before the streaming checkpoint
         # did) — idempotent skip; the snapshot already reflects it
         return
-    cur = {
-        **cur,
-        "op_col": op_col,
-        "order_cols": list(order_cols),
-        "payload_cols": list(payload_cols),
-    }
+    horizon = cur.get("horizon")
     cols = [key, op_col, *order_cols, *payload_cols]
-    batch = _fence(batch_df.select(*cols), order_cols, cur.get("horizon"))
-    gen = _next_gen(cur)
-    base_rels, delta_rels = _rels(cur)
-    if size_policy(
+    batch = _fence(batch_df.select(*cols), order_cols, horizon)
+    with _generation(store_dir, cur) as gen:
+        _write_generation(batch, store_dir, gen)
+        while True:
+            try:
+                _commit_manifest(
+                    store_dir,
+                    {
+                        **cur,
+                        "seq": cur["seq"] + 1,
+                        "batch_id": batch_id,
+                        "op_col": op_col,
+                        "order_cols": list(order_cols),
+                        "payload_cols": list(payload_cols),
+                        "deltas": [*_rels(cur)[1], gen],
+                    },
+                )
+                break
+            except ManifestConflict:
+                cur = _current_manifest(store_dir)
+                if cur.get("horizon") != horizon:
+                    raise  # a purge: the batch was fenced by the old horizon
+    _cleanup(store_dir, retain_gens)
+    _fold_if_due(spark, store_dir, retain_gens)
+
+
+# -------------------------------------------------------------------- folds
+
+
+def _fold_if_due(spark: SparkSession, store_dir: str, retain_gens: int) -> None:
+    """Start a background fold of the store when the size-ratio policy
+    says so and this process is not folding it already.  The fold runs
+    on a daemon thread with the caller's Spark local properties, its
+    jobs in the job group and FAIR pool ``FOLD_POOL``."""
+    m = _current_manifest(store_dir)
+    base_rels, delta_rels = _rels(m)
+    if not size_policy(
         _rels_bytes(store_dir, base_rels), _rels_bytes(store_dir, delta_rels)
     )["should_compact"]:
-        buckets = _write_generation(_fold(spark, store_dir, cur, cols, batch), store_dir, gen)
-        deltas: dict[str, list[str]] = {}
-    else:
-        buckets = cur["buckets"]
-        deltas = dict(cur.get("deltas", {}))
-        written = _write_generation(_bucketed(batch, key, cur["n_buckets"]), store_dir, gen)
-        for b, rel in written.items():
-            deltas[b] = [*deltas.get(b, []), rel]
-    _commit_generation(
-        store_dir,
-        {
-            **cur,
-            "seq": cur["seq"] + 1,
-            "batch_id": batch_id,
-            "buckets": buckets,
-            "deltas": deltas,
-        },
-        gen,
-    )
+        return
+    store = os.path.abspath(store_dir)
+    done = _claim_fold(store)
+    if done is None:
+        return
+
+    @inheritable_thread_target(spark)
+    def fold() -> None:
+        # a job group of its own: cancelling the group of the job that
+        # started the fold leaves the fold alone, and its jobs are not
+        # counted as that job's
+        spark.sparkContext.setJobGroup(FOLD_POOL, f"CDC fold of {store}")
+        spark.sparkContext.setLocalProperty("spark.scheduler.pool", FOLD_POOL)
+        _fold_store(spark, store_dir, retain_gens)
+
+    def run() -> None:
+        try:
+            fold()
+        except Exception:  # noqa: BLE001
+            # a fold only compacts: losing one (the session stopped, a
+            # purge replaced the base) loses no change, and whatever it
+            # wrote is an orphan the next cleanup removes
+            logger.debug("background fold of %s failed", store, exc_info=True)
+        finally:
+            _end_fold(store, done)
+
+    try:
+        threading.Thread(target=run, name=f"cdc-fold {store}", daemon=True).start()
+    except BaseException:
+        _end_fold(store, done)
+        raise
+
+
+def _claim_fold(store: str) -> threading.Event | None:
+    """Register a fold of ``store`` (an absolute path) unless one is
+    running; the returned event is set when it ends (``_end_fold``)."""
+    with _LOCK:
+        if store in _FOLDS:
+            return None
+        done = _FOLDS[store] = threading.Event()
+        return done
+
+
+def _end_fold(store: str, done: threading.Event) -> None:
+    with _LOCK:
+        del _FOLDS[store]
+    done.set()
+
+
+def _wait_for_fold(store_dir: str) -> None:
+    """Return once no fold of this process is running on the store."""
+    with _LOCK:
+        done = _FOLDS.get(os.path.abspath(store_dir))
+    if done is not None:
+        done.wait()
+
+
+def _fold_store(spark: SparkSession, store_dir: str, retain_gens: int) -> bool:
+    """Fold the base and the deltas of the current manifest (seq S) into
+    a new base and commit it on top of whatever committed since S: the
+    deltas applied meanwhile stay outstanding.  Retries a lost commit;
+    raises ``ManifestConflict``, dropping its output, when a purge or
+    another fold replaced the base or the horizon meanwhile.  Returns
+    whether there was anything to fold."""
+    m = _current_manifest(store_dir)
+    folded = _rels(m)[1]
+    if not folded:
+        return False
+    cols = [m["key"], m.get("op_col", "op"), *m["order_cols"], *m["payload_cols"]]
+    with _generation(store_dir, m) as gen:
+        buckets = _write_generation(_fold(spark, store_dir, m, cols), store_dir, gen)
+        cur = m
+        while True:
+            if (cur["buckets"], cur.get("horizon")) != (m["buckets"], m.get("horizon")):
+                raise ManifestConflict(
+                    f"{store_dir}: the base of seq {m['seq']} was replaced while it was folded"
+                )
+            try:
+                _commit_manifest(
+                    store_dir,
+                    {
+                        **cur,
+                        "seq": cur["seq"] + 1,
+                        "buckets": buckets,
+                        "deltas": [r for r in _rels(cur)[1] if r not in folded],
+                    },
+                )
+                break
+            except ManifestConflict:
+                cur = _current_manifest(store_dir)
     _cleanup(store_dir, retain_gens)
+    return True
+
+
+def fold_cdc_store(spark: SparkSession, store_dir: str, retain_gens: int = 3) -> dict:
+    """Settle the store: wait for this process's background fold of it,
+    then fold whatever deltas are outstanding, in the calling thread
+    (the control plane's ``op: "fold"``).  Deltas an apply commits
+    meanwhile stay outstanding.  Raises ``ManifestConflict`` when a
+    purge replaced the base during the fold."""
+    store = os.path.abspath(store_dir)
+    while (done := _claim_fold(store)) is None:
+        _wait_for_fold(store)
+    try:
+        folded = _fold_store(spark, store_dir, retain_gens)
+    finally:
+        _end_fold(store, done)
+    m = _current_manifest(store_dir)
+    return {"folded": folded, "seq": m["seq"], "deltas": len(_rels(m)[1])}
 
 
 def stream_cdc_apply(
@@ -592,9 +791,11 @@ def purge_tombstones(
     explicit maintenance pass, not a per-trigger cost) into a new
     generation + manifest commit — the same atomic-swap discipline as
     the merge path.  Folding first matters: a tombstone in the base
-    may be all that fences a stale update sitting in a delta.  Raises
-    ``ManifestConflict``, keeping nothing, when a batch committed after
-    the purge read the manifest."""
+    may be all that fences a stale update sitting in a delta.  Waits
+    for this process's background fold of the store first; raises
+    ``ManifestConflict``, keeping nothing, when a batch or a fold
+    committed after the purge read the manifest."""
+    _wait_for_fold(store_dir)
     cur = _current_manifest(store_dir)
     if cur is None:
         raise FileNotFoundError(f"no manifest under {store_dir}")
@@ -630,21 +831,20 @@ def purge_tombstones(
     kept = snap.where(
         (F.col(op_col) != "D") | ~(F.struct(*order_cols) < hz)
     )
-    gen = _next_gen(cur)
-    written = _write_generation(kept, store_dir, gen)
-    _commit_generation(
-        store_dir,
-        {
-            **cur,
-            "seq": cur["seq"] + 1,
-            "batch_id": cur["batch_id"],
-            "horizon": list(horizon),
-            "payload_cols": payload,
-            "buckets": written,
-            "deltas": {},
-        },
-        gen,
-    )
+    with _generation(store_dir, cur) as gen:
+        written = _write_generation(kept, store_dir, gen)
+        _commit_manifest(
+            store_dir,
+            {
+                **cur,
+                "seq": cur["seq"] + 1,
+                "batch_id": cur["batch_id"],
+                "horizon": list(horizon),
+                "payload_cols": payload,
+                "buckets": written,
+                "deltas": [],
+            },
+        )
 
 
 def read_cdc_view(

@@ -13,17 +13,24 @@ exactly at the mark must NOT be extracted (SURVEY §7.3.4).
 
 from __future__ import annotations
 
+import datetime as _dt
 import json
 import os
+import threading
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, functions as F
+
+#: serializes every load-modify-replace of a state file in this process:
+#: the app runs one job thread per table, all on one file
+_WRITE_LOCK = threading.Lock()
 
 
 @dataclass
 class HighWaterMarkStore:
     """Persisted per-table watermark (replaces the reference's Redis
-    ``{table}-modified-timestamp-filter`` key)."""
+    ``{table}-modified-timestamp-filter`` key).  Safe to share between
+    threads: a write replaces the file whole, and writes take turns."""
 
     path: str
 
@@ -41,20 +48,22 @@ class HighWaterMarkStore:
         GET /state view)."""
         return self._load()
 
-    def set(self, table: str, value: str) -> None:
-        state = self._load()
-        state[table] = value
+    def _write(self, state: dict) -> None:
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
         tmp = self.path + ".tmp"
         with open(tmp, "w", encoding="utf-8") as f:
             json.dump(state, f)
         os.replace(tmp, self.path)
 
+    def set(self, table: str, value: str) -> None:
+        with _WRITE_LOCK:
+            self._write({**self._load(), table: value})
+
     def clear(self, table: str) -> None:
-        state = self._load()
-        state.pop(table, None)
-        with open(self.path, "w", encoding="utf-8") as f:
-            json.dump(state, f)
+        with _WRITE_LOCK:
+            state = self._load()
+            state.pop(table, None)
+            self._write(state)
 
 
 def capture_hwm(df: DataFrame, ts_col: str) -> str | None:
@@ -79,7 +88,8 @@ def plan_incremental(
     store: HighWaterMarkStore,
     lateness_us: int = 0,
 ):
-    """Plan one incremental run: rows in ``[previous_hwm, new_hwm)``.
+    """Plan one incremental run: rows in ``[previous_hwm, new_hwm)``,
+    ``new_hwm`` captured over the rows at or past ``previous_hwm``.
 
     Returns ``(filtered_df, commit)`` — the caller runs its sink writes
     and calls ``commit()`` ONLY on success.  Committing the mark before
@@ -97,27 +107,27 @@ def plan_incremental(
     sinks).
     """
     prev = store.get(table)
-    new = capture_hwm(df, ts_col)
-    if new is not None:
-        import datetime as _dt
-
-        new = (
-            _dt.datetime.fromisoformat(new) + _dt.timedelta(microseconds=1)
-        ).isoformat(sep=" ")
-    out = hwm_filter(df, ts_col, new)
     if prev is not None:
-        out = out.where(F.col(ts_col) >= F.to_timestamp(F.lit(prev)))
+        # capture over the rows past the mark only: a source that takes
+        # the predicate (parquet row-group statistics on UTC-adjusted
+        # timestamps; not on TIMESTAMP_NTZ) skips what earlier runs read
+        df = df.where(F.col(ts_col) >= F.to_timestamp(F.lit(prev)))
+    new = capture_hwm(df, ts_col)
+    if new is None:
+        # no row at or past the mark (or no timestamp at all): the
+        # window is empty and the mark stays where it is
+        return df.where(F.lit(False)), lambda: None
+    new = (
+        _dt.datetime.fromisoformat(new) + _dt.timedelta(microseconds=1)
+    ).isoformat(sep=" ")
+    out = hwm_filter(df, ts_col, new)
 
     def commit() -> None:
-        if new is not None:
-            mark = new
-            if lateness_us:
-                import datetime as _dt
-
-                mark = (
-                    _dt.datetime.fromisoformat(new)
-                    - _dt.timedelta(microseconds=lateness_us)
-                ).isoformat(sep=" ")
-            store.set(table, mark)
+        mark = new
+        if lateness_us:
+            mark = (
+                _dt.datetime.fromisoformat(new) - _dt.timedelta(microseconds=lateness_us)
+            ).isoformat(sep=" ")
+        store.set(table, mark)
 
     return out, commit

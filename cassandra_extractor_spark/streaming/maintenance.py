@@ -12,9 +12,11 @@ This module makes the SAME policy callable from inside a streaming
 ingest's ``foreachBatch`` (config-gated, off by default — see the
 ``auto_compact`` parameter on ``stream_posting_ingest`` /
 ``stream_ann_ingest`` / ``stream_incremental_dedup``).  The CDC
-store (``cdc_stream.apply_cdc_batch``) checks ``size_policy`` before
-every batch, always on, and folds its deltas together with that
-batch's write.  Safety argument for folding mid-stream:
+store (``cdc_stream.apply_cdc_batch``) checks ``size_policy`` after
+every batch's commit, always on, and when it says fold starts a
+background fold that commits by compare-and-set, so the batch never
+waits for it (see ``cdc_stream``).  Safety argument for folding the
+other stores mid-stream:
 ``foreachBatch`` bodies run serially (micro-batches never overlap
 within one query), so a fold inside the batch hook is exactly as
 isolated as one run between restarts; the crash window (base

@@ -1,13 +1,22 @@
-"""CDC store (streaming/cdc_stream.py): per-batch deltas, the size-ratio
-fold, merge-on-read, and the store's replay/crash/horizon guarantees."""
+"""CDC store (streaming/cdc_stream.py): one-file per-batch deltas, the
+background size-ratio fold, merge-on-read, and the store's
+replay/crash/horizon/commit-race guarantees.
+
+Test stores are tiny, so nearly every apply makes a fold due and starts
+one in the background: a test that asserts on manifests, seqs or data
+dirs settles the store first (``_settle``), or seeds a base large
+enough that its small batches never make a fold due."""
 
 from __future__ import annotations
 
 import json
 import os
 import random
+import subprocess
 import sys
 import threading
+import time
+from pathlib import Path
 
 import pandas as pd
 import pytest
@@ -19,6 +28,7 @@ from cassandra_extractor_spark.streaming.cdc_stream import (
     _fold,
     apply_cdc_batch,
     cleanup_generations,
+    fold_cdc_store,
     init_cdc_store,
     merge_cdc_batch,
     purge_tombstones,
@@ -46,52 +56,81 @@ def _view(spark, store):
 
 
 def _n_deltas(store):
-    return sum(len(v) for v in _current_manifest(store)["deltas"].values())
+    return len(cdc_stream._rels(_current_manifest(store))[1])
+
+
+def _settle(store):
+    """Wait for the store's background fold, if one is running."""
+    cdc_stream._wait_for_fold(store)
+
+
+def _lww(rows):
+    """The view as pandas last-writer-wins per key over ``rows``."""
+    every = pd.DataFrame(rows, columns=["k", "op", "seq", "bal"])
+    last = every.sort_values("seq").groupby("k").tail(1)
+    live = last[last.op != "D"]
+    return dict(zip(live.k, live.bal))
+
+
+#: a base this large keeps a test's small batches below the fold
+#: threshold, so no background fold changes the store under the test
+_BIG = [(k, "U", 0, k) for k in range(1000, 21000)]
+_BIG_VIEW = {k: k for k in range(1000, 21000)}
 
 
 def test_delta_and_fold_paths_match_last_writer_wins(spark, tmp_path):
-    """Batches with out-of-order (stale) changes, deletes and inserts,
-    applied through both the delta path and the fold path, serve the
-    same view as a pure-pandas last-writer-wins per key."""
+    """Batches with out-of-order (stale) changes, deletes and inserts
+    serve the same view as a pure-pandas last-writer-wins per key: after
+    every batch, read while a background fold may be running, and again
+    once ``fold_cdc_store`` (the control plane's ``op: "fold"``) has
+    settled the store.  Both paths are taken: reads met outstanding
+    deltas, and folds replaced the base."""
     store = str(tmp_path / "store")
     rng = random.Random(7)
     base = [(k, "U", 0, k) for k in range(300)]
     _init(spark, store, base)
     seqs = list(range(1, 2001))
     rng.shuffle(seqs)  # arrival order != seq order: stale changes arrive late
-    changes, paths = [], []
+    changes, bases, outstanding = [], set(), []
     for b in range(8):
         batch = [(rng.randrange(360), rng.choice("UUUID"), seqs.pop(), rng.randrange(10**6))
                  for _ in range(40)]
         changes += batch
-        before = _current_manifest(store)
         _apply(spark, store, batch, b)
-        after = _current_manifest(store)
-        if after["buckets"] == before["buckets"]:
-            assert _n_deltas(store) > 0
-            paths.append("delta")
-        else:
-            assert after["deltas"] == {}
-            paths.append("fold")
-        # read after every batch: with deltas outstanding and without
-        every = pd.DataFrame(base + changes, columns=["k", "op", "seq", "bal"])
-        last = every.sort_values("seq").groupby("k").tail(1)
-        want = dict(zip(last[last.op != "D"].k, last[last.op != "D"].bal))
-        assert _view(spark, store) == want, (b, paths)
-    assert {"delta", "fold"} <= set(paths), paths
+        m = _current_manifest(store)
+        bases.add(tuple(sorted(m["buckets"].values())))
+        outstanding.append(len(cdc_stream._rels(m)[1]))
+        assert _view(spark, store) == _lww(base + changes), b
+    rep = fold_cdc_store(spark, store)
+    m = _current_manifest(store)
+    assert rep["deltas"] == 0 and cdc_stream._rels(m)[1] == []
+    bases.add(tuple(sorted(m["buckets"].values())))
+    assert _view(spark, store) == _lww(base + changes)
+    assert len(bases) > 1 and max(outstanding) > 0, (bases, outstanding)
+
+
+def test_seed_that_repeats_a_key_stores_its_latest_row(spark, tmp_path):
+    """The seed is written the way a fold writes a base, so a snapshot
+    that repeats a key stores one row for it: the latest."""
+    store = str(tmp_path / "store")
+    seed = [(1, "U", 0, 100), (1, "U", 2, 111), (2, "U", 0, 200), (2, "D", 1, 0)]
+    _init(spark, store, seed)
+    assert sorted(tuple(r) for r in cdc_stream._read_current(spark, store).collect()) == [
+        (1, "U", 2, 111), (2, "D", 1, 0)]
+    assert _view(spark, store) == _lww(seed) == {1: 111}
 
 
 def test_read_with_deltas_never_shuffles_the_base(spark, tmp_path):
     """With deltas outstanding, base rows of keys no delta touches
     reach the view through a broadcast anti join, not a shuffle."""
     store = str(tmp_path / "store")
-    _init(spark, store, [(k, "U", 0, k) for k in range(50)])
+    _init(spark, store, [(k, "U", 0, k) for k in range(50)] + _BIG)
     _apply(spark, store, [(1, "U", 5, 10), (99, "I", 5, 99)], 0)
     assert _n_deltas(store) > 0
     plan = read_cdc_view(spark, store)._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan and "LeftAnti" in plan, plan
     assert "SortMergeJoin" not in plan and "ShuffledHashJoin" not in plan, plan
-    assert _view(spark, store) == {**{k: k for k in range(50)}, 1: 10, 99: 99}
+    assert _view(spark, store) == {**{k: k for k in range(50)}, **_BIG_VIEW, 1: 10, 99: 99}
 
 
 def test_fold_is_a_single_exchange(spark, tmp_path):
@@ -133,20 +172,21 @@ def test_purge_folds_stale_delta_under_base_tombstone(spark, tmp_path):
     first, so the key stays deleted.  Afterwards the horizon drops a
     stale change at write time: nothing reaches a delta."""
     store = str(tmp_path / "store")
-    _init(spark, store, [(1, "U", 0, 100), (2, "D", 20, 0)])
+    _init(spark, store, [(1, "U", 0, 100), (2, "D", 20, 0)] + _BIG)
     # k=2 is stale (older than its tombstone); k=1 is a live update
     _apply(spark, store, [(2, "U", 10, 888), (1, "U", 30, 111)], 0)
     assert _n_deltas(store) > 0
-    assert _view(spark, store) == {1: 111}
+    assert _view(spark, store) == {1: 111, **_BIG_VIEW}
 
     purge_tombstones(spark, store, ["seq"], "op", horizon=[50])
     m = _current_manifest(store)
-    assert m["deltas"] == {} and m["horizon"] == [50]
-    assert _view(spark, store) == {1: 111}
+    assert m["deltas"] == [] and m["horizon"] == [50]
+    assert _view(spark, store) == {1: 111, **_BIG_VIEW}
 
     _apply(spark, store, [(2, "U", 40, 777)], 1)  # below the horizon
-    assert _n_deltas(store) == 0
-    assert _view(spark, store) == {1: 111}
+    deltas = cdc_stream._rels(_current_manifest(store))[1]
+    assert cdc_stream._read_rels(spark, store, deltas).count() == 0
+    assert _view(spark, store) == {1: 111, **_BIG_VIEW}
 
 
 def test_uncommitted_delta_is_invisible_and_cleaned(spark, tmp_path, monkeypatch):
@@ -174,7 +214,8 @@ def test_uncommitted_delta_is_invisible_and_cleaned(spark, tmp_path, monkeypatch
     assert os.path.isdir(orphan)
 
     _apply(spark, store, [(2, "U", 6, 222)], 1)
-    assert _current_manifest(store)["seq"] == 1
+    _settle(store)
+    assert _current_manifest(store)["batch_id"] == 1
     assert not os.path.exists(orphan)
     assert _view(spark, store) == {1: 100, 2: 222}
 
@@ -185,7 +226,8 @@ def test_racing_purge_and_apply_commit_once(spark, tmp_path, monkeypatch, winner
     commits while the loser writes its generation: the loser's commit
     raises, its directory is removed, and the view is last-writer-wins
     over the winner's inputs alone.  Run again, the loser applies on
-    top of the winner."""
+    top of the winner.  (A winning apply starts a background fold: the
+    store is settled before its manifests and dirs are checked.)"""
     store = str(tmp_path / "store")
     _init(spark, store, [(1, "U", 0, 100), (2, "D", 3, 0), (3, "U", 0, 300)])
     batch = [(1, "U", 5, 111), (4, "U", 5, 400)]
@@ -206,8 +248,10 @@ def test_racing_purge_and_apply_commit_once(spark, tmp_path, monkeypatch, winner
     monkeypatch.setattr(cdc_stream, "_write_generation", write_after_the_winner_commits)
     with pytest.raises(ManifestConflict):
         runs[loser]()
-    m = _current_manifest(store)
-    assert m["seq"] == 1 and m["horizon"] == ([5] if winner == "purge" else None)
+    _settle(store)
+    m = cdc_stream._read_manifest(store, 1)
+    assert m["horizon"] == ([5] if winner == "purge" else None)
+    assert m["batch_id"] == (None if winner == "purge" else 0)
     assert not os.path.exists(os.path.join(store, "data", loser_gens[0]))
     referenced = {
         rel.split("/", 1)[0]
@@ -223,7 +267,9 @@ def test_racing_purge_and_apply_commit_once(spark, tmp_path, monkeypatch, winner
         assert _view(spark, store) == {1: 111, 3: 300, 4: 400}
 
     runs[loser]()
-    assert _current_manifest(store)["seq"] == 2
+    _settle(store)
+    m = _current_manifest(store)
+    assert m["seq"] >= 2 and m["horizon"] == [5] and m["batch_id"] == 0
     assert _view(spark, store) == {1: 111, 3: 300, 4: 400}
 
 
@@ -263,6 +309,7 @@ def test_replayed_batch_id_writes_nothing(spark, tmp_path):
     store = str(tmp_path / "store")
     _init(spark, store, [(1, "U", 0, 100)])
     _apply(spark, store, [(1, "U", 5, 111)], 7)
+    _settle(store)
     seq = _current_manifest(store)["seq"]
     listing = sorted(os.listdir(os.path.join(store, "data")))
 
@@ -295,9 +342,10 @@ def test_ties_resolve_the_same_through_deltas_and_folds(spark, tmp_path):
 
 def test_lost_checkpoint_replay_never_overwrites_the_live_base(spark, tmp_path):
     """A stream replayed from a lost checkpoint restarts its batch ids
-    at 0.  Batch 1 once folded into the base; replayed, it finds the
-    base grown by batch 0 and takes the delta path.  Its data must not
-    land on the live base's directory: the view stays what it was."""
+    at 0.  Each replayed batch lands in a delta directory of its own:
+    no file of the live base (folded from the first pass) or of any
+    committed generation is written again, and the settled view stays
+    what it was."""
     store = str(tmp_path / "store")
     rng = random.Random(3)
     n = 20000
@@ -308,17 +356,34 @@ def test_lost_checkpoint_replay_never_overwrites_the_live_base(spark, tmp_path):
     ]
 
     def apply(b):
-        before = _current_manifest(store)["buckets"]
         # one input partition: a delta's bytes then track its rows, not
         # the session's parallelism
         batch = _df(spark, batches[b]).coalesce(1)
-        apply_cdc_batch(spark, batch, b, store, "k", ["seq"], "op", ["bal"])
-        return "delta" if _current_manifest(store)["buckets"] == before else "fold"
+        apply_cdc_batch(spark, batch, b, store, "k", ["seq"], "op", ["bal"], retain_gens=10)
 
-    assert [apply(0), apply(1)] == ["delta", "fold"]
+    def stamps():
+        data = os.path.join(store, "data")
+        return {
+            os.path.relpath(os.path.join(root, f), data): os.stat(os.path.join(root, f)).st_mtime_ns
+            for root, _, files in os.walk(data)
+            for f in files
+        }
+
+    apply(0)
+    apply(1)
+    fold_cdc_store(spark, store, retain_gens=10)
     want = _view(spark, store)
-    # fresh checkpoint: ids 0 and 1 again, both below the fold threshold
-    assert [apply(0), apply(1)] == ["delta", "delta"]
+    live = _current_manifest(store)
+    before = stamps()
+    # fresh checkpoint: ids 0 and 1 again
+    apply(0)
+    apply(1)
+    _settle(store)
+    after = stamps()
+    assert {f: after.get(f) for f in before} == before
+    new_gens = {f.split(os.sep, 1)[0] for f in after} - {f.split(os.sep, 1)[0] for f in before}
+    [replayed] = cdc_stream._read_manifest(store, live["seq"] + 1)["deltas"]
+    assert replayed in new_gens
     assert _view(spark, store) == want
 
 
@@ -340,3 +405,253 @@ def test_store_without_recorded_deltas_or_payload_reads_and_purges(spark, tmp_pa
     assert _current_manifest(store)["payload_cols"] == ["bal"]
     assert _view(spark, store) == {1: 100, 3: 300}
     assert {r.k for r in cdc_stream._read_current(spark, store).collect()} == {1, 3}
+
+
+@pytest.mark.parametrize("first", ["apply", "fold"])
+def test_commit_races_between_apply_and_fold_lose_no_delta(spark, tmp_path, monkeypatch, first):
+    """A fold and an apply interleave deterministically.  ``apply``: an
+    apply commits between the fold's manifest read and its commit; the
+    fold's commit loses, re-reads and commits its base with that delta
+    still outstanding.  ``fold``: a fold commits between an apply's
+    manifest read and its commit; the apply re-commits on top of the
+    folded base.  No delta is lost: the view is last-writer-wins before
+    and after the store settles."""
+    store = str(tmp_path / "store")
+    base = [(k, "U", 0, k) for k in range(40)] + _BIG
+    _init(spark, store, base)
+    b0 = [(k, "U", 1, 100 + k) for k in range(0, 40, 3)]
+    b1 = [(k, "D" if k % 2 else "U", 2, 200 + k) for k in range(0, 50, 5)]
+    _apply(spark, store, b0, 0)
+    _settle(store)
+    read = _current_manifest(store)
+    assert read["seq"] == 1
+    write = cdc_stream._write_generation
+    writers = []
+
+    def write_after_the_other_commits(df, store_dir, gen):
+        writers.append("fold" if "_b" in df.columns else "apply")
+        monkeypatch.setattr(cdc_stream, "_write_generation", write)
+        if first == "apply":
+            _apply(spark, store, b1, 1)
+        else:
+            fold_cdc_store(spark, store)
+        return write(df, store_dir, gen)
+
+    monkeypatch.setattr(cdc_stream, "_write_generation", write_after_the_other_commits)
+    if first == "apply":
+        fold_cdc_store(spark, store)
+    else:
+        _apply(spark, store, b1, 1)
+    assert writers == ["fold" if first == "apply" else "apply"]
+    m = _current_manifest(store)
+    assert m["seq"] == read["seq"] + 2 and m["batch_id"] == 1
+    assert m["buckets"] != read["buckets"]
+    [outstanding] = m["deltas"]
+    assert outstanding not in read["deltas"]
+    assert _view(spark, store) == _lww(base + b0 + b1)
+    fold_cdc_store(spark, store)
+    assert _current_manifest(store)["deltas"] == []
+    assert _view(spark, store) == _lww(base + b0 + b1)
+
+
+@pytest.mark.parametrize("fold", ["control_plane", "background"])
+def test_failed_fold_leaves_the_store_readable_and_its_orphan_is_cleaned(
+    spark, tmp_path, monkeypatch, fold
+):
+    """A fold that dies after writing its base and before its commit
+    commits nothing: the store reads as before, the control plane's fold
+    raises while a background fold fails quietly, and the orphan it
+    wrote goes with the next commit's cleanup."""
+    store = str(tmp_path / "store")
+    base = [(k, "U", 0, k) for k in range(40)] + _BIG
+    _init(spark, store, base)
+    # the background case applies enough rows to make a fold due
+    b0 = [(k, "U", 1, -k) for k in range(0, 40, 3)] + (
+        [(k, "U", 1, -k) for k in range(1000, 21000, 2)] if fold == "background" else []
+    )
+    commit = cdc_stream._commit_manifest
+
+    def die_in_the_fold(store_dir, manifest):
+        if manifest["buckets"] != _current_manifest(store_dir)["buckets"]:
+            raise RuntimeError("killed before the fold's commit")
+        return commit(store_dir, manifest)
+
+    monkeypatch.setattr(cdc_stream, "_commit_manifest", die_in_the_fold)
+    _apply(spark, store, b0, 0)
+    if fold == "control_plane":
+        with pytest.raises(RuntimeError, match="killed"):
+            fold_cdc_store(spark, store)
+    else:
+        _settle(store)
+    monkeypatch.undo()
+    m = _current_manifest(store)
+    assert m["batch_id"] == 0 and len(m["deltas"]) == 1
+    referenced = {r.split("/", 1)[0] for rels in cdc_stream._rels(m) for r in rels}
+    [orphan] = set(os.listdir(os.path.join(store, "data"))) - referenced
+    assert any(d.startswith("_b=") for d in os.listdir(os.path.join(store, "data", orphan)))
+    assert os.path.abspath(store) not in cdc_stream._FOLDS
+    assert _view(spark, store) == _lww(base + b0)
+
+    b1 = [(7, "U", 2, 777)]
+    _apply(spark, store, b1, 1)
+    _settle(store)
+    assert not os.path.exists(os.path.join(store, "data", orphan))
+    assert _view(spark, store) == _lww(base + b0 + b1)
+
+
+def _commit_per_bucket_delta(spark, store, rows):
+    """Commit ``rows`` as batch 0 the way the store did when it wrote a
+    delta per bucket (``_b=<b>`` dirs listed as ``{bucket: [dirs]}``);
+    returns the delta's generation dir."""
+    m0 = _current_manifest(store)
+    gen = cdc_stream._next_gen(m0)
+    written = cdc_stream._write_generation(
+        cdc_stream._bucketed(_df(spark, rows), "k", m0["n_buckets"]), store, gen
+    )
+    cdc_stream._commit_manifest(store, {
+        **m0, "seq": 1, "batch_id": 0, "payload_cols": ["bal"],
+        "deltas": {b: [rel] for b, rel in written.items()},
+    })
+    return gen
+
+
+@pytest.mark.parametrize("then", ["fold", "purge"])
+def test_store_with_per_bucket_deltas_reads_folds_and_purges(spark, tmp_path, then):
+    """A manifest that lists its deltas per bucket (``{bucket: [dirs]}``,
+    as the store wrote them before a delta was one directory) reads,
+    keeps its delta dirs through a cleanup, and folds or purges."""
+    store = str(tmp_path / "store")
+    base = [(1, "U", 0, 100), (2, "U", 0, 200), (3, "U", 0, 300)]
+    _init(spark, store, base)
+    old = [(1, "U", 5, 111), (2, "D", 5, 0), (4, "I", 5, 400)]
+    gen = _commit_per_bucket_delta(spark, store, old)
+    assert _view(spark, store) == _lww(base + old)
+    cleanup_generations(store, retain_gens=1)
+    assert os.path.isdir(os.path.join(store, "data", gen))
+    assert _view(spark, store) == _lww(base + old)
+
+    if then == "fold":
+        assert fold_cdc_store(spark, store)["folded"]
+        assert _current_manifest(store)["deltas"] == []
+        assert _view(spark, store) == _lww(base + old)
+    else:
+        purge_tombstones(spark, store, ["seq"], "op", horizon=[6])
+        assert _current_manifest(store)["deltas"] == []
+        assert {r.k for r in cdc_stream._read_current(spark, store).collect()} == {1, 3, 4}
+        assert _view(spark, store) == _lww(base + old)
+
+
+def test_apply_on_per_bucket_deltas_lists_them_flat(spark, tmp_path):
+    """An apply on top of per-bucket deltas lists the old dirs and its
+    own in one flat list, and reads the same as applied in turn."""
+    store = str(tmp_path / "store")
+    base = [(1, "U", 0, 100), (2, "U", 0, 200)] + _BIG
+    _init(spark, store, base)
+    old = [(1, "U", 5, 111)]
+    gen = _commit_per_bucket_delta(spark, store, old)
+    new = [(2, "U", 6, 222)]
+    _apply(spark, store, new, 1)
+    deltas = _current_manifest(store)["deltas"]
+    assert {d.split("/", 1)[0] for d in deltas[:-1]} == {gen} and "/" not in deltas[-1]
+    assert _view(spark, store) == _lww(base + old + new)
+
+
+def test_apply_writes_one_file_per_task_and_runs_no_fold_job(spark, tmp_path):
+    """An apply writes its batch as one flat directory, one file per
+    write task and no bucket dirs, in one Spark job.  The fold that the
+    apply made due runs in jobs of its own (the ``cdc-fold`` group)."""
+    store = str(tmp_path / "store")
+    _init(spark, store, [(k, "U", 0, k) for k in range(50)])
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    folds_before = set(tracker.getJobIdsForGroup(cdc_stream.FOLD_POOL))
+    batch = _df(spark, [(k, "U", 5, -k) for k in range(0, 50, 2)]).coalesce(3)
+    sc.setJobGroup("cdc-apply-only", "one apply")
+    try:
+        apply_cdc_batch(spark, batch, 0, store, "k", ["seq"], "op", ["bal"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    [delta] = cdc_stream._read_manifest(store, 1)["deltas"]
+    files = os.listdir(os.path.join(store, "data", delta))
+    assert len([f for f in files if f.startswith("part-")]) == 3
+    assert not any(f.startswith("_b=") for f in files)
+    [job] = tracker.getJobIdsForGroup("cdc-apply-only")
+    assert [tracker.getStageInfo(s).numTasks for s in tracker.getJobInfo(job).stageIds] == [3]
+    _settle(store)
+    assert _current_manifest(store)["buckets"] != cdc_stream._read_manifest(store, 0)["buckets"]
+    assert set(tracker.getJobIdsForGroup(cdc_stream.FOLD_POOL)) - folds_before
+    assert tracker.getJobIdsForGroup("cdc-apply-only") == [job]
+
+
+_STOP_MID_FOLD = r"""
+import json, sys, threading, time
+
+import pandas as pd
+from pyspark.sql import functions as F, types as T
+
+from cassandra_extractor_spark.session import get_spark
+from cassandra_extractor_spark.streaming import cdc_stream as C
+
+store = sys.argv[1]
+spark = get_spark("stop-mid-fold", master="local[1]", shuffle_partitions=1)
+jvm = spark.sparkContext._gateway.proc.pid
+rows = lambda r: spark.createDataFrame(
+    pd.DataFrame(r, columns=["k", "op", "seq", "bal"]), "k LONG, op STRING, seq LONG, bal LONG")
+C.init_cdc_store(spark, rows([(k, "U", 0, k) for k in range(200)]), store,
+                 key="k", op_col="op", order_cols=["seq"], n_buckets=2)
+folding = threading.Event()
+write = C._write_generation
+slow = F.udf(lambda k: time.sleep(0.05) or True, T.BooleanType())
+
+def write_slowly(df, store_dir, gen):
+    if "_b" in df.columns:  # the fold's base: keep its write job running
+        folding.set()
+        df = df.where(slow("k"))
+    return write(df, store_dir, gen)
+
+C._write_generation = write_slowly
+C.apply_cdc_batch(spark, rows([(k, "U", 1, -k) for k in range(100)]), 0, store,
+                  "k", ["seq"], "op", ["bal"])
+assert folding.wait(120)
+time.sleep(3)
+seq = C._current_manifest(store)["seq"]
+spark.stop()
+for t in threading.enumerate():
+    if t.name.startswith("cdc-fold"):
+        t.join(120)
+print(json.dumps({
+    "jvm": jvm,
+    "alive": [t.name for t in threading.enumerate() if t.name.startswith("cdc-fold")],
+    "seq": [seq, C._current_manifest(store)["seq"]],
+    "folds": len(C._FOLDS),
+}))
+"""
+
+
+def test_stopping_the_session_mid_fold_leaves_no_thread_or_process(tmp_path):
+    """A session stopped while a background fold's job runs: the fold
+    fails quietly, commits nothing, and neither its thread, the Python
+    process nor the JVM outlives the stop."""
+    root = Path(__file__).resolve().parent.parent
+    env = {**os.environ, "PYTHONPATH": str(root), "SPARK_GRAFT_CPUS": "1",
+           "SPARK_GRAFT_DRIVER_MEM": "1g", "SPARK_LOCAL_DIRS": str(tmp_path / "local")}
+    run = subprocess.run([sys.executable, "-c", _STOP_MID_FOLD, str(tmp_path / "store")],
+                         cwd=tmp_path, env=env, capture_output=True, text=True, timeout=400)
+    assert run.returncode == 0, run.stderr[-3000:]
+    out = json.loads(run.stdout.strip().splitlines()[-1])
+    assert out["alive"] == [] and out["folds"] == 0
+    assert out["seq"][0] == out["seq"][1] == 1
+    assert "Exception in thread" not in run.stderr, run.stderr[-3000:]
+    deadline = time.monotonic() + 60
+    while _running(out["jvm"]) and time.monotonic() < deadline:
+        time.sleep(0.5)
+    assert not _running(out["jvm"])
+
+
+def _running(pid: int) -> bool:
+    """Whether ``pid`` is a live process (a zombie has exited)."""
+    try:
+        with open(f"/proc/{pid}/stat", encoding="ascii") as f:
+            return f.read().rsplit(")", 1)[1].split()[0] != "Z"
+    except FileNotFoundError:
+        return False

@@ -495,8 +495,9 @@ def test_posting_policy_counts_doclen_and_validates_pair(spark, tmp_path):
 def test_cdc_retention_over_control_plane(spark, tmp_path):
     """CDC retention ops ride /maintenance/compact (round-11): a purge
     drops tombstones below the horizon AND records the horizon fence —
-    a post-purge stale update below the horizon is rejected; a retain
-    op prunes old manifests/generations but never the current one."""
+    a post-purge stale update below the horizon is rejected; a fold op
+    settles the store; a retain op prunes old manifests/generations but
+    never the current one."""
     import urllib.request as _rq
 
     import pandas as pd
@@ -555,6 +556,12 @@ def test_cdc_retention_over_control_plane(spark, tmp_path):
         )
         view = {r.k: r.v for r in read_cdc_view(spark, store).collect()}
         assert view == {2: "b"}
+        # settle: the apply's background fold (if any) ends, and what
+        # it left outstanding is folded — no commit lands after this
+        out = post({"store": "cdc", "op": "fold", "store_dir": store})
+        assert out["status"] == "folded" and out["deltas"] == 0
+        assert out["seq"] == _current_manifest(store)["seq"]
+        assert {r.k: r.v for r in read_cdc_view(spark, store).collect()} == {2: "b"}
         # retention: keep only the newest manifest; current survives
         n_before = len(_manifest_seqs(store))
         rep = post({"store": "cdc", "op": "retain", "store_dir": store,

@@ -149,13 +149,16 @@ def test_stream_cdc_apply_view_parity_stale_and_replay(spark, tmp_path):
 
     # restart with LATE STALE changes: older update for k=1 (must not
     # regress 111) and an older update for deleted k=2 (tombstone wins).
-    # Delta-store contract: this batch lands as a delta (the previous
-    # batch folded), so the base buckets of every OTHER key carry their
-    # existing data dirs forward verbatim (files not rewritten).
+    # Delta-store contract: this batch lands as a delta, so its commit
+    # carries the base buckets of every OTHER key forward verbatim
+    # (files not rewritten).  The background fold of the first run is
+    # settled first, so the batch's commit is the next seq.
     from pyspark.sql import functions as F
 
     from cassandra_extractor_spark.streaming.cdc_stream import (
         _current_manifest,
+        _read_manifest,
+        _wait_for_fold,
     )
 
     def bucket_of(k, n):
@@ -170,6 +173,7 @@ def test_stream_cdc_apply_view_parity_stale_and_replay(spark, tmp_path):
             .b
         )
 
+    _wait_for_fold(store)
     before_m = _current_manifest(store)
     nb = before_m["n_buckets"]
     touched = {str(bucket_of(1, nb)), str(bucket_of(2, nb))}
@@ -188,8 +192,8 @@ def test_stream_cdc_apply_view_parity_stale_and_replay(spark, tmp_path):
     run()
     assert view() == batch_truth() == {1: 111, 3: 333}
 
-    after_m = _current_manifest(store)
-    assert after_m["seq"] > before_m["seq"]
+    after_m = _read_manifest(store, before_m["seq"] + 1)
+    assert after_m["batch_id"] == 2
     for b, (rel, stamps) in untouched_before.items():
         assert after_m["buckets"][b] == rel  # dir carried forward
         assert file_stamps(rel) == stamps  # files never rewritten

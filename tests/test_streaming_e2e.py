@@ -207,3 +207,30 @@ def test_app_streaming_runs_one_job_per_micro_batch(spark, sf_dir, tmp_path, mon
     jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(runs[0])
     assert batches and len(jobs) == len(batches)
     assert actuators[0].jobs["events"].processed == delivered > 0
+
+
+def test_app_streaming_reads_a_table_stored_as_a_directory(spark, sf_dir, tmp_path):
+    """``app.main --streaming`` over ``events.parquet/`` holding two part
+    files delivers every row, as batch mode does."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+
+    from cassandra_extractor_spark import app as app_mod
+
+    table = pq.read_table(f"{sf_dir}/events.parquet")
+    src = tmp_path / "src"
+    (src / "events.parquet").mkdir(parents=True)
+    half = table.num_rows // 2
+    pq.write_table(table.slice(0, half), src / "events.parquet" / "part-0.parquet")
+    pq.write_table(table.slice(half), src / "events.parquet" / "part-1.parquet")
+    out = tmp_path / "out"
+    rc = app_mod.main(["-T", "events", "--sf-dir", str(src), "--output", str(out),
+                       "--streaming"])
+    assert rc == 0
+    got = []
+    for f in glob.glob(f"{out}/events/batch=*/*.json"):
+        with open(f) as fh:
+            got += [json.loads(line)["event_id"] for line in fh]
+    assert sorted(got) == sorted(table.column("event_id").to_pylist())
