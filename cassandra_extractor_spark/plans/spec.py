@@ -18,7 +18,7 @@ from typing import Any
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from cassandra_extractor_spark.functions.tablespecs import TableSpec, apply_table_spec
-from cassandra_extractor_spark.sources.catalog import load_table
+from cassandra_extractor_spark.sources.catalog import load_table, read_table
 from cassandra_extractor_spark.streaming.hwm import HighWaterMarkStore, plan_incremental
 
 
@@ -44,7 +44,19 @@ class ExtractionSpec:
         source_df: DataFrame | None = None,
     ) -> DataFrame:
         self._hwm_commit = None  # never carry a stale commit across builds
-        df = source_df if source_df is not None else load_table(spark, self.table, sf_dir)
+        if self.hwm_column and self.limit is not None:
+            raise ValueError(
+                "limit cannot be combined with hwm_column: the high-water mark "
+                "is taken over the whole window, so rows past the limit would be lost"
+            )
+        if source_df is not None:
+            df = source_df
+        elif self.hwm_column:
+            # each incremental run lists the table afresh: load_table's
+            # memoized plan pins the listing of its first call
+            df = read_table(spark, self.table, sf_dir)
+        else:
+            df = load_table(spark, self.table, sf_dir)
         if self.columns:
             df = df.select(*self.columns)
         if self.filter:

@@ -33,21 +33,13 @@ DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
-    """Load one test table as a DataFrame (parquet path).
+    """Load one test table as a DataFrame (parquet path), memoized.
 
     Filters/projections applied by callers are pushed into the parquet
     scan by Catalyst (check ``PushedFilters`` / ``ReadSchema`` in
     ``df.explain("formatted")``).
     """
     sf_dir = sf_dir or DEFAULT_SF_DIR
-    # timestamp semantics (literals, date_trunc, year/month) must be UTC
-    # regardless of the caller-provided session's timezone — the oracle
-    # treats the naive parquet timestamps as UTC
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        # events.ts is parquet TIMESTAMP(NANOS), unreadable by default;
-        # set here (runtime-settable) so any caller-provided session works
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # Memoize the ANALYZED PLAN per (session, dir, table): spark.read
     # .parquet is a ~0.1 s JVM round-trip (file listing + footer schema)
     # that a 241-query suite pays thousands of times over.  DataFrames
@@ -55,8 +47,9 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     # execution still scans parquet — this caches no data.  It DOES pin
     # the file listing, which is correct here because catalog tables
     # are immutable snapshot dirs (mutable paths go through
-    # read_source/readStream, never this entry point; callers that DO
-    # rewrite a directory in place must call invalidate_table_cache).
+    # read_table/read_source/readStream, never this entry point; callers
+    # that DO rewrite a directory in place must call
+    # invalidate_table_cache).
     # The cache lives ON the session object, so a stopped/replaced
     # session can never leak stale JVM handles through the module, and
     # it is LRU-capped: the hypothesis differential sweeps feed
@@ -69,9 +62,21 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     # invalidate_table_cache with a different spelling still hits it
     key = (_norm_dir(sf_dir), name)
     if key in cache:
+        _pin_session(spark, name)
         cache[key] = cache.pop(key)  # move-to-end: mark most recent
         return cache[key]
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = read_table(spark, name, sf_dir)
+    while len(cache) >= _TABLE_CACHE_CAP:
+        cache.pop(next(iter(cache)))  # evict least-recently-used
+    cache[key] = df
+    return df
+
+
+def read_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
+    """Load one test table with a fresh file listing (``load_table``
+    without the memo): for a table directory that files land in."""
+    _pin_session(spark, name)
+    df = spark.read.parquet(os.path.join(sf_dir or DEFAULT_SF_DIR, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # parquet TIMESTAMP(NANOS) read as long ns (see session.py conf);
         # Spark timestamps are µs precision → truncate ns → µs
@@ -80,16 +85,25 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     # tz-naive parquet timestamps (isAdjustedToUTC=false) load as
     # TIMESTAMP_NTZ under Spark's default inferTimestampNTZ; downstream
     # operators use unix_millis/unix_micros, which require TIMESTAMP.
-    # With the session tz pinned to UTC above, NTZ→TIMESTAMP is a pure
+    # With the session tz pinned to UTC, NTZ→TIMESTAMP is a pure
     # reinterpretation of the wall time as a UTC instant — exactly how
     # the DuckDB oracle treats the same naive values.
     ntz_cols = [c for c, t in df.dtypes if t == "timestamp_ntz"]
     if ntz_cols:
         df = df.withColumns({c: F.col(c).cast("timestamp") for c in ntz_cols})
-    while len(cache) >= _TABLE_CACHE_CAP:
-        cache.pop(next(iter(cache)))  # evict least-recently-used
-    cache[key] = df
     return df
+
+
+def _pin_session(spark: SparkSession, name: str) -> None:
+    """The session settings the test tables are read under."""
+    # timestamp semantics (literals, date_trunc, year/month) must be UTC
+    # regardless of the caller-provided session's timezone — the oracle
+    # treats the naive parquet timestamps as UTC
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    if name == "events":
+        # events.ts is parquet TIMESTAMP(NANOS), unreadable by default;
+        # set here (runtime-settable) so any caller-provided session works
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
 
 
 def _norm_dir(sf_dir: str) -> str:

@@ -1,14 +1,39 @@
 """Incremental extraction via a modified-timestamp high-water mark.
 
 Reference semantics (P3, worker.py:194-198 + datacrawler.py:400-408,
-485-491): at the start of an extraction the current max modified
-timestamp is captured; rows with ``ts >= hwm`` are EXCLUDED (they were
-modified during/after this extraction and are deferred to the next
-run); the mark is persisted (Redis there, a JSON state file here —
-Structured Streaming's checkpoint plays this role in streaming mode).
+485-491): a run extracts the rows in ``[previous mark, new mark)``;
+rows with ``ts >= new mark`` are EXCLUDED (they were modified
+during/after this extraction and are deferred to the next run); the
+mark is persisted (Redis there, a JSON state file here — Structured
+Streaming's checkpoint plays this role in streaming mode).
 
 The ``>=`` boundary is load-bearing and unit-tested: a record modified
 exactly at the mark must NOT be extracted (SURVEY §7.3.4).
+
+A run takes one of two plans, chosen from the frame (``plan_incremental``):
+
+- **One scan** — the frame is one file relation under row-wise
+  projections and filters (``load_table``, ``read_source``).  Spark
+  lists a file relation's files when the frame is built, so its scan is
+  a snapshot: a row landed later sits in a file this frame never reads.
+  The run scans ``ts >= previous mark`` once and takes the new mark from
+  that scan itself (``max(ts)`` + 1µs, through an ``Observation`` read
+  off the window's first action, which must read the window whole).  It
+  also skips every file the last committed run listed: that run's mark
+  lies above each of their rows, so skipping them is exact.  File
+  identity, not modification time, names them: a writer that renames a
+  file into place after a listing (Spark's own job commit does) can
+  give it an mtime from before that listing.  Files are assumed
+  immutable once listed, as Structured Streaming's file source assumes.
+- **Capture first** — any other frame: the Cassandra connector, JDBC,
+  in-memory frames, joins and aggregates.  A live source is no
+  snapshot: a row written below the max during the scan would be lost.
+  So one job captures ``max(ts)`` first, and the window is the rows
+  below it + 1µs.
+
+Marks are rendered by Spark in the session time zone, the zone
+``hwm_filter`` parses them in: never by the Python process, which
+renders a collected TIMESTAMP in its own local zone.
 """
 
 from __future__ import annotations
@@ -19,34 +44,47 @@ import os
 import threading
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 #: serializes every load-modify-replace of a state file in this process:
 #: the app runs one job thread per table, all on one file
 _WRITE_LOCK = threading.Lock()
 
+#: plan nodes that map each input row to at most one output row, unchanged
+#: in its source file: a window over them may skip whole files
+_ROW_WISE = {"Project", "Filter", "SubqueryAlias"}
+
 
 @dataclass
 class HighWaterMarkStore:
     """Persisted per-table watermark (replaces the reference's Redis
-    ``{table}-modified-timestamp-filter`` key).  Safe to share between
-    threads: a write replaces the file whole, and writes take turns."""
+    ``{table}-modified-timestamp-filter`` key), with the files the run
+    that committed it listed.  Safe to share between threads: a write
+    replaces the file whole, and writes take turns.
+
+    The state file maps each table to ``{"mark": ..., "files": [...]}``;
+    one in the flat ``{table: mark}`` form loads with no files."""
 
     path: str
 
-    def _load(self) -> dict:
-        if os.path.exists(self.path):
-            with open(self.path, encoding="utf-8") as f:
-                return json.load(f)
-        return {}
+    def _load(self) -> dict[str, dict]:
+        if not os.path.exists(self.path):
+            return {}
+        with open(self.path, encoding="utf-8") as f:
+            state = json.load(f)
+        return {t: e if isinstance(e, dict) else {"mark": e} for t, e in state.items()}
 
     def get(self, table: str) -> str | None:
-        return self._load().get(table)
+        return self._load().get(table, {}).get("mark")
+
+    def files(self, table: str) -> list[str]:
+        """The source files the run that committed ``table``'s mark listed."""
+        return self._load().get(table, {}).get("files", [])
 
     def dump(self) -> dict:
         """Public snapshot of all per-table watermarks (the actuator's
         GET /state view)."""
-        return self._load()
+        return {t: e["mark"] for t, e in self._load().items()}
 
     def _write(self, state: dict) -> None:
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
@@ -55,22 +93,35 @@ class HighWaterMarkStore:
             json.dump(state, f)
         os.replace(tmp, self.path)
 
-    def set(self, table: str, value: str) -> None:
+    def set(self, table: str, value: str, files: list[str] | None = None) -> None:
+        """Replace ``table``'s mark and its listed files in one write."""
+        entry = {"mark": value, "files": files} if files else {"mark": value}
         with _WRITE_LOCK:
-            self._write({**self._load(), table: value})
+            self._write({**self._load(), table: entry})
 
     def clear(self, table: str) -> None:
+        """Forget ``table``'s mark and listed files."""
         with _WRITE_LOCK:
             state = self._load()
             state.pop(table, None)
             self._write(state)
 
 
+def _render(ts: Column) -> Column:
+    """A timestamp as text in the session time zone, which
+    ``to_timestamp`` parses it back in."""
+    return ts.cast("string")
+
+
+def _shift(mark: str, us: int) -> str:
+    """``mark`` moved by ``us`` microseconds of wall time."""
+    return (_dt.datetime.fromisoformat(mark) + _dt.timedelta(microseconds=us)).isoformat(sep=" ")
+
+
 def capture_hwm(df: DataFrame, ts_col: str) -> str | None:
     """Current max timestamp — captured once at extraction start
     (datacrawler.py:485-491 captures it on the first fetched page)."""
-    row = df.agg(F.max(ts_col).alias("m")).head()
-    return None if row["m"] is None else row["m"].isoformat(sep=" ")
+    return df.agg(_render(F.max(ts_col)).alias("m")).head()["m"]
 
 
 def hwm_filter(df: DataFrame, ts_col: str, hwm: str | None) -> DataFrame:
@@ -81,6 +132,36 @@ def hwm_filter(df: DataFrame, ts_col: str, hwm: str | None) -> DataFrame:
     return df.where(F.col(ts_col) < F.to_timestamp(F.lit(hwm)))
 
 
+def _single_file_scan(df: DataFrame) -> bool:
+    """Whether ``df`` reads one file relation through row-wise nodes only."""
+    node = df._jdf.queryExecution().analyzed()
+    while node.getClass().getSimpleName() in _ROW_WISE:
+        node = node.children().apply(0)
+    return (
+        node.getClass().getSimpleName() == "LogicalRelation"
+        and node.relation().getClass().getSimpleName() == "HadoopFsRelation"
+    )
+
+
+def _file_path(uri: str) -> str:
+    """``inputFiles()``'s spelling of a local file (``file:///x``) in
+    ``_metadata.file_path``'s (``file:/x``)."""
+    return "file:/" + uri[len("file:///"):] if uri.startswith("file:///") else uri
+
+
+def _observed(obs: Observation, df: DataFrame) -> dict:
+    """``obs``'s metrics, or ``RuntimeError`` if no action on its frame
+    has finished (``Observation.get`` would wait for one forever)."""
+    done = obs._jo.future()
+    if not done.isCompleted():
+        # the metrics reach the Observation on the listener bus, after
+        # the action has returned
+        df.sparkSession.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    if not done.isCompleted():
+        raise RuntimeError("commit() before any action ran the incremental window")
+    return obs.get
+
+
 def plan_incremental(
     df: DataFrame,
     ts_col: str,
@@ -88,46 +169,71 @@ def plan_incremental(
     store: HighWaterMarkStore,
     lateness_us: int = 0,
 ):
-    """Plan one incremental run: rows in ``[previous_hwm, new_hwm)``,
-    ``new_hwm`` captured over the rows at or past ``previous_hwm``.
+    """Plan one incremental run: the rows at or past the previous mark
+    and below the new one.
 
-    Returns ``(filtered_df, commit)`` — the caller runs its sink writes
+    Returns ``(window_df, commit)`` — the caller runs its sink writes
     and calls ``commit()`` ONLY on success.  Committing the mark before
     the write would lose the window on a crash (the next run would skip
-    it); deferring makes a crashed run re-extract the same closed
-    window idempotently.
+    it); deferring makes a crashed run re-extract the same window
+    idempotently.  A window with no rows leaves the state as it is.
 
-    The mark is the captured max + 1µs so the max row itself is
+    The new mark is the window's max + 1µs, so the max row itself is
     extracted THIS run (otherwise a quiescent table never emits its
-    last row).  Trade-off: a writer that inserts ``ts == max`` AFTER
-    capture falls below the committed mark and would be skipped; if the
-    source can produce such ties (coarse timestamps, clock skew), set
-    ``lateness_us`` — the committed mark is backed off by that margin
-    and the overlap is re-extracted next run (pair with idempotent
-    sinks).
+    last row).  Trade-off: a writer that inserts ``ts == max`` after
+    the max was taken falls below the committed mark and would be
+    skipped; if the source can produce such ties (coarse timestamps,
+    clock skew), set ``lateness_us`` — the committed mark is backed off
+    by that margin and the overlap is re-extracted next run (pair with
+    idempotent sinks).  With ``lateness_us`` no file is skipped: the
+    overlap lives in files earlier runs listed.
+
+    The plan (see the module docstring):
+
+    - ``df`` is one file relation under row-wise nodes: ONE scan.  The
+      window is every listed row with ``ts >= previous mark``, minus
+      the files the last committed run listed, and ``commit()`` writes
+      the max the window's first action observed, with this listing.
+      Precondition: that first action reads the window whole, as
+      ``fan_out``'s does (the ``noop`` materialization, or a lone
+      sink's full write).  A partial first action observes a max at or
+      below the true one, so the mark alone would only re-deliver
+      rows; but the listing ``commit()`` records would then skip the
+      unread rows of those files.  ``commit()`` before any action ran
+      the window raises ``RuntimeError``.
+    - any other frame: a capture job takes the max first and the window
+      is ``[previous mark, max + 1µs)``.
     """
     prev = store.get(table)
+    if prev is None:
+        since = F.col(ts_col).isNotNull()
+    else:
+        since = F.col(ts_col) >= F.to_timestamp(F.lit(prev))
+    if _single_file_scan(df):
+        listing, done = [], []
+        if not lateness_us:
+            listing = [_file_path(f) for f in df.inputFiles()]
+            done = store.files(table)
+        if done:
+            df = df.where(~F.col("_metadata.file_path").isin(done))
+        obs = Observation()
+        out = df.where(since).observe(obs, _render(F.max(ts_col)).alias("max"))
+
+        def commit() -> None:
+            top = _observed(obs, out)["max"]
+            if top is not None:
+                store.set(table, _shift(top, 1 - lateness_us), listing)
+
+        return out, commit
+
     if prev is not None:
         # capture over the rows past the mark only: a source that takes
-        # the predicate (parquet row-group statistics on UTC-adjusted
-        # timestamps; not on TIMESTAMP_NTZ) skips what earlier runs read
-        df = df.where(F.col(ts_col) >= F.to_timestamp(F.lit(prev)))
-    new = capture_hwm(df, ts_col)
-    if new is None:
+        # the predicate skips what earlier runs read
+        df = df.where(since)
+    top = capture_hwm(df, ts_col)
+    if top is None:
         # no row at or past the mark (or no timestamp at all): the
         # window is empty and the mark stays where it is
         return df.where(F.lit(False)), lambda: None
-    new = (
-        _dt.datetime.fromisoformat(new) + _dt.timedelta(microseconds=1)
-    ).isoformat(sep=" ")
-    out = hwm_filter(df, ts_col, new)
-
-    def commit() -> None:
-        mark = new
-        if lateness_us:
-            mark = (
-                _dt.datetime.fromisoformat(new) - _dt.timedelta(microseconds=lateness_us)
-            ).isoformat(sep=" ")
-        store.set(table, mark)
-
-    return out, commit
+    new = _shift(top, 1)
+    return hwm_filter(df, ts_col, new), lambda: store.set(table, _shift(new, -lateness_us))

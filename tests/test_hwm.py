@@ -4,6 +4,10 @@ from __future__ import annotations
 
 import datetime
 
+import numpy as np
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import Row
 
 from cassandra_extractor_spark.streaming.hwm import (
@@ -102,67 +106,265 @@ def test_source_without_timestamps_has_an_empty_window(spark, tmp_path):
     assert store.get("t") is None
 
 
-def test_capture_reads_only_rows_past_the_mark(spark, tmp_path, monkeypatch):
-    """Over a source of one file per slice (UTC-adjusted timestamps,
-    which parquet row-group statistics can prune on), a run after the
-    first scans the new slice, not the history: the rows the capture
-    and the extraction scan stay within 4x the rows emitted."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-    from pyspark.sql import functions as F
+T0 = np.datetime64("2024-01-01T00:00:00", "us")
 
-    from cassandra_extractor_spark.streaming import hwm
 
-    src = tmp_path / "src"
-    src.mkdir()
-    t0 = np.datetime64("2024-01-01T00:00:00", "us")
+def _land(src, i, n=100, utc=True):
+    """Slice ``i`` of a change log: one parquet file of ``n`` rows, ids
+    ``i*n..``, one second apart, ``TIMESTAMP`` (``utc``) or ``TIMESTAMP_NTZ``."""
+    ts = pa.array(T0 + np.arange(i * n, (i + 1) * n) * np.timedelta64(1, "s"))
+    if utc:
+        ts = ts.cast(pa.timestamp("us", tz="UTC"))
+    pq.write_table(pa.table({"id": np.arange(i * n, (i + 1) * n), "ts": ts}),
+                   src / f"slice-{i:03d}.parquet")
 
-    def land(i, n=100):
-        ts = t0 + np.arange(i * n, (i + 1) * n) * np.timedelta64(1, "s")
-        pq.write_table(
-            pa.table({"id": np.arange(i * n, (i + 1) * n),
-                      "ts": pa.array(ts).cast(pa.timestamp("us", tz="UTC"))}),
-            src / f"slice-{i:03d}.parquet",
-        )
 
-    def scanned(df) -> int:
-        """Rows the file scans of ``df`` output (row groups the pushed
-        filter skipped are never read)."""
-        plan = df._jdf.queryExecution().executedPlan()
-        leaves = plan.collectLeaves()
-        return sum(
-            leaves.apply(i).metrics().get("numOutputRows").get().value()
-            for i in range(leaves.size())
-        )
+def _run(spark, src, store, **kw):
+    """One incremental run over the files in ``src``: the window's ids,
+    read by its first action, and the commit."""
+    out, commit = plan_incremental(spark.read.parquet(str(src)), "ts", "t", store, **kw)
+    return sorted(r["id"] for r in out.select("id").collect()), commit
 
-    captured = []
 
-    def traced_capture(df, ts_col):
-        agg = df.agg(F.max(ts_col).alias("m"))
-        row = agg.collect()[0]
-        captured.append(scanned(agg))
-        return None if row["m"] is None else row["m"].isoformat(sep=" ")
+def _scanned(df) -> int:
+    """Rows the file scans of ``df``'s last execution output."""
+    leaves = df._jdf.queryExecution().executedPlan().collectLeaves()
+    return sum(
+        leaves.apply(i).metrics().get("numOutputRows").get().value()
+        for i in range(leaves.size())
+    )
 
-    monkeypatch.setattr(hwm, "capture_hwm", traced_capture)
-    store = HighWaterMarkStore(str(tmp_path / "hwm.json"))
+
+@pytest.fixture
+def src(tmp_path):
+    path = tmp_path / "src"
+    path.mkdir()
+    return path
+
+
+@pytest.fixture
+def store(tmp_path):
+    return HighWaterMarkStore(str(tmp_path / "hwm.json"))
+
+
+def test_capture_reads_only_rows_past_the_mark(spark, tmp_path):
+    """Over a source of one file per slice, a run after the first scans
+    the new slice and nothing else: the rows its scan outputs equal the
+    rows it emits, on UTC-adjusted and on TIMESTAMP_NTZ slices (which
+    row-group statistics cannot prune).  Twelve committed slices also
+    take the skip list past Spark's IN→INSET conversion."""
     adaptive = spark.conf.get("spark.sql.adaptive.enabled")
     # without adaptive execution the executed plan keeps its scan nodes
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        for i in range(10):
-            land(i)
-        out, commit = plan_incremental(spark.read.parquet(str(src)), "ts", "t", store)
-        assert out.count() == 1000
-        commit()
-        land(10)
-        out, commit = plan_incremental(spark.read.parquet(str(src)), "ts", "t", store)
-        ids = out.select("id")
-        emitted = ids.collect()
-        assert sorted(r["id"] for r in emitted) == list(range(1000, 1100))
-        assert (captured[-1] + scanned(ids)) / len(emitted) <= 4
+        for utc in (True, False):
+            src = tmp_path / f"src-{utc}"
+            src.mkdir()
+            store = HighWaterMarkStore(str(tmp_path / f"hwm-{utc}.json"))
+            for i in range(12):
+                _land(src, i, utc=utc)
+            ids, commit = _run(spark, src, store)
+            assert ids == list(range(1200))
+            commit()
+            _land(src, 12, utc=utc)
+            out, commit = plan_incremental(spark.read.parquet(str(src)), "ts", "t", store)
+            window = out.select("id")
+            emitted = sorted(r["id"] for r in window.collect())
+            assert emitted == list(range(1200, 1300))
+            assert _scanned(window) == len(emitted)
+            commit()
+            assert _run(spark, src, store)[0] == []
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", adaptive)
+
+
+def _jobs(spark, group, action):
+    """Spark jobs ``action()`` runs, counted by job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_file_source_runs_one_job_and_no_capture(spark, src, store, monkeypatch):
+    """On a file source the window is one scan: one Spark job for the
+    window's write and none for a capture.  A non-file frame still
+    captures first."""
+    from cassandra_extractor_spark.streaming import hwm
+
+    captures = []
+    real = hwm.capture_hwm
+    monkeypatch.setattr(hwm, "capture_hwm", lambda df, c: captures.append(c) or real(df, c))
+    _land(src, 0)
+    ids, commit = _run(spark, src, store)
+    commit()
+    _land(src, 1)
+    source = spark.read.parquet(str(src))
+
+    def run():
+        out, commit = hwm.plan_incremental(source, "ts", "t", store)
+        out.write.format("noop").mode("overwrite").save()
+        commit()
+
+    assert _jobs(spark, "hwm-one-scan", run) == 1
+    assert captures == []
+    assert store.get("t") == "2024-01-01 00:03:19.000001"
+    out, _ = hwm.plan_incremental(_df(spark, 1, 5), "ts", "m", store)
+    assert out.count() == 2 and captures == ["ts"]
+
+
+def test_failed_sinks_commit_nothing_and_the_next_run_redelivers(spark, src, store):
+    """A run whose sinks fail commits nothing, so no mark passes a row no
+    run delivered: the next run re-reads the same files and delivers the
+    same window (plus what landed since)."""
+    from cassandra_extractor_spark.sinks.fanout import fan_out
+
+    _land(src, 0)
+    ids, commit = _run(spark, src, store)
+    commit()
+    _land(src, 1)
+    delivered = []
+
+    def broken(d):
+        raise OSError("sink down")
+
+    out, commit = plan_incremental(spark.read.parquet(str(src)), "ts", "t", store)
+    results = fan_out(out, {"ok": lambda d: delivered.extend(r["id"] for r in d.collect()),
+                            "broken": broken})
+    assert isinstance(results["broken"], OSError)
+    assert sorted(delivered) == list(range(100, 200))  # not committed
+    _land(src, 2)
+    ids, commit = _run(spark, src, store)
+    assert ids == list(range(100, 300))
+    commit()
+    assert _run(spark, src, store)[0] == []
+
+
+def test_file_source_lateness_overlap_is_re_extracted(spark, src, store):
+    """With ``lateness_us`` a file source skips no file: the overlap
+    below the mark lives in files an earlier run listed."""
+    for i in range(3):
+        _land(src, i)
+    ids, commit = _run(spark, src, store, lateness_us=50 * 10**6)
+    assert ids == list(range(300))
+    commit()
+    assert store.files("t") == []
+    assert _run(spark, src, store, lateness_us=50 * 10**6)[0] == list(range(250, 300))
+
+
+def test_cache_clear_makes_the_next_run_read_every_file(spark, src, store):
+    """``/cache/clear`` forgets the mark and the listed files."""
+    from cassandra_extractor_spark.actuator import Actuator
+
+    for i in range(2):
+        _land(src, i)
+    ids, commit = _run(spark, src, store)
+    commit()
+    assert len(store.files("t")) == 2
+    actuator = Actuator(spark)
+    actuator.hwm_store = store
+    assert actuator.cache_clear("t")["hwm"] == ["t"]
+    assert store.files("t") == [] and store.get("t") is None
+    assert _run(spark, src, store)[0] == list(range(200))
+
+
+def test_flat_state_file_loads(spark, src, tmp_path):
+    """A state file in the flat ``{table: mark}`` form loads as marks
+    without listed files."""
+    import json
+
+    path = tmp_path / "flat.json"
+    path.write_text(json.dumps({"t": "2024-01-01 00:01:40", "u": "2024-02-01 00:00:00"}))
+    store = HighWaterMarkStore(str(path))
+    assert store.dump() == {"t": "2024-01-01 00:01:40", "u": "2024-02-01 00:00:00"}
+    assert store.files("t") == []
+    for i in range(2):
+        _land(src, i)
+    ids, commit = _run(spark, src, store)
+    assert ids == list(range(100, 200))
+    commit()
+    assert store.dump() == {"t": "2024-01-01 00:03:19.000001", "u": "2024-02-01 00:00:00"}
+
+
+def test_commit_before_the_window_ran_raises(spark, src, store):
+    _land(src, 0)
+    out, commit = plan_incremental(spark.read.parquet(str(src)), "ts", "t", store)
+    with pytest.raises(RuntimeError, match="before any action"):
+        commit()
+    assert store.get("t") is None
+
+
+@pytest.mark.parametrize("kind", ["file", "in_memory"])
+def test_mark_is_rendered_in_the_session_zone(spark, tmp_path, kind):
+    """The Python process's local zone must not leak into the mark: a
+    driver in Asia/Tokyo once committed 09:00 for a 00:00 UTC row and the
+    next run skipped a row at 03:00."""
+    import os
+    import time
+
+    src = tmp_path / "src"
+    src.mkdir()
+    store = HighWaterMarkStore(str(tmp_path / "hwm.json"))
+
+    landed = []
+
+    def land(hour):
+        """The source after a row lands at ``hour``:00 UTC."""
+        landed.append(hour)
+        if kind == "file":
+            ts = pa.array([np.datetime64(f"2024-01-01T{hour:02d}", "us")])
+            pq.write_table(pa.table({"id": [hour], "ts": ts.cast(pa.timestamp("us", tz="UTC"))}),
+                           src / f"h{hour}.parquet")
+            return spark.read.parquet(str(src))
+        values = ", ".join(f"({h}, TIMESTAMP'2024-01-01 {h:02d}:00:00')" for h in landed)
+        return spark.sql(f"SELECT * FROM VALUES {values} AS t(id, ts)")
+
+    zone = os.environ.get("TZ")
+    os.environ["TZ"] = "Asia/Tokyo"
+    time.tzset()
+    try:
+        out, commit = plan_incremental(land(0), "ts", "t", store)
+        assert [r["id"] for r in out.collect()] == [0]
+        commit()
+        assert store.get("t") == "2024-01-01 00:00:00.000001"
+        out, commit = plan_incremental(land(3), "ts", "t", store)
+        assert [r["id"] for r in out.collect()] == [3]
+    finally:
+        if zone is None:
+            os.environ.pop("TZ")
+        else:
+            os.environ["TZ"] = zone
+        time.tzset()
+
+
+def test_limit_with_hwm_column_is_refused(spark, tmp_path):
+    """A capped window under a mark taken over all of it would lose the
+    rows past the cap for good."""
+    from cassandra_extractor_spark.plans.spec import ExtractionSpec
+
+    spec = ExtractionSpec(table="t", hwm_column="ts", limit=3)
+    with pytest.raises(ValueError, match="limit"):
+        spec.build(spark, hwm_store=HighWaterMarkStore(str(tmp_path / "hwm.json")),
+                   source_df=_df(spark, 1, 2, 3, 4))
+
+
+def test_incremental_spec_lists_the_table_afresh(spark, tmp_path):
+    """The app's incremental build sees files landed after its first run
+    (a memoized table plan would pin the first listing)."""
+    from cassandra_extractor_spark.plans.spec import ExtractionSpec
+
+    table = tmp_path / "changes.parquet"
+    table.mkdir()
+    store = HighWaterMarkStore(str(tmp_path / "hwm.json"))
+    spec = ExtractionSpec(table="changes", hwm_column="ts")
+    for i in range(2):
+        _land(table, i, n=10, utc=False)
+        df = spec.build(spark, str(tmp_path), store)
+        assert sorted(r["id"] for r in df.collect()) == list(range(i * 10, (i + 1) * 10))
+        spec._hwm_commit()
 
 
 def test_concurrent_tables_keep_every_mark(tmp_path):

@@ -1,0 +1,110 @@
+"""Paired benchmark runs of two checkouts, and the gain verdict on them.
+
+    python3 tools/perf_pairs.py --parent ../parent --change . \\
+        --workload incremental_cdc --seeds 11-20 [--out pairs.jsonl]
+
+For every seed, runs ``perfbench/run.py --trace 0`` once in each
+checkout, alternating which side runs first, with the run length that
+``BENCHMARK.json`` fixes.  Then prints, for each end-to-end metric, each
+side's median and quartiles, the pairs the change won, and the verdict:
+the change shows a gain when it wins at least nine tenths of the pairs
+(ties count for neither side) and the medians differ, in its favour, by
+more than the distance between the parent's quartiles.  Every run's
+result goes to ``--out`` as one JSON line.
+"""
+
+from __future__ import annotations
+
+import argparse
+import json
+import os
+import statistics
+import subprocess
+import sys
+
+
+def parse_seeds(spec: str) -> list[int]:
+    """``"11-20"`` or ``"1,3,5"`` (or a mix) as a list of seeds."""
+    seeds: list[int] = []
+    for part in spec.split(","):
+        lo, _, hi = part.partition("-")
+        seeds.extend(range(int(lo), int(hi or lo) + 1))
+    return seeds
+
+
+def quartiles(xs: list[float]) -> tuple[float, float, float]:
+    """(first quartile, median, third quartile)."""
+    q1, med, q3 = statistics.quantiles(xs, n=4, method="inclusive")
+    return q1, med, q3
+
+
+def verdict(parent: list[float], change: list[float], better: str) -> dict:
+    """The pair rule over runs paired by position.  ``better`` is
+    ``"lower"`` or ``"higher"``."""
+    sign = 1 if better == "lower" else -1
+    wins = sum(sign * (p - c) > 0 for p, c in zip(parent, change))
+    losses = sum(sign * (p - c) < 0 for p, c in zip(parent, change))
+    p1, pmed, p3 = quartiles(parent)
+    _, cmed, _ = quartiles(change)
+    gap = sign * (pmed - cmed)
+    return {
+        "pairs": len(parent),
+        "wins": wins,
+        "losses": losses,
+        "gap": gap,
+        "parent_iqr": p3 - p1,
+        "gain": wins >= 0.9 * len(parent) and gap > p3 - p1,
+    }
+
+
+def run_one(checkout: str, workload: str, seed: int, seconds: float) -> dict:
+    cmd = [sys.executable, "perfbench/run.py", "--workload", workload, "--seed", str(seed),
+           "--seconds", str(seconds), "--trace", "0"]
+    proc = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True, check=False)
+    lines = proc.stdout.strip().splitlines()
+    if proc.returncode != 0 or not lines:
+        raise RuntimeError(f"{checkout}: exit {proc.returncode}\n{proc.stderr[-2000:]}")
+    return json.loads(lines[-1])
+
+
+def main(argv: list[str] | None = None) -> int:
+    p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    p.add_argument("--parent", required=True)
+    p.add_argument("--change", required=True)
+    p.add_argument("--workload", required=True)
+    p.add_argument("--seeds", required=True)
+    p.add_argument("--out")
+    args = p.parse_args(argv)
+    with open(os.path.join(args.change, "BENCHMARK.json"), encoding="utf-8") as f:
+        bench = json.load(f)
+    sides = {"parent": args.parent, "change": args.change}
+    runs: dict[str, list[dict]] = {"parent": [], "change": []}
+    for i, seed in enumerate(parse_seeds(args.seeds)):
+        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        for side in order:
+            result = run_one(sides[side], args.workload, seed, bench["run_seconds"])
+            runs[side].append(result)
+            print(f"[pairs] seed {seed} {side}: correct={result['correct']} "
+                  f"failed={result['failed']}/{result['attempted']}", file=sys.stderr, flush=True)
+            if args.out:
+                with open(args.out, "a", encoding="utf-8") as f:
+                    f.write(json.dumps({"workload": args.workload, "seed": seed, "side": side,
+                                        **result}) + "\n")
+    for side, rs in runs.items():
+        print(f"{side}: {sum(r['correct'] for r in rs)}/{len(rs)} runs correct, "
+              f"{sum(r['failed'] for r in rs)}/{sum(r['attempted'] for r in rs)} ops failed")
+    print(f"{'metric':<12} {'parent q1/med/q3':>28} {'change q1/med/q3':>28}  wins  verdict")
+    for m in bench["end_to_end"]:
+        name = m["name"]
+        parent = [r["metrics"][name]["value"] for r in runs["parent"]]
+        change = [r["metrics"][name]["value"] for r in runs["change"]]
+        v = verdict(parent, change, m["better"])
+        cols = ["/".join(f"{x:.4g}" for x in quartiles(xs)) for xs in (parent, change)]
+        print(f"{name:<12} {cols[0]:>28} {cols[1]:>28}  {v['wins']}/{v['pairs']}  "
+              f"{'gain' if v['gain'] else 'no gain'} (gap {v['gap']:.4g}, parent IQR "
+              f"{v['parent_iqr']:.4g})")
+    return 0
+
+
+if __name__ == "__main__":
+    sys.exit(main())
