@@ -19,12 +19,18 @@ A run takes one of two plans, chosen from the frame (``plan_incremental``):
   The run scans ``ts >= previous mark`` once and takes the new mark from
   that scan itself (``max(ts)`` + 1µs, through an ``Observation`` read
   off the window's first action, which must read the window whole).  It
-  also skips every file the last committed run listed: that run's mark
-  lies above each of their rows, so skipping them is exact.  File
-  identity, not modification time, names them: a writer that renames a
-  file into place after a listing (Spark's own job commit does) can
-  give it an mtime from before that listing.  Files are assumed
-  immutable once listed, as Structured Streaming's file source assumes.
+  also skips every file the last committed run listed: a run records
+  its listing only when it read every row of those files, so that run's
+  mark lies above each of their rows and skipping them is exact.  A
+  frame with a filter between the relation and the window records no
+  listing: its mark is taken over the rows that passed the filter, and
+  a filter whose result changes between runs (``ts < current_timestamp()
+  - INTERVAL 5 MINUTES``, or a widened predicate) would let a later run
+  deliver rows of those files above the mark.  File identity, not
+  modification time, names the files: a writer that renames a file
+  into place after a listing (Spark's own job commit does) can give it
+  an mtime from before that listing.  Files are assumed immutable once
+  listed, as Structured Streaming's file source assumes.
 - **Capture first** — any other frame: the Cassandra connector, JDBC,
   in-memory frames, joins and aggregates.  A live source is no
   snapshot: a row written below the max during the scan would be lost.
@@ -51,7 +57,7 @@ from pyspark.sql import Column, DataFrame, Observation, functions as F
 _WRITE_LOCK = threading.Lock()
 
 #: plan nodes that map each input row to at most one output row, unchanged
-#: in its source file: a window over them may skip whole files
+#: in its source file: a window over them reads a snapshot of the files
 _ROW_WISE = {"Project", "Filter", "SubqueryAlias"}
 
 
@@ -74,12 +80,16 @@ class HighWaterMarkStore:
             state = json.load(f)
         return {t: e if isinstance(e, dict) else {"mark": e} for t, e in state.items()}
 
+    def entry(self, table: str) -> dict:
+        """``table``'s ``{"mark": ..., "files": [...]}``, from one read."""
+        return self._load().get(table, {})
+
     def get(self, table: str) -> str | None:
-        return self._load().get(table, {}).get("mark")
+        return self.entry(table).get("mark")
 
     def files(self, table: str) -> list[str]:
         """The source files the run that committed ``table``'s mark listed."""
-        return self._load().get(table, {}).get("files", [])
+        return self.entry(table).get("files", [])
 
     def dump(self) -> dict:
         """Public snapshot of all per-table watermarks (the actuator's
@@ -132,21 +142,36 @@ def hwm_filter(df: DataFrame, ts_col: str, hwm: str | None) -> DataFrame:
     return df.where(F.col(ts_col) < F.to_timestamp(F.lit(hwm)))
 
 
-def _single_file_scan(df: DataFrame) -> bool:
-    """Whether ``df`` reads one file relation through row-wise nodes only."""
-    node = df._jdf.queryExecution().analyzed()
-    while node.getClass().getSimpleName() in _ROW_WISE:
+def _file_scan(df: DataFrame) -> tuple[bool, bool]:
+    """Whether ``df`` reads one file relation through row-wise nodes
+    only, and whether it reads every row of it (no filter on the way)."""
+    node, whole = df._jdf.queryExecution().analyzed(), True
+    while (kind := node.getClass().getSimpleName()) in _ROW_WISE:
+        whole = whole and kind != "Filter"
         node = node.children().apply(0)
-    return (
-        node.getClass().getSimpleName() == "LogicalRelation"
+    files = (
+        kind == "LogicalRelation"
         and node.relation().getClass().getSimpleName() == "HadoopFsRelation"
     )
+    return files, whole
 
 
 def _file_path(uri: str) -> str:
     """``inputFiles()``'s spelling of a local file (``file:///x``) in
     ``_metadata.file_path``'s (``file:/x``)."""
     return "file:/" + uri[len("file:///"):] if uri.startswith("file:///") else uri
+
+
+def _unlisted(paths: list[str]) -> Column | None:
+    """``_metadata.file_path NOT IN paths`` as one SQL expression: Spark
+    parses it in one call, where ``isin`` crosses to the JVM once per
+    path (about 2 s for 10,000).  A path that would need escaping in a
+    SQL literal is left out: its file is read again and contributes no
+    row, since all of them lie below the mark."""
+    plain = [p for p in paths if "'" not in p and "\\" not in p]
+    if not plain:
+        return None
+    return F.expr("NOT _metadata.file_path IN (" + ", ".join(f"'{p}'" for p in plain) + ")")
 
 
 def _observed(obs: Observation, df: DataFrame) -> dict:
@@ -193,7 +218,9 @@ def plan_incremental(
     - ``df`` is one file relation under row-wise nodes: ONE scan.  The
       window is every listed row with ``ts >= previous mark``, minus
       the files the last committed run listed, and ``commit()`` writes
-      the max the window's first action observed, with this listing.
+      the max the window's first action observed, with this listing
+      when ``df`` has no filter (a filtered run leaves rows of its
+      files unread, so the next run must read them again).
       Precondition: that first action reads the window whole, as
       ``fan_out``'s does (the ``noop`` materialization, or a lone
       sink's full write).  A partial first action observes a max at or
@@ -204,18 +231,21 @@ def plan_incremental(
     - any other frame: a capture job takes the max first and the window
       is ``[previous mark, max + 1µs)``.
     """
-    prev = store.get(table)
+    entry = store.entry(table)
+    prev = entry.get("mark")
     if prev is None:
         since = F.col(ts_col).isNotNull()
     else:
         since = F.col(ts_col) >= F.to_timestamp(F.lit(prev))
-    if _single_file_scan(df):
+    files, whole = _file_scan(df)
+    if files:
         listing, done = [], []
         if not lateness_us:
-            listing = [_file_path(f) for f in df.inputFiles()]
-            done = store.files(table)
-        if done:
-            df = df.where(~F.col("_metadata.file_path").isin(done))
+            done = entry.get("files", [])
+            if whole:
+                listing = [_file_path(f) for f in df.inputFiles()]
+        if (skip := _unlisted(done)) is not None:
+            df = df.where(skip)
         obs = Observation()
         out = df.where(since).observe(obs, _render(F.max(ts_col)).alias("max"))
 

@@ -173,7 +173,14 @@ def test_capture_reads_only_rows_past_the_mark(spark, tmp_path):
             assert emitted == list(range(1200, 1300))
             assert _scanned(window) == len(emitted)
             commit()
-            assert _run(spark, src, store)[0] == []
+            mark, files = store.get("t"), store.files("t")
+            assert len(files) == 13
+            # quiescent: every file is skipped and the scan lists none; the
+            # empty window's commit completes and leaves the state alone
+            ids, commit = _run(spark, src, store)
+            assert ids == []
+            commit()
+            assert (store.get("t"), store.files("t")) == (mark, files)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", adaptive)
 
@@ -240,6 +247,50 @@ def test_failed_sinks_commit_nothing_and_the_next_run_redelivers(spark, src, sto
     ids, commit = _run(spark, src, store)
     assert ids == list(range(100, 300))
     commit()
+    assert _run(spark, src, store)[0] == []
+
+
+@pytest.mark.parametrize("filters", [
+    # an operator widens the filter between runs
+    ["id % 100 < 50", None],
+    # a settling guard, as ``ts < current_timestamp() - INTERVAL 5 MINUTES``
+    # reads from run to run
+    ["ts < TIMESTAMP'2024-01-01 00:00:50'", "ts < TIMESTAMP'2024-01-01 00:02:30'"],
+])
+def test_filtered_run_skips_no_file_next_time(spark, src, store, filters):
+    """A filter between the relation and the window leaves rows of the
+    listed files unread, above the mark of the rows that passed it; when
+    the filter lets them through later, the next run delivers them."""
+    from cassandra_extractor_spark.plans.spec import ExtractionSpec
+
+    _land(src, 0)
+    spec = ExtractionSpec(table="t", hwm_column="ts", filter=filters[0])
+    first = spec.build(spark, hwm_store=store, source_df=spark.read.parquet(str(src)))
+    assert sorted(r["id"] for r in first.select("id").collect()) == list(range(50))
+    spec._hwm_commit()
+    assert store.get("t") == "2024-01-01 00:00:49.000001"
+    assert store.files("t") == []
+    _land(src, 1)
+    spec = ExtractionSpec(table="t", hwm_column="ts", filter=filters[1])
+    second = spec.build(spark, hwm_store=store, source_df=spark.read.parquet(str(src)))
+    delivered = sorted(r["id"] for r in second.select("id").collect())
+    assert delivered == list(range(50, 200 if filters[1] is None else 150))
+
+
+def test_path_needing_sql_escapes_is_read_again_not_lost(spark, tmp_path, store):
+    """A listed path with a quote stays out of the skip predicate: its
+    file is scanned again and contributes no row below the mark."""
+    src = tmp_path / "o'brien"
+    src.mkdir()
+    _land(src, 0)
+    ids, commit = _run(spark, src, store)
+    assert ids == list(range(100))
+    commit()
+    _land(src, 1)
+    ids, commit = _run(spark, src, store)
+    assert ids == list(range(100, 200))
+    commit()
+    assert len(store.files("t")) == 2
     assert _run(spark, src, store)[0] == []
 
 
