@@ -223,7 +223,12 @@ class Actuator:
         """Reference POST /cache/clear (management.py:394-419: flush the
         Redis page-state): drop HWM marks and staged job config — for
         one table, or everything when no table is given.  The next run
-        re-extracts from scratch."""
+        re-extracts from scratch.  Also unpins every source schema the
+        session memoized (``catalog.read_source``; the memo is keyed by
+        path, not table), so the next run reads a changed schema."""
+        from cassandra_extractor_spark.sources.catalog import unpin_source_schemas
+
+        unpin_source_schemas(self.spark)
         cleared_hwm: list[str] = []
         if self.hwm_store is not None:
             marks = self.hwm_store.dump()

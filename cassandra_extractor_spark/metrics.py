@@ -2,10 +2,13 @@
 ``metrics.py:5-35``, ``management.py:36-54``).
 
 The reference tracks processed/ignored/total counters and fetch/task/
-write latency histograms per extractor.  Here counters are fed from
-Spark's own instrumentation (job-level row counts via observable
-metrics — ``df.observe`` — and ``StreamingQuery.lastProgress``), then
-rendered in Prometheus exposition format without external deps.
+write latency histograms per extractor.  Here the control plane feeds
+the registry (``actuator.py``): ``creates_total``,
+``config_reloads_total`` and ``extractions_total`` counters, and each
+job run's wall time as the ``extract_seconds`` summary.  It renders in
+Prometheus exposition format without external deps.  Per-sink rows and
+latencies, micro-batch progress and state are not fed yet (ROADMAP
+Direction 8).
 """
 
 from __future__ import annotations
@@ -23,7 +26,9 @@ class MetricsRegistry:
     namespace: str = "cassandra_extractor_spark"
     _counters: dict[tuple[str, tuple], float] = field(default_factory=lambda: defaultdict(float))
     _gauges: dict[tuple[str, tuple], float] = field(default_factory=dict)
-    _histograms: dict[tuple[str, tuple], list[float]] = field(default_factory=lambda: defaultdict(list))
+    #: per summary series, its running (count, sum): all the exposition
+    #: reads, in memory that does not grow with the observations
+    _histograms: dict[tuple[str, tuple], tuple[int, float]] = field(default_factory=dict)
     _lock: threading.Lock = field(default_factory=threading.Lock)
 
     @staticmethod
@@ -40,7 +45,9 @@ class MetricsRegistry:
 
     def observe(self, name: str, value: float, **labels: str) -> None:
         with self._lock:
-            self._histograms[self._key(name, labels)].append(value)
+            key = self._key(name, labels)
+            count, total = self._histograms.get(key, (0, 0))
+            self._histograms[key] = count + 1, total + value
 
     def time(self, name: str, **labels: str):
         """Context manager recording elapsed seconds into a histogram."""
@@ -73,9 +80,9 @@ class MetricsRegistry:
             for (name, labels), v in sorted(self._gauges.items()):
                 lines.append(f"# TYPE {self.namespace}_{name} gauge")
                 lines.append(f"{self.namespace}_{name}{self._fmt_labels(labels)} {v}")
-            for (name, labels), vals in sorted(self._histograms.items()):
+            for (name, labels), (count, total) in sorted(self._histograms.items()):
                 lines.append(f"# TYPE {self.namespace}_{name} summary")
                 lab = self._fmt_labels(labels)
-                lines.append(f"{self.namespace}_{name}_count{lab} {len(vals)}")
-                lines.append(f"{self.namespace}_{name}_sum{lab} {sum(vals)}")
+                lines.append(f"{self.namespace}_{name}_count{lab} {count}")
+                lines.append(f"{self.namespace}_{name}_sum{lab} {total}")
         return "\n".join(lines) + "\n"

@@ -13,6 +13,7 @@ page loop.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -61,22 +62,22 @@ def load_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> Dat
     # relative vs absolute) share one cache entry — and so a later
     # invalidate_table_cache with a different spelling still hits it
     key = (_norm_dir(sf_dir), name)
-    if key in cache:
+    df = _lru_get(cache, key)
+    if df is not None:
         _pin_session(spark, name)
-        cache[key] = cache.pop(key)  # move-to-end: mark most recent
-        return cache[key]
+        return df
     df = read_table(spark, name, sf_dir)
-    while len(cache) >= _TABLE_CACHE_CAP:
-        cache.pop(next(iter(cache)))  # evict least-recently-used
-    cache[key] = df
+    _lru_put(cache, key, df)
     return df
 
 
 def read_table(spark: SparkSession, name: str, sf_dir: str | None = None) -> DataFrame:
     """Load one test table with a fresh file listing (``load_table``
-    without the memo): for a table directory that files land in."""
+    without the plan memo): for a table directory that files land in.
+    Reads through ``read_source``, so the table's schema is inferred
+    once per session and pinned (see there)."""
     _pin_session(spark, name)
-    df = spark.read.parquet(os.path.join(sf_dir or DEFAULT_SF_DIR, f"{name}.parquet"))
+    df = read_source(spark, os.path.join(sf_dir or DEFAULT_SF_DIR, f"{name}.parquet"))
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         # parquet TIMESTAMP(NANOS) read as long ns (see session.py conf);
         # Spark timestamps are µs precision → truncate ns → µs
@@ -114,24 +115,50 @@ def _norm_dir(sf_dir: str) -> str:
     return sf_dir if "://" in sf_dir else os.path.realpath(sf_dir)
 
 
-#: LRU cap for the per-session analyzed-plan cache: 3 standard sf dirs
-#: × 10 tables fit with headroom; one-shot differential tmp dirs churn
-#: through the tail without evicting the hot standard entries.
+#: LRU cap for the per-session analyzed-plan cache and schema memo: 3
+#: standard sf dirs × 10 tables fit with headroom; one-shot differential
+#: tmp dirs churn through the tail without evicting the hot entries.
 _TABLE_CACHE_CAP = 64
+#: guards both per-session caches: the app reads its tables from one
+#: job thread per table, and the control plane clears from another
+_CACHE_LOCK = threading.Lock()
+
+
+def _lru_get(cache: dict, key):
+    """``cache[key]`` marked most recently used, or None on a miss."""
+    with _CACHE_LOCK:
+        value = cache.pop(key, None)
+        if value is not None:
+            cache[key] = value
+        return value
+
+
+def _lru_put(cache: dict, key, value) -> None:
+    with _CACHE_LOCK:
+        while len(cache) >= _TABLE_CACHE_CAP:
+            cache.pop(next(iter(cache)))  # evict least-recently-used
+        cache[key] = value
+
+
+def _drop(cache: dict | None, under: str | None) -> None:
+    """Drop ``cache``'s entries for the directory ``under`` and the paths
+    below it (all of them when None); keys start with a ``_norm_dir``."""
+    if not cache:
+        return
+    norm = None if under is None else _norm_dir(under).rstrip("/")
+    with _CACHE_LOCK:
+        for key in [k for k in cache if norm is None or k[0] == norm or k[0].startswith(norm + "/")]:
+            del cache[key]
 
 
 def invalidate_table_cache(spark: SparkSession, sf_dir: str | None = None) -> None:
-    """Drop memoized table plans — required after rewriting a catalog
-    directory IN PLACE (the cache pins the file listing).  With
-    ``sf_dir`` drops that directory's entries; without, drops all."""
-    cache = spark.__dict__.get("_ce_table_plans")
-    if cache:
-        if sf_dir is None:
-            cache.clear()
-        else:
-            norm = _norm_dir(sf_dir)
-            for key in [k for k in cache if k[0] == norm]:
-                del cache[key]
+    """Drop memoized table plans and pinned source schemas — required
+    after rewriting a catalog directory IN PLACE (the plan cache pins
+    the file listing, the schema memo the columns).  With ``sf_dir``
+    drops the entries of that directory and of the paths under it;
+    without, drops all."""
+    _drop(spark.__dict__.get("_ce_table_plans"), sf_dir)
+    unpin_source_schemas(spark, sf_dir)
     # the shared dedup/token-stream chain caches MATERIALIZED data over
     # these tables — stale blocks are worse than a stale file listing
     from cassandra_extractor_spark.operators.dedup import invalidate_dedup_chain
@@ -148,12 +175,48 @@ def read_source(
 ) -> DataFrame:
     """Generic file source (parquet/json/csv/orc) — the test-path
     analogue of swapping Cassandra for another origin; projection and
-    eligible predicates still push into the scan."""
-    reader = spark.read
+    eligible predicates still push into the scan.
+
+    Every call lists ``path`` afresh, so files landed since the last
+    call are read.  The schema is not re-read: a parquet or orc source
+    read without ``schema`` takes it from a per-session memo keyed by
+    (path, format, options), filled by the first read — the inference
+    is a Spark job per call, and the source's schema, like Structured
+    Streaming's file source's, is fixed once.  Contract: Spark without
+    ``mergeSchema`` already infers the schema from one file and assumes
+    every file agrees; the memo keeps that schema until
+    ``invalidate_table_cache`` (or the control plane's
+    ``/cache/clear``) drops it, which is how a changed source schema is
+    picked up.  JSON/CSV inference reads the data and ``mergeSchema``
+    every footer, so those reads are never pinned."""
+    opts = dict(options or {})
+    if fmt == "csv" and "header" not in opts:
+        opts.update(header="true", inferSchema=str(schema is None).lower())
+    memo = key = None
+    if schema is None and _pins_schema(spark, fmt, opts):
+        memo = spark.__dict__.setdefault("_ce_source_schemas", {})
+        key = (_norm_dir(path), fmt, tuple(sorted(opts.items())))
+        schema = _lru_get(memo, key)
+    reader = spark.read.format(fmt).options(**opts)
     if schema is not None:
         reader = reader.schema(schema)
-    for k, v in (options or {}).items():
-        reader = reader.option(k, v)
-    if fmt == "csv" and "header" not in (options or {}):
-        reader = reader.option("header", "true").option("inferSchema", schema is None)
-    return reader.format(fmt).load(path)
+    df = reader.load(path)
+    if memo is not None and schema is None:
+        _lru_put(memo, key, df.schema)
+    return df
+
+
+def _pins_schema(spark: SparkSession, fmt: str, options: dict) -> bool:
+    """Whether Spark infers ``fmt``'s schema from one file's footer."""
+    if fmt not in ("parquet", "orc"):
+        return False
+    merge = {k.lower(): str(v) for k, v in options.items()}.get(
+        "mergeschema", spark.conf.get(f"spark.sql.{fmt}.mergeSchema", "false")
+    )
+    return merge.lower() != "true"
+
+
+def unpin_source_schemas(spark: SparkSession, under: str | None = None) -> None:
+    """Drop the schemas ``read_source`` pinned for ``under`` and the paths
+    below it (all of them when None); the next read infers afresh."""
+    _drop(spark.__dict__.get("_ce_source_schemas"), under)

@@ -12,7 +12,8 @@ read like the posting, signature and ANN stores:
   the persisted signature store, operators/dedup.py
   ``write_signature_store``): ``data/<gen>/_b=<b>``;
 - an apply does O(batch) work and nothing else: it writes its batch,
-  horizon fenced but otherwise as it arrived, as ONE unpartitioned
+  horizon fenced and cast to the store's schema but otherwise as it
+  arrived, as ONE unpartitioned
   delta generation ``data/<gen>`` (one file per write task: no bucket
   dirs, no sort, no store read, no shuffle) and commits it as one more
   entry of the manifest's flat ``deltas`` list.  A generation is named
@@ -42,6 +43,15 @@ read like the posting, signature and ANN stores:
   join) meet the delta rows in a last-writer-wins — the base is
   scanned twice but never shuffled, and the shuffled volume is the
   deltas' (about 0.2x the base, which the fold threshold bounds);
+- every generation has one physical schema: ``init_cdc_store`` records
+  the store's row schema (``StructType.json()``) as the manifest's
+  ``schema``, every commit carries it on, and an apply writes its delta
+  cast to it (Spark's cast, ANSI by default: a value that does not fit
+  fails the apply).  Reads, folds and purges scan with the recorded
+  schema, so none of them runs a schema-inference job (one per scan
+  otherwise).  A manifest without ``schema`` (an older store) still
+  reads, folds and purges by inferring, and its next commit records
+  the schema;
 - visibility is an atomic, exclusive MANIFEST commit:
   ``manifest/gen=<seq>.json`` is written to a temp file, then
   hard-linked into place; the link fails if the seq is taken, so of
@@ -121,6 +131,7 @@ from typing import Sequence
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.streaming import StreamingQuery
+from pyspark.sql.types import StructField, StructType
 
 from cassandra_extractor_spark.streaming.maintenance import dir_bytes, size_policy
 
@@ -228,9 +239,28 @@ def _rels(manifest: dict) -> tuple[list[str], list[str]]:
     return list(manifest["buckets"].values()), list(deltas)
 
 
-def _read_rels(spark: SparkSession, store_dir: str, rels: list[str]) -> DataFrame | None:
-    paths = [os.path.join(store_dir, "data", r) for r in rels]
-    return spark.read.parquet(*paths) if paths else None
+def _schema(manifest: dict) -> StructType | None:
+    """The row schema the manifest records for every generation, or
+    None for a store written before manifests recorded it."""
+    recorded = manifest.get("schema")
+    return StructType.fromJson(json.loads(recorded)) if recorded else None
+
+
+def _schema_json(rows: DataFrame) -> str:
+    """``rows``' schema as the manifest records it: what a file scan of
+    the written rows reads back (every column nullable)."""
+    return StructType([StructField(f.name, f.dataType) for f in rows.schema]).json()
+
+
+def _read_rels(
+    spark: SparkSession, store_dir: str, rels: list[str], schema: StructType | None = None
+) -> DataFrame | None:
+    """The generations ``rels`` as one scan: read with the recorded
+    ``schema`` (no inference job), or inferred from a footer without."""
+    if not rels:
+        return None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*[os.path.join(store_dir, "data", r) for r in rels])
 
 
 def _rels_bytes(store_dir: str, rels: list[str]) -> int:
@@ -246,12 +276,13 @@ def _read_current(
     if m is None:
         return None
     base_rels, delta_rels = _rels(m)
-    base = _read_rels(spark, store_dir, base_rels)
+    schema = _schema(m)
+    base = _read_rels(spark, store_dir, base_rels, schema)
     if not delta_rels:
         return base
     return _merge_deltas(
         base,
-        _read_rels(spark, store_dir, delta_rels),
+        _read_rels(spark, store_dir, delta_rels, schema),
         m["key"],
         m["order_cols"],
         op_col or m.get("op_col", "op"),
@@ -405,20 +436,22 @@ def init_cdc_store(
             f"columns ({list(order_cols)!r}) set to sentinel values older "
             "than any arriving change"
         )
+    payload = [c for c in base.columns if c not in (key, op_col, *order_cols)]
+    rows = base.select(key, op_col, *order_cols, *payload)
     m = {
         "seq": 0,
         "batch_id": None,
         "key": key,
         "op_col": op_col,
         "order_cols": list(order_cols),
-        "payload_cols": [c for c in base.columns if c not in (key, op_col, *order_cols)],
+        "payload_cols": payload,
         "n_buckets": n_buckets,
         "horizon": None,
         "deltas": [],
+        "schema": _schema_json(rows),
     }
-    cols = [key, op_col, *order_cols, *m["payload_cols"]]
     with _generation(store_dir, {"seq": -1}) as gen:
-        buckets = _write_generation(_as_base(base.select(*cols), m), store_dir, gen)
+        buckets = _write_generation(_as_base(rows, m), store_dir, gen)
         _commit_manifest(store_dir, {**m, "buckets": buckets})
 
 
@@ -506,13 +539,10 @@ def _fold(
 ) -> DataFrame:
     """The base and outstanding deltas of manifest ``m`` as a new base
     (``_as_base``)."""
-    base_rels, delta_rels = _rels(m)
+    schema = _schema(m)
     parts = [
         df.select(*cols)
-        for df in (
-            _read_rels(spark, store_dir, base_rels),
-            _read_rels(spark, store_dir, delta_rels),
-        )
+        for df in (_read_rels(spark, store_dir, rels, schema) for rels in _rels(m))
         if df is not None
     ]
     return _as_base(reduce(DataFrame.unionByName, parts), m)
@@ -578,7 +608,11 @@ def apply_cdc_batch(
         return
     horizon = cur.get("horizon")
     cols = [key, op_col, *order_cols, *payload_cols]
-    batch = _fence(batch_df.select(*cols), order_cols, horizon)
+    # an older store, whose manifest records no schema, is inferred
+    # from its base once: this commit records the schema
+    store_schema = _schema(cur) or _read_rels(spark, store_dir, _rels(cur)[0]).schema
+    batch = _fence(_conform(batch_df.select(*cols), store_schema), order_cols, horizon)
+    schema = _schema_json(batch)
     with _generation(store_dir, cur) as gen:
         _write_generation(batch, store_dir, gen)
         while True:
@@ -593,6 +627,7 @@ def apply_cdc_batch(
                         "order_cols": list(order_cols),
                         "payload_cols": list(payload_cols),
                         "deltas": [*_rels(cur)[1], gen],
+                        "schema": schema,
                     },
                 )
                 break
@@ -602,6 +637,20 @@ def apply_cdc_batch(
                     raise  # a purge: the batch was fenced by the old horizon
     _cleanup(store_dir, retain_gens)
     _fold_if_due(spark, store_dir, retain_gens)
+
+
+def _conform(rows: DataFrame, schema: StructType) -> DataFrame:
+    """``rows`` with every column the store's ``schema`` names cast to
+    its recorded type, so every generation has one physical schema.  The
+    cast is Spark's (ANSI by default): a value that does not fit fails
+    the write instead of landing as null.  A column the store does not
+    know yet keeps its type (and the apply records it)."""
+    types = {f.name: f.dataType for f in schema}
+    if all(types.get(f.name, f.dataType) == f.dataType for f in rows.schema):
+        return rows  # the common case: spares a plan analysis per apply
+    return rows.select(
+        *[F.col(c).cast(types[c]).alias(c) if c in types else F.col(c) for c in rows.columns]
+    )
 
 
 # -------------------------------------------------------------------- folds
@@ -686,8 +735,11 @@ def _fold_store(spark: SparkSession, store_dir: str, retain_gens: int) -> bool:
     if not folded:
         return False
     cols = [m["key"], m.get("op_col", "op"), *m["order_cols"], *m["payload_cols"]]
+    rows = _fold(spark, store_dir, m, cols)
+    # an older store's fold records the schema it inferred
+    schema = m.get("schema") or _schema_json(rows.drop("_b"))
     with _generation(store_dir, m) as gen:
-        buckets = _write_generation(_fold(spark, store_dir, m, cols), store_dir, gen)
+        buckets = _write_generation(rows, store_dir, gen)
         cur = m
         while True:
             if (cur["buckets"], cur.get("horizon")) != (m["buckets"], m.get("horizon")):
@@ -702,6 +754,7 @@ def _fold_store(spark: SparkSession, store_dir: str, retain_gens: int) -> bool:
                         "seq": cur["seq"] + 1,
                         "buckets": buckets,
                         "deltas": [r for r in _rels(cur)[1] if r not in folded],
+                        "schema": cur.get("schema", schema),
                     },
                 )
                 break
@@ -843,6 +896,7 @@ def purge_tombstones(
                 "payload_cols": payload,
                 "buckets": written,
                 "deltas": [],
+                "schema": cur.get("schema") or _schema_json(kept.drop("_b")),
             },
         )
 

@@ -20,6 +20,7 @@ from pathlib import Path
 
 import pandas as pd
 import pytest
+from pyspark.sql.types import StructType
 
 from cassandra_extractor_spark.streaming import cdc_stream
 from cassandra_extractor_spark.streaming.cdc_stream import (
@@ -405,6 +406,100 @@ def test_store_without_recorded_deltas_or_payload_reads_and_purges(spark, tmp_pa
     assert _current_manifest(store)["payload_cols"] == ["bal"]
     assert _view(spark, store) == {1: 100, 3: 300}
     assert {r.k for r in cdc_stream._read_current(spark, store).collect()} == {1, 3}
+
+
+def _jobs(spark, group, action):
+    """(Spark jobs ``action()`` ran, counted by job group, its result)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+
+def test_recorded_schema_spares_every_inference_job(spark, tmp_path):
+    """The manifest records the store's schema and every commit carries
+    it, so a view over base + deltas and a fold's plan are built without
+    a schema-inference job, and a fold runs only its exchange and its
+    write."""
+    store = str(tmp_path / "store")
+    base = [(1, "U", 0, 100), (2, "U", 0, 200)] + _BIG
+    _init(spark, store, base)
+    recorded = _current_manifest(store)["schema"]
+    assert StructType.fromJson(json.loads(recorded)).simpleString() == (
+        "struct<k:bigint,op:string,seq:bigint,bal:bigint>")
+    change = [(1, "U", 5, 111), (2, "D", 5, 0)]
+    _apply(spark, store, change, 0)
+    m = _current_manifest(store)
+    assert m["schema"] == recorded and _n_deltas(store) == 1
+
+    jobs, view = _jobs(spark, "cdc-view-plan", lambda: read_cdc_view(spark, store))
+    assert jobs == 0
+    assert {r.k: r.bal for r in view.collect()} == _lww(base + change)
+    jobs, _ = _jobs(spark, "cdc-fold-plan", lambda: _fold(spark, store, m, ["k", "op", "seq", "bal"]))
+    assert jobs == 0
+    jobs, rep = _jobs(spark, "cdc-fold-run", lambda: fold_cdc_store(spark, store))
+    assert rep["folded"] and jobs == 2
+    assert _current_manifest(store)["schema"] == recorded
+    assert _view(spark, store) == _lww(base + change)
+
+
+def test_apply_writes_its_delta_in_the_recorded_types(spark, tmp_path):
+    """A batch whose payload arrives as INT is written as the store's
+    BIGINT, so every generation has one physical schema; a value that
+    does not fit the recorded type fails the apply, which commits
+    nothing."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    store = str(tmp_path / "store")
+    base = [(1, "U", 0, 100)] + _BIG
+    _init(spark, store, base)
+    narrow = spark.createDataFrame(pd.DataFrame({"k": [1], "op": ["U"], "seq": [5], "bal": [7]}),
+                                   "k LONG, op STRING, seq LONG, bal INT")
+    apply_cdc_batch(spark, narrow, 0, store, "k", ["seq"], "op", ["bal"])
+    [delta] = _current_manifest(store)["deltas"]
+    [part] = [f for f in os.listdir(os.path.join(store, "data", delta)) if f.startswith("part-")]
+    assert pq.read_schema(os.path.join(store, "data", delta, part)).field("bal").type == pa.int64()
+    assert _view(spark, store)[1] == 7
+
+    bad = spark.createDataFrame(pd.DataFrame({"k": [1], "op": ["U"], "seq": [6], "bal": ["x"]}),
+                                "k LONG, op STRING, seq LONG, bal STRING")
+    seq = _current_manifest(store)["seq"]
+    with pytest.raises(Exception, match="CAST_INVALID_INPUT"):
+        apply_cdc_batch(spark, bad, 1, store, "k", ["seq"], "op", ["bal"])
+    assert _current_manifest(store)["seq"] == seq
+    assert _view(spark, store)[1] == 7
+
+
+@pytest.mark.parametrize("then", ["apply", "fold", "purge"])
+def test_store_without_recorded_schema_reads_folds_and_purges(spark, tmp_path, then):
+    """A manifest written before the store recorded its schema reads,
+    folds and purges by inferring it, and the next commit records it."""
+    store = str(tmp_path / "store")
+    base = [(1, "U", 0, 100), (2, "U", 0, 200), (3, "D", 4, 0)] + _BIG
+    _init(spark, store, base)
+    change = [(1, "U", 5, 111), (4, "I", 5, 400)]
+    _apply(spark, store, change, 0)
+    m = _current_manifest(store)
+    recorded = m.pop("schema")
+    with open(os.path.join(store, "manifest", f"gen={m['seq']}.json"), "w") as fh:
+        json.dump(m, fh)
+    assert _view(spark, store) == _lww(base + change)
+
+    if then == "apply":
+        more = [(2, "U", 6, 222)]
+        _apply(spark, store, more, 1)
+        change += more
+    elif then == "fold":
+        assert fold_cdc_store(spark, store)["folded"]
+    else:
+        purge_tombstones(spark, store, ["seq"], "op", horizon=[6])
+        assert 3 not in {r.k for r in cdc_stream._read_current(spark, store).collect()}
+    assert _current_manifest(store)["schema"] == recorded
+    assert _view(spark, store) == _lww(base + change)
 
 
 @pytest.mark.parametrize("first", ["apply", "fold"])

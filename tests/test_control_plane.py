@@ -31,6 +31,26 @@ def test_metrics_exposition():
     assert "# TYPE cassandra_extractor_spark_progress gauge" in text
 
 
+def test_summary_keeps_two_numbers_and_prints_as_before():
+    """A summary series stores its running count and sum, not every
+    observation, and prints what the list of observations printed.  The
+    values are multiples of 1/64, so every partial sum is exact and the
+    expected text does not depend on how ``sum`` adds floats."""
+    m = MetricsRegistry()
+    values = [(i % 97) / 64 for i in range(10_000)]
+    for v in values:
+        m.observe("write_seconds", v, sink="jsonl")
+    m.inc("rows_total", 3)
+    assert m._histograms == {("write_seconds", (("sink", "jsonl"),)): (10_000, sum(values))}
+    ns = "cassandra_extractor_spark"
+    assert m.exposition() == (
+        f"# TYPE {ns}_rows_total counter\n{ns}_rows_total 3.0\n"
+        f"# TYPE {ns}_write_seconds summary\n"
+        f'{ns}_write_seconds_count{{sink="jsonl"}} 10000\n'
+        f'{ns}_write_seconds_sum{{sink="jsonl"}} {sum(values)}\n'
+    )
+
+
 def test_job_lifecycle(spark):
     actuator = Actuator(spark)
     done = []

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from cassandra_extractor_spark.config import load_properties, resolve
@@ -100,6 +101,85 @@ def test_read_source_roundtrip(spark, sf_dir, tmp_path):
     # ORC preserves the exact schema (columnar, typed — like parquet)
     assert back_orc.schema == df.schema
     assert back_orc.count() == df.count()
+
+
+def _jobs(spark, group, action):
+    """(Spark jobs ``action()`` ran, counted by job group, its result)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group)), result
+
+
+def _land(path, name, **columns):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    path.mkdir(parents=True, exist_ok=True)
+    pq.write_table(pa.table(columns), path / f"{name}.parquet")
+
+
+def test_read_source_pins_the_schema_and_lists_afresh(spark, tmp_path):
+    """The first read of a path infers its schema (a Spark job); a second
+    read takes it from the session's memo and launches no job, yet lists
+    the directory afresh, so a file landed between two reads is read."""
+    from cassandra_extractor_spark.sources.catalog import read_source
+
+    src = tmp_path / "src"
+    _land(src, "a", id=[1, 2])
+    jobs, first = _jobs(spark, "read-source-first", lambda: read_source(spark, str(src)))
+    assert jobs >= 1 and first.count() == 2
+    jobs, again = _jobs(spark, "read-source-again", lambda: read_source(spark, str(src)))
+    assert jobs == 0 and again.schema == first.schema
+    _land(src, "b", id=[3])
+    jobs, landed = _jobs(spark, "read-source-landed", lambda: read_source(spark, str(src)))
+    assert jobs == 0
+    assert sorted(r["id"] for r in landed.collect()) == [1, 2, 3]
+
+
+@pytest.mark.parametrize("clear", ["invalidate_table_cache", "cache_clear"])
+def test_cleared_schema_memo_reads_a_new_column(spark, tmp_path, clear):
+    """The pinned schema holds until it is cleared: a table rewritten in
+    place with a new column reads its old columns, and after
+    ``invalidate_table_cache`` or ``/cache/clear`` the new one too."""
+    from cassandra_extractor_spark.actuator import Actuator
+    from cassandra_extractor_spark.sources.catalog import invalidate_table_cache, read_table
+
+    table = tmp_path / "t.parquet"
+    _land(table, "part-0", id=[1])
+    assert read_table(spark, "t", str(tmp_path)).columns == ["id"]
+    (table / "part-0.parquet").unlink()
+    _land(table, "part-1", id=[2], extra=["x"])
+    assert read_table(spark, "t", str(tmp_path)).columns == ["id"]
+    if clear == "cache_clear":
+        Actuator(spark).cache_clear()
+    else:
+        invalidate_table_cache(spark, str(tmp_path))
+    assert [tuple(r) for r in read_table(spark, "t", str(tmp_path)).collect()] == [(2, "x")]
+
+
+def test_nanosecond_events_read_the_same_through_the_memo(spark, tmp_path):
+    """``events.ts`` stored as TIMESTAMP(NANOS) reads as a long under
+    ``nanosAsLong`` and is truncated to microseconds: a read whose schema
+    comes from the memo gives the dtypes and rows of the read that
+    inferred it."""
+    import pyarrow as pa
+
+    from cassandra_extractor_spark.sources.catalog import read_table
+
+    ns = [1_704_067_200_000_000_123, 1_704_067_201_000_001_999]
+    _land(tmp_path / "events.parquet", "part-0", event_id=[1, 2],
+          ts=pa.array(ns, pa.timestamp("ns", tz="UTC")))
+    first = read_table(spark, "events", str(tmp_path))
+    jobs, again = _jobs(spark, "events-again", lambda: read_table(spark, "events", str(tmp_path)))
+    assert jobs == 0
+    assert again.dtypes == first.dtypes == [("event_id", "bigint"), ("ts", "timestamp")]
+    assert again.collect() == first.collect()
+    micros = again.orderBy("event_id").select(F.unix_micros("ts").alias("us"))
+    assert [r["us"] for r in micros.collect()] == [n // 1000 for n in ns]
 
 
 def test_config_precedence(tmp_path, monkeypatch):

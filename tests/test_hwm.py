@@ -418,6 +418,29 @@ def test_incremental_spec_lists_the_table_afresh(spark, tmp_path):
         spec._hwm_commit()
 
 
+def test_second_incremental_build_runs_no_job_before_its_action(spark, tmp_path):
+    """The app's incremental path reads its table through ``read_table``:
+    the first build infers the table's schema, and a later build takes
+    it from the session's memo, so it launches no Spark job before its
+    first action, and still delivers the file landed since."""
+    from cassandra_extractor_spark.plans.spec import ExtractionSpec
+
+    table = tmp_path / "changes.parquet"
+    table.mkdir()
+    store = HighWaterMarkStore(str(tmp_path / "hwm.json"))
+    spec = ExtractionSpec(table="changes", hwm_column="ts")
+    built = []
+    _land(table, 0, n=10)
+    assert _jobs(spark, "hwm-first-build", lambda: built.append(
+        spec.build(spark, str(tmp_path), store))) >= 1
+    assert sorted(r["id"] for r in built[-1].collect()) == list(range(10))
+    spec._hwm_commit()
+    _land(table, 1, n=10)
+    assert _jobs(spark, "hwm-second-build", lambda: built.append(
+        spec.build(spark, str(tmp_path), store))) == 0
+    assert sorted(r["id"] for r in built[-1].collect()) == list(range(10, 20))
+
+
 def test_concurrent_tables_keep_every_mark(tmp_path):
     """The app runs one job thread per table on one state file: eight
     threads committing eight tables each keep all 64 marks."""

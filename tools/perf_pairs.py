@@ -1,16 +1,19 @@
-"""Paired benchmark runs of two checkouts, and the gain verdict on them.
+"""Paired benchmark runs of two checkouts, and the verdicts on them.
 
     python3 tools/perf_pairs.py --parent ../parent --change . \\
-        --workload incremental_cdc --seeds 11-20 [--out pairs.jsonl]
+        --workload incremental_cdc,extract_fanout --seeds 11-20 [--out pairs.jsonl]
 
-For every seed, runs ``perfbench/run.py --trace 0`` once in each
-checkout, alternating which side runs first, with the run length that
-``BENCHMARK.json`` fixes.  Then prints, for each end-to-end metric, each
-side's median and quartiles, the pairs the change won, and the verdict:
-the change shows a gain when it wins at least nine tenths of the pairs
-(ties count for neither side) and the medians differ, in its favour, by
-more than the distance between the parent's quartiles.  Every run's
-result goes to ``--out`` as one JSON line.
+For every workload (a comma list) and seed, runs ``perfbench/run.py
+--trace 0`` once in each checkout, alternating which side runs first,
+with the run length that ``BENCHMARK.json`` fixes.  Then prints, per
+workload and end-to-end metric, each side's median and quartiles, the
+pairs the change won and lost, and the verdict: the change shows a
+gain when it wins at least nine tenths of the pairs (ties count for
+neither side) and the medians differ, in its favour, by more than the
+distance between the parent's quartiles; it is worse in the mirror
+case, when the parent wins nine tenths of the pairs and the medians
+differ, in the parent's favour, by more than the change's quartile
+distance.  Every run's result goes to ``--out`` as one JSON line.
 """
 
 from __future__ import annotations
@@ -45,7 +48,7 @@ def verdict(parent: list[float], change: list[float], better: str) -> dict:
     wins = sum(sign * (p - c) > 0 for p, c in zip(parent, change))
     losses = sum(sign * (p - c) < 0 for p, c in zip(parent, change))
     p1, pmed, p3 = quartiles(parent)
-    _, cmed, _ = quartiles(change)
+    c1, cmed, c3 = quartiles(change)
     gap = sign * (pmed - cmed)
     return {
         "pairs": len(parent),
@@ -53,7 +56,9 @@ def verdict(parent: list[float], change: list[float], better: str) -> dict:
         "losses": losses,
         "gap": gap,
         "parent_iqr": p3 - p1,
+        "change_iqr": c3 - c1,
         "gain": wins >= 0.9 * len(parent) and gap > p3 - p1,
+        "worse": losses >= 0.9 * len(parent) and -gap > c3 - c1,
     }
 
 
@@ -67,42 +72,57 @@ def run_one(checkout: str, workload: str, seed: int, seconds: float) -> dict:
     return json.loads(lines[-1])
 
 
+def run_pairs(sides: dict[str, str], workload: str, seeds: list[int], seconds: float,
+              out: str | None) -> dict[str, list[dict]]:
+    """Each side's run results on ``workload``, paired by position."""
+    runs: dict[str, list[dict]] = {"parent": [], "change": []}
+    for i, seed in enumerate(seeds):
+        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
+        for side in order:
+            result = run_one(sides[side], workload, seed, seconds)
+            runs[side].append(result)
+            print(f"[pairs] {workload} seed {seed} {side}: correct={result['correct']} "
+                  f"failed={result['failed']}/{result['attempted']}", file=sys.stderr, flush=True)
+            if out:
+                with open(out, "a", encoding="utf-8") as f:
+                    f.write(json.dumps({"workload": workload, "seed": seed, "side": side,
+                                        **result}) + "\n")
+    return runs
+
+
+def report(workload: str, runs: dict[str, list[dict]], metrics: list[dict]) -> None:
+    print(f"== {workload}")
+    for side, rs in runs.items():
+        print(f"{side}: {sum(r['correct'] for r in rs)}/{len(rs)} runs correct, "
+              f"{sum(r['failed'] for r in rs)}/{sum(r['attempted'] for r in rs)} ops failed")
+    print(f"{'metric':<12} {'parent q1/med/q3':>28} {'change q1/med/q3':>28}  won/lost  verdict")
+    for m in metrics:
+        name = m["name"]
+        parent = [r["metrics"][name]["value"] for r in runs["parent"]]
+        change = [r["metrics"][name]["value"] for r in runs["change"]]
+        v = verdict(parent, change, m["better"])
+        cols = ["/".join(f"{x:.4g}" for x in quartiles(xs)) for xs in (parent, change)]
+        label = "gain" if v["gain"] else "WORSE" if v["worse"] else "neither"
+        print(f"{name:<12} {cols[0]:>28} {cols[1]:>28}  {v['wins']}/{v['losses']} of {v['pairs']}  "
+              f"{label} (gap {v['gap']:.4g}, parent IQR {v['parent_iqr']:.4g}, "
+              f"change IQR {v['change_iqr']:.4g})")
+
+
 def main(argv: list[str] | None = None) -> int:
     p = argparse.ArgumentParser(description=__doc__.splitlines()[0])
     p.add_argument("--parent", required=True)
     p.add_argument("--change", required=True)
-    p.add_argument("--workload", required=True)
+    p.add_argument("--workload", required=True, help="one workload or a comma list")
     p.add_argument("--seeds", required=True)
     p.add_argument("--out")
     args = p.parse_args(argv)
     with open(os.path.join(args.change, "BENCHMARK.json"), encoding="utf-8") as f:
         bench = json.load(f)
     sides = {"parent": args.parent, "change": args.change}
-    runs: dict[str, list[dict]] = {"parent": [], "change": []}
-    for i, seed in enumerate(parse_seeds(args.seeds)):
-        order = ("parent", "change") if i % 2 == 0 else ("change", "parent")
-        for side in order:
-            result = run_one(sides[side], args.workload, seed, bench["run_seconds"])
-            runs[side].append(result)
-            print(f"[pairs] seed {seed} {side}: correct={result['correct']} "
-                  f"failed={result['failed']}/{result['attempted']}", file=sys.stderr, flush=True)
-            if args.out:
-                with open(args.out, "a", encoding="utf-8") as f:
-                    f.write(json.dumps({"workload": args.workload, "seed": seed, "side": side,
-                                        **result}) + "\n")
-    for side, rs in runs.items():
-        print(f"{side}: {sum(r['correct'] for r in rs)}/{len(rs)} runs correct, "
-              f"{sum(r['failed'] for r in rs)}/{sum(r['attempted'] for r in rs)} ops failed")
-    print(f"{'metric':<12} {'parent q1/med/q3':>28} {'change q1/med/q3':>28}  wins  verdict")
-    for m in bench["end_to_end"]:
-        name = m["name"]
-        parent = [r["metrics"][name]["value"] for r in runs["parent"]]
-        change = [r["metrics"][name]["value"] for r in runs["change"]]
-        v = verdict(parent, change, m["better"])
-        cols = ["/".join(f"{x:.4g}" for x in quartiles(xs)) for xs in (parent, change)]
-        print(f"{name:<12} {cols[0]:>28} {cols[1]:>28}  {v['wins']}/{v['pairs']}  "
-              f"{'gain' if v['gain'] else 'no gain'} (gap {v['gap']:.4g}, parent IQR "
-              f"{v['parent_iqr']:.4g})")
+    seeds = parse_seeds(args.seeds)
+    for workload in args.workload.split(","):
+        runs = run_pairs(sides, workload, seeds, bench["run_seconds"], args.out)
+        report(workload, runs, bench["end_to_end"])
     return 0
 
 
