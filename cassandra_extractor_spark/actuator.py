@@ -23,7 +23,6 @@ testable without sockets too.
 from __future__ import annotations
 
 import json
-import os
 import threading
 from dataclasses import dataclass, field
 from enum import Enum
@@ -31,15 +30,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any, Callable
 
 from cassandra_extractor_spark.metrics import MetricsRegistry
-
-# the policy primitives live beside the stores so a streaming ingest
-# can run the same auto-compaction in-band (round-12) — the control
-# plane and the foreachBatch hook share one implementation
-from cassandra_extractor_spark.streaming.maintenance import (
-    dir_bytes as _dir_bytes,
-    size_policy as _size_policy,
-    table_location as _loc,
-)
+from cassandra_extractor_spark.streaming.maintenance import compact
 
 
 class JobState(str, Enum):
@@ -243,58 +234,18 @@ class Actuator:
                 cleared_cfg.append(t)
         return {"status": "cleared", "hwm": sorted(cleared_hwm), "job_config": sorted(cleared_cfg)}
 
-    def _table_location(self, table: str) -> str | None:
-        """Filesystem path of a managed table (DESC FORMATTED Location
-        row), file:-URI stripped; None if unresolvable."""
-        return _loc(self.spark, table)
-
-    def store_sizes(self, kind: str, params: dict[str, Any]) -> tuple[int, int]:
-        """(base_bytes, delta_bytes) for one of the trio's stores —
-        the inputs of the size-ratio compaction policy.  A posting
-        store with doclen params counts BOTH sides' bytes: the doclen
-        delta is folded by the same compaction call, so it must count
-        toward the ratio that triggers it (otherwise a doclen delta
-        grows unboundedly when postings are compacted out-of-band)."""
-        if kind in ("signature", "posting"):
-            loc = self._table_location(params["table"])
-            base = _dir_bytes(loc) if loc else 0
-            delta = _dir_bytes(params["delta_dir"])
-            if kind == "posting" and params.get("doclen_table"):
-                if not params.get("doclen_delta_dir"):
-                    # guard here, not only in compact_store: every
-                    # policy entry point (store_sizes,
-                    # compaction_policy, mode=check) must fail with the
-                    # descriptive error, not a raw KeyError
-                    raise ValueError("doclen_table requires doclen_delta_dir")
-                dl_loc = self._table_location(params["doclen_table"])
-                base += _dir_bytes(dl_loc) if dl_loc else 0
-                delta += _dir_bytes(params["doclen_delta_dir"])
-        elif kind == "ann":
-            base = _dir_bytes(os.path.join(params["store_dir"], "base"))
-            delta = _dir_bytes(os.path.join(params["store_dir"], "delta"))
-        else:
-            raise ValueError(f"no size policy for store kind {kind!r}")
-        return base, delta
-
-    def compaction_policy(self, kind: str, params: dict[str, Any]) -> dict[str, Any]:
-        """Size-ratio auto-compaction policy for the incremental-store
-        trio: fold when delta bytes exceed ``threshold`` × base bytes
-        (default 0.2 — the delta side of every read stays a small
-        fraction of the pruned/bucketed base, which is what keeps the
-        read plans store-shaped).  An empty base with a non-empty delta
-        always folds; an empty delta never does."""
-        threshold = float(params.get("threshold", 0.2))
-        base, delta = self.store_sizes(kind, params)
-        return {"store": kind, **_size_policy(base, delta, threshold)}
-
     def compact_store(self, kind: str, params: dict[str, Any]) -> dict[str, Any]:
         """Operational entry point for the incremental stores'
-        maintenance jobs.  Run between streaming restarts; the ingest
-        streams may also invoke the same folds in-band from their own
-        serial ``foreachBatch`` hook (``auto_compact``) — what remains
-        forbidden is an EXTERNAL fold concurrent with an active ingest
-        (safety argument in ``streaming/maintenance.py``), except on the
-        CDC store, whose folds commit by compare-and-set:
+        maintenance jobs.  ``signature``, ``ann`` and ``posting`` run
+        ``streaming.maintenance.compact`` — the same function the
+        ingest streams call in-band from their own serial
+        ``foreachBatch`` hook (``auto_compact``).  A fold deletes only
+        the batches it read, so it never loses one an active ingest
+        writes meanwhile; but while it rewrites the base, that ingest's
+        reads can meet the base mid-rewrite, so run it between
+        streaming restarts (safety argument in
+        ``streaming/maintenance.py``).  The CDC store's folds commit by
+        compare-and-set and may run beside its applies:
 
         - ``signature``: fold the streamed band delta into the bucketed
           LSH base (params: ``table``, ``delta_dir``, ``n_buckets``);
@@ -324,94 +275,37 @@ class Actuator:
         Extends the reference's maintenance surface (POST /cache/clear,
         `management.py:394-419`) to the stores this engine adds.
         """
-        mode = params.get("mode", "force")
-        if mode not in ("force", "auto", "check"):
-            raise ValueError(f"unknown compaction mode {mode!r}")
-        if (
-            kind == "posting"
-            and params.get("doclen_table")
-            and not params.get("doclen_delta_dir")
-        ):
-            # fail the request loudly instead of surfacing a raw
-            # KeyError as an uninformative HTTP 500 mid-fold
-            raise ValueError("doclen_table requires doclen_delta_dir")
-        if mode in ("auto", "check"):
-            policy = self.compaction_policy(kind, params)
-            if mode == "check" or not policy["should_compact"]:
-                return {**policy, "status": "policy", "compacted": False}
-            return {**policy, **self._compact(kind, params), "compacted": True}
-        return self._compact(kind, params)
+        if kind != "cdc" or params.get("mode", "force") != "force":
+            return compact(self.spark, kind, params)
+        from cassandra_extractor_spark.streaming.cdc_stream import (
+            cleanup_generations,
+            fold_cdc_store,
+            purge_tombstones,
+        )
 
-    def _compact(self, kind: str, params: dict[str, Any]) -> dict[str, Any]:
-        if kind == "signature":
-            from cassandra_extractor_spark.streaming.dedup_stream import (
-                compact_signature_store,
+        op = params.get("op", "")
+        if op == "fold":
+            rep = fold_cdc_store(
+                self.spark, params["store_dir"], int(params.get("retain_gens", 3))
             )
-
-            absorbed = compact_signature_store(
+            return {"status": "folded", "store": kind, **rep}
+        if op == "purge_tombstones":
+            purge_tombstones(
                 self.spark,
-                params["table"],
-                params["delta_dir"],
-                n_buckets=int(params.get("n_buckets", 16)),
+                params["store_dir"],
+                params["order_cols"],
+                params.get("op_col", "op"),
+                params["horizon"],
             )
-        elif kind == "ann":
-            from cassandra_extractor_spark.streaming.ann_stream import compact_ann_store
-
-            absorbed = compact_ann_store(self.spark, params["store_dir"])
-        elif kind == "posting":
-            from cassandra_extractor_spark.streaming.posting_stream import (
-                compact_doclen_store,
-                compact_posting_store,
-            )
-
-            absorbed = compact_posting_store(
-                self.spark,
-                params["table"],
-                params["delta_dir"],
-                n_buckets=int(params.get("n_buckets", 16)),
-            )
-            if params.get("doclen_table"):
-                absorbed += compact_doclen_store(
-                    self.spark,
-                    params["doclen_table"],
-                    params["doclen_delta_dir"],
-                    n_buckets=int(params.get("n_buckets", 16)),
-                )
-        elif kind == "cdc":
-            from cassandra_extractor_spark.streaming.cdc_stream import (
-                cleanup_generations,
-                fold_cdc_store,
-                purge_tombstones,
-            )
-
-            op = params.get("op", "")
-            if op == "fold":
-                rep = fold_cdc_store(
-                    self.spark, params["store_dir"], int(params.get("retain_gens", 3))
-                )
-                return {"status": "folded", "store": kind, **rep}
-            if op == "purge_tombstones":
-                purge_tombstones(
-                    self.spark,
-                    params["store_dir"],
-                    params["order_cols"],
-                    params.get("op_col", "op"),
-                    params["horizon"],
-                )
-                return {
-                    "status": "purged",
-                    "store": kind,
-                    "horizon": list(params["horizon"]),
-                }
-            if op == "retain":
-                rep = cleanup_generations(
-                    params["store_dir"], int(params["retain_gens"])
-                )
-                return {"status": "retained", "store": kind, **rep}
-            raise ValueError(f"unknown cdc maintenance op {op!r}")
-        else:
-            raise ValueError(f"unknown store kind {kind!r}")
-        return {"status": "compacted", "store": kind, "absorbed": absorbed}
+            return {
+                "status": "purged",
+                "store": kind,
+                "horizon": list(params["horizon"]),
+            }
+        if op == "retain":
+            rep = cleanup_generations(params["store_dir"], int(params["retain_gens"]))
+            return {"status": "retained", "store": kind, **rep}
+        raise ValueError(f"unknown cdc maintenance op {op!r}")
 
     # --- HTTP ----------------------------------------------------------
 

@@ -24,7 +24,8 @@ re-assigned or re-shuffled.
   OVERWRITES its own ``batch=<id>`` directory, so a half-written
   attempt can never duplicate vectors;
 - compaction folds delta batches into the consolidated base (still
-  cell-partitioned) between query restarts, bounding small-file count.
+  cell-partitioned) between query restarts or in-band via
+  ``auto_compact``, bounding small-file count.
 """
 
 from __future__ import annotations
@@ -42,6 +43,7 @@ from cassandra_extractor_spark.operators.similarity import (
     cosine_prenormed,
     norm,
 )
+from cassandra_extractor_spark.streaming.maintenance import compact, fold_delta
 
 _STORE_COLS = ["vec_id", "emb", "nrm", "c_id"]
 
@@ -140,14 +142,9 @@ def stream_ann_ingest(
             stats_sink(
                 assigned.groupBy("c_id").agg(F.count("*").alias("n")), batch_id
             )
-        from cassandra_extractor_spark.streaming.maintenance import (
-            batch_due,
-            maybe_compact_ann,
-        )
-
-        if batch_due(auto_compact, batch_id):
-            maybe_compact_ann(
-                spark, store_dir, threshold=float(auto_compact.get("threshold", 0.2))
+        if auto_compact:
+            compact(
+                spark, "ann", {**auto_compact, "store_dir": store_dir, "mode": "auto"}, batch_id
             )
 
     return (
@@ -219,39 +216,45 @@ def ann_store_topk(
     )
 
 
-def compact_ann_store(spark: SparkSession, store_dir: str) -> int:
-    """Fold streamed delta batches into the consolidated base (still
-    cell-partitioned) — the periodic maintenance job that bounds
-    small-file count as batches accumulate.  Two-phase: the merged
-    store is materialized BEFORE the base overwrite (the plan must not
-    read the directory it is rewriting), the delta is removed only
-    after the commit; a crash in between leaves duplicate vectors in
-    base∪delta, which the ranked read tolerates (``ann_store_topk``
-    dedupes candidates on (q_id, n_id) before ranking).  Safe between
-    restarts or in-band from the owning query's serial ``foreachBatch``
-    hook (``auto_compact``; safety argument in
-    ``streaming/maintenance.py``) — only external concurrent invocation
-    is forbidden.  Returns the number of delta vectors absorbed."""
-    import shutil
-
-    try:
-        delta = spark.read.parquet(f"{store_dir}/delta").select(*_STORE_COLS)
-    except AnalysisException:
-        return 0
-    absorbed = delta.count()
-    if absorbed == 0:
-        return 0
-    # dropDuplicates(vec_id) makes the fold SELF-HEALING across the
-    # crash window: re-absorbing a delta whose rows already reached the
-    # base (fold committed, delta removal crashed, batch replayed)
-    # collapses the duplicates instead of carrying them in the base
-    # forever (assignment is keep=1 and deterministic, so duplicate
-    # vec_id rows are identical — keeping any one is exact)
-    merged = (
-        _read_store(spark, store_dir)
-        .dropDuplicates(["vec_id"])
-        .localCheckpoint(eager=True)
-    )
+def write_ann_base(merged: DataFrame, store_dir: str) -> None:
+    """Commit ``merged`` as the consolidated, cell-partitioned base."""
     merged.write.mode("overwrite").partitionBy("c_id").parquet(f"{store_dir}/base")
-    shutil.rmtree(f"{store_dir}/delta", ignore_errors=True)
-    return absorbed
+
+
+def compact_ann_store(spark: SparkSession, store_dir: str) -> int:
+    """Fold the committed delta batches into the consolidated base
+    (still cell-partitioned) — the periodic maintenance job that bounds
+    small-file count as batches accumulate.  Two-phase
+    (``maintenance.fold_delta``): the merged store is materialized
+    BEFORE the base overwrite (the plan must not read the directory it
+    is rewriting), the batches it read are removed only after the
+    commit; a crash in between leaves duplicate vectors in base∪delta,
+    which the ranked read tolerates (``ann_store_topk`` dedupes
+    candidates on (q_id, n_id) before ranking).  Safe between restarts
+    or in-band from the owning query's serial ``foreachBatch`` hook
+    (``auto_compact``; safety argument in
+    ``streaming/maintenance.py``); run beside an active ingest from
+    outside it, it loses none of the ingest's batches, but probes can
+    read the base mid-rewrite.  Returns the number of delta vectors
+    absorbed."""
+
+    def merge(delta: DataFrame) -> DataFrame:
+        try:
+            delta = spark.read.parquet(f"{store_dir}/base").select(*_STORE_COLS).unionByName(delta)
+        except AnalysisException:
+            pass  # first fold: no base yet
+        # dropDuplicates(vec_id) makes the fold SELF-HEALING across the
+        # crash window: re-absorbing a delta whose rows already reached
+        # the base (fold committed, delta removal crashed, batch
+        # replayed) collapses the duplicates instead of carrying them in
+        # the base forever (assignment is keep=1 and deterministic, so
+        # duplicate vec_id rows are identical — keeping any one is exact)
+        return delta.dropDuplicates(["vec_id"])
+
+    return fold_delta(
+        spark,
+        f"{store_dir}/delta",
+        _STORE_COLS,
+        merge,
+        lambda staged: write_ann_base(staged, store_dir),
+    )

@@ -23,8 +23,9 @@ Architecture — base store + per-batch delta, the production shape at
   attempt can neither duplicate store rows nor leak into its own
   candidate set.  The pairs sink receives ``batch_id`` and must be
   idempotent per batch — the standard foreachBatch contract;
-- periodic compaction (outside this query) folds the delta back into
-  the bucketed base via ``write_signature_store(base ∪ delta)``.
+- periodic compaction (between restarts, or in-band via
+  ``auto_compact``) folds the delta back into the bucketed base via
+  ``write_signature_store(base ∪ delta)``.
 """
 
 from __future__ import annotations
@@ -36,6 +37,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
 from cassandra_extractor_spark.operators.dedup import incremental_dedup
+from cassandra_extractor_spark.streaming.maintenance import compact, fold_delta
 
 _BAND_COLS = ["doc_id", "band", "sig"]
 
@@ -95,18 +97,12 @@ def stream_incremental_dedup(
             .write.mode("overwrite")
             .parquet(f"{delta_dir}/batch={batch_id}")
         )
-        from cassandra_extractor_spark.streaming.maintenance import (
-            batch_due,
-            maybe_compact_signature,
-        )
-
-        if batch_due(auto_compact, batch_id):
-            maybe_compact_signature(
+        if auto_compact:
+            compact(
                 spark,
-                store_table,
-                delta_dir,
-                threshold=float(auto_compact.get("threshold", 0.2)),
-                n_buckets=int(auto_compact.get("n_buckets", 16)),
+                "signature",
+                {**auto_compact, "table": store_table, "delta_dir": delta_dir, "mode": "auto"},
+                batch_id,
             )
 
     return (
@@ -127,47 +123,34 @@ def compact_signature_store(
     the periodic maintenance job that keeps the store-side bucket join
     exchange-free as the streamed corpus grows.
 
-    Reads base ∪ delta, rewrites the store with the SAME bucket spec
-    (one full shuffle, amortized across every future batch join), and
-    removes the absorbed delta partitions.  Safe to run between
-    streaming query restarts, or in-band from the SAME query's
-    ``foreachBatch`` hook (``auto_compact`` →
-    ``maintenance.maybe_compact_signature``): micro-batches never
-    overlap within one query, so an in-hook fold is exactly as
+    Reads base ∪ the committed delta batches, rewrites the store with
+    the SAME bucket spec (one full shuffle, amortized across every
+    future batch join), and removes exactly the batches it read
+    (``maintenance.fold_delta``).  The store table swaps atomically at
+    the ``saveAsTable`` commit and the batches go only afterwards, so a
+    crash between the two leaves duplicate bands (harmless: the
+    candidate join is set-semantic, pairs go through ``.distinct()``).
+    Safe between streaming query restarts, or in-band from the SAME
+    query's ``foreachBatch`` hook (``auto_compact``): micro-batches
+    never overlap within one query, so an in-hook fold is exactly as
     isolated as one run between restarts (full safety argument in
-    ``streaming/maintenance.py``).  Only EXTERNAL concurrent
-    invocation — a separate process folding while an active query
-    appends ``batch=<id>`` partitions — remains forbidden.  Returns the
+    ``streaming/maintenance.py``).  Run from another process beside an
+    active query, it loses none of the batches the query appends, but
+    the query's gate can read the store mid-rewrite.  Returns the
     number of delta band rows absorbed (0 = nothing to do, store
     untouched).
     """
     from cassandra_extractor_spark.operators.dedup import write_signature_store
 
-    try:
-        delta = spark.read.parquet(delta_dir).select(*_BAND_COLS)
-    except AnalysisException:
-        return 0
-    absorbed = delta.count()
-    if absorbed == 0:
-        return 0
     # .distinct() makes the fold SELF-HEALING across the crash window:
     # re-absorbing a delta whose band rows already reached the base
     # (fold committed, delta removal crashed, batch replayed) collapses
     # the duplicates instead of carrying them in the base forever —
     # band rows are set-semantic by the store's contract
-    merged = (
-        spark.table(store_table)
-        .select(*_BAND_COLS)
-        .unionByName(delta)
-        .distinct()
+    return fold_delta(
+        spark,
+        delta_dir,
+        _BAND_COLS,
+        lambda delta: spark.table(store_table).select(*_BAND_COLS).unionByName(delta).distinct(),
+        lambda staged: write_signature_store(staged, store_table, n_buckets=n_buckets),
     )
-    # two-phase rename-free rewrite: the store table swaps atomically at
-    # the saveAsTable commit; the delta is removed only afterwards, so a
-    # crash between the two steps leaves duplicate bands (harmless: the
-    # candidate join is set-semantic, pairs go through .distinct())
-    staged = merged.localCheckpoint(eager=True)
-    write_signature_store(staged, store_table, n_buckets=n_buckets)
-    import shutil
-
-    shutil.rmtree(delta_dir, ignore_errors=True)
-    return absorbed

@@ -23,7 +23,7 @@ maintains itself.
   map-side combined — and lands in an overwrite-own ``batch=<id>``
   delta directory (replay-safe, same contract as the other stores);
 - compaction folds delta postings back into the bucketed base between
-  streaming restarts.
+  streaming restarts or in-band via ``auto_compact``.
 """
 
 from __future__ import annotations
@@ -34,6 +34,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
+
+from cassandra_extractor_spark.streaming.maintenance import compact, fold_delta
 
 _POSTING_COLS = ["doc_id", "tok", "tf"]
 _DOCLEN_COLS = ["doc_id", "dl"]
@@ -167,20 +169,18 @@ def stream_posting_ingest(
                 ),
                 batch_id,
             )
-        from cassandra_extractor_spark.streaming.maintenance import (
-            batch_due,
-            maybe_compact_posting,
-        )
-
-        if batch_due(auto_compact, batch_id):
-            maybe_compact_posting(
+        if auto_compact:
+            compact(
                 spark,
-                store_table,
-                delta_dir,
-                doclen_table=auto_compact.get("doclen_table"),
-                doclen_delta_dir=doclen_delta_dir,
-                threshold=float(auto_compact.get("threshold", 0.2)),
-                n_buckets=int(auto_compact.get("n_buckets", 16)),
+                "posting",
+                {
+                    **auto_compact,
+                    "table": store_table,
+                    "delta_dir": delta_dir,
+                    "doclen_delta_dir": doclen_delta_dir,
+                    "mode": "auto",
+                },
+                batch_id,
             )
 
     return (
@@ -484,6 +484,33 @@ def ns_bm25_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     return bm25_query_against_store(spark, postings_t, None, doclens_t, None)
 
 
+def _fold_max(
+    spark: SparkSession,
+    table: str,
+    delta_dir: str,
+    cols: list[str],
+    write: Callable[..., None],
+    n_buckets: int,
+) -> int:
+    """Fold ``delta_dir`` into a bucketed table (``maintenance.fold_delta``)
+    merging base ∪ delta on ``cols[:-1]`` with MAX of the last column —
+    idempotent under the crash window (base committed, delta not yet
+    removed): re-absorbing an already-folded batch changes nothing,
+    because both copies of a row are identical."""
+    *keys, val = cols
+    return fold_delta(
+        spark,
+        delta_dir,
+        cols,
+        lambda delta: spark.table(table)
+        .select(*cols)
+        .unionByName(delta)
+        .groupBy(*keys)
+        .agg(F.max(val).cast("long").alias(val)),
+        lambda staged: write(staged, table, n_buckets=n_buckets),
+    )
+
+
 def compact_doclen_store(
     spark: SparkSession, doclen_table: str, doclen_delta_dir: str, n_buckets: int = 16
 ) -> int:
@@ -491,57 +518,23 @@ def compact_doclen_store(
     idempotent MAX-collapse contract as ``compact_posting_store``
     (a document's length never changes; base∩delta duplicates from the
     crash window are identical rows).  Returns delta rows absorbed."""
-    import shutil
-
-    try:
-        delta = spark.read.parquet(doclen_delta_dir).select(*_DOCLEN_COLS)
-    except AnalysisException:
-        return 0
-    absorbed = delta.count()
-    if absorbed == 0:
-        return 0
-    merged = (
-        spark.table(doclen_table)
-        .select(*_DOCLEN_COLS)
-        .unionByName(delta)
-        .groupBy("doc_id")
-        .agg(F.max("dl").cast("long").alias("dl"))
-        .localCheckpoint(eager=True)
+    return _fold_max(
+        spark, doclen_table, doclen_delta_dir, _DOCLEN_COLS, write_doclen_store, n_buckets
     )
-    write_doclen_store(merged, doclen_table, n_buckets=n_buckets)
-    shutil.rmtree(doclen_delta_dir, ignore_errors=True)
-    return absorbed
 
 
 def compact_posting_store(
     spark: SparkSession, store_table: str, delta_dir: str, n_buckets: int = 16
 ) -> int:
-    """Fold the delta into the bucketed base.  Idempotent under the
-    crash window (base committed, delta not yet removed): the merge
-    dedupes on (doc_id, tok) keeping MAX(tf) — re-absorbing an
-    already-folded batch changes nothing, because a given (doc, term)
-    posting is identical in both copies.  Safe between restarts or
-    in-band from the owning query's serial ``foreachBatch`` hook
-    (``auto_compact``; safety argument in ``streaming/maintenance.py``)
-    — only external concurrent invocation is forbidden.  Returns delta
-    posting rows absorbed (0 = nothing to do)."""
-    import shutil
-
-    try:
-        delta = spark.read.parquet(delta_dir).select(*_POSTING_COLS)
-    except AnalysisException:
-        return 0
-    absorbed = delta.count()
-    if absorbed == 0:
-        return 0
-    merged = (
-        spark.table(store_table)
-        .select(*_POSTING_COLS)
-        .unionByName(delta)
-        .groupBy("doc_id", "tok")
-        .agg(F.max("tf").cast("long").alias("tf"))
-        .localCheckpoint(eager=True)
-    )
-    write_posting_store(merged, store_table, n_buckets=n_buckets)
-    shutil.rmtree(delta_dir, ignore_errors=True)
-    return absorbed
+    """Fold the committed delta batches into the bucketed base and
+    remove exactly those.  Idempotent under the crash window (base
+    committed, delta not yet removed): the merge dedupes on (doc_id,
+    tok) keeping MAX(tf) — re-absorbing an already-folded batch changes
+    nothing, because a given (doc, term) posting is identical in both
+    copies.  Safe between restarts or in-band from the owning query's
+    serial ``foreachBatch`` hook (``auto_compact``; safety argument in
+    ``streaming/maintenance.py``); run beside an active ingest from
+    outside it, it loses none of the ingest's batches, but retrieval
+    can read the base mid-rewrite.  Returns delta posting rows absorbed
+    (0 = nothing to do)."""
+    return _fold_max(spark, store_table, delta_dir, _POSTING_COLS, write_posting_store, n_buckets)

@@ -459,14 +459,16 @@ def test_auto_compaction_policy(spark, tmp_path):
 
 
 def test_posting_policy_counts_doclen_and_validates_pair(spark, tmp_path):
-    """Round-12: (a) doclen_table without doclen_delta_dir is rejected
-    up front with a ValueError (not a raw KeyError mid-fold → opaque
-    HTTP 500); (b) the size-ratio policy counts the doclen delta's
-    bytes, so a doclen delta alone can trip auto-compaction even when
-    the posting delta is empty (postings compacted out-of-band)."""
+    """(a) doclen_table without doclen_delta_dir is rejected up front
+    with a ValueError (not a raw KeyError mid-fold → opaque HTTP 500),
+    in every mode and on the in-band entry point too; (b) the
+    size-ratio policy counts the doclen store's bytes on both sides,
+    so a doclen delta alone can trip auto-compaction even when the
+    posting delta is empty (postings compacted out-of-band)."""
     import pandas as pd
     import pytest
 
+    from cassandra_extractor_spark.streaming.maintenance import compact
     from cassandra_extractor_spark.streaming.posting_stream import (
         build_doclens,
         build_postings,
@@ -486,21 +488,24 @@ def test_posting_policy_counts_doclen_and_validates_pair(spark, tmp_path):
     try:
         bad = {"table": "dlpol_t", "delta_dir": str(tmp_path / "nodelta"),
                "doclen_table": "dlpol_dl"}
+        # the descriptive error fires on every entry point: the route in
+        # each mode, and the in-band hook's call (a due batch id)
+        for mode in ("force", "auto", "check"):
+            with pytest.raises(ValueError, match="doclen_table requires doclen_delta_dir"):
+                actuator.compact_store("posting", {**bad, "mode": mode})
         with pytest.raises(ValueError, match="doclen_table requires doclen_delta_dir"):
-            actuator.compact_store("posting", bad)
-        # round-13 (advisor): the descriptive error also fires on the
-        # policy-only entry points, not a raw KeyError
-        with pytest.raises(ValueError, match="doclen_table requires doclen_delta_dir"):
-            actuator.store_sizes("posting", bad)
-        with pytest.raises(ValueError, match="doclen_table requires doclen_delta_dir"):
-            actuator.compaction_policy("posting", bad)
-        base_params = {"table": "dlpol_t", "delta_dir": str(tmp_path / "nodelta")}
+            compact(spark, "posting", {**bad, "mode": "auto", "every_n_batches": 1}, 0)
+        base_params = {"table": "dlpol_t", "delta_dir": str(tmp_path / "nodelta"),
+                       "mode": "check"}
         dl_params = {**base_params, "doclen_table": "dlpol_dl",
                      "doclen_delta_dir": dl_delta}
-        b0, d0 = actuator.store_sizes("posting", base_params)
-        b1, d1 = actuator.store_sizes("posting", dl_params)
-        assert d0 == 0 and d1 > 0  # doclen delta bytes now count
+        p0 = actuator.compact_store("posting", base_params)
+        p1 = actuator.compact_store("posting", dl_params)
+        b0, d0 = p0["base_bytes"], p0["delta_bytes"]
+        b1, d1 = p1["base_bytes"], p1["delta_bytes"]
+        assert d0 == 0 and d1 > 0  # doclen delta bytes count
         assert b1 > b0  # and the doclen base counts on the base side
+        assert p1["compacted"] is False and (tmp_path / "dl_delta").exists()
         # the doclen-only delta trips the auto policy and folds
         out = actuator.compact_store(
             "posting", {**dl_params, "mode": "auto", "threshold": 1e-9, "n_buckets": 2}
@@ -510,6 +515,114 @@ def test_posting_policy_counts_doclen_and_validates_pair(spark, tmp_path):
     finally:
         spark.sql("DROP TABLE IF EXISTS dlpol_t")
         spark.sql("DROP TABLE IF EXISTS dlpol_dl")
+
+
+def test_signature_and_ann_over_the_compact_route(spark, sf_dir, tmp_path):
+    """/maintenance/compact for the signature and ANN stores, in each
+    mode: ``check`` reports the store's base/delta bytes and never
+    folds, ``auto`` folds when the policy says so, ``force`` folds
+    unconditionally, and a second run absorbs nothing."""
+    from pyspark.sql import functions as F
+
+    from cassandra_extractor_spark.operators.dedup import (
+        bands_for,
+        minhash_signatures_for,
+        write_signature_store,
+    )
+    from cassandra_extractor_spark.operators.similarity import (
+        N_IVF_CENTROIDS,
+        N_QUERIES,
+        _load_embeddings,
+    )
+    from cassandra_extractor_spark.sources.catalog import load_table
+    from cassandra_extractor_spark.streaming.ann_stream import (
+        _read_centroids,
+        assign_cells,
+        init_ann_centroids,
+    )
+    from cassandra_extractor_spark.streaming.maintenance import dir_bytes, table_location
+
+    docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
+    sig_delta = str(tmp_path / "sig_delta")
+
+    def land_signature(b):
+        part = docs.where(F.col("doc_id").between(100 * b, 100 * b + 99))
+        bands_for(minhash_signatures_for(part)).select("doc_id", "band", "sig").write.mode(
+            "overwrite"
+        ).parquet(f"{sig_delta}/batch={b}")
+
+    e = _load_embeddings(spark, sf_dir)
+    cent = e.where(
+        (F.col("vec_id") >= N_QUERIES) & (F.col("vec_id") < N_QUERIES + N_IVF_CENTROIDS)
+    ).select(F.col("vec_id").alias("c_id"), F.col("emb").alias("c_emb"))
+    corpus = e.where(F.col("vec_id") >= N_QUERIES).select("vec_id", "emb")
+    store = str(tmp_path / "ann")
+    init_ann_centroids(spark, cent, store)
+
+    def land_ann(b):
+        part = corpus.where(F.col("vec_id") % 3 == b)
+        assign_cells(part, _read_centroids(spark, store)).write.mode("overwrite").partitionBy(
+            "c_id"
+        ).parquet(f"{store}/delta/batch={b}")
+
+    # kind → (route params, the base's bytes, delta dir, land batch b)
+    cases = {
+        "signature": (
+            {"table": "route_sig", "delta_dir": sig_delta, "n_buckets": 2},
+            lambda: dir_bytes(table_location(spark, "route_sig")),
+            sig_delta,
+            land_signature,
+        ),
+        "ann": (
+            {"store_dir": store},
+            lambda: dir_bytes(f"{store}/base"),
+            f"{store}/delta",
+            land_ann,
+        ),
+    }
+    actuator = Actuator(spark, MetricsRegistry())
+    try:
+        write_signature_store(
+            bands_for(minhash_signatures_for(docs.where(F.col("doc_id") < 100))),
+            "route_sig",
+            n_buckets=2,
+        )
+        for kind, (params, base_bytes, delta_dir, land) in cases.items():
+            if kind == "ann":  # the ANN base comes from a first fold
+                land(0)
+                assert actuator.compact_store(kind, params)["absorbed"] > 0
+            land(1)
+            delta_bytes = dir_bytes(delta_dir)
+            chk = actuator.compact_store(kind, {**params, "mode": "check", "threshold": 0.0})
+            assert chk["store"] == kind and chk["status"] == "policy"
+            assert chk["base_bytes"] == base_bytes() > 0
+            assert chk["delta_bytes"] == delta_bytes > 0
+            assert chk["should_compact"] is True and chk["compacted"] is False
+            assert dir_bytes(delta_dir) == delta_bytes  # check never folds
+            skip = actuator.compact_store(kind, {**params, "mode": "auto", "threshold": 1e9})
+            assert skip["should_compact"] is False and skip["compacted"] is False
+            assert dir_bytes(delta_dir) == delta_bytes
+            did = actuator.compact_store(kind, {**params, "mode": "auto", "threshold": 0.0})
+            assert did["status"] == "compacted" and did["compacted"] is True
+            assert did["absorbed"] > 0 and dir_bytes(delta_dir) == 0
+            land(2)
+            forced = actuator.compact_store(kind, params)
+            assert list(forced) == ["status", "store", "absorbed"]
+            assert forced["absorbed"] > 0 and dir_bytes(delta_dir) == 0
+            again = actuator.compact_store(kind, params)
+            assert again == {"status": "compacted", "store": kind, "absorbed": 0}
+            after = actuator.compact_store(kind, {**params, "mode": "check"})
+            assert after["delta_bytes"] == 0 and after["base_bytes"] == base_bytes()
+        # every folded row reached the base, once
+        sig = spark.table("route_sig")
+        assert sig.count() == sig.distinct().count()
+        want = bands_for(minhash_signatures_for(docs.where(F.col("doc_id") < 300)))
+        assert sig.count() == want.count()
+        base = spark.read.parquet(f"{store}/base")
+        assert base.count() == base.select("vec_id").distinct().count()
+        assert base.count() == assign_cells(corpus, _read_centroids(spark, store)).count()
+    finally:
+        spark.sql("DROP TABLE IF EXISTS route_sig")
 
 
 def test_cdc_retention_over_control_plane(spark, tmp_path):

@@ -44,9 +44,6 @@ ALLOWED_UNREACHED = {
     "streaming/posting_stream.py": {"stream_posting_ingest", "boolean_query_against_store"},
     "streaming/ann_stream.py": {"stream_ann_ingest"},
     "streaming/dedup_stream.py": {"stream_incremental_dedup"},
-    "streaming/maintenance.py": {
-        "batch_due", "maybe_compact_posting", "maybe_compact_signature", "maybe_compact_ann",
-    },
     # drop memoized table plans after rewriting a table directory in place
     "sources/catalog.py": {"invalidate_table_cache"},
     # reference implementations the tests check live operators against
