@@ -220,3 +220,45 @@ def unpin_source_schemas(spark: SparkSession, under: str | None = None) -> None:
     """Drop the schemas ``read_source`` pinned for ``under`` and the paths
     below it (all of them when None); the next read infers afresh."""
     _drop(spark.__dict__.get("_ce_source_schemas"), under)
+
+
+#: plan nodes that map each input row to at most one output row, unchanged
+#: in its source file (``CollectMetrics`` is an ``observe``): a frame over
+#: them reads rows of the files its relation lists and nothing else
+_ROW_WISE = {"Project", "Filter", "SubqueryAlias", "CollectMetrics"}
+
+
+def file_relation(df: DataFrame) -> tuple[object | None, bool]:
+    """The file relation (``HadoopFsRelation``) ``df`` reads through
+    row-wise nodes only, or None when it reads anything else; and
+    whether it reads every row of it (no filter on the way)."""
+    node, whole = df._jdf.queryExecution().analyzed(), True
+    while (kind := node.getClass().getSimpleName()) in _ROW_WISE:
+        whole = whole and kind != "Filter"
+        node = node.children().apply(0)
+    if kind != "LogicalRelation":
+        return None, whole
+    relation = node.relation()
+    return (relation if relation.getClass().getSimpleName() == "HadoopFsRelation" else None), whole
+
+
+def file_snapshot(df: DataFrame) -> bool:
+    """Whether every query of ``df`` reads the same rows: one file
+    relation whose listing Spark took when the frame was built
+    (``InMemoryFileIndex``: ``read_source``, ``load_table``; a catalog
+    table's index lists again per query), under row-wise nodes, with a
+    deterministic plan (no ``uuid()``, ``rand()``,
+    ``monotonically_increasing_id()``), no current-time expression
+    (``current_timestamp()`` and its kin count as deterministic, but
+    each query folds its own literal) and no subquery (which reads a
+    second source).  Files are assumed immutable once listed."""
+    relation, _ = file_relation(df)
+    if relation is None or relation.location().getClass().getSimpleName() != "InMemoryFileIndex":
+        return False
+    plan = df._jdf.queryExecution().analyzed()
+    patterns = df.sparkSession._jvm.org.apache.spark.sql.catalyst.trees.TreePattern
+    return bool(
+        plan.deterministic()
+        and not plan.containsPattern(patterns.CURRENT_LIKE())
+        and not plan.containsPattern(patterns.PLAN_EXPRESSION())
+    )

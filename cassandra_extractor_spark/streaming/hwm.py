@@ -13,9 +13,10 @@ exactly at the mark must NOT be extracted (SURVEY §7.3.4).
 A run takes one of two plans, chosen from the frame (``plan_incremental``):
 
 - **One scan** — the frame is one file relation under row-wise
-  projections and filters (``load_table``, ``read_source``).  Spark
-  lists a file relation's files when the frame is built, so its scan is
-  a snapshot: a row landed later sits in a file this frame never reads.
+  projections, filters and observations (``load_table``,
+  ``read_source``; ``catalog.file_relation``).  Spark lists a file
+  relation's files when the frame is built, so its scan is a snapshot:
+  a row landed later sits in a file this frame never reads.
   The run scans ``ts >= previous mark`` once and takes the new mark from
   that scan itself (``max(ts)`` + 1µs, through an ``Observation`` read
   off the window's first action, which must read the window whole).  It
@@ -52,13 +53,11 @@ from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, functions as F
 
+from cassandra_extractor_spark.sources.catalog import file_relation
+
 #: serializes every load-modify-replace of a state file in this process:
 #: the app runs one job thread per table, all on one file
 _WRITE_LOCK = threading.Lock()
-
-#: plan nodes that map each input row to at most one output row, unchanged
-#: in its source file: a window over them reads a snapshot of the files
-_ROW_WISE = {"Project", "Filter", "SubqueryAlias"}
 
 
 @dataclass
@@ -142,20 +141,6 @@ def hwm_filter(df: DataFrame, ts_col: str, hwm: str | None) -> DataFrame:
     return df.where(F.col(ts_col) < F.to_timestamp(F.lit(hwm)))
 
 
-def _file_scan(df: DataFrame) -> tuple[bool, bool]:
-    """Whether ``df`` reads one file relation through row-wise nodes
-    only, and whether it reads every row of it (no filter on the way)."""
-    node, whole = df._jdf.queryExecution().analyzed(), True
-    while (kind := node.getClass().getSimpleName()) in _ROW_WISE:
-        whole = whole and kind != "Filter"
-        node = node.children().apply(0)
-    files = (
-        kind == "LogicalRelation"
-        and node.relation().getClass().getSimpleName() == "HadoopFsRelation"
-    )
-    return files, whole
-
-
 def _file_path(uri: str) -> str:
     """``inputFiles()``'s spelling of a local file (``file:///x``) in
     ``_metadata.file_path``'s (``file:/x``)."""
@@ -221,13 +206,16 @@ def plan_incremental(
       the max the window's first action observed, with this listing
       when ``df`` has no filter (a filtered run leaves rows of its
       files unread, so the next run must read them again).
-      Precondition: that first action reads the window whole, as
-      ``fan_out``'s does (the ``noop`` materialization, or a lone
-      sink's full write).  A partial first action observes a max at or
-      below the true one, so the mark alone would only re-deliver
-      rows; but the listing ``commit()`` records would then skip the
-      unread rows of those files.  ``commit()`` before any action ran
-      the window raises ``RuntimeError``.
+      Precondition: the first action on the window to finish reads it
+      whole, as ``fan_out``'s does when its sinks write whole frames:
+      the ``noop`` materialization of a cached frame, a lone sink's
+      write, or, on a file snapshot (``catalog.file_snapshot``), each
+      sink's own write, the first of which to finish sets the mark.  A
+      partial first action (a sink's ``limit`` or ``head``) observes a
+      max at or below the true one, so the mark alone would only
+      re-deliver rows; but the listing ``commit()`` records would then
+      skip the unread rows of those files.  ``commit()`` before any
+      action ran the window raises ``RuntimeError``.
     - any other frame: a capture job takes the max first and the window
       is ``[previous mark, max + 1µs)``.
     """
@@ -237,8 +225,8 @@ def plan_incremental(
         since = F.col(ts_col).isNotNull()
     else:
         since = F.col(ts_col) >= F.to_timestamp(F.lit(prev))
-    files, whole = _file_scan(df)
-    if files:
+    relation, whole = file_relation(df)
+    if relation is not None:
         listing, done = [], []
         if not lateness_us:
             done = entry.get("files", [])

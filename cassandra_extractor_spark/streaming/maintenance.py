@@ -101,8 +101,8 @@ def fold_delta(
     write: Callable[[DataFrame], None],
 ) -> int:
     """Fold the committed batches under ``delta_dir`` into a store's
-    base; returns the delta rows absorbed (0 = nothing to do, store
-    untouched).
+    base; returns the delta rows absorbed (0 = base untouched; the
+    listed batches, all empty, are still removed).
 
     Lists the ``batch=<id>`` dirs that hold ``_SUCCESS`` (a batch still
     being written has none) and reads exactly those, with ``basePath``
@@ -122,9 +122,10 @@ def fold_delta(
         return 0
     delta = spark.read.option("basePath", delta_dir).parquet(*batches).select(*cols)
     absorbed = delta.count()
-    if absorbed == 0:
-        return 0
-    write(merge(delta).localCheckpoint(eager=True))
+    if absorbed:
+        write(merge(delta).localCheckpoint(eager=True))
+    # empty batches (an empty micro-batch writes a footer-only file) go
+    # too: left behind, their bytes would keep the policy asking to fold
     for b in batches:
         shutil.rmtree(b, ignore_errors=True)
     with suppress(OSError):  # a batch landed meanwhile: the dir stays

@@ -157,3 +157,25 @@ def test_batch_landing_mid_fold_survives_and_is_folded_next(spark, tmp_path, mon
         assert set(_batch_ids(0) + _batch_ids(1)) <= store.base_ids()
     finally:
         store.drop()
+
+
+def test_fold_removes_an_empty_batch_and_leaves_the_base(spark, tmp_path):
+    """A committed batch with no rows (an empty micro-batch writes a
+    footer-only file) goes with the fold that lists it, and the base
+    stays as it was: the next policy check sees no delta."""
+    from cassandra_extractor_spark.streaming.maintenance import compact
+
+    store = _posting(spark, tmp_path)
+    try:
+        base = store.base_ids()
+        empty = spark.createDataFrame([], "doc_id LONG, text STRING")
+        cols = posting_stream._POSTING_COLS
+        assert _land(posting_stream.build_postings(empty).select(*cols), f"{store.delta}/batch=0") == 0
+        params = {"table": "fi_post", "delta_dir": store.delta, "n_buckets": 2}
+        did = compact(spark, "posting", {**params, "mode": "auto"})
+        assert (did["delta_bytes"] > 0, did["absorbed"]) == (True, 0)
+        assert not os.path.exists(f"{store.delta}/batch=0")
+        assert compact(spark, "posting", {**params, "mode": "check"})["delta_bytes"] == 0
+        assert store.base_ids() == base
+    finally:
+        store.drop()

@@ -250,6 +250,27 @@ def test_failed_sinks_commit_nothing_and_the_next_run_redelivers(spark, src, sto
     assert _run(spark, src, store)[0] == []
 
 
+def test_two_sink_fan_out_of_a_file_window_commits_its_max(spark, src, store):
+    """A file window is a snapshot: its two sinks each read the files,
+    uncached, and the first to finish sets the mark and the listing."""
+    from cassandra_extractor_spark.sinks.fanout import fan_out
+
+    _land(src, 0)
+    _land(src, 1)
+    out, commit = plan_incremental(spark.read.parquet(str(src)), "ts", "t", store)
+    got = {}
+
+    def sink(name):
+        def write(d):
+            got[name] = (d.storageLevel.useMemory, sorted(r["id"] for r in d.collect()))
+        return write
+
+    assert fan_out(out, {"a": sink("a"), "b": sink("b")}) == {"a": None, "b": None}
+    assert got == {n: (False, list(range(200))) for n in "ab"}
+    commit()
+    assert (store.get("t"), len(store.files("t"))) == ("2024-01-01 00:03:19.000001", 2)
+
+
 @pytest.mark.parametrize("filters", [
     # an operator widens the filter between runs
     ["id % 100 < 50", None],

@@ -2,6 +2,11 @@
 
 from __future__ import annotations
 
+import hashlib
+import re
+
+import numpy as np
+import pandas as pd
 from pyspark.sql import Row, functions as F
 
 from cassandra_extractor_spark.operators.dedup import (
@@ -1518,3 +1523,218 @@ def test_q25_except_nonvacuous(spark, tmp_path):
     ).to_parquet(tmp_path / "customer.parquet")
     got = [r.n_nationkey for r in QUERIES["q25_except"](spark, str(tmp_path)).collect()]
     assert got == [1, 3]
+
+
+# ------------------------------------------------------- first principles
+# Each operator's Spark result recomputed with plain Python/numpy from
+# the raw parquet, independently of both engines (the oracle gate only
+# proves Spark == DuckDB; these prove the shared arithmetic is the
+# intended algorithm), plus sketch-accuracy and plan-shape assertions.
+
+
+def _h64(s: str, salt: str) -> int:
+    """Python mirror of dedup._md5_hash64 (first 15 hex chars of
+    md5('salt|s'))."""
+    return int(hashlib.md5(f"{salt}|{s}".encode()).hexdigest()[:15], 16)
+
+
+_WS_RE = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def _tokens(text: str) -> list[str]:
+    return _WS_RE.split(text.lower().strip(" "))
+
+
+def test_ewma_matches_python_recursion(spark, sf_dir):
+    from cassandra_extractor_spark.operators.relational import (
+        EWMA_ALPHA,
+        EWMA_WINDOW,
+        q108_ewma,
+    )
+
+    out = q108_ewma(spark, sf_dir).toPandas()
+    ev = pd.read_parquet(f"{sf_dir}/events.parquet")
+    ev = ev[ev.value.notna()].sort_values(["user_id", "ts", "event_id"])
+    uid = int(out.user_id.iloc[0])
+    g = ev[ev.user_id == uid]
+    vals = [float(round(v * 100)) for v in g.value]
+    got = dict(zip(out[out.user_id == uid].event_id, out[out.user_id == uid].ewma))
+    for idx, eid in enumerate(g.event_id):
+        window = vals[max(0, idx - (EWMA_WINDOW - 1)) : idx + 1]
+        acc = window[0]
+        for x in window[1:]:
+            acc = acc * (1 - EWMA_ALPHA) + x * EWMA_ALPHA
+        assert abs(got[eid] - acc / 100) < 1e-6, (eid, got[eid], acc / 100)
+
+
+def test_cusum_closed_form_equals_clamped_recursion(spark, sf_dir):
+    from cassandra_extractor_spark.operators.relational import q109_cusum
+
+    out = q109_cusum(spark, sf_dir).toPandas().set_index("user_id")
+    ev = pd.read_parquet(f"{sf_dir}/events.parquet")
+    ev = ev[ev.value.notna()].sort_values(["user_id", "ts", "event_id"])
+    cents = (ev.value * 100).round().astype(int)
+    n, total = len(ev), int(cents.sum())
+    for uid, g in ev.assign(c=cents).groupby("user_id"):
+        c = peak = 0
+        for x in g.c:
+            c = max(0, c + (int(x) * n - total))
+            peak = max(peak, c)
+        expected = peak / (100 * n)
+        assert abs(out.loc[uid, "peak_cusum"] - expected) < 1e-5, uid
+
+
+def test_span_corruption_first_principles(spark, sf_dir):
+    from cassandra_extractor_spark.operators.text import (
+        SPAN_MASK_PCT,
+        ns_span_corruption,
+    )
+
+    out = ns_span_corruption(spark, sf_dir).toPandas().set_index("doc_id")
+    docs = pd.read_parquet(f"{sf_dir}/documents.parquet").head(20)
+    for _, row in docs.iterrows():
+        toks = _tokens(row.text)
+        masks = [
+            _h64(f"{row.doc_id}#{i}", "span") % 100 < SPAN_MASK_PCT
+            for i in range(1, len(toks) + 1)
+        ]
+        n_masked = sum(masks)
+        n_spans = sum(
+            1 for i, m in enumerate(masks) if m and (i == 0 or not masks[i - 1])
+        )
+        got = out.loc[row.doc_id]
+        assert (got.n_tokens, got.n_masked, got.n_spans) == (
+            len(toks),
+            n_masked,
+            n_spans,
+        ), row.doc_id
+
+
+def test_cms_never_undercounts(spark, sf_dir):
+    from cassandra_extractor_spark.operators.text import ns_cms_estimate
+
+    cms = ns_cms_estimate(spark, sf_dir).toPandas()
+    assert len(cms) > 0
+    assert (cms.est_n >= cms.true_n).all()
+
+
+def test_hll_relative_error_within_sketch_bound(spark, sf_dir):
+    # m=256 registers → σ ≈ 1.04/√256 = 6.5%; 0.2 is a 3σ envelope
+    from cassandra_extractor_spark.operators.text import ns_hll_manual
+
+    row = ns_hll_manual(spark, sf_dir).collect()[0]
+    assert row.n_exact > 0
+    assert abs(row.rel_err) < 0.2, row
+
+
+def test_lpa_communities_refine_connected_components(spark, sf_dir):
+    """A label can only travel along edges, so two docs sharing an LPA
+    community must sit in the same LSH connected component."""
+    from cassandra_extractor_spark.operators.dedup import (
+        ns_dedup_clusters,
+        ns_label_propagation,
+    )
+
+    lpa = ns_label_propagation(spark, sf_dir).toPandas()
+    cc = ns_dedup_clusters(spark, sf_dir).toPandas()
+    m = lpa.merge(cc, on="doc_id", how="left")
+    multi = m[m.community.map(m.community.value_counts()) > 1]
+    for _, grp in multi.groupby("community"):
+        assert grp.cluster_id.nunique(dropna=True) <= 1, grp
+
+
+def test_ngram_novelty_first_doc_is_fully_novel(spark, sf_dir):
+    from cassandra_extractor_spark.operators.text import ns_ngram_novelty
+
+    nov = ns_ngram_novelty(spark, sf_dir).toPandas()
+    with_grams = nov[nov.n_grams > 0].sort_values("doc_id")
+    assert len(with_grams) > 0
+    assert with_grams.iloc[0].novelty == 1.0
+    assert (with_grams.n_novel <= with_grams.n_grams).all()
+
+
+def test_spearman_matches_pandas(spark, sf_dir):
+    from cassandra_extractor_spark.operators.relational import q116_spearman
+
+    out = q116_spearman(spark, sf_dir).toPandas().set_index("l_returnflag")
+    li = pd.read_parquet(f"{sf_dir}/lineitem.parquet")
+    li["q"] = li.l_quantity.round().astype(int)
+    li["p"] = (li.l_extendedprice * 100).round().astype(int)
+    for flag, g in li.groupby("l_returnflag"):
+        # average-rank Spearman = Pearson on the ranks (pandas'
+        # .corr(method='spearman') needs scipy, absent here)
+        rq = g["q"].rank(method="average")
+        rp = g["p"].rank(method="average")
+        expected = rq.corr(rp)
+        got = out.loc[flag, "spearman"]
+        assert abs(got - expected) < 1e-6, (flag, got, expected)
+
+
+def test_ks_matches_python_ecdf(spark, sf_dir):
+    from cassandra_extractor_spark.operators.relational import q121_ks_test
+
+    row = q121_ks_test(spark, sf_dir).collect()[0]
+    ev = pd.read_parquet(f"{sf_dir}/events.parquet")
+    ev = ev[ev.value.notna() & ev.event_type.isin(["view", "purchase"])]
+    x = (ev.value * 100).round().astype(int)
+    a = np.sort(x[ev.event_type == "view"].values)
+    b = np.sort(x[ev.event_type == "purchase"].values)
+    support = np.unique(np.concatenate([a, b]))
+    fa = np.searchsorted(a, support, side="right") / len(a)
+    fb = np.searchsorted(b, support, side="right") / len(b)
+    expected = np.abs(fa - fb).max()
+    assert abs(row.ks_d - expected) < 1e-6, (row.ks_d, expected)
+
+
+def test_gini_matches_python_formula(spark, sf_dir):
+    from cassandra_extractor_spark.operators.relational import q117_gini
+
+    out = q117_gini(spark, sf_dir).toPandas().set_index("o_orderpriority")
+    o = pd.read_parquet(f"{sf_dir}/orders.parquet")
+    o["cents"] = (o.o_totalprice * 100).round().astype(int)
+    o = o[o.cents >= 0]
+    for prio, g in o.groupby("o_orderpriority"):
+        xs = np.sort(g.cents.values)
+        n = len(xs)
+        i = np.arange(1, n + 1)
+        expected = (2 * (i * xs).sum() - (n + 1) * xs.sum()) / (n * xs.sum())
+        assert abs(out.loc[prio, "gini"] - expected) < 1e-6, prio
+
+
+def test_ab_z_matches_python_formula(spark):
+    import math
+
+    from cassandra_extractor_spark.operators.relational import q119_ab_proportions
+
+    # sf0.01: sf0.001's 15 users may leave one arm empty (no row)
+    sf_dir = "/root/testdata/sf0.01"
+    row = q119_ab_proportions(spark, sf_dir).collect()[0]
+    ev = pd.read_parquet(f"{sf_dir}/events.parquet").sort_values(["ts", "event_id"])
+    firsts = ev.groupby("user_id").first()
+    firsts = firsts[firsts.event_type.isin(["view", "click"])]
+    purchasers = set(ev[ev.event_type == "purchase"].user_id)
+    n1 = int((firsts.event_type == "view").sum())
+    n2 = int((firsts.event_type == "click").sum())
+    c1 = sum(1 for uid, r in firsts.iterrows()
+             if r.event_type == "view" and uid in purchasers)
+    c2 = sum(1 for uid, r in firsts.iterrows()
+             if r.event_type == "click" and uid in purchasers)
+    assert (row.n1, row.c1, row.n2, row.c2) == (n1, c1, n2, c2)
+    if n1 and n2 and 0 < c1 + c2 < n1 + n2:
+        pp = (c1 + c2) / (n1 + n2)
+        z = (c1 / n1 - c2 / n2) / math.sqrt(pp * (1 - pp) * (1 / n1 + 1 / n2))
+        assert abs(row.z - z) < 1e-6
+    else:
+        # degenerate pool (p̂ ∈ {0, 1}) — the operator must emit NULL
+        assert row.z is None
+
+
+def test_seasonal_components_reconstruct_signal(spark, sf_dir):
+    """trend + seasonal + residual must reconstruct the observed value
+    to within the three independent 2-decimal roundings."""
+    from cassandra_extractor_spark.operators.relational import q118_seasonal_decompose
+
+    out = q118_seasonal_decompose(spark, sf_dir).toPandas()
+    assert len(out) > 0
+    recon = out.trend_cents + out.seasonal_cents + out.residual_cents
+    assert (recon - out.cents).abs().max() <= 0.02

@@ -110,3 +110,39 @@ def test_workload_list_runs_every_workload_in_turn(pairs, repo_root, tmp_path, m
         ("a", 1, "parent"), ("a", 1, "change")]
     text = capsys.readouterr().out
     assert "== a" in text and "== b" in text
+
+
+def test_trace_adds_one_traced_run_per_side_and_seed(pairs, repo_root, tmp_path, monkeypatch,
+                                                     capsys):
+    """``--trace`` follows the pairs with one ``--trace 1`` run per side
+    and seed, in the same alternating order, and prints each side's
+    per-layer medians side by side."""
+    import json
+
+    calls = []
+
+    def run_one(checkout, workload, seed, seconds, trace=0):
+        calls.append((checkout, seed, trace))
+        value = 3.0 if checkout == "parent-dir" else 2.0
+        names = pairs.LAYERS if trace else ("setup_s", "run_s", "op_p50_s", "op_tail_s",
+                                            "rows_per_s")
+        return {"correct": True, "failed": 0, "attempted": 5,
+                "metrics": {m: {"value": value + seed * trace} for m in names}}
+
+    monkeypatch.setattr(pairs, "run_one", run_one)
+    out = tmp_path / "pairs.jsonl"
+    assert pairs.main(["--parent", "parent-dir", "--change", str(repo_root), "--workload", "a",
+                       "--seeds", "1-3", "--out", str(out), "--trace"]) == 0
+    change = str(repo_root)
+    assert calls[6:] == [("parent-dir", 1, 1), (change, 1, 1), (change, 2, 1),
+                         ("parent-dir", 2, 1), ("parent-dir", 3, 1), (change, 3, 1)]
+    assert {trace for _, _, trace in calls[:6]} == {0}
+    lines = [json.loads(line) for line in out.read_text().splitlines()]
+    assert [r["traced"] for r in lines] == [False] * 6 + [True] * 6
+    text = capsys.readouterr().out
+    assert "== a traced" in text
+    rows = {line.split()[0]: line.split()[1:] for line in text.splitlines()
+            if line.split() and line.split()[0] in pairs.LAYERS}
+    # medians over seeds 1-3: parent 3+2, change 2+2
+    assert rows == {name: ["5", "4", "-1"] for name in pairs.LAYERS}
+

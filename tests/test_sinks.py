@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import Row
 
 from cassandra_extractor_spark.sinks.fanout import fan_out
@@ -292,6 +293,137 @@ def test_fanout_sinks_inherit_job_group_and_pool(spark, tmp_path):
     assert res["blocked"] is not None and "cancel" in str(res["blocked"]).lower()
     assert elapsed < 45
     assert sc.statusTracker().getJobIdsForGroup(group)
+
+
+def _parquet_frame(spark, tmp_path, n=1000):
+    """A file snapshot: ``n`` rows in four parquet files, read back."""
+    path = str(tmp_path / "src")
+    spark.range(0, n, 1, 4).withColumn("name", F.concat(F.lit("n"), F.col("id"))).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def test_fanout_file_snapshot_sinks_read_the_files_and_count_exactly(spark, tmp_path):
+    """A file snapshot's sinks each read the files, uncached; the sink
+    that finishes first, seconds before the other, sets the
+    Observation, and it counts every row."""
+    import time
+
+    from pyspark.sql import Observation
+
+    seen = {}
+
+    def slow(d):
+        seen["slow_cached"] = d.storageLevel.useMemory
+
+        def part(rows):
+            for _ in rows:
+                pass
+            time.sleep(2)
+
+        d.foreachPartition(part)
+        seen["slow_done"] = time.time()
+
+    def fast(d):
+        seen["fast_cached"] = d.storageLevel.useMemory
+        d.write.format("noop").mode("overwrite").save()
+        seen["fast_done"] = time.time()
+
+    obs = Observation("fanout_snapshot_rows")
+    df = _parquet_frame(spark, tmp_path).where("id >= 0").observe(obs, F.count(F.lit(1)).alias("rows"))
+    assert fan_out(df, {"slow": slow, "fast": fast}) == {"slow": None, "fast": None}
+    assert obs.get["rows"] == 1000
+    assert (seen["slow_cached"], seen["fast_cached"]) == (False, False)
+    assert seen["slow_done"] - seen["fast_done"] > 1
+
+
+def _partitioned_table(spark, df):
+    df.withColumn("p", F.col("id") % 2).write.partitionBy("p").saveAsTable("fanout_pt")
+    return spark.table("fanout_pt")
+
+
+@pytest.mark.parametrize(
+    "shape", ["limit", "orderBy", "uuid", "current_timestamp", "subquery", "partitioned_table"]
+)
+def test_fanout_file_frame_that_is_no_snapshot_still_persists(spark, tmp_path, shape):
+    """A file frame whose queries may read different rows (a limit, a
+    sort, a nondeterministic column, a filter on the clock or on a
+    second source, a catalog table that lists its partitions per query)
+    is cached and materialized before its sinks run."""
+    df = _parquet_frame(spark, tmp_path)
+    df = {
+        "limit": lambda: df.limit(3),
+        "orderBy": lambda: df.orderBy(F.col("id").desc()),
+        "uuid": lambda: df.withColumn("u", F.expr("uuid()")),
+        "current_timestamp": lambda: df.where(
+            F.current_timestamp() - F.expr("INTERVAL 5 MINUTES") > F.lit("2000-01-01").cast("timestamp")
+        ),
+        "subquery": lambda: df.where(F.expr("id IN (SELECT id FROM range(3))")),
+        "partitioned_table": lambda: _partitioned_table(spark, df),
+    }[shape]()
+    seen = {}
+
+    def sink(name):
+        def write(d):
+            seen[name] = d.storageLevel.useMemory
+            d.write.format("noop").mode("overwrite").save()
+        return write
+
+    try:
+        assert fan_out(df, {"a": sink("a"), "b": sink("b")}) == {"a": None, "b": None}
+    finally:
+        spark.sql("DROP TABLE IF EXISTS fanout_pt")
+    assert seen == {"a": True, "b": True}
+    assert not df.storageLevel.useMemory
+
+
+def test_fanout_file_snapshot_runs_one_job_per_sink(spark, tmp_path):
+    """Two sinks of a file snapshot submit two jobs, no materialization
+    job; an in-memory frame's fan-out still submits three."""
+    sc = spark.sparkContext
+
+    def noop(d):
+        d.write.format("noop").mode("overwrite").save()
+
+    def jobs(group, df):
+        sc.setJobGroup(group, group)
+        try:
+            assert fan_out(df, {"a": noop, "b": noop}) == {"a": None, "b": None}
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    assert jobs("fanout-snapshot-jobs", _parquet_frame(spark, tmp_path)) == 2
+    assert jobs("fanout-cached-jobs", _df(spark)) == 3
+
+
+def test_fanout_cdc_replay_leaves_the_observation_full(spark, tmp_path):
+    """A CDC sink replaying a committed batch returns without reading
+    the frame: the JSONL sink's write still sets the full count."""
+    from pyspark.sql import Observation
+
+    from cassandra_extractor_spark.streaming import cdc_stream
+    from cassandra_extractor_spark.streaming.cdc_stream import apply_cdc_batch, init_cdc_store
+
+    store, src = str(tmp_path / "store"), str(tmp_path / "changes")
+    schema = "k LONG, op STRING, seq LONG, bal LONG"
+    big = spark.range(1000, 21000).selectExpr("id AS k", "'U' AS op", "0L AS seq", "id AS bal")
+    init_cdc_store(spark, big, store, key="k", op_col="op", order_cols=["seq"], n_buckets=4)
+    spark.createDataFrame([(k, "U", 1, k * 10) for k in range(50)], schema).repartition(2).write.parquet(src)
+
+    def apply(d):
+        apply_cdc_batch(spark, d, 0, store, "k", ["seq"], "op", ["bal"])
+
+    apply(spark.read.parquet(src))
+    before = cdc_stream._current_manifest(store)
+    obs = Observation("fanout_cdc_replay_rows")
+    df = spark.read.parquet(src).observe(obs, F.count(F.lit(1)).alias("rows"))
+    out = str(tmp_path / "jsonl")
+    assert fan_out(df, {"jsonl": lambda d: write_jsonl(d, out), "cdc": apply}) == {
+        "jsonl": None, "cdc": None}
+    assert obs.get["rows"] == 50
+    assert cdc_stream._current_manifest(store) == before
+    assert spark.read.json(out).count() == 50
+    cdc_stream._wait_for_fold(store)
 
 
 def test_jdbc_partition_ddl_hostile_values():
