@@ -141,24 +141,3 @@ def test_domain_reweight_is_a_proper_eg_step(spark, sf_dir):
     by_kl = sorted(rows, key=lambda r: r.kl)
     boosts = [r.weight / r.share for r in by_kl]
     assert all(b2 >= b1 - 1e-9 for b1, b2 in zip(boosts, boosts[1:]))
-
-
-def test_dp_noise_is_bounded_and_nonzero(spark, sf_dir):
-    from cassandra_extractor_spark.operators.sampling import ns_dp_noise
-
-    out = ns_dp_noise(spark, sf_dir).toPandas()
-    noise = out.noisy_n - out.n
-    # u is grid-bounded away from 0 and 1 → |noise| <= ln((mod+2)/2)/eps
-    assert (noise.abs() <= 14.0).all()
-    assert (noise != 0).any()
-
-
-def test_neyman_allocation_spends_budget(spark, sf_dir):
-    from cassandra_extractor_spark.operators.sampling import (
-        NEYMAN_BUDGET,
-        ns_neyman_allocation,
-    )
-
-    out = ns_neyman_allocation(spark, sf_dir).toPandas()
-    spent = int(out.alloc.sum())
-    assert NEYMAN_BUDGET - len(out) <= spent <= NEYMAN_BUDGET
