@@ -55,7 +55,8 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument(
         "--sinks",
         help="comma-separated sink list: jsonl,parquet,csv (default jsonl); "
-        "fan-out writes each (D1)",
+        "fan-out writes each (D1), in batch and streaming mode alike; a "
+        "stream writes <sink dir>/batch=<id>",
     )
     # default=None (not False) so env/properties can still enable these
     # under the CLI > env > properties precedence
@@ -132,35 +133,46 @@ def main(argv: list[str] | None = None) -> int:
 
         sink_names = (tcfg("sinks", default="jsonl") or "jsonl").split(",")
 
-        def make_sinks():
+        def make_sinks(suffix: str):
+            # a stream passes suffix "/batch=<id>": each micro-batch
+            # overwrites its own paths, so a replayed one is idempotent
             writers = {
-                "jsonl": lambda d: write_jsonl(d, f"{output}/{table}"),
+                "jsonl": lambda d: write_jsonl(d, f"{output}/{table}{suffix}"),
                 "parquet": lambda d: d.write.mode("overwrite").parquet(
-                    f"{output}/{table}_parquet"
+                    f"{output}/{table}_parquet{suffix}"
                 ),
                 # CSV has no nested type: structs, arrays, maps and
                 # VARIANT go out as JSON text
                 "csv": lambda d: nested_to_json(d).write.mode("overwrite")
                 .option("header", "true")
-                .csv(f"{output}/{table}_csv"),
+                .csv(f"{output}/{table}_csv{suffix}"),
             }
             unknown = set(sink_names) - set(writers)
             if unknown:
                 raise ValueError(f"unknown sinks: {sorted(unknown)}")
             return {n: writers[n] for n in sink_names}
 
-        def run(job: ExtractionJob):
+        def deliver(df, suffix: str) -> int:
+            """Fan ``df`` out to the sinks; returns the rows written.
+            The count rides the writes themselves (reference's processed
+            counter, metrics.py:5-35): no second scan."""
             from pyspark.sql import Observation, functions as F
 
+            obs = Observation(f"extract_{table}")
+            results = fan_out(
+                df.observe(obs, F.count(F.lit(1)).alias("rows")), make_sinks(suffix)
+            )
+            failed = {k: str(v) for k, v in results.items() if v is not None}
+            if failed:
+                raise RuntimeError(f"sink failures: {failed}")
+            return int(obs.get["rows"])
+
+        def run(job: ExtractionJob):
             if _truthy(tcfg("streaming")):
                 from cassandra_extractor_spark.sources.catalog import DEFAULT_SF_DIR
                 from cassandra_extractor_spark.streaming.pipeline import stream_extract
 
-                if sink_names != ["jsonl"]:
-                    raise ValueError(
-                        "streaming mode currently writes the jsonl sink only; "
-                        f"got --sinks {','.join(sink_names)}"
-                    )
+                make_sinks("")  # reject an unknown sink before the stream starts
                 src_dir = sf_dir or DEFAULT_SF_DIR
                 table_path = os.path.join(src_dir, f"{table}.parquet")
                 schema = spark.read.parquet(table_path).schema
@@ -174,25 +186,12 @@ def main(argv: list[str] | None = None) -> int:
                 # sort/limit are batch-only; streaming applies the
                 # projection/filter/transform subset of the spec
                 stream_spec = dataclasses.replace(spec, sort=[], limit=None, hwm_column=None)
-                batch_counts: list[int] = []
-
-                def dispatch(d, batch_id):
-                    # foreachBatch is at-least-once: a crash between the
-                    # write and the checkpoint commit re-runs the batch,
-                    # so each batch overwrites its OWN batch_id path —
-                    # the replay is idempotent.  The row count rides the
-                    # write (one Spark job per micro-batch)
-                    obs = Observation(f"stream_{table}_{batch_id}")
-                    d.observe(obs, F.count(F.lit(1)).alias("rows")).write.mode(
-                        "overwrite"
-                    ).json(f"{output}/{table}/batch={batch_id}")
-                    batch_counts.append(int(obs.get["rows"]))
-
+                counts: list[int] = []
                 q = stream_extract(
                     spark,
                     stream_dir,
                     schema,
-                    {"jsonl": dispatch},
+                    {"extract": lambda d, b: counts.append(deliver(d, f"/batch={b}"))},
                     tcfg("checkpoint", default=f"{output}/_ckpt/{table}"),
                     transform=(lambda d: stream_spec.build(spark, source_df=d))
                     if (spec.columns or spec.filter or spec.solr_filter or spec.table_spec)
@@ -202,24 +201,13 @@ def main(argv: list[str] | None = None) -> int:
                 )
                 q.awaitTermination()
                 # rows processed THIS run (not the cumulative output dir)
-                job.processed = sum(batch_counts)
-                metrics.inc("rows_processed_total", job.processed, table=table)
-                return
-
-            df = spec.build(
-                spark, sf_dir, hwm_store if spec.hwm_column else None
-            )
-            # piggyback the row count on the write itself (reference's
-            # processed counter, metrics.py:5-35) — no second scan
-            obs = Observation(f"extract_{table}")
-            df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-            results = fan_out(df, make_sinks())
-            failed = {k: str(v) for k, v in results.items() if v is not None}
-            if failed:
-                raise RuntimeError(f"sink failures: {failed}")
-            if spec._hwm_commit is not None:
-                spec._hwm_commit()  # crash-safe: mark advances post-write
-            job.processed = int(obs.get["rows"])
+                job.processed = sum(counts)
+            else:
+                job.processed = deliver(
+                    spec.build(spark, sf_dir, hwm_store if spec.hwm_column else None), ""
+                )
+                if spec._hwm_commit is not None:
+                    spec._hwm_commit()  # crash-safe: mark advances post-write
             metrics.inc("rows_processed_total", job.processed, table=table)
 
         return ExtractionJob(table=table, run=run)

@@ -54,6 +54,15 @@ def _dot_sql(a: str, b: str) -> str:
     )
 
 
+def _cosine_defined_sql(v: str) -> str:
+    """True where vector ``v`` has a cosine, as ``dedup.cosine_defined``
+    decides on the Spark side: its squared norm is positive and not NaN.
+    DuckDB, like Spark, orders NaN above every number, so ``> 0`` alone
+    keeps a vector with a NaN component."""
+    d = _dot_sql(v, v)
+    return f"({d} > 0 AND NOT isnan({d}))"
+
+
 def _cos_sql(a: str, b: str) -> str:
     return f"{_dot_sql(a, b)} / (sqrt({_dot_sql(a, a)}) * sqrt({_dot_sql(b, b)}))"
 
@@ -309,7 +318,7 @@ NS_ORACLES: dict[str, str] = {
         # zero-norm vectors excluded on both engines (divergence #4)
         "WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb "
         "FROM embeddings WHERE vec_id < 300), "
-        f"e AS (SELECT * FROM e0 WHERE {_dot_sql('emb', 'emb')} > 0), "
+        f"e AS (SELECT * FROM e0 WHERE {_cosine_defined_sql('emb')}), "
         "p AS (SELECT a.vec_id AS v1, b.vec_id AS v2, "
         f"round({_cos_sql('a.emb', 'b.emb')}, 6) AS cos "
         "FROM e a JOIN e b ON a.vec_id < b.vec_id) "
@@ -317,8 +326,7 @@ NS_ORACLES: dict[str, str] = {
     ),
     "ns_hard_negatives": (
         "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, label "
-        "FROM embeddings WHERE list_reduce(list_transform("
-        "CAST(embedding AS DOUBLE[]), x -> x * x), (x, y) -> x + y) > 0), "
+        f"FROM embeddings WHERE {_cosine_defined_sql('CAST(embedding AS DOUBLE[])')}), "
         f"q AS (SELECT vec_id AS q_id, emb AS q_emb, label AS q_label FROM e "
         f"WHERE vec_id < {N_QUERIES}), "
         f"c AS (SELECT vec_id AS n_id, emb AS n_emb, label AS n_label FROM e "
@@ -341,9 +349,9 @@ NS_ORACLES: dict[str, str] = {
     "ns_ann_cosine_topk": (
         "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings), "
         f"q AS (SELECT vec_id AS q_id, emb AS q_emb FROM e WHERE vec_id < {N_QUERIES} "
-        f"AND {_dot_sql('emb', 'emb')} > 0), "
+        f"AND {_cosine_defined_sql('emb')}), "
         f"c AS (SELECT vec_id AS n_id, emb AS n_emb FROM e WHERE vec_id >= {N_QUERIES} "
-        f"AND {_dot_sql('emb', 'emb')} > 0), "
+        f"AND {_cosine_defined_sql('emb')}), "
         "scored AS (SELECT q_id, n_id, "
         f"round({_cos_sql('q_emb', 'n_emb')}, 6) AS cos FROM c, q), "
         "ranked AS (SELECT q_id, n_id, cos, ROW_NUMBER() OVER "
@@ -352,7 +360,8 @@ NS_ORACLES: dict[str, str] = {
         "ORDER BY q_id, rank"
     ),
     "ns_ann_ivf": (
-        "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings WHERE list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (x, y) -> x + y) > 0), "
+        "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings "
+        f"WHERE {_cosine_defined_sql('CAST(embedding AS DOUBLE[])')}), "
         f"cent AS (SELECT vec_id AS c_id, emb AS c_emb FROM e WHERE vec_id >= {N_QUERIES} "
         f"AND vec_id < {N_QUERIES + N_IVF_CENTROIDS}), "
         f"corpus AS (SELECT vec_id AS n_id, emb AS n_emb FROM e WHERE vec_id >= {N_QUERIES}), "
@@ -542,7 +551,7 @@ def _sem_assign_sql(n_cells: int) -> str:
         "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings), "
         # zero-norm vectors excluded on both engines (divergence #4)
         f"n AS (SELECT vec_id, emb, sqrt({_dot_sql('emb', 'emb')}) AS nrm "
-        f"FROM e WHERE {_dot_sql('emb', 'emb')} > 0), "
+        f"FROM e WHERE {_cosine_defined_sql('emb')}), "
         f"cent AS (SELECT vec_id AS c_id, emb AS c_emb, nrm AS c_nrm FROM n "
         f"WHERE vec_id < {n_cells}), "
         "assigned AS (SELECT vec_id, emb, nrm, c_id FROM ("
@@ -736,8 +745,7 @@ def _ivfpq_sql() -> str:
     vsub = "list_transform(list_zip({a}, {b}), p -> p[1] - p[2])"
     return (
         "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings "
-        "WHERE list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), "
-        "(x, y) -> x + y) > 0), "
+        f"WHERE {_cosine_defined_sql('CAST(embedding AS DOUBLE[])')}), "
         f"cent AS (SELECT vec_id AS c_id, emb AS c_emb FROM e WHERE vec_id >= {N_QUERIES} "
         f"AND vec_id < {N_QUERIES + N_IVF_CENTROIDS}), "
         f"corpus AS (SELECT vec_id AS n_id, emb AS n_emb FROM e WHERE vec_id >= {N_QUERIES}), "
@@ -929,7 +937,8 @@ def _lsh_sql() -> str:
             comps = ", ".join(repr(_projection_component(p, d, t)) for d in range(DIM))
             rows.append(f"({t}, {p}, [{comps}])")
     return (
-        "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings WHERE list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), (x, y) -> x + y) > 0), "
+        "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings "
+        f"WHERE {_cosine_defined_sql('CAST(embedding AS DOUBLE[])')}), "
         "pl(tbl, p, plane) AS (VALUES " + ", ".join(rows) + "), "
         "keys AS (SELECT e.vec_id, pl.tbl, "
         "CAST(SUM(CASE WHEN " + _dot_sql("e.emb", "pl.plane") + " > 0 "
@@ -1675,8 +1684,7 @@ NS_ORACLES["ns_assoc_rules"] = (
 
 NS_ORACLES["ns_pca_power_iter"] = (
     "WITH e AS (SELECT CAST(embedding AS DOUBLE[]) AS emb FROM embeddings "
-    "WHERE list_reduce(list_transform(list_zip(CAST(embedding AS DOUBLE[]), "
-    "CAST(embedding AS DOUBLE[])), s -> s[1] * s[2]), (x, y) -> x + y) > 0), "
+    f"WHERE {_cosine_defined_sql('CAST(embedding AS DOUBLE[])')}), "
     "te AS (SELECT emb, list_reduce(emb, (x, y) -> x + y) AS t FROM e), "
     "ex AS (SELECT i AS dim, emb[i] * t AS contrib FROM "
     "(SELECT emb, t, unnest(generate_series(1, len(emb))) AS i FROM te)), "
@@ -2251,9 +2259,9 @@ def _hybrid_rrf_sql() -> str:
         "(ORDER BY bm25 DESC, doc_id) AS BIGINT) AS lex_rank FROM lex50), "
         "e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings), "
         f"q AS (SELECT emb AS q_emb FROM e WHERE vec_id = 0 "
-        f"AND {_dot_sql('emb', 'emb')} > 0), "
+        f"AND {_cosine_defined_sql('emb')}), "
         f"c AS (SELECT vec_id AS doc_id, emb AS n_emb FROM e "
-        f"WHERE vec_id >= {N_QUERIES} AND {_dot_sql('emb', 'emb')} > 0), "
+        f"WHERE vec_id >= {N_QUERIES} AND {_cosine_defined_sql('emb')}), "
         "sem50 AS (SELECT doc_id, "
         f"round({_cos_sql('q_emb', 'n_emb')}, 6) AS cos FROM c, q "
         f"ORDER BY cos DESC, doc_id LIMIT {RRF_DEPTH}), "
@@ -2384,7 +2392,7 @@ NS_ORACLES["ns_cluster_purity"] = (
     "CAST(label AS BIGINT) AS label FROM embeddings), "
     # zero-norm vectors excluded on both engines (divergence #4)
     f"n AS (SELECT vec_id, emb, label, sqrt({_dot_sql('emb', 'emb')}) AS nrm "
-    f"FROM e WHERE {_dot_sql('emb', 'emb')} > 0), "
+    f"FROM e WHERE {_cosine_defined_sql('emb')}), "
     f"cent AS (SELECT vec_id AS c_id, emb AS c_emb, nrm AS c_nrm FROM n "
     f"WHERE vec_id < {N_KMEANS}), "
     "assigned AS (SELECT c_id AS cluster_id, label FROM ("
@@ -2514,8 +2522,7 @@ def _ann_symmetry_sql() -> str:
     return (
         "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, label "
         f"FROM embeddings WHERE vec_id < {ANN_SYM_WINDOW} "
-        "AND list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), "
-        "(x, y) -> x + y) > 0), "
+        f"AND {_cosine_defined_sql('CAST(embedding AS DOUBLE[])')}), "
         "scored AS (SELECT a.vec_id AS src, b.vec_id AS dst, "
         f"round({_cos_sql('a.emb', 'b.emb')}, 6) AS cos "
         "FROM e a, e b WHERE a.vec_id <> b.vec_id), "
@@ -2545,7 +2552,7 @@ def _kcenter_step_sql() -> str:
     return (
         "WITH e0 AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb "
         "FROM embeddings), "
-        f"e AS (SELECT * FROM e0 WHERE {_dot_sql('emb', 'emb')} > 0), "
+        f"e AS (SELECT * FROM e0 WHERE {_cosine_defined_sql('emb')}), "
         f"cent AS (SELECT vec_id AS c_id, emb AS c_emb FROM e WHERE vec_id < {K_CENTER}), "
         f"cand AS (SELECT vec_id, emb FROM e WHERE vec_id >= {K_CENTER}), "
         "scored AS (SELECT vec_id, c_id, CAST(round((1.0e0 - "
@@ -2573,8 +2580,7 @@ def _ann_cell_balance_sql() -> str:
 
     return (
         "WITH e AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb FROM embeddings "
-        "WHERE list_reduce(list_transform(CAST(embedding AS DOUBLE[]), x -> x * x), "
-        "(x, y) -> x + y) > 0), "
+        f"WHERE {_cosine_defined_sql('CAST(embedding AS DOUBLE[])')}), "
         f"cent AS (SELECT vec_id AS c_id, emb AS c_emb FROM e "
         f"WHERE vec_id >= {N_QUERIES} AND vec_id < {N_QUERIES + N_IVF_CENTROIDS}), "
         f"corpus AS (SELECT vec_id, emb FROM e WHERE vec_id >= {N_QUERIES}), "

@@ -44,6 +44,7 @@ from cassandra_extractor_spark.operators.similarity import (
     norm,
 )
 from cassandra_extractor_spark.streaming.maintenance import compact, fold_delta
+from cassandra_extractor_spark.streaming.pipeline import stream_extract
 
 _STORE_COLS = ["vec_id", "emb", "nrm", "c_id"]
 
@@ -109,9 +110,8 @@ def stream_ann_ingest(
     auto_compact: dict | None = None,
 ) -> StreamingQuery:
     """Start the streaming ingest over a file source of
-    ``(vec_id, emb)`` batches.  Drains everything available
-    (``availableNow``) then stops; restarting with the same
-    ``checkpoint_dir`` resumes exactly after the last committed batch.
+    ``(vec_id, emb)`` batches, run by ``pipeline.stream_extract``
+    (trigger and checkpoint contract there).
 
     ``stats_sink(cell_counts_df, batch_id)``, if given, receives the
     per-cell arrival counts each batch — the balance signal that tells
@@ -123,12 +123,6 @@ def stream_ann_ingest(
     batches and folds the cell-partitioned delta into the base when
     crossed (keys: ``every_n_batches``, ``threshold``; see
     ``streaming/maintenance.py`` for the mid-stream safety argument)."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("pathGlobFilter", path_glob)
-        .parquet(source_path)
-    )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         cent = _read_centroids(spark, store_dir)
@@ -147,11 +141,14 @@ def stream_ann_ingest(
                 spark, "ann", {**auto_compact, "store_dir": store_dir, "mode": "auto"}, batch_id
             )
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return stream_extract(
+        spark,
+        source_path,
+        schema,
+        {"ann": process},
+        checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger,
+        path_glob=path_glob,
     )
 
 

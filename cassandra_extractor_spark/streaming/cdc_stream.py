@@ -134,6 +134,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructField, StructType
 
 from cassandra_extractor_spark.streaming.maintenance import dir_bytes, size_policy
+from cassandra_extractor_spark.streaming.pipeline import stream_extract
 
 logger = logging.getLogger(__name__)
 
@@ -794,16 +795,10 @@ def stream_cdc_apply(
     max_files_per_trigger: int = 1,
     retain_gens: int = 3,
 ) -> StreamingQuery:
-    """Maintain the CDC snapshot over a file source of change batches.
-    Drains everything available (``availableNow``) then stops;
-    restarting with the same ``checkpoint_dir`` resumes after the last
-    committed batch.  The store must exist (``init_cdc_store``)."""
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("pathGlobFilter", "*.parquet")
-        .parquet(source_path)
-    )
+    """Maintain the CDC snapshot over a file source of change batches,
+    one ``apply_cdc_batch`` per micro-batch of ``pipeline.stream_extract``
+    (which owns the trigger and checkpoint contract).  The store must
+    exist (``init_cdc_store``)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         apply_cdc_batch(
@@ -818,11 +813,14 @@ def stream_cdc_apply(
             retain_gens=retain_gens,
         )
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return stream_extract(
+        spark,
+        source_path,
+        schema,
+        {"cdc": process},
+        checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger,
+        path_glob="*.parquet",
     )
 
 

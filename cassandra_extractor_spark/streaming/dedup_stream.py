@@ -38,6 +38,7 @@ from pyspark.sql.utils import AnalysisException
 
 from cassandra_extractor_spark.operators.dedup import incremental_dedup
 from cassandra_extractor_spark.streaming.maintenance import compact, fold_delta
+from cassandra_extractor_spark.streaming.pipeline import stream_extract
 
 _BAND_COLS = ["doc_id", "band", "sig"]
 
@@ -55,9 +56,8 @@ def stream_incremental_dedup(
     auto_compact: dict | None = None,
 ) -> StreamingQuery:
     """Start the streaming dedup gate over a file source of
-    ``(doc_id, text)`` batches.  Drains everything available
-    (``availableNow``) then stops; restarting with the same
-    ``checkpoint_dir`` resumes exactly after the last committed batch.
+    ``(doc_id, text)`` batches, run by ``pipeline.stream_extract``
+    (trigger and checkpoint contract there).
 
     ``pairs_sink(dup_pairs_df, batch_id)`` receives, per micro-batch,
     the (new_id, dup_of) frame where ``dup_of`` may come from the base
@@ -72,12 +72,6 @@ def stream_incremental_dedup(
     argument — the candidate join is set-semantic, so the crash
     window's base∪delta duplicates cannot duplicate pairs).
     """
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("pathGlobFilter", path_glob)
-        .parquet(source_path)
-    )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         base = spark.table(store_table).select(*_BAND_COLS)
@@ -105,11 +99,14 @@ def stream_incremental_dedup(
                 batch_id,
             )
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return stream_extract(
+        spark,
+        source_path,
+        schema,
+        {"signature": process},
+        checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger,
+        path_glob=path_glob,
     )
 
 

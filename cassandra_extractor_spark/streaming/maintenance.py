@@ -10,7 +10,8 @@ pair's fold; ``compact`` runs ``mode`` = ``force | auto | check`` over
 it for both callers: the control plane's ``/maintenance/compact``
 route and the ingests' in-band ``auto_compact`` hooks (off by default
 — see ``stream_posting_ingest`` / ``stream_ann_ingest`` /
-``stream_incremental_dedup``).  A long-running ingest never invokes
+``stream_incremental_dedup``, whose ``process`` bodies run as the one
+sink of ``pipeline.stream_extract``).  A long-running ingest never invokes
 HTTP; without the hook its store degrades monotonically: the delta
 side of every read grows while the bucketed/cell-partitioned base
 stays fixed, and the read plans drift away from the pruned store shape

@@ -1,10 +1,11 @@
-"""Structured Streaming extraction pipeline.
+"""Structured Streaming extraction pipeline: the package's one
+streaming driver.
 
 Replaces the reference's crawler-loop + Redis-offset machinery (D6,
 worker.py:164-201) with the built-in streaming contract:
 
-- ``readStream`` over the source (file source here; Kafka/Cassandra CDC
-  in production) — the crawler's page loop;
+- ``readStream`` over a parquet file source, or any streaming frame the
+  caller builds — the crawler's page loop;
 - ``withWatermark`` on the event-time column — the modified-timestamp
   high-water mark;
 - ``foreachBatch`` fan-out to N sinks — the per-page dispatch (D1),
@@ -12,88 +13,22 @@ worker.py:164-201) with the built-in streaming contract:
 - ``checkpointLocation`` — Redis page/record offsets (exactly-once
   source tracking, at-least-once sinks: honest parity with the
   reference, SURVEY §7.3.3).
+
+Its callers are the service's streaming mode (``app.py``) and the four
+store ingests: ``stream_cdc_apply``, ``stream_posting_ingest``,
+``stream_ann_ingest`` and ``stream_incremental_dedup``.  Each ingest
+passes its ``process(batch_df, batch_id)`` as the one sink, which
+``fan_out`` calls directly.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming import StreamingQuery
 
 from cassandra_extractor_spark.sinks.fanout import fan_out
-
-
-@dataclass
-class KafkaSourceConfig:
-    """Streaming Kafka source (the reference's crawl loop pointed at a
-    topic instead of a table; K1's mirror image on the read side).
-
-    Run recipe (needs the Kafka connector on the classpath — absent in
-    this sandbox, so tests cover option compilation only)::
-
-        spark = (SparkSession.builder
-                 .config("spark.jars.packages",
-                         "org.apache.spark:spark-sql-kafka-0-10_2.13:4.1.2")
-                 .getOrCreate())
-        stream = read_kafka_stream(spark, KafkaSourceConfig(
-            bootstrap_servers="broker:9092", subscribe="events"),
-            value_schema="event_id LONG, ts TIMESTAMP, payload STRING")
-        stream_extract(spark, source_stream=stream, sinks={...},
-                       checkpoint_dir=..., ts_col="ts")
-    """
-
-    bootstrap_servers: str
-    subscribe: str  #: comma-separated topics (or pattern with subscribe_pattern)
-    subscribe_pattern: bool = False
-    starting_offsets: str = "earliest"
-    #: per-trigger rate limit — the Kafka analogue of maxFilesPerTrigger
-    max_offsets_per_trigger: int | None = None
-    fail_on_data_loss: bool = True
-    options: dict[str, str] = field(default_factory=dict)  # extra kafka.* opts
-
-
-def compile_kafka_source_options(cfg: KafkaSourceConfig) -> dict[str, str]:
-    """Pure option compilation (unit-testable without a broker)."""
-    opts = {
-        "kafka.bootstrap.servers": cfg.bootstrap_servers,
-        ("subscribePattern" if cfg.subscribe_pattern else "subscribe"): cfg.subscribe,
-        "startingOffsets": cfg.starting_offsets,
-        "failOnDataLoss": str(cfg.fail_on_data_loss).lower(),
-    }
-    if cfg.max_offsets_per_trigger is not None:
-        opts["maxOffsetsPerTrigger"] = str(cfg.max_offsets_per_trigger)
-    for k, v in cfg.options.items():
-        opts[k if k.startswith("kafka.") else f"kafka.{k}"] = v
-    return opts
-
-
-def read_kafka_stream(
-    spark: SparkSession, cfg: KafkaSourceConfig, value_schema: str | None = None
-) -> DataFrame:
-    """``readStream.format("kafka")`` with the source frame normalized to
-    (key string, value string, topic, partition, offset, ts) — plus the
-    parsed ``data`` struct columns flattened when ``value_schema`` is
-    given (JSON payloads, the reference's record shape)."""
-    reader = spark.readStream.format("kafka")
-    for k, v in compile_kafka_source_options(cfg).items():
-        reader = reader.option(k, v)
-    raw = reader.load()
-    stream = raw.select(
-        F.col("key").cast("string").alias("key"),
-        F.col("value").cast("string").alias("value"),
-        "topic",
-        "partition",
-        "offset",
-        F.col("timestamp").alias("kafka_ts"),
-    )
-    if value_schema is not None:
-        stream = stream.select(
-            "key", "topic", "partition", "offset", "kafka_ts",
-            F.from_json("value", value_schema).alias("data"),
-        ).select("key", "topic", "partition", "offset", "kafka_ts", "data.*")
-    return stream
 
 
 def stream_extract(
@@ -113,13 +48,14 @@ def stream_extract(
     """Run a checkpointed streaming extraction.
 
     Source: either the parquet file source (``source_path`` + ``schema``)
-    or ANY pre-built streaming frame via ``source_stream`` — e.g.
-    ``read_kafka_stream`` — so every source shares the same
-    watermark/transform/fan-out/checkpoint contract.
+    or any pre-built streaming frame via ``source_stream``, so every
+    source shares the same watermark/transform/fan-out/checkpoint
+    contract.
 
     ``available_now=True`` drains everything currently available then
-    stops (batch-incremental mode — how tests drive it);
-    ``max_files_per_trigger`` is the rate limit replacing the
+    stops (batch-incremental mode — how tests drive it), and a restart
+    with the same ``checkpoint_dir`` resumes after the last committed
+    batch.  ``max_files_per_trigger`` is the rate limit replacing the
     reference's memory-based crawl pausing (D3: Spark backpressure is
     declarative, datacrawler.py:211-242 becomes one option).
     """

@@ -36,6 +36,7 @@ from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.utils import AnalysisException
 
 from cassandra_extractor_spark.streaming.maintenance import compact, fold_delta
+from cassandra_extractor_spark.streaming.pipeline import stream_extract
 
 _POSTING_COLS = ["doc_id", "tok", "tf"]
 _DOCLEN_COLS = ["doc_id", "dl"]
@@ -107,9 +108,8 @@ def stream_posting_ingest(
     auto_compact: dict | None = None,
 ) -> StreamingQuery:
     """Start the streaming posting ingest over a file source of
-    ``(doc_id, text)`` batches.  Drains everything available
-    (``availableNow``) then stops; restarting with the same
-    ``checkpoint_dir`` resumes after the last committed batch.
+    ``(doc_id, text)`` batches, run by ``pipeline.stream_extract``
+    (trigger and checkpoint contract there).
 
     ``stats_sink(df, batch_id)``, if given, receives (n_docs,
     n_postings) per batch for ingest monitoring.  ``doclen_delta_dir``,
@@ -140,12 +140,6 @@ def stream_posting_ingest(
             "otherwise doclen deltas are excluded from the size-ratio "
             "policy and grow unboundedly"
         )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .option("pathGlobFilter", path_glob)
-        .parquet(source_path)
-    )
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         postings = build_postings(batch_df)
@@ -183,11 +177,14 @@ def stream_posting_ingest(
                 batch_id,
             )
 
-    return (
-        stream.writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
+    return stream_extract(
+        spark,
+        source_path,
+        schema,
+        {"posting": process},
+        checkpoint_dir,
+        max_files_per_trigger=max_files_per_trigger,
+        path_glob=path_glob,
     )
 
 

@@ -192,36 +192,11 @@ def test_config_precedence(tmp_path, monkeypatch):
     assert resolve("missing", default=42, cast=int) == 42
 
 
-def test_kafka_source_option_compilation(spark, tmp_path):
-    """K1 read side: option compilation + the shared stream_extract
-    contract accepting any pre-built source stream (no broker in this
-    env, so the load() itself is exercised with the file source)."""
-    from cassandra_extractor_spark.streaming.pipeline import (
-        KafkaSourceConfig,
-        compile_kafka_source_options,
-        stream_extract,
-    )
+def test_stream_extract_takes_a_prebuilt_source_stream(spark, tmp_path):
+    """``stream_extract`` runs its fan-out and checkpoint contract over
+    any pre-built streaming frame passed as ``source_stream``."""
+    from cassandra_extractor_spark.streaming.pipeline import stream_extract
 
-    cfg = KafkaSourceConfig(
-        bootstrap_servers="b1:9092,b2:9092",
-        subscribe="events,orders",
-        starting_offsets="latest",
-        max_offsets_per_trigger=50_000,
-        options={"security.protocol": "SASL_SSL", "kafka.group.id": "cex"},
-    )
-    opts = compile_kafka_source_options(cfg)
-    assert opts == {
-        "kafka.bootstrap.servers": "b1:9092,b2:9092",
-        "subscribe": "events,orders",
-        "startingOffsets": "latest",
-        "failOnDataLoss": "true",
-        "maxOffsetsPerTrigger": "50000",
-        "kafka.security.protocol": "SASL_SSL",
-        "kafka.group.id": "cex",
-    }
-    pat = KafkaSourceConfig(bootstrap_servers="b", subscribe="ev-.*", subscribe_pattern=True)
-    assert compile_kafka_source_options(pat)["subscribePattern"] == "ev-.*"
-    # same contract, arbitrary source stream: file-backed stand-in
     src = str(tmp_path / "src")
     spark.range(10).selectExpr("id", "id * 2 AS v").write.parquet(src)
     stream = spark.readStream.schema("id long, v long").parquet(src)

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import functions as F
 
 from cassandra_extractor_spark.operators.similarity import N_QUERIES, TOP_K, ns_ann_cosine_topk
@@ -12,8 +14,6 @@ def test_vectorized_matches_exact_topk(spark, sf_dir):
     queries) agrees with a numpy matrix-product top-k over the same
     vectors: same (q_id, rank) keys, scores within 1e-6, and the same
     neighbor except where several neighbors tie at 6 decimals."""
-    import numpy as np
-    import pandas as pd
 
     exact = {
         (r["q_id"], r["rank"]): (r["n_id"], r["cos"])
@@ -52,7 +52,6 @@ def test_ann_recall_floor_on_planted_neighbors(spark):
     from a degenerate one.  Planted structure can: a bucketing that
     collapses (one giant bucket) or never collides (no candidates)
     fails this floor, which rows-only oracle checks cannot catch."""
-    import numpy as np
 
     from cassandra_extractor_spark.operators.similarity import (
         DIM,
@@ -108,7 +107,6 @@ def test_lsh_fold_and_arrow_buckets_agree(spark):
     vectors never land within float noise of a hyperplane, so any
     mismatch means the two spellings drifted (salt, plane order, bit
     packing)."""
-    import numpy as np
 
     from pyspark.sql import functions as F
 
@@ -212,7 +210,6 @@ def test_quantize_mae_first_principles(spark, sf_dir):
     from raw parquet with no Spark expressions at all."""
     import decimal
 
-    import numpy as np
     import pyarrow.parquet as pq
 
     from cassandra_extractor_spark.operators.similarity import (
@@ -313,7 +310,6 @@ def test_cluster_purity_first_principles(spark, sf_dir):
     majority vote with ties to the smallest label."""
     from collections import Counter
 
-    import numpy as np
     import pyarrow.parquet as pq
 
     from cassandra_extractor_spark.operators.similarity import (
@@ -499,3 +495,71 @@ def test_cosine_rankers_drop_nan_vectors(spark, tmp_path):
     purity = {r.cluster_id: (r.n_members, r.majority_label)
               for r in ns_cluster_purity(spark, sf).collect()}
     assert purity == {0: (2, 0), 1: (2, 1)}
+
+
+def test_linear_probe_two_steps_reduce_loss(spark, sf_dir):
+    from cassandra_extractor_spark.operators.similarity import ns_linear_probe_step
+
+    w = ns_linear_probe_step(spark, sf_dir).toPandas().sort_values("dim")
+    emb = pd.read_parquet(f"{sf_dir}/embeddings.parquet")
+    X = np.stack(emb.embedding.values).astype(float)
+    y = (emb.label == 0).astype(float).values
+    mse0 = float(np.mean(y**2))
+    mse2 = float(np.mean((X @ w.w2.values - y) ** 2))
+    assert mse2 < mse0, (mse0, mse2)
+
+
+def test_jl_projection_is_map_only(spark, sf_dir):
+    """The projection is row-local: the ONLY exchange allowed is the
+    oracle-contract ORDER BY (range partitioning) — no hash shuffle,
+    no join (the explode→join→re-group spelling would multiply shuffle
+    volume ~1000× for a per-row computation)."""
+    from cassandra_extractor_spark.operators.similarity import ns_random_projection
+
+    df = ns_random_projection(spark, sf_dir)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "hashpartitioning" not in plan, plan
+    assert "Join" not in plan, plan
+
+
+def test_jl_projection_preserves_relative_distances(spark, sf_dir):
+    """JL guarantee (loose sanity form): projected inter-point
+    distances stay within a broad factor of the original ones."""
+    from cassandra_extractor_spark.operators.similarity import (
+        JL_SCALE,
+        ns_random_projection,
+    )
+
+    proj = ns_random_projection(spark, sf_dir).toPandas()
+    emb = pd.read_parquet(f"{sf_dir}/embeddings.parquet").head(10)
+    P = proj.pivot(index="vec_id", columns="out_dim", values="proj")
+    X = np.stack(emb.embedding.values).astype(float)
+    ids = emb.vec_id.values
+    ratios = []
+    for i in range(0, 8, 2):
+        a, b = ids[i], ids[i + 1]
+        d_orig = np.linalg.norm(X[i] - X[i + 1])
+        d_proj = np.linalg.norm(P.loc[a].values - P.loc[b].values)
+        if d_orig > 1e-9:
+            ratios.append(d_proj / d_orig)
+    assert ratios and all(0.3 < r < 3.0 for r in ratios), ratios
+
+
+def test_neardup_embedding_oracle_drops_nan_and_zero_vectors():
+    """The DuckDB oracle excludes a vector with no cosine as Spark's
+    ``dedup.cosine_defined`` does: a zero vector and a vector with a NaN
+    component never pair.  DuckDB orders NaN above every number, so a
+    bare ``norm > 0`` filter would keep the NaN vector."""
+    import duckdb
+
+    from cassandra_extractor_spark.oracles_ns import NS_ORACLES
+
+    con = duckdb.connect()
+    con.execute("CREATE TABLE embeddings (vec_id BIGINT, embedding DOUBLE[])")
+    # a SQL literal: a Python float NaN binds as NULL
+    con.execute(
+        "INSERT INTO embeddings VALUES (1, [1.0, 0.0]), (2, [1.0, 0.1]), "
+        "(3, ['nan'::DOUBLE, 1.0]), (4, [0.0, 0.0])"
+    )
+    pairs = con.execute(NS_ORACLES["ns_neardup_embedding"]).fetchall()
+    assert [(v1, v2) for v1, v2, _ in pairs] == [(1, 2)]

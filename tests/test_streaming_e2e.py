@@ -234,3 +234,41 @@ def test_app_streaming_reads_a_table_stored_as_a_directory(spark, sf_dir, tmp_pa
         with open(f) as fh:
             got += [json.loads(line)["event_id"] for line in fh]
     assert sorted(got) == sorted(table.column("event_id").to_pylist())
+
+
+def test_app_streaming_writes_every_sink_of_sinks(spark, sf_dir, tmp_path, monkeypatch):
+    """``app.main --streaming --sinks jsonl,parquet,csv`` delivers each
+    micro-batch to every sink under ``<sink dir>/batch=<id>``: every
+    source row lands exactly once in each sink, and ``job.processed``
+    is the number of rows delivered."""
+    import glob
+    import json
+
+    import pyarrow.parquet as pq
+
+    from cassandra_extractor_spark import app as app_mod
+
+    actuators = []
+
+    class _Actuator(app_mod.Actuator):
+        def __init__(self, *args, **kwargs):
+            super().__init__(*args, **kwargs)
+            actuators.append(self)
+
+    monkeypatch.setattr(app_mod, "Actuator", _Actuator)
+    out = tmp_path / "out"
+    rc = app_mod.main(["-T", "events", "--sf-dir", sf_dir, "--output", str(out),
+                       "--streaming", "--sinks", "jsonl,parquet,csv"])
+    assert rc == 0
+    src = sorted(pq.read_table(f"{sf_dir}/events.parquet").column("event_id").to_pylist())
+    jsonl = []
+    for f in glob.glob(f"{out}/events/batch=*/*.json"):
+        with open(f) as fh:
+            jsonl += [json.loads(line)["event_id"] for line in fh]
+    assert sorted(jsonl) == src
+    parquet = [r.event_id for r in spark.read.parquet(f"{out}/events_parquet").collect()]
+    assert sorted(parquet) == src
+    assert glob.glob(f"{out}/events_csv/batch=*")
+    csv = spark.read.option("header", "true").csv(f"{out}/events_csv")
+    assert sorted(int(r.event_id) for r in csv.collect()) == src
+    assert actuators[0].jobs["events"].processed == len(src)
