@@ -26,8 +26,10 @@ def _warehouse_location(spark: SparkSession, table_name: str) -> str | None:
 def drop_managed_table(spark: SparkSession, table_name: str) -> None:
     """Drop an (unqualified) managed table AND its warehouse directory,
     also when this session's catalog has no such table.  Only for names
-    the caller owns: the catalog is per process, so another live
-    session's table of the same name looks exactly like an orphan."""
+    the caller owns: the catalog is per process, so in a warehouse the
+    caller shares (``session.get_spark`` gives each local session a
+    private one unless told otherwise) another live session's table of
+    the same name looks exactly like an orphan."""
     spark.sql(f"DROP TABLE IF EXISTS {table_name}")
     loc = _warehouse_location(spark, table_name)
     if loc:
@@ -44,10 +46,12 @@ def write_bucketed(
     """Persist as a bucketed (and optionally sorted) managed table.
 
     A location the catalog does not know and that holds no
-    ``_SUCCESS`` marker is what a run killed mid-write leaves behind;
-    it is removed first, else ``saveAsTable`` fails with
-    LOCATION_ALREADY_EXISTS.  A complete location is left alone (it may
-    be another live session's table) and the write still fails."""
+    ``_SUCCESS`` marker is what a write that failed midway leaves
+    behind; it is removed first, else ``saveAsTable`` fails with
+    LOCATION_ALREADY_EXISTS.  A complete location is left alone and the
+    write still fails: in a warehouse the caller shares between
+    sessions it may be another live session's table (a private
+    warehouse from ``session.get_spark`` holds only this process's)."""
     spark = df.sparkSession
     loc = _warehouse_location(spark, table_name)
     if (

@@ -5,12 +5,22 @@ Local testing runs ``local[N]`` but every knob here is chosen for the
 splitting, partition coalescing), Arrow for any pandas exchange, UTC
 session time zone so timestamp semantics are reproducible, and shuffle
 partitions sized from the environment rather than Spark's legacy 200.
+
+A local session that is given no warehouse gets a private one: a fresh
+temp directory, removed when the interpreter exits.  The catalog is
+Spark's in-memory one, so no managed table outlives the process that
+wrote it, and a warehouse shared between runs (Spark's default,
+``<cwd>/spark-warehouse``) could only ever collect orphans.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
 
 DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
@@ -27,10 +37,19 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` for tests/bench;
     on a real cluster the caller passes ``None`` master via spark-submit
     and these configs still apply.
+
+    A new local session gets a private warehouse (module docstring)
+    unless ``extra_conf`` or spark-submit sets ``spark.sql.warehouse.dir``:
+    that one is used unchanged, and what a process leaves there is the
+    caller's.  Cluster masters keep Spark's default: their executors
+    need a shared path.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
+    extra_conf = dict(extra_conf or {})
+    if master.startswith("local") and "spark.sql.warehouse.dir" not in extra_conf:
+        extra_conf.update(_private_warehouse())
     sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
         SparkSession.builder.appName(app_name)
@@ -69,8 +88,22 @@ def get_spark(
         .config("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
         .config("spark.sql.shuffle.spill.compress", "true")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in extra_conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _private_warehouse() -> dict[str, str]:
+    """``{"spark.sql.warehouse.dir": <fresh temp dir>}``, or nothing when
+    a session is already running (its warehouse is fixed) or spark-submit
+    or ``spark-defaults.conf`` set one (the JVM's conf holds both)."""
+    if SparkContext._active_spark_context is not None:
+        return {}
+    SparkContext._ensure_initialized()
+    if SparkConf().contains("spark.sql.warehouse.dir"):
+        return {}
+    warehouse = tempfile.mkdtemp(prefix="spark-warehouse-")
+    atexit.register(shutil.rmtree, warehouse, ignore_errors=True)
+    return {"spark.sql.warehouse.dir": warehouse}

@@ -85,7 +85,6 @@ def _concurrently(
 def fan_out(
     df: DataFrame,
     sinks: dict[str, Callable[[DataFrame], None]],
-    storage_level: StorageLevel = StorageLevel.MEMORY_AND_DISK,
 ) -> dict[str, Exception | None]:
     """Write ``df`` to every sink; returns per-sink error (None = ok).
 
@@ -94,13 +93,12 @@ def fan_out(
     a cached frame cannot be materialized, every sink reports that
     error, as each would have failed computing it; a file snapshot's
     sinks each compute it and report their own failure.
-    ``storage_level`` applies to the cached path only.
     """
     if len(sinks) <= 1:
         return {name: _write(write, df) for name, write in sinks.items()}
     if file_snapshot(df):
         return _concurrently(df, sinks)
-    df = df.persist(storage_level)
+    df = df.persist(StorageLevel.MEMORY_AND_DISK)
     try:
         failed = _write(lambda d: d.write.format("noop").mode("overwrite").save(), df)
         if failed is not None:

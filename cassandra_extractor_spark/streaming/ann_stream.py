@@ -105,8 +105,6 @@ def stream_ann_ingest(
     store_dir: str,
     checkpoint_dir: str,
     stats_sink: Callable[[DataFrame, int], None] | None = None,
-    max_files_per_trigger: int = 1,
-    path_glob: str = "*.parquet",
     auto_compact: dict | None = None,
 ) -> StreamingQuery:
     """Start the streaming ingest over a file source of
@@ -147,8 +145,8 @@ def stream_ann_ingest(
         schema,
         {"ann": process},
         checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        path_glob=path_glob,
+        max_files_per_trigger=1,
+        path_glob="*.parquet",
     )
 
 

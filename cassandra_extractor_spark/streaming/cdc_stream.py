@@ -792,8 +792,6 @@ def stream_cdc_apply(
     order_cols: Sequence[str],
     op_col: str = "op",
     payload_cols: Sequence[str] = (),
-    max_files_per_trigger: int = 1,
-    retain_gens: int = 3,
 ) -> StreamingQuery:
     """Maintain the CDC snapshot over a file source of change batches,
     one ``apply_cdc_batch`` per micro-batch of ``pipeline.stream_extract``
@@ -810,7 +808,6 @@ def stream_cdc_apply(
             order_cols,
             op_col,
             payload_cols,
-            retain_gens=retain_gens,
         )
 
     return stream_extract(
@@ -819,7 +816,7 @@ def stream_cdc_apply(
         schema,
         {"cdc": process},
         checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
+        max_files_per_trigger=1,
         path_glob="*.parquet",
     )
 

@@ -51,8 +51,6 @@ def stream_incremental_dedup(
     delta_dir: str,
     pairs_sink: Callable[[DataFrame, int], None],
     checkpoint_dir: str,
-    max_files_per_trigger: int = 1,
-    path_glob: str = "*.parquet",
     auto_compact: dict | None = None,
 ) -> StreamingQuery:
     """Start the streaming dedup gate over a file source of
@@ -105,8 +103,8 @@ def stream_incremental_dedup(
         schema,
         {"signature": process},
         checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        path_glob=path_glob,
+        max_files_per_trigger=1,
+        path_glob="*.parquet",
     )
 
 

@@ -46,26 +46,25 @@ renders a collected TIMESTAMP in its own local zone.
 from __future__ import annotations
 
 import datetime as _dt
+import fcntl
 import json
 import os
-import threading
 from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from cassandra_extractor_spark.sources.catalog import file_relation
 
-#: serializes every load-modify-replace of a state file in this process:
-#: the app runs one job thread per table, all on one file
-_WRITE_LOCK = threading.Lock()
-
 
 @dataclass
 class HighWaterMarkStore:
     """Persisted per-table watermark (replaces the reference's Redis
     ``{table}-modified-timestamp-filter`` key), with the files the run
-    that committed it listed.  Safe to share between threads: a write
-    replaces the file whole, and writes take turns.
+    that committed it listed.  Safe to share between threads and
+    processes: a write replaces the file whole, and writes take turns
+    under an exclusive ``flock`` on the ``<path>.lock`` sidecar (the
+    app runs one job thread per table, and two app instances that
+    share ``--output`` share one state file).
 
     The state file maps each table to ``{"mark": ..., "files": [...]}``;
     one in the flat ``{table: mark}`` form loads with no files."""
@@ -95,25 +94,29 @@ class HighWaterMarkStore:
         GET /state view)."""
         return {t: e["mark"] for t, e in self._load().items()}
 
-    def _write(self, state: dict) -> None:
+    def _update(self, table: str, entry: dict | None) -> None:
+        """Replace ``table``'s entry (``None``: drop it) in one
+        load-modify-replace, under the ``<path>.lock`` flock."""
         os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        tmp = self.path + ".tmp"
-        with open(tmp, "w", encoding="utf-8") as f:
-            json.dump(state, f)
-        os.replace(tmp, self.path)
+        with open(self.path + ".lock", "a") as lock:
+            fcntl.flock(lock, fcntl.LOCK_EX)
+            state = self._load()
+            if entry is None:
+                state.pop(table, None)
+            else:
+                state[table] = entry
+            tmp = self.path + ".tmp"
+            with open(tmp, "w", encoding="utf-8") as f:
+                json.dump(state, f)
+            os.replace(tmp, self.path)
 
     def set(self, table: str, value: str, files: list[str] | None = None) -> None:
         """Replace ``table``'s mark and its listed files in one write."""
-        entry = {"mark": value, "files": files} if files else {"mark": value}
-        with _WRITE_LOCK:
-            self._write({**self._load(), table: entry})
+        self._update(table, {"mark": value, "files": files} if files else {"mark": value})
 
     def clear(self, table: str) -> None:
         """Forget ``table``'s mark and listed files."""
-        with _WRITE_LOCK:
-            state = self._load()
-            state.pop(table, None)
-            self._write(state)
+        self._update(table, None)
 
 
 def _render(ts: Column) -> Column:

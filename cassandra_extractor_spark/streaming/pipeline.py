@@ -39,8 +39,6 @@ def stream_extract(
     checkpoint_dir: str | None = None,
     transform: Callable[[DataFrame], DataFrame] | None = None,
     ts_col: str | None = None,
-    watermark_delay: str = "1 minute",
-    available_now: bool = True,
     max_files_per_trigger: int | None = None,
     path_glob: str | None = None,
     source_stream: DataFrame | None = None,
@@ -52,12 +50,14 @@ def stream_extract(
     source shares the same watermark/transform/fan-out/checkpoint
     contract.
 
-    ``available_now=True`` drains everything currently available then
-    stops (batch-incremental mode — how tests drive it), and a restart
+    The query drains everything currently available, then stops (an
+    ``availableNow`` trigger: batch-incremental mode), and a restart
     with the same ``checkpoint_dir`` resumes after the last committed
-    batch.  ``max_files_per_trigger`` is the rate limit replacing the
-    reference's memory-based crawl pausing (D3: Spark backpressure is
-    declarative, datacrawler.py:211-242 becomes one option).
+    batch.  With ``ts_col`` the stream carries a one-minute event-time
+    watermark on that column.  ``max_files_per_trigger`` is the rate
+    limit replacing the reference's memory-based crawl pausing (D3:
+    Spark backpressure is declarative, datacrawler.py:211-242 becomes
+    one option).
     """
     if sinks is None or checkpoint_dir is None:
         raise ValueError("sinks and checkpoint_dir are required")
@@ -75,7 +75,7 @@ def stream_extract(
             reader = reader.option("pathGlobFilter", path_glob)
         stream = reader.parquet(source_path)
     if ts_col is not None:
-        stream = stream.withWatermark(ts_col, watermark_delay)
+        stream = stream.withWatermark(ts_col, "1 minute")
     if transform is not None:
         stream = transform(stream)
 
@@ -90,11 +90,10 @@ def stream_extract(
         if errors:
             raise errors[0]
 
-    writer = (
+    return (
         stream.writeStream.foreachBatch(dispatch)
         .option("checkpointLocation", checkpoint_dir)
         .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -28,7 +28,6 @@ maintains itself.
 
 from __future__ import annotations
 
-import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -101,8 +100,6 @@ def stream_posting_ingest(
     delta_dir: str,
     checkpoint_dir: str,
     stats_sink: Callable[[DataFrame, int], None] | None = None,
-    max_files_per_trigger: int = 1,
-    path_glob: str = "*.parquet",
     doclen_delta_dir: str | None = None,
     store_table: str | None = None,
     auto_compact: dict | None = None,
@@ -183,8 +180,8 @@ def stream_posting_ingest(
         schema,
         {"posting": process},
         checkpoint_dir,
-        max_files_per_trigger=max_files_per_trigger,
-        path_glob=path_glob,
+        max_files_per_trigger=1,
+        path_glob="*.parquet",
     )
 
 
@@ -348,15 +345,17 @@ def ensure_session_bm25_store(spark: SparkSession, sf_dir: str) -> tuple[str, st
     shared-frame invalidation forgets it and — via
     ``release_session_bm25_stores`` — drops the managed tables
     themselves: a forgotten store releases its disk instead of
-    orphaning.
+    orphaning.  A process that exits without invalidating leaves its
+    tables in its session's warehouse, which ``session.get_spark``
+    makes private and removes at exit unless the caller set one.
 
     The table tag folds in the session's ``applicationId``: the store
     is a SESSION store, and keying the on-disk name by corpus alone let
-    two concurrent sessions on one warehouse DROP/rmtree each other's
-    tables mid-read (observed as transient hash failures under two
-    concurrent gate runs).  A production deployment's durable shared
-    index is the explicitly-named ``write_posting_store`` path; this
-    cache is each session's private build of it."""
+    two concurrent sessions that share a warehouse DROP/rmtree each
+    other's tables mid-read (observed as transient hash failures under
+    two concurrent gate runs).  A production deployment's durable
+    shared index is the explicitly-named ``write_posting_store`` path;
+    this cache is each session's private build of it."""
     import hashlib
 
     from cassandra_extractor_spark.operators.dedup import _norm_dir
@@ -365,28 +364,10 @@ def ensure_session_bm25_store(spark: SparkSession, sf_dir: str) -> tuple[str, st
     key = _norm_dir(sf_dir)
     if key in cache:
         return cache[key]
-    if not spark.__dict__.get("_ce_posting_store_exit_hook"):
-        # first build in this session: make sure whatever is still in
-        # the cache at interpreter exit is dropped — tool processes
-        # (gate/bench/probe) otherwise leak 2 tables per run
-        import atexit
-
-        wh0 = spark.conf.get("spark.sql.warehouse.dir", "")
-        wh0 = wh0[len("file:") :] if wh0.startswith("file:") else wh0
-        if not _EXIT_CLEANUP:
-            atexit.register(_drop_all_session_stores)
-        _EXIT_CLEANUP.append((cache, wh0))
-        spark.__dict__["_ce_posting_store_exit_hook"] = True
     nonce = f"{spark.sparkContext.applicationId}|{key}"
     tag = hashlib.md5(nonce.encode()).hexdigest()[:10]
     postings_t = f"bm25_postings_{tag}"
     doclens_t = f"bm25_doclens_{tag}"
-    # a PREVIOUS incarnation of this app id (restarted session reusing
-    # a checkpointed app id is impossible locally, but a stale crash
-    # artifact isn't) may have left the managed-table location on disk
-    # without this session's catalog knowing the table — drop both
-    # sides so saveAsTable never hits LOCATION_ALREADY_EXISTS
-    drop_session_bm25_store(spark, (postings_t, doclens_t))
     # postings from the session-shared token stream (one corpus
     # tokenize per session; optimization r13, guide §1.2) — the same
     # (doc_id, tok != '') → count aggregation as ``build_postings``,
@@ -437,40 +418,6 @@ def release_session_bm25_stores(spark: SparkSession, sf_dir: str | None) -> None
     cache: dict = spark.__dict__.get("_ce_posting_store") or {}
     for key in [k for k in cache if sf_dir in (None, k)]:
         drop_session_bm25_store(spark, cache.pop(key))
-
-
-#: (store-cache dict, warehouse path) pairs whose tables the interpreter
-#: must release at exit — see _drop_all_session_stores
-_EXIT_CLEANUP: list[tuple[dict, str]] = []
-
-
-def _drop_all_session_stores() -> None:
-    """atexit hook: a session store is SESSION-scoped state, so a
-    process that builds one and exits without invalidating (a gate
-    run, a bench, a notebook) must not leave its app-id-tagged tables
-    accruing in the shared warehouse.  Tries a catalog DROP while a
-    session is still alive, then removes the directories regardless
-    (a stale catalog row without a directory is harmless: every build
-    pre-drops its own names before saveAsTable)."""
-    import shutil
-
-    from pyspark.sql import SparkSession
-
-    sp = SparkSession.getActiveSession()
-    for cache, wh in _EXIT_CLEANUP:
-        for entry in list(cache.values()):
-            for t in entry:
-                if sp is not None:
-                    try:
-                        sp.sql(f"DROP TABLE IF EXISTS {t}")
-                    except Exception:  # noqa: BLE001 — JVM may be gone
-                        sp = None
-                if wh:
-                    shutil.rmtree(os.path.join(wh, t), ignore_errors=True)
-        # clear the cache (tables are gone) but KEEP the registration:
-        # a later build in the same session must stay covered, and a
-        # re-invocation over cleared caches is a cheap no-op
-        cache.clear()
 
 
 def ns_bm25_store(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -496,3 +496,40 @@ def test_concurrent_tables_keep_every_mark(tmp_path):
     }
     store.clear("t0_0")
     assert len(store.dump()) == 63 and store.get("t0_0") is None
+
+
+def test_two_processes_keep_every_mark(tmp_path, repo_root):
+    """Two app instances that share ``--output`` share one state file:
+    two processes committing 200 tables each keep all 400 marks, and
+    the file still parses."""
+    import subprocess
+    import sys
+
+    path = str(tmp_path / "hwm.json")
+    writer = (
+        "import sys\n"
+        f"sys.path.insert(0, {str(repo_root)!r})\n"
+        "from cassandra_extractor_spark.streaming.hwm import HighWaterMarkStore\n"
+        f"store = HighWaterMarkStore({path!r})\n"
+        "sys.stdin.readline()\n"
+        "for j in range(200):\n"
+        "    store.set(f'{sys.argv[1]}_{j}', '2024-01-01 00:00:00')\n"
+    )
+    procs = [
+        subprocess.Popen(
+            [sys.executable, "-c", writer, name],
+            stdin=subprocess.PIPE,
+            stderr=subprocess.PIPE,
+            text=True,
+        )
+        for name in ("a", "b")
+    ]
+    for p in procs:  # both are imported and waiting: start them together
+        p.stdin.write("go\n")
+        p.stdin.flush()
+    for p in procs:
+        p.stdin.close()
+        assert p.wait(timeout=120) == 0, p.stderr.read()[-2000:]
+    assert HighWaterMarkStore(path).dump() == {
+        f"{name}_{j}": "2024-01-01 00:00:00" for name in ("a", "b") for j in range(200)
+    }

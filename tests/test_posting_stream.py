@@ -131,66 +131,65 @@ def test_posting_store_parity_restart_pruning_compaction(
         spark.sql(f"DROP TABLE IF EXISTS {table}")
 
 
-def test_exiting_process_releases_its_session_store(spark, sf_dir):
-    """Round-12: a process that builds a session BM25 store and exits
-    WITHOUT invalidating (a gate run, a bench, a notebook) must not
-    leave its app-id-tagged tables in the shared warehouse — the
-    atexit hook drops them.  Observed before the fix: 2 orphan tables
-    per tool process, 18 accrued over one working session."""
-    import os
+def _session_warehouse(body: str) -> Path:
+    """Run ``body`` in a fresh interpreter from the checkout's root and
+    return the warehouse it printed on its ``WAREHOUSE <path>`` line."""
     import subprocess
     import sys
 
-    from cassandra_extractor_spark.streaming.posting_stream import (
-        _drop_all_session_stores,
-        ensure_session_bm25_store,
-    )
-
-    # the child session shares this session's warehouse
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    wh = wh[len("file:") :] if wh.startswith("file:") else wh
-    script = f"""
-import sys
-sys.path.insert(0, {str(ROOT)!r})
-from cassandra_extractor_spark.session import get_spark
-from cassandra_extractor_spark.streaming.posting_stream import (
-    ensure_session_bm25_store)
-spark = get_spark("leaky-session", master="local[4]", shuffle_partitions=4,
-                  extra_conf={{"spark.sql.warehouse.dir": {wh!r}}})
-tables = ensure_session_bm25_store(spark, {sf_dir!r})
-print("TABLES", *tables)
-# exit WITHOUT invalidating: the atexit hook must clean up
-"""
     out = subprocess.run(
-        [sys.executable, "-c", script],
+        [sys.executable, "-c", f"import sys\nsys.path.insert(0, {str(ROOT)!r})\n{body}"],
         capture_output=True,
         text=True,
         timeout=300,
         cwd=ROOT,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    theirs = next(
-        l.split()[1:] for l in out.stdout.splitlines() if l.startswith("TABLES")
-    )
-    for t in theirs:
-        assert not os.path.isdir(os.path.join(wh, t)), t
-    # in-process spelling of the same contract: the hook drops this
-    # session's live store too (cache cleared, tables + dirs gone) and
-    # stays registered, so a REBUILD after a manual invocation is
-    # still covered at exit
-    mine = ensure_session_bm25_store(spark, sf_dir)
-    _drop_all_session_stores()
-    assert spark.__dict__["_ce_posting_store"] == {}
-    for t in mine:
-        assert not spark.catalog.tableExists(t), t
-        assert not os.path.isdir(os.path.join(wh, t)), t
-    rebuilt = ensure_session_bm25_store(spark, sf_dir)
-    assert rebuilt == mine  # same session → same deterministic names…
-    for t in rebuilt:  # …but genuinely rebuilt on disk
-        assert spark.catalog.tableExists(t), t
-    from cassandra_extractor_spark.operators.dedup import invalidate_dedup_chain
+    line = next(l for l in out.stdout.splitlines() if l.startswith("WAREHOUSE "))
+    return Path(line.removeprefix("WAREHOUSE "))
 
-    invalidate_dedup_chain(spark, sf_dir)
+
+def _listing(path: Path) -> list[str] | None:
+    return sorted(p.name for p in path.iterdir()) if path.is_dir() else None
+
+
+def test_exiting_process_releases_its_session_store(sf_dir):
+    """A process that builds a session BM25 store and exits WITHOUT
+    invalidating (a gate run, a bench, a notebook) leaves nothing
+    behind: a local session given no warehouse gets a private one,
+    removed at exit, and the checkout's ``spark-warehouse`` gets
+    nothing (it was where every tool's tables went)."""
+    shared = ROOT / "spark-warehouse"
+    before = _listing(shared)
+    wh = _session_warehouse(f"""
+import os
+from cassandra_extractor_spark.session import get_spark
+from cassandra_extractor_spark.streaming.posting_stream import (
+    ensure_session_bm25_store)
+spark = get_spark("leaky-session", master="local[4]", shuffle_partitions=4)
+tables = ensure_session_bm25_store(spark, {sf_dir!r})
+wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+assert all(os.path.isdir(os.path.join(wh, t)) for t in tables), os.listdir(wh)
+print("WAREHOUSE", wh)
+""")
+    assert not wh.exists(), wh
+    assert not wh.resolve().is_relative_to(ROOT), wh
+    assert _listing(shared) == before
+
+
+def test_caller_set_warehouse_is_kept_at_exit(tmp_path):
+    """A warehouse the caller sets is used unchanged, and what an
+    exiting process leaves there stays: it is the caller's."""
+    wh = tmp_path / "warehouse"
+    got = _session_warehouse(f"""
+from cassandra_extractor_spark.session import get_spark
+spark = get_spark("own-warehouse", master="local[2]", shuffle_partitions=2,
+                  extra_conf={{"spark.sql.warehouse.dir": {str(wh)!r}}})
+spark.range(3).write.saveAsTable("kept")
+print("WAREHOUSE", spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"))
+""")
+    assert got == wh
+    assert (wh / "kept" / "_SUCCESS").exists()
 
 
 def test_auto_compaction_mid_stream(spark, sf_dir, tmp_path):
