@@ -7,7 +7,8 @@ session time zone so timestamp semantics are reproducible, and shuffle
 partitions sized from the environment rather than Spark's legacy 200.
 
 A local session that is given no warehouse gets a private one: a fresh
-temp directory, removed when the interpreter exits.  The catalog is
+temp directory (under ``$TMPDIR``, by default ``/tmp``), removed when
+the interpreter exits.  The catalog is
 Spark's in-memory one, so no managed table outlives the process that
 wrote it, and a warehouse shared between runs (Spark's default,
 ``<cwd>/spark-warehouse``) could only ever collect orphans.
@@ -38,8 +39,9 @@ def get_spark(
     on a real cluster the caller passes ``None`` master via spark-submit
     and these configs still apply.
 
-    A new local session gets a private warehouse (module docstring)
-    unless ``extra_conf`` or spark-submit sets ``spark.sql.warehouse.dir``:
+    A new local session gets a private warehouse under ``$TMPDIR``
+    (module docstring; a large store build needs room there) unless
+    ``extra_conf`` or spark-submit sets ``spark.sql.warehouse.dir``:
     that one is used unchanged, and what a process leaves there is the
     caller's.  Cluster masters keep Spark's default: their executors
     need a shared path.
@@ -47,9 +49,7 @@ def get_spark(
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
         master = f"local[{cpus}]"
-    extra_conf = dict(extra_conf or {})
-    if master.startswith("local") and "spark.sql.warehouse.dir" not in extra_conf:
-        extra_conf.update(_private_warehouse())
+    extra_conf = extra_conf or {}
     sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
         SparkSession.builder.appName(app_name)
@@ -90,20 +90,29 @@ def get_spark(
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
+    if master.startswith("local") and "spark.sql.warehouse.dir" not in extra_conf:
+        builder = _private_warehouse(builder)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
 
-def _private_warehouse() -> dict[str, str]:
-    """``{"spark.sql.warehouse.dir": <fresh temp dir>}``, or nothing when
-    a session is already running (its warehouse is fixed) or spark-submit
-    or ``spark-defaults.conf`` set one (the JVM's conf holds both)."""
+def _private_warehouse(builder: SparkSession.Builder) -> SparkSession.Builder:
+    """``builder`` with a fresh temp warehouse, or unchanged when a
+    session is already running (its warehouse is fixed) or spark-submit
+    or ``spark-defaults.conf`` set one (the JVM's conf holds both).
+
+    Asking the JVM starts it when no gateway runs yet, so it is started
+    with the builder's options, as ``getOrCreate`` would: settings read
+    only at JVM launch (``spark.driver.memory``, the driver's java
+    options) reach spark-submit nowhere else.
+    """
     if SparkContext._active_spark_context is not None:
-        return {}
-    SparkContext._ensure_initialized()
+        return builder
+    launch = SparkConf(loadDefaults=False).setAll(builder._options.items())
+    SparkContext._ensure_initialized(conf=launch)
     if SparkConf().contains("spark.sql.warehouse.dir"):
-        return {}
+        return builder
     warehouse = tempfile.mkdtemp(prefix="spark-warehouse-")
     atexit.register(shutil.rmtree, warehouse, ignore_errors=True)
-    return {"spark.sql.warehouse.dir": warehouse}
+    return builder.config("spark.sql.warehouse.dir", warehouse)

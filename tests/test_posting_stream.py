@@ -192,6 +192,22 @@ print("WAREHOUSE", spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:
     assert (wh / "kept" / "_SUCCESS").exists()
 
 
+def test_private_warehouse_keeps_launch_conf():
+    """Giving a session a private warehouse must not start its JVM
+    without the launch-only settings: the driver heap is sized from
+    ``SPARK_GRAFT_DRIVER_MEM`` (Spark's own default is 1g)."""
+    wh = _session_warehouse("""
+import os
+os.environ["SPARK_GRAFT_DRIVER_MEM"] = "2g"
+from cassandra_extractor_spark.session import get_spark
+spark = get_spark("heap-sized", master="local[1]", shuffle_partitions=1)
+heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
+assert 1.5 * 2**30 < heap <= 2 * 2**30, heap
+print("WAREHOUSE", spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:"))
+""")
+    assert not wh.resolve().is_relative_to(ROOT), wh
+
+
 def test_auto_compaction_mid_stream(spark, sf_dir, tmp_path):
     """Round-12: the in-band size-ratio policy (``auto_compact``) folds
     the delta exactly once mid-stream at its batch cadence — posting
