@@ -50,7 +50,7 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--limit", type=int, help="row cap (S6)")
     p.add_argument("--table-specs", help="table-specs JSON file (T1-T10)")
     p.add_argument("--hwm-column", help="incremental timestamp column (P3)")
-    p.add_argument("--hwm-state", help="HWM state file path")
+    p.add_argument("--hwm-state", help="HWM state path (per-table logs in <path>.d)")
     p.add_argument("--output", help="output directory root")
     p.add_argument(
         "--sinks",

@@ -7,11 +7,11 @@ session time zone so timestamp semantics are reproducible, and shuffle
 partitions sized from the environment rather than Spark's legacy 200.
 
 A local session that is given no warehouse gets a private one: a fresh
-temp directory (under ``$TMPDIR``, by default ``/tmp``), removed when
-the interpreter exits.  The catalog is
-Spark's in-memory one, so no managed table outlives the process that
-wrote it, and a warehouse shared between runs (Spark's default,
-``<cwd>/spark-warehouse``) could only ever collect orphans.
+temp directory (under ``$TMPDIR``, by default ``/tmp``; a large store
+build needs room there), removed when the interpreter exits.  The
+catalog is Spark's in-memory one, so no managed table outlives the
+process that wrote it, and a warehouse shared between runs (Spark's
+default, ``<cwd>/spark-warehouse``) could only ever collect orphans.
 """
 
 from __future__ import annotations
@@ -35,25 +35,20 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) a SparkSession.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` for tests/bench;
-    on a real cluster the caller passes ``None`` master via spark-submit
-    and these configs still apply.
+    ``master=None`` takes the master spark-submit was given, so on a
+    cluster these configs still apply; given none (spark-submit then
+    fills in ``local[*]``, which reads as none), tests and benches run
+    ``local[$SPARK_GRAFT_CPUS]``.
 
-    A new local session gets a private warehouse under ``$TMPDIR``
-    (module docstring; a large store build needs room there) unless
-    ``extra_conf`` or spark-submit sets ``spark.sql.warehouse.dir``:
-    that one is used unchanged, and what a process leaves there is the
-    caller's.  Cluster masters keep Spark's default: their executors
-    need a shared path.
+    A warehouse ``extra_conf`` or spark-submit sets is used unchanged,
+    and what a process leaves there is the caller's; else a new local
+    session gets a private one (module docstring).  Cluster masters keep
+    Spark's default: their executors need a shared path.
     """
-    if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
-        master = f"local[{cpus}]"
     extra_conf = extra_conf or {}
     sp = shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS
     builder = (
         SparkSession.builder.appName(app_name)
-        .master(master)
         .config("spark.sql.shuffle.partitions", str(sp))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -90,29 +85,29 @@ def get_spark(
     )
     for k, v in extra_conf.items():
         builder = builder.config(k, v)
-    if master.startswith("local") and "spark.sql.warehouse.dir" not in extra_conf:
-        builder = _private_warehouse(builder)
+    if SparkContext._active_spark_context is None:
+        builder = _launch(builder, master)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
 
-def _private_warehouse(builder: SparkSession.Builder) -> SparkSession.Builder:
-    """``builder`` with a fresh temp warehouse, or unchanged when a
-    session is already running (its warehouse is fixed) or spark-submit
-    or ``spark-defaults.conf`` set one (the JVM's conf holds both).
-
-    Asking the JVM starts it when no gateway runs yet, so it is started
-    with the builder's options, as ``getOrCreate`` would: settings read
-    only at JVM launch (``spark.driver.memory``, the driver's java
-    options) reach spark-submit nowhere else.
-    """
-    if SparkContext._active_spark_context is not None:
-        return builder
+def _launch(builder: SparkSession.Builder, master: str | None) -> SparkSession.Builder:
+    """Start the JVM with ``builder``'s options, as ``getOrCreate``
+    would: settings read only at JVM launch (``spark.driver.memory``,
+    the driver's java options) reach spark-submit nowhere else.  Return
+    ``builder`` with its master and its warehouse (``get_spark``); the
+    JVM's conf holds what spark-submit and ``spark-defaults.conf`` set."""
     launch = SparkConf(loadDefaults=False).setAll(builder._options.items())
     SparkContext._ensure_initialized(conf=launch)
-    if SparkConf().contains("spark.sql.warehouse.dir"):
-        return builder
-    warehouse = tempfile.mkdtemp(prefix="spark-warehouse-")
-    atexit.register(shutil.rmtree, warehouse, ignore_errors=True)
-    return builder.config("spark.sql.warehouse.dir", warehouse)
+    submitted = SparkConf()
+    if master is None:
+        master = submitted.get("spark.master", "local[*]")
+        if master == "local[*]":
+            master = f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+    key = "spark.sql.warehouse.dir"
+    if master.startswith("local") and not (key in builder._options or submitted.contains(key)):
+        warehouse = tempfile.mkdtemp(prefix="spark-warehouse-")
+        atexit.register(shutil.rmtree, warehouse, ignore_errors=True)
+        builder = builder.config(key, warehouse)
+    return builder.master(master)

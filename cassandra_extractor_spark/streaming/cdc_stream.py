@@ -13,30 +13,17 @@ read like the posting, signature and ANN stores:
   ``write_signature_store``): ``data/<gen>/_b=<b>``;
 - an apply does O(batch) work and nothing else: it writes its batch,
   horizon fenced and cast to the store's schema but otherwise as it
-  arrived, as ONE unpartitioned
-  delta generation ``data/<gen>`` (one file per write task: no bucket
-  dirs, no sort, no store read, no shuffle) and commits it as one more
-  entry of the manifest's flat ``deltas`` list.  A generation is named
-  ``s<seq>-<8 hex>``: the seq of the manifest that was current when
-  its writer started, plus one (never a batch id: ids restart at 0
-  when a stream is replayed from a lost checkpoint), plus a random
-  per-attempt suffix, so two writers never share a directory and
-  nothing ever overwrites a directory a running plan is reading;
-- after its commit the apply checks the size-ratio policy of
-  ``streaming/maintenance.py`` (delta bytes > 0.2 x base bytes,
-  driver-side ``dir_bytes``); when a fold is due and none is running
-  for the store in this process, it starts one on a daemon thread
-  (its jobs in the job group and FAIR pool ``cdc-fold``) and returns.
-  The fold reads the manifest of seq S, writes last-writer-wins over
-  the base and S's deltas as a new base generation in ONE exchange
-  (hash on ``_b``, window over ``(_b, key)``), and commits the current
-  manifest with that base and with S's deltas taken out of its
-  ``deltas``; the deltas applies committed since S stay outstanding.
-  (The seed is written the same way.)  If a purge or
-  another fold replaced the base (or moved the horizon) meanwhile,
-  the fold drops its output.  ``fold_cdc_store`` (the control plane's
-  ``op: "fold"``) waits for a running fold, then folds what is
-  outstanding in the calling thread;
+  arrived, as ONE unpartitioned delta generation ``data/<gen>`` (no
+  bucket dirs, no sort, no store read, no shuffle; ``_next_gen`` names
+  it so that no two writers share a directory) and commits it as one
+  more entry of the manifest's flat ``deltas`` list;
+- a fold writes last-writer-wins over the base and the deltas of the
+  manifest it read as a new base generation in ONE exchange (hash on
+  ``_b``, window over ``(_b, key)``; the seed is written the same way)
+  and commits it with those deltas taken out: the deltas applied since
+  stay outstanding.  An apply starts one in the background when the
+  size-ratio policy of ``streaming/maintenance.py`` says so
+  (``_fold_if_due``); ``fold_cdc_store`` runs one in the calling thread;
 - reads (``read_cdc_view``) are a plain scan of the base when no delta
   is outstanding, else the deltas' keys are broadcast: base rows of
   other keys stream through an anti join, the touched ones (semi
@@ -52,31 +39,26 @@ read like the posting, signature and ANN stores:
   otherwise).  A manifest without ``schema`` (an older store) still
   reads, folds and purges by inferring, and its next commit records
   the schema;
-- visibility is an atomic, exclusive MANIFEST commit:
-  ``manifest/gen=<seq>.json`` is written to a temp file, then
-  hard-linked into place; the link fails if the seq is taken, so of
-  two writers that read the same manifest one commits and the other
-  gets ``ManifestConflict``.  The loser re-reads and commits on top:
-  an apply adds its delta to the new manifest, a fold takes its
-  deltas out of it.  Only a purge that moved the horizon meanwhile
-  makes an apply give up (its batch was fenced by the old horizon),
-  and a purge always gives up; a writer that gives up removes its own
-  data directory and raises.  The manifest maps every bucket to its
-  base directory (``buckets``) and lists the outstanding delta
-  directories (``deltas``; the per-bucket ``{bucket: [dirs]}`` form
-  older stores wrote still reads, folds, purges and cleans, and a
-  manifest without ``deltas`` reads as base only).  The current
-  snapshot is the highest-seq manifest; a crash before the commit
-  leaves half-written data dirs UNREFERENCED and the previous snapshot
-  intact (this is the format-free spelling of the Delta/Iceberg
-  manifest dance);
+- visibility is an atomic, exclusive commit of the MANIFEST
+  ``manifest/gen=<seq>.json`` (``streaming/commitlog.py``).  A writer
+  whose seq another took re-reads and commits on top
+  (``_commit_on_top``): an apply adds its delta, a fold takes its
+  deltas out.  An apply gives up when a purge moved the horizon (its
+  batch was fenced by the old one), a fold when the base was replaced,
+  and a purge always; it removes its own data directory and raises
+  ``ManifestConflict``.  The manifest maps every bucket to its base
+  directory (``buckets``) and lists the outstanding delta directories
+  (``deltas``; the per-bucket ``{bucket: [dirs]}`` form older stores
+  wrote still reads, folds, purges and cleans, and a manifest without
+  ``deltas`` reads as base only).  A crash before the commit leaves
+  half-written data dirs UNREFERENCED and the previous snapshot intact
+  (the format-free spelling of the Delta/Iceberg manifest dance);
 - replay-safe twice over: the manifest records the ``batch_id`` it
   committed, so a foreachBatch replay of an already-committed batch
   (driver died between manifest commit and streaming-checkpoint
-  commit) short-circuits as an idempotent skip; and even a forced
-  re-merge is idempotent BY ALGEBRA — last-writer-wins over
-  (order_cols, op, payload-hash) is deterministic and reproduces the
-  identical snapshot;
+  commit) is skipped; and even a forced re-merge is idempotent BY
+  ALGEBRA — last-writer-wins over (order_cols, op, payload-hash) is
+  deterministic and reproduces the identical snapshot;
 - OUT-OF-ORDER safe across batches: the store retains ``order_cols``
   and tombstones (op='D' rows), so a late-arriving STALE change loses
   the per-key ordering against what the store already holds — a stale
@@ -89,18 +71,10 @@ read like the posting, signature and ANN stores:
   later batch drops incoming changes strictly below it before they
   are written — so a stale update arriving after its fencing
   tombstone was purged is rejected by the horizon contract instead of
-  silently resurrecting the key.  The purge waits for a running fold,
-  then folds every delta first; a stale update in a delta may be
-  fenced only by a base tombstone;
+  silently resurrecting the key;
 - old generations are cleaned best-effort after each commit
-  (``retain_gens`` manifests kept; data dirs referenced by none of
-  them are deleted).  A generation still being written is never
-  deleted: this process keeps a registry of the directories its
-  writers have open (from the write until the commit or removal), and
-  a directory named after a seq past the newest manifest is kept too,
-  since another process may still be writing it.  The cleanup lists
-  the data dirs BEFORE it reads that registry and the manifests, so a
-  directory that left the registry had its commit visible by then.
+  (``_cleanup``: ``retain_gens`` manifests kept, data dirs referenced
+  by none of them and not being written deleted).
 
 Shutdown: a fold still running when the session stops fails quietly
 (its Spark job is cancelled or its next call into the stopped session
@@ -122,17 +96,18 @@ import logging
 import os
 import re
 import shutil
-import tempfile
 import threading
 import uuid
 from functools import reduce
-from typing import Sequence
+from typing import Callable, Sequence
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructField, StructType
 
+from cassandra_extractor_spark.streaming import commitlog
+from cassandra_extractor_spark.streaming.commitlog import ManifestConflict
 from cassandra_extractor_spark.streaming.maintenance import dir_bytes, size_policy
 from cassandra_extractor_spark.streaming.pipeline import stream_extract
 
@@ -153,48 +128,33 @@ def _manifest_dir(store_dir: str) -> str:
 
 
 def _manifest_seqs(store_dir: str) -> list[int]:
-    mdir = _manifest_dir(store_dir)
-    if not os.path.isdir(mdir):
-        return []
-    return sorted(
-        int(f[len("gen=") : -len(".json")])
-        for f in os.listdir(mdir)
-        if f.startswith("gen=") and f.endswith(".json")
-    )
+    return commitlog.seqs(_manifest_dir(store_dir))
+
 
 def _read_manifest(store_dir: str, seq: int) -> dict:
-    with open(os.path.join(_manifest_dir(store_dir), f"gen={seq}.json")) as fh:
-        return json.load(fh)
+    return commitlog.read(_manifest_dir(store_dir), seq)
 
 
 def _current_manifest(store_dir: str) -> dict | None:
-    seqs = _manifest_seqs(store_dir)
-    return _read_manifest(store_dir, seqs[-1]) if seqs else None
-
-
-class ManifestConflict(RuntimeError):
-    """Another writer committed the manifest seq this commit was for:
-    both read the same manifest, and the first to commit won."""
+    return commitlog.latest(_manifest_dir(store_dir))
 
 
 def _commit_manifest(store_dir: str, manifest: dict) -> None:
-    """Atomic, exclusive visibility: the hard link IS the commit —
-    readers either see the previous manifest or this one, never a torn
-    state, and the link fails if another writer already took the seq,
-    so no commit overwrites one it did not read."""
-    mdir = _manifest_dir(store_dir)
-    os.makedirs(mdir, exist_ok=True)
-    fd, tmp = tempfile.mkstemp(prefix=f".tmp.gen={manifest['seq']}.", dir=mdir)
-    try:
-        with os.fdopen(fd, "w") as fh:
-            json.dump(manifest, fh)
-        os.link(tmp, os.path.join(mdir, f"gen={manifest['seq']}.json"))
-    except FileExistsError:
-        raise ManifestConflict(
-            f"{store_dir}: manifest seq {manifest['seq']} was committed by another writer"
-        ) from None
-    finally:
-        os.remove(tmp)
+    """Every manifest commit goes through here (``commitlog.commit``)."""
+    commitlog.commit(_manifest_dir(store_dir), manifest)
+
+
+def _commit_on_top(store_dir: str, cur: dict, step: Callable[[dict], dict]) -> None:
+    """Commit ``step(cur)`` as the seq after manifest ``cur``; when another
+    writer took that seq, re-read and commit ``step`` of the current
+    manifest, until one lands or ``step`` raises ``ManifestConflict``."""
+    while True:
+        manifest = {**step(cur), "seq": cur["seq"] + 1}
+        try:
+            _commit_manifest(store_dir, manifest)
+            return
+        except ManifestConflict:
+            cur = _current_manifest(store_dir)
 
 
 #: what this process has open on the stores it writes, keyed by the
@@ -369,11 +329,7 @@ def _cleanup(store_dir: str, retain_gens: int) -> tuple[int, int]:
     store = os.path.abspath(store_dir)
     with _LOCK:
         writing = {gen for s, gen in _WRITING if s == store}
-    seqs = _manifest_seqs(store_dir)
-    drop = seqs[:-retain_gens] if retain_gens else []
-    for s in drop:
-        with contextlib.suppress(FileNotFoundError):  # a concurrent cleanup removed it
-            os.remove(os.path.join(_manifest_dir(store_dir), f"gen={s}.json"))
+    removed = commitlog.retain(_manifest_dir(store_dir), retain_gens)
     kept = _manifest_seqs(store_dir)
     newest = kept[-1] if kept else -1
     referenced = set()
@@ -389,7 +345,7 @@ def _cleanup(store_dir: str, retain_gens: int) -> tuple[int, int]:
         if d not in referenced and d not in writing and not _in_flight(d, newest):
             shutil.rmtree(os.path.join(data_dir, d), ignore_errors=True)
             removed_dirs += 1
-    return len(drop), removed_dirs
+    return removed, removed_dirs
 
 
 def cleanup_generations(store_dir: str, retain_gens: int) -> dict:
@@ -577,20 +533,12 @@ def apply_cdc_batch(
     payload_cols: Sequence[str] = (),
     retain_gens: int = 3,
 ) -> None:
-    """Merge one change batch into the bucketed generational store —
-    the foreachBatch body of ``stream_cdc_apply``, public so a batch
-    pipeline (or the control plane) can apply changes without a
-    streaming query.  All the store's guarantees live here: idempotent
-    replay skip via the manifest-recorded batch_id, horizon-fenced
-    staleness rejection at write time, atomic manifest commit,
-    best-effort generation cleanup.
-
-    The batch is written as one delta generation (no store read, no
-    shuffle) and committed; a commit that loses to a fold re-reads the
-    manifest and commits on top of it.  Then, if the outstanding deltas
-    pass the size-ratio policy (``maintenance.size_policy``), a
-    background fold starts (``_fold_if_due``); the apply never waits
-    for it.
+    """Merge one change batch into the store as one delta generation
+    (module docstring) — the foreachBatch body of ``stream_cdc_apply``,
+    public so a batch pipeline (or the control plane) can apply changes
+    without a streaming query.  Then, if the outstanding deltas pass
+    the size-ratio policy (``maintenance.size_policy``), a background
+    fold starts (``_fold_if_due``); the apply never waits for it.
 
     Raises ``ManifestConflict`` when a purge committed after this batch
     read the manifest; nothing of the batch is kept, and running it
@@ -616,26 +564,21 @@ def apply_cdc_batch(
     schema = _schema_json(batch)
     with _generation(store_dir, cur) as gen:
         _write_generation(batch, store_dir, gen)
-        while True:
-            try:
-                _commit_manifest(
-                    store_dir,
-                    {
-                        **cur,
-                        "seq": cur["seq"] + 1,
-                        "batch_id": batch_id,
-                        "op_col": op_col,
-                        "order_cols": list(order_cols),
-                        "payload_cols": list(payload_cols),
-                        "deltas": [*_rels(cur)[1], gen],
-                        "schema": schema,
-                    },
-                )
-                break
-            except ManifestConflict:
-                cur = _current_manifest(store_dir)
-                if cur.get("horizon") != horizon:
-                    raise  # a purge: the batch was fenced by the old horizon
+
+        def add_delta(m: dict) -> dict:
+            if m.get("horizon") != horizon:  # a purge: the batch was fenced by the old one
+                raise ManifestConflict(f"{store_dir}: the horizon moved under batch {batch_id}")
+            return {
+                **m,
+                "batch_id": batch_id,
+                "op_col": op_col,
+                "order_cols": list(order_cols),
+                "payload_cols": list(payload_cols),
+                "deltas": [*_rels(m)[1], gen],
+                "schema": schema,
+            }
+
+        _commit_on_top(store_dir, cur, add_delta)
     _cleanup(store_dir, retain_gens)
     _fold_if_due(spark, store_dir, retain_gens)
 
@@ -725,12 +668,9 @@ def _wait_for_fold(store_dir: str) -> None:
 
 
 def _fold_store(spark: SparkSession, store_dir: str, retain_gens: int) -> bool:
-    """Fold the base and the deltas of the current manifest (seq S) into
-    a new base and commit it on top of whatever committed since S: the
-    deltas applied meanwhile stay outstanding.  Retries a lost commit;
-    raises ``ManifestConflict``, dropping its output, when a purge or
-    another fold replaced the base or the horizon meanwhile.  Returns
-    whether there was anything to fold."""
+    """Fold the base and the deltas of the current manifest into a new
+    base and commit it on top of whatever committed since (module
+    docstring).  Returns whether there was anything to fold."""
     m = _current_manifest(store_dir)
     folded = _rels(m)[1]
     if not folded:
@@ -741,26 +681,18 @@ def _fold_store(spark: SparkSession, store_dir: str, retain_gens: int) -> bool:
     schema = m.get("schema") or _schema_json(rows.drop("_b"))
     with _generation(store_dir, m) as gen:
         buckets = _write_generation(rows, store_dir, gen)
-        cur = m
-        while True:
+
+        def replace_base(cur: dict) -> dict:
             if (cur["buckets"], cur.get("horizon")) != (m["buckets"], m.get("horizon")):
-                raise ManifestConflict(
-                    f"{store_dir}: the base of seq {m['seq']} was replaced while it was folded"
-                )
-            try:
-                _commit_manifest(
-                    store_dir,
-                    {
-                        **cur,
-                        "seq": cur["seq"] + 1,
-                        "buckets": buckets,
-                        "deltas": [r for r in _rels(cur)[1] if r not in folded],
-                        "schema": cur.get("schema", schema),
-                    },
-                )
-                break
-            except ManifestConflict:
-                cur = _current_manifest(store_dir)
+                raise ManifestConflict(f"{store_dir}: the base of seq {m['seq']} was replaced")
+            return {
+                **cur,
+                "buckets": buckets,
+                "deltas": [r for r in _rels(cur)[1] if r not in folded],
+                "schema": cur.get("schema", schema),
+            }
+
+        _commit_on_top(store_dir, m, replace_base)
     _cleanup(store_dir, retain_gens)
     return True
 
@@ -837,8 +769,7 @@ def purge_tombstones(
 
     Folds every outstanding delta and rewrites every bucket (an
     explicit maintenance pass, not a per-trigger cost) into a new
-    generation + manifest commit — the same atomic-swap discipline as
-    the merge path.  Folding first matters: a tombstone in the base
+    generation.  Folding first matters: a tombstone in the base
     may be all that fences a stale update sitting in a delta.  Waits
     for this process's background fold of the store first; raises
     ``ManifestConflict``, keeping nothing, when a batch or a fold
@@ -881,12 +812,12 @@ def purge_tombstones(
     )
     with _generation(store_dir, cur) as gen:
         written = _write_generation(kept, store_dir, gen)
+        # no retry: a commit since ``cur`` may hold changes this purge did not fold
         _commit_manifest(
             store_dir,
             {
                 **cur,
                 "seq": cur["seq"] + 1,
-                "batch_id": cur["batch_id"],
                 "horizon": list(horizon),
                 "payload_cols": payload,
                 "buckets": written,

@@ -4,8 +4,9 @@ Reference semantics (P3, worker.py:194-198 + datacrawler.py:400-408,
 485-491): a run extracts the rows in ``[previous mark, new mark)``;
 rows with ``ts >= new mark`` are EXCLUDED (they were modified
 during/after this extraction and are deferred to the next run); the
-mark is persisted (Redis there, a JSON state file here — Structured
-Streaming's checkpoint plays this role in streaming mode).
+mark is persisted (Redis there, one commit log per table here, by the
+rule of ``streaming/commitlog.py`` — Structured Streaming's checkpoint
+plays this role in streaming mode).
 
 The ``>=`` boundary is load-bearing and unit-tested: a record modified
 exactly at the mark must NOT be extracted (SURVEY §7.3.4).
@@ -45,33 +46,43 @@ renders a collected TIMESTAMP in its own local zone.
 
 from __future__ import annotations
 
+import contextlib
 import datetime as _dt
-import fcntl
 import json
 import os
 from dataclasses import dataclass
+from urllib.parse import quote, unquote
 
 from pyspark.sql import Column, DataFrame, Observation, functions as F
 
 from cassandra_extractor_spark.sources.catalog import file_relation
+from cassandra_extractor_spark.streaming import commitlog
+
+
+#: entries each table's log keeps (a reader needs only the newest)
+_KEPT = 2
 
 
 @dataclass
 class HighWaterMarkStore:
     """Persisted per-table watermark (replaces the reference's Redis
     ``{table}-modified-timestamp-filter`` key), with the files the run
-    that committed it listed.  Safe to share between threads and
-    processes: a write replaces the file whole, and writes take turns
-    under an exclusive ``flock`` on the ``<path>.lock`` sidecar (the
-    app runs one job thread per table, and two app instances that
-    share ``--output`` share one state file).
-
-    The state file maps each table to ``{"mark": ..., "files": [...]}``;
-    one in the flat ``{table: mark}`` form loads with no files."""
+    that committed it listed: one commit log per table under
+    ``<path>.d/`` whose entries are ``{"mark": ..., "files": [...]}``
+    (``{}`` once cleared), so a commit writes its table's entry alone.
+    Threads and processes may share it (one job thread per table, app
+    instances sharing ``--output``): the last writer wins.  A table with
+    no log yet reads the state file an older store wrote at ``path``
+    (``{table: entry}``; a flat ``{table: mark}`` loads with no files)."""
 
     path: str
 
-    def _load(self) -> dict[str, dict]:
+    def _log(self, table: str) -> str:
+        """One directory per name, inside ``<path>.d``: quoting leaves no
+        ``/`` or bare ``%``, and the prefix makes ``.`` and ``..`` plain."""
+        return os.path.join(self.path + ".d", "t=" + quote(table, safe=""))
+
+    def _state_file(self) -> dict[str, dict]:
         if not os.path.exists(self.path):
             return {}
         with open(self.path, encoding="utf-8") as f:
@@ -80,7 +91,8 @@ class HighWaterMarkStore:
 
     def entry(self, table: str) -> dict:
         """``table``'s ``{"mark": ..., "files": [...]}``, from one read."""
-        return self._load().get(table, {})
+        top = commitlog.latest(self._log(table))
+        return self._state_file().get(table, {}) if top is None else top
 
     def get(self, table: str) -> str | None:
         return self.entry(table).get("mark")
@@ -90,33 +102,32 @@ class HighWaterMarkStore:
         return self.entry(table).get("files", [])
 
     def dump(self) -> dict:
-        """Public snapshot of all per-table watermarks (the actuator's
-        GET /state view)."""
-        return {t: e["mark"] for t, e in self._load().items()}
+        """All per-table watermarks (the actuator's GET /state view)."""
+        state = self._state_file()
+        root = self.path + ".d"
+        for d in os.listdir(root) if os.path.isdir(root) else []:
+            top = commitlog.latest(os.path.join(root, d))
+            if top is not None:
+                state[unquote(d[len("t="):])] = top
+        return {t: e["mark"] for t, e in state.items() if "mark" in e}
 
-    def _update(self, table: str, entry: dict | None) -> None:
-        """Replace ``table``'s entry (``None``: drop it) in one
-        load-modify-replace, under the ``<path>.lock`` flock."""
-        os.makedirs(os.path.dirname(self.path) or ".", exist_ok=True)
-        with open(self.path + ".lock", "a") as lock:
-            fcntl.flock(lock, fcntl.LOCK_EX)
-            state = self._load()
-            if entry is None:
-                state.pop(table, None)
-            else:
-                state[table] = entry
-            tmp = self.path + ".tmp"
-            with open(tmp, "w", encoding="utf-8") as f:
-                json.dump(state, f)
-            os.replace(tmp, self.path)
+    def _commit(self, table: str, entry: dict) -> None:
+        """Commit ``entry`` after whatever another writer committed."""
+        log = self._log(table)
+        while True:
+            top = commitlog.latest(log)
+            with contextlib.suppress(commitlog.ManifestConflict):
+                commitlog.commit(log, {"seq": top["seq"] + 1 if top else 0, **entry})
+                break
+        commitlog.retain(log, _KEPT)
 
     def set(self, table: str, value: str, files: list[str] | None = None) -> None:
-        """Replace ``table``'s mark and its listed files in one write."""
-        self._update(table, {"mark": value, "files": files} if files else {"mark": value})
+        """Replace ``table``'s mark and its listed files in one commit."""
+        self._commit(table, {"mark": value, "files": files} if files else {"mark": value})
 
     def clear(self, table: str) -> None:
         """Forget ``table``'s mark and listed files."""
-        self._update(table, None)
+        self._commit(table, {})
 
 
 def _render(ts: Column) -> Column:
@@ -201,26 +212,17 @@ def plan_incremental(
     idempotent sinks).  With ``lateness_us`` no file is skipped: the
     overlap lives in files earlier runs listed.
 
-    The plan (see the module docstring):
-
-    - ``df`` is one file relation under row-wise nodes: ONE scan.  The
-      window is every listed row with ``ts >= previous mark``, minus
-      the files the last committed run listed, and ``commit()`` writes
-      the max the window's first action observed, with this listing
-      when ``df`` has no filter (a filtered run leaves rows of its
-      files unread, so the next run must read them again).
-      Precondition: the first action on the window to finish reads it
-      whole, as ``fan_out``'s does when its sinks write whole frames:
-      the ``noop`` materialization of a cached frame, a lone sink's
-      write, or, on a file snapshot (``catalog.file_snapshot``), each
-      sink's own write, the first of which to finish sets the mark.  A
-      partial first action (a sink's ``limit`` or ``head``) observes a
-      max at or below the true one, so the mark alone would only
-      re-deliver rows; but the listing ``commit()`` records would then
-      skip the unread rows of those files.  ``commit()`` before any
-      action ran the window raises ``RuntimeError``.
-    - any other frame: a capture job takes the max first and the window
-      is ``[previous mark, max + 1µs)``.
+    The plan is one of the module docstring's two.  On the one-scan
+    plan, the first action on the window to finish must read it whole,
+    as ``fan_out``'s does when its sinks write whole frames: the
+    ``noop`` materialization of a cached frame, a lone sink's write,
+    or, on a file snapshot (``catalog.file_snapshot``), each sink's own
+    write, the first of which to finish sets the mark.  A partial first
+    action (a sink's ``limit`` or ``head``) observes a max at or below
+    the true one, so the mark alone would only re-deliver rows; but the
+    listing ``commit()`` records would then skip the unread rows of
+    those files.  ``commit()`` before any action ran the window raises
+    ``RuntimeError``.
     """
     entry = store.entry(table)
     prev = entry.get("mark")
