@@ -239,22 +239,17 @@ class Actuator:
         maintenance jobs.  ``signature``, ``ann`` and ``posting`` run
         ``streaming.maintenance.compact`` — the same function the
         ingest streams call in-band from their own serial
-        ``foreachBatch`` hook (``auto_compact``).  A fold deletes only
-        the batches it read, so it never loses one an active ingest
-        writes meanwhile; but while it rewrites the base, that ingest's
-        reads can meet the base mid-rewrite, so run it between
-        streaming restarts (safety argument in
-        ``streaming/maintenance.py``).  The CDC store's folds commit by
-        compare-and-set and may run beside its applies:
+        ``foreachBatch`` hook (``auto_compact``).  Every store's fold
+        commits a new base on top of whatever committed since
+        (``streaming/generations.py``), so it may run beside an active
+        ingest and its reads:
 
-        - ``signature``: fold the streamed band delta into the bucketed
-          LSH base (params: ``table``, ``delta_dir``, ``n_buckets``);
+        - ``signature``: fold the streamed band deltas into the
+          bucketed LSH base (params: ``store_dir``);
         - ``ann``: fold cell-partitioned vector deltas into the base
           (params: ``store_dir``);
-        - ``posting``: fold posting deltas into the term-bucketed base
-          (params: ``table``, ``delta_dir``, ``n_buckets``; optional
-          ``doclen_table`` + ``doclen_delta_dir`` fold the ranked-read
-          doc-length stats in the same call);
+        - ``posting``: fold posting and doc-length deltas into the
+          bucketed bases in one commit (params: ``store_dir``);
         - ``cdc``: maintenance ops on the generational snapshot store,
           whose applies start a background fold of their per-batch
           deltas when the size-ratio policy says so (params:

@@ -434,7 +434,7 @@ SHARED_FRAMES = (
     SharedFrame("text_quality", (), _TEXT, "shared_text_quality", _QUALITY),
     SharedFrame("clf_scores", ("tok_leads",), _TEXT, "shared_clf_scores", _QUALITY),
     SharedFrame("rep_flags", ("tok_leads",), _TEXT, "shared_rep_flags", _QUALITY),
-    # managed tables on disk, not memo blocks
+    # a store on disk (under the session warehouse), not memo blocks
     SharedFrame(
         "bm25_store", ("tok_leads", "text_quality"), _POSTING,
         "ensure_session_bm25_store", _BM25, release="release_session_bm25_stores",
@@ -1675,10 +1675,9 @@ def ns_dup_ngram_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("doc_id")
 
 
-def write_signature_store(
-    bands: DataFrame, table_name: str, n_buckets: int = 16
-) -> None:
-    """Persist LSH band signatures as a bucketed+sorted table keyed on
+def write_signature_store(bands: DataFrame, store_dir: str, n_buckets: int = 16) -> None:
+    """Create the LSH signature store under ``store_dir`` (replacing
+    what it held): the bands become its base, bucketed+sorted on
     (band, sig) — the durable corpus-side half of incremental dedup.
     Bucketing pre-shuffles the store ONCE at write time; every future
     batch join against it shuffles only the (small) arriving batch to
@@ -1686,24 +1685,30 @@ def write_signature_store(
     ``tests/test_scale.py::test_signature_store_join_never_shuffles_the_store``).
 
     At 100 TB this is the difference between an O(batch) nightly job
-    and re-shuffling a petabyte signature table per batch; append new
-    batches with ``mode("append")`` on the same bucket spec.
+    and re-shuffling a petabyte signature table per batch; batches
+    land as deltas (``streaming/dedup_stream.py``) and folds keep the
+    bucket spec, which the store fixes here
+    (``streaming/generations.py``).
     """
-    from cassandra_extractor_spark.operators.scale import write_bucketed
+    from cassandra_extractor_spark.streaming import generations
 
-    write_bucketed(bands, table_name, ["band", "sig"], n_buckets, sort_cols=["band", "sig"])
+    bucket = {"cols": ["band", "sig"], "sort": ["band", "sig"], "n_buckets": n_buckets}
+    generations.create(
+        store_dir, {"bands": (bands.select("doc_id", "band", "sig"), {"bucket": bucket})}
+    )
 
 
 def incremental_dedup_against_store(
-    spark: SparkSession, table_name: str, new_docs: DataFrame
+    spark: SparkSession, store_dir: str, new_docs: DataFrame
 ) -> tuple[DataFrame, DataFrame]:
     """Incremental near-dup detection against the persisted signature
-    store: sign the batch once, bucket-join it to the store (store side
-    scan is shuffle-free by bucket layout), self-join within the batch.
-    Returns ``(dup_pairs, new_bands)``; append ``new_bands`` to the
-    store table to absorb the batch."""
-    base = spark.table(table_name)
-    return incremental_dedup(base, new_docs)
+    store (base ∪ outstanding deltas): sign the batch once, join it to
+    the store (with no delta outstanding the store side is a bucketed
+    scan, shuffle-free), self-join within the batch.  Returns
+    ``(dup_pairs, new_bands)``."""
+    from cassandra_extractor_spark.streaming import generations
+
+    return incremental_dedup(generations.read(spark, store_dir, "bands"), new_docs)
 
 
 def ns_minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,11 +7,14 @@ session time zone so timestamp semantics are reproducible, and shuffle
 partitions sized from the environment rather than Spark's legacy 200.
 
 A local session that is given no warehouse gets a private one: a fresh
-temp directory (under ``$TMPDIR``, by default ``/tmp``; a large store
-build needs room there), removed when the interpreter exits.  The
-catalog is Spark's in-memory one, so no managed table outlives the
-process that wrote it, and a warehouse shared between runs (Spark's
-default, ``<cwd>/spark-warehouse``) could only ever collect orphans.
+temp directory (under ``$TMPDIR``, by default ``/tmp``; the session
+BM25 store of ``ns_bm25_store`` is built there, so a large corpus needs
+room there), removed when the interpreter exits.  The catalog is
+Spark's in-memory one, so no managed table outlives the process that
+wrote it, and a warehouse shared between runs (Spark's default,
+``<cwd>/spark-warehouse``) could only ever collect orphans.  The
+incremental stores keep nothing in either: each is a ``store_dir`` of
+its own (``streaming/generations.py``).
 """
 
 from __future__ import annotations

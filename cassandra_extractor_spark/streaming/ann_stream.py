@@ -1,12 +1,12 @@
 """Streaming ANN index maintenance: arriving embedding batches are
 assigned to their IVF cell against the broadcast coarse quantizer and
-appended as CELL-PARTITIONED delta files; queries probe only their
-nearest cells, so the serving read is partition-pruned to ~probes/K of
-the store no matter how many batches have been ingested.
+committed as CELL-PARTITIONED delta generations; queries probe only
+their nearest cells, so the serving read is partition-pruned to
+~probes/K of the store no matter how many batches have been ingested.
 
 This is the vector twin of the streaming dedup gate
-(``streaming/dedup_stream.py``): same base-plus-delta store discipline,
-same overwrite-own-``batch=<id>`` replay contract, same periodic
+(``streaming/dedup_stream.py``): same base-plus-delta store under one
+commit log (``streaming/generations.py``), same replay contract, same
 compaction.  Reference parity: the extractor's incremental crawl loop
 (`ref:datacrawler.py` high-water-mark paging) applied to vector
 ingest — only new work is ever processed; the corpus is never
@@ -14,18 +14,19 @@ re-assigned or re-shuffled.
 
 100 TB shape:
 
-- the coarse quantizer (centroid set) is tiny and broadcast — batch
-  assignment is a per-row argmax, no corpus-side shuffle;
-- the store is laid out ``…/c_id=<cell>/`` so a query touching
-  ``probes`` cells reads exactly those directories (partition pruning,
-  plan-asserted in the tests) — the on-disk twin of the in-memory
-  inverted file;
-- replay safety: foreachBatch may re-run after a crash; each batch
-  OVERWRITES its own ``batch=<id>`` directory, so a half-written
-  attempt can never duplicate vectors;
-- compaction folds delta batches into the consolidated base (still
-  cell-partitioned) between query restarts or in-band via
-  ``auto_compact``, bounding small-file count.
+- the coarse quantizer (centroid set, ``<store_dir>/centroids``) is
+  tiny and broadcast — batch assignment is a per-row argmax, no
+  corpus-side shuffle;
+- every generation is laid out ``…/vectors/c_id=<cell>/`` (the store
+  records ``c_id`` partitioning), so a query touching ``probes`` cells
+  reads exactly those directories (partition pruning, plan-asserted in
+  the tests) — the on-disk twin of the in-memory inverted file;
+- replay safety: a batch the store already committed (the manifest
+  records the last ``batch_id``) is skipped, so a replay can never
+  duplicate vectors;
+- compaction folds the deltas into a new base (still cell-partitioned)
+  in-band via ``auto_compact`` or from the control plane, bounding
+  small-file count.
 """
 
 from __future__ import annotations
@@ -34,7 +35,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.utils import AnalysisException
 
 from cassandra_extractor_spark.operators.similarity import (
     TOP_K,
@@ -43,16 +43,18 @@ from cassandra_extractor_spark.operators.similarity import (
     cosine_prenormed,
     norm,
 )
-from cassandra_extractor_spark.streaming.maintenance import compact, fold_delta
+from cassandra_extractor_spark.streaming import generations
+from cassandra_extractor_spark.streaming.maintenance import compact
 from cassandra_extractor_spark.streaming.pipeline import stream_extract
 
 _STORE_COLS = ["vec_id", "emb", "nrm", "c_id"]
 
 
 def init_ann_centroids(spark: SparkSession, centroids: DataFrame, store_dir: str) -> None:
-    """Persist the fixed coarse quantizer ``(c_id, c_emb)`` once.
-    Zero-norm centroids are rejected up front (a cell whose centroid
-    has no direction can never be ranked deterministically)."""
+    """Create the ANN store under ``store_dir`` with an empty base and
+    persist its fixed coarse quantizer ``(c_id, c_emb)``.  Zero-norm
+    centroids are rejected up front (a cell whose centroid has no
+    direction can never be ranked deterministically)."""
     c = centroids.select(
         F.col("c_id").cast("long").alias("c_id"),
         F.col("c_emb").cast("array<double>").alias("c_emb"),
@@ -61,6 +63,10 @@ def init_ann_centroids(spark: SparkSession, centroids: DataFrame, store_dir: str
     if bad:
         raise ValueError(f"{bad} zero-norm or NaN centroid(s) — fix the quantizer first")
     c.write.mode("overwrite").parquet(f"{store_dir}/centroids")
+    empty = spark.createDataFrame([], "vec_id LONG, emb ARRAY<DOUBLE>")
+    generations.create(
+        store_dir, {"vectors": (assign_cells(empty, c), {"partition": ["c_id"]})}
+    )
 
 
 def _read_centroids(spark: SparkSession, store_dir: str) -> DataFrame:
@@ -108,7 +114,8 @@ def stream_ann_ingest(
     auto_compact: dict | None = None,
 ) -> StreamingQuery:
     """Start the streaming ingest over a file source of
-    ``(vec_id, emb)`` batches, run by ``pipeline.stream_extract``
+    ``(vec_id, emb)`` batches into the store under ``store_dir``
+    (``init_ann_centroids``), run by ``pipeline.stream_extract``
     (trigger and checkpoint contract there).
 
     ``stats_sink(cell_counts_df, batch_id)``, if given, receives the
@@ -120,16 +127,11 @@ def stream_ann_ingest(
     size-ratio policy in-band every ``every_n_batches`` (default 8)
     batches and folds the cell-partitioned delta into the base when
     crossed (keys: ``every_n_batches``, ``threshold``; see
-    ``streaming/maintenance.py`` for the mid-stream safety argument)."""
+    ``streaming/maintenance.py``)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        cent = _read_centroids(spark, store_dir)
-        assigned = assign_cells(batch_df, cent)
-        (
-            assigned.write.mode("overwrite")
-            .partitionBy("c_id")
-            .parquet(f"{store_dir}/delta/batch={batch_id}")
-        )
+        assigned = assign_cells(batch_df, _read_centroids(spark, store_dir))
+        generations.commit_delta(store_dir, batch_id, {"vectors": assigned})
         if stats_sink is not None:
             stats_sink(
                 assigned.groupBy("c_id").agg(F.count("*").alias("n")), batch_id
@@ -148,24 +150,6 @@ def stream_ann_ingest(
         max_files_per_trigger=1,
         path_glob="*.parquet",
     )
-
-
-def _read_store(spark: SparkSession, store_dir: str) -> DataFrame:
-    """Base ∪ delta, both cell-partitioned; either side may not exist
-    yet.  ``c_id`` is a PARTITION column in both layouts, so a probe
-    filter prunes directories before any file is opened."""
-    parts = []
-    for sub in ("base", "delta"):
-        try:
-            parts.append(spark.read.parquet(f"{store_dir}/{sub}").select(*_STORE_COLS))
-        except AnalysisException:
-            pass
-    if not parts:
-        raise ValueError(f"empty ANN store at {store_dir}")
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def ann_store_topk(
@@ -189,7 +173,7 @@ def ann_store_topk(
     # tiny, and inlining it as a literal IN turns the store read into a
     # pure partition-pruned scan (no join needed to skip directories)
     probe_cells = [r["c_id"] for r in qcells.select("c_id").distinct().collect()]
-    store = _read_store(spark, store_dir).where(F.col("c_id").isin(probe_cells))
+    store = generations.read(spark, store_dir, "vectors").where(F.col("c_id").isin(probe_cells))
     scored = store.join(F.broadcast(qcells), "c_id").select(
         "q_id",
         F.col("vec_id").alias("n_id"),
@@ -197,11 +181,11 @@ def ann_store_topk(
             cosine_prenormed(F.col("q_emb"), F.col("emb"), F.col("q_nrm"), F.col("nrm")), 6
         ).alias("cos"),
     )
-    # assignment is keep=1, so a healthy store holds each vec_id once;
-    # the one legal duplicate source is a crash between compaction's
-    # two phases (vector in base AND delta) — dedupe the candidate set
-    # (bounded by the probed cells, not the store) so a duplicate can
-    # never occupy two top-k slots
+    # assignment is keep=1, so a store fed once per vector holds each
+    # vec_id once; one ingested twice (a re-sent batch) sits in two
+    # generations — dedupe the candidate set (bounded by the probed
+    # cells, not the store) so a duplicate can never occupy two top-k
+    # slots
     scored = scored.dropDuplicates(["q_id", "n_id"])
     w = W.partitionBy("q_id").orderBy(F.col("cos").desc(), F.col("n_id"))
     return (
@@ -211,45 +195,13 @@ def ann_store_topk(
     )
 
 
-def write_ann_base(merged: DataFrame, store_dir: str) -> None:
-    """Commit ``merged`` as the consolidated, cell-partitioned base."""
-    merged.write.mode("overwrite").partitionBy("c_id").parquet(f"{store_dir}/base")
-
-
 def compact_ann_store(spark: SparkSession, store_dir: str) -> int:
-    """Fold the committed delta batches into the consolidated base
-    (still cell-partitioned) — the periodic maintenance job that bounds
-    small-file count as batches accumulate.  Two-phase
-    (``maintenance.fold_delta``): the merged store is materialized
-    BEFORE the base overwrite (the plan must not read the directory it
-    is rewriting), the batches it read are removed only after the
-    commit; a crash in between leaves duplicate vectors in base∪delta,
-    which the ranked read tolerates (``ann_store_topk`` dedupes
-    candidates on (q_id, n_id) before ranking).  Safe between restarts
-    or in-band from the owning query's serial ``foreachBatch`` hook
-    (``auto_compact``; safety argument in
-    ``streaming/maintenance.py``); run beside an active ingest from
-    outside it, it loses none of the ingest's batches, but probes can
-    read the base mid-rewrite.  Returns the number of delta vectors
-    absorbed."""
-
-    def merge(delta: DataFrame) -> DataFrame:
-        try:
-            delta = spark.read.parquet(f"{store_dir}/base").select(*_STORE_COLS).unionByName(delta)
-        except AnalysisException:
-            pass  # first fold: no base yet
-        # dropDuplicates(vec_id) makes the fold SELF-HEALING across the
-        # crash window: re-absorbing a delta whose rows already reached
-        # the base (fold committed, delta removal crashed, batch
-        # replayed) collapses the duplicates instead of carrying them in
-        # the base forever (assignment is keep=1 and deterministic, so
-        # duplicate vec_id rows are identical — keeping any one is exact)
-        return delta.dropDuplicates(["vec_id"])
-
-    return fold_delta(
-        spark,
-        f"{store_dir}/delta",
-        _STORE_COLS,
-        merge,
-        lambda staged: write_ann_base(staged, store_dir),
-    )
+    """Fold the committed delta generations into a new base (still
+    cell-partitioned) — the periodic maintenance job that bounds
+    small-file count as batches accumulate; it commits on top of the
+    batches that land meanwhile (``generations.fold``).
+    ``dropDuplicates(vec_id)`` keeps one row per vector: assignment is
+    keep=1 and deterministic, so the rows of a vector ingested twice
+    are identical and keeping any one is exact.  Returns the number of
+    delta vectors absorbed."""
+    return generations.fold(spark, store_dir, lambda _part, rows: rows.dropDuplicates(["vec_id"]))

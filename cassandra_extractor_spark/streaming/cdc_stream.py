@@ -14,9 +14,10 @@ read like the posting, signature and ANN stores:
 - an apply does O(batch) work and nothing else: it writes its batch,
   horizon fenced and cast to the store's schema but otherwise as it
   arrived, as ONE unpartitioned delta generation ``data/<gen>`` (no
-  bucket dirs, no sort, no store read, no shuffle; ``_next_gen`` names
-  it so that no two writers share a directory) and commits it as one
-  more entry of the manifest's flat ``deltas`` list;
+  bucket dirs, no sort, no store read, no shuffle;
+  ``generations.next_gen`` names it so that no two writers share a
+  directory) and commits it as one more entry of the manifest's flat
+  ``deltas`` list;
 - a fold writes last-writer-wins over the base and the deltas of the
   manifest it read as a new base generation in ONE exchange (hash on
   ``_b``, window over ``(_b, key)``; the seed is written the same way)
@@ -42,8 +43,8 @@ read like the posting, signature and ANN stores:
 - visibility is an atomic, exclusive commit of the MANIFEST
   ``manifest/gen=<seq>.json`` (``streaming/commitlog.py``).  A writer
   whose seq another took re-reads and commits on top
-  (``_commit_on_top``): an apply adds its delta, a fold takes its
-  deltas out.  An apply gives up when a purge moved the horizon (its
+  (``generations.commit_on_top``): an apply adds its delta, a fold
+  takes its deltas out.  An apply gives up when a purge moved the horizon (its
   batch was fenced by the old one), a fold when the base was replaced,
   and a purge always; it removes its own data directory and raises
   ``ManifestConflict``.  The manifest maps every bucket to its base
@@ -90,24 +91,35 @@ default).
 
 from __future__ import annotations
 
-import contextlib
 import json
 import logging
 import os
-import re
-import shutil
 import threading
-import uuid
 from functools import reduce
-from typing import Callable, Sequence
+from typing import Sequence
 
 from pyspark import inheritable_thread_target
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.types import StructField, StructType
+from pyspark.sql.types import StructType
 
 from cassandra_extractor_spark.streaming import commitlog
 from cassandra_extractor_spark.streaming.commitlog import ManifestConflict
+# callers read _FOLDS, _next_gen and _read_manifest off this module too
+from cassandra_extractor_spark.streaming.generations import (  # noqa: F401
+    _FOLDS,
+    claim_fold,
+    cleanup,
+    commit_on_top,
+    current as _current_manifest,
+    end_fold,
+    generation,
+    manifest_dir,
+    next_gen as _next_gen,
+    read_manifest as _read_manifest,
+    schema_json,
+    wait_for_fold as _wait_for_fold,
+)
 from cassandra_extractor_spark.streaming.maintenance import dir_bytes, size_policy
 from cassandra_extractor_spark.streaming.pipeline import stream_extract
 
@@ -123,70 +135,17 @@ def _bucketed(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
 # ---------------------------------------------------------------- manifests
 
 
-def _manifest_dir(store_dir: str) -> str:
-    return os.path.join(store_dir, "manifest")
-
-
 def _manifest_seqs(store_dir: str) -> list[int]:
-    return commitlog.seqs(_manifest_dir(store_dir))
-
-
-def _read_manifest(store_dir: str, seq: int) -> dict:
-    return commitlog.read(_manifest_dir(store_dir), seq)
-
-
-def _current_manifest(store_dir: str) -> dict | None:
-    return commitlog.latest(_manifest_dir(store_dir))
+    return commitlog.seqs(manifest_dir(store_dir))
 
 
 def _commit_manifest(store_dir: str, manifest: dict) -> None:
     """Every manifest commit goes through here (``commitlog.commit``)."""
-    commitlog.commit(_manifest_dir(store_dir), manifest)
+    commitlog.commit(manifest_dir(store_dir), manifest)
 
 
-def _commit_on_top(store_dir: str, cur: dict, step: Callable[[dict], dict]) -> None:
-    """Commit ``step(cur)`` as the seq after manifest ``cur``; when another
-    writer took that seq, re-read and commit ``step`` of the current
-    manifest, until one lands or ``step`` raises ``ManifestConflict``."""
-    while True:
-        manifest = {**step(cur), "seq": cur["seq"] + 1}
-        try:
-            _commit_manifest(store_dir, manifest)
-            return
-        except ManifestConflict:
-            cur = _current_manifest(store_dir)
-
-
-#: what this process has open on the stores it writes, keyed by the
-#: absolute store dir: the generation dirs its writers are writing
-#: (store, gen), and each store's running fold (set when it ends).
-#: Module state on purpose: every writer of a store in this process —
-#: stream, control plane, background fold — must see the same registry
-_LOCK = threading.Lock()
-_WRITING: set[tuple[str, str]] = set()
-_FOLDS: dict[str, threading.Event] = {}
 #: the job group and FAIR scheduler pool of background folds' jobs
 FOLD_POOL = "cdc-fold"
-
-
-@contextlib.contextmanager
-def _generation(store_dir: str, cur: dict):
-    """Name the data directory of the commit after manifest ``cur`` and
-    keep it in this process's in-flight registry while the block writes
-    and commits it, so no cleanup deletes it meanwhile.  A
-    ``ManifestConflict`` out of the block removes the directory."""
-    gen = _next_gen(cur)
-    entry = (os.path.abspath(store_dir), gen)
-    with _LOCK:
-        _WRITING.add(entry)
-    try:
-        yield gen
-    except ManifestConflict:
-        shutil.rmtree(os.path.join(store_dir, "data", gen), ignore_errors=True)
-        raise
-    finally:
-        with _LOCK:
-            _WRITING.discard(entry)
 
 
 def _rels(manifest: dict) -> tuple[list[str], list[str]]:
@@ -205,12 +164,6 @@ def _schema(manifest: dict) -> StructType | None:
     None for a store written before manifests recorded it."""
     recorded = manifest.get("schema")
     return StructType.fromJson(json.loads(recorded)) if recorded else None
-
-
-def _schema_json(rows: DataFrame) -> str:
-    """``rows``' schema as the manifest records it: what a file scan of
-    the written rows reads back (every column nullable)."""
-    return StructType([StructField(f.name, f.dataType) for f in rows.schema]).json()
 
 
 def _read_rels(
@@ -294,58 +247,14 @@ def _write_generation(df: DataFrame, store_dir: str, gen_name: str) -> dict[str,
     }
 
 
-def _next_gen(cur: dict) -> str:
-    """Data directory for a generation written on top of manifest
-    ``cur``: the seq of the commit after it (not a batch id, which
-    restarts at 0 when a stream is replayed from a lost checkpoint;
-    a commit that retries lands at a later seq) plus a random suffix
-    of this attempt, so a concurrent writer that read the same manifest
-    never writes into it."""
-    return f"s{cur['seq'] + 1}-{uuid.uuid4().hex[:8]}"
-
-
-_GEN_SEQ = re.compile(r"s(\d+)(?:-|$)")
-
-
-def _in_flight(gen: str, newest_seq: int) -> bool:
-    """True for a generation named after a seq past the newest manifest:
-    a writer in another process that read that manifest may still be
-    writing it (this process's own writers are in ``_WRITING``)."""
-    m = _GEN_SEQ.match(gen)
-    return m is not None and int(m.group(1)) > newest_seq
-
-
 def _cleanup(store_dir: str, retain_gens: int) -> tuple[int, int]:
-    """Drop manifests beyond the retained window, then any data
-    generation directory referenced by NO retained manifest and not in
-    flight.  Returns (manifests removed, generation dirs removed) for
-    the maintenance report.
-
-    The data dirs are listed before the in-flight registry and the
-    manifests are read: a listed directory whose writer has left the
-    registry by then has its commit, if any, among those manifests."""
-    data_dir = os.path.join(store_dir, "data")
-    listed = os.listdir(data_dir) if os.path.isdir(data_dir) else []
-    store = os.path.abspath(store_dir)
-    with _LOCK:
-        writing = {gen for s, gen in _WRITING if s == store}
-    removed = commitlog.retain(_manifest_dir(store_dir), retain_gens)
-    kept = _manifest_seqs(store_dir)
-    newest = kept[-1] if kept else -1
-    referenced = set()
-    for s in kept:
-        try:
-            m = _read_manifest(store_dir, s)
-        except FileNotFoundError:  # dropped by a concurrent cleanup
-            continue
-        for rels in _rels(m):
-            referenced.update(rel.split("/", 1)[0] for rel in rels)
-    removed_dirs = 0
-    for d in listed:
-        if d not in referenced and d not in writing and not _in_flight(d, newest):
-            shutil.rmtree(os.path.join(data_dir, d), ignore_errors=True)
-            removed_dirs += 1
-    return removed, removed_dirs
+    """Retention (``generations.cleanup``) over the data directories the
+    manifests' bases and deltas name."""
+    return cleanup(
+        store_dir,
+        retain_gens,
+        lambda m: {rel.split("/", 1)[0] for rels in _rels(m) for rel in rels},
+    )
 
 
 def cleanup_generations(store_dir: str, retain_gens: int) -> dict:
@@ -405,9 +314,9 @@ def init_cdc_store(
         "n_buckets": n_buckets,
         "horizon": None,
         "deltas": [],
-        "schema": _schema_json(rows),
+        "schema": schema_json(rows),
     }
-    with _generation(store_dir, {"seq": -1}) as gen:
+    with generation(store_dir, {"seq": -1}) as gen:
         buckets = _write_generation(_as_base(rows, m), store_dir, gen)
         _commit_manifest(store_dir, {**m, "buckets": buckets})
 
@@ -561,8 +470,8 @@ def apply_cdc_batch(
     # from its base once: this commit records the schema
     store_schema = _schema(cur) or _read_rels(spark, store_dir, _rels(cur)[0]).schema
     batch = _fence(_conform(batch_df.select(*cols), store_schema), order_cols, horizon)
-    schema = _schema_json(batch)
-    with _generation(store_dir, cur) as gen:
+    schema = schema_json(batch)
+    with generation(store_dir, cur) as gen:
         _write_generation(batch, store_dir, gen)
 
         def add_delta(m: dict) -> dict:
@@ -578,7 +487,7 @@ def apply_cdc_batch(
                 "schema": schema,
             }
 
-        _commit_on_top(store_dir, cur, add_delta)
+        commit_on_top(store_dir, cur, add_delta, _commit_manifest)
     _cleanup(store_dir, retain_gens)
     _fold_if_due(spark, store_dir, retain_gens)
 
@@ -612,7 +521,7 @@ def _fold_if_due(spark: SparkSession, store_dir: str, retain_gens: int) -> None:
     )["should_compact"]:
         return
     store = os.path.abspath(store_dir)
-    done = _claim_fold(store)
+    done = claim_fold(store)
     if done is None:
         return
 
@@ -634,37 +543,13 @@ def _fold_if_due(spark: SparkSession, store_dir: str, retain_gens: int) -> None:
             # wrote is an orphan the next cleanup removes
             logger.debug("background fold of %s failed", store, exc_info=True)
         finally:
-            _end_fold(store, done)
+            end_fold(store, done)
 
     try:
         threading.Thread(target=run, name=f"cdc-fold {store}", daemon=True).start()
     except BaseException:
-        _end_fold(store, done)
+        end_fold(store, done)
         raise
-
-
-def _claim_fold(store: str) -> threading.Event | None:
-    """Register a fold of ``store`` (an absolute path) unless one is
-    running; the returned event is set when it ends (``_end_fold``)."""
-    with _LOCK:
-        if store in _FOLDS:
-            return None
-        done = _FOLDS[store] = threading.Event()
-        return done
-
-
-def _end_fold(store: str, done: threading.Event) -> None:
-    with _LOCK:
-        del _FOLDS[store]
-    done.set()
-
-
-def _wait_for_fold(store_dir: str) -> None:
-    """Return once no fold of this process is running on the store."""
-    with _LOCK:
-        done = _FOLDS.get(os.path.abspath(store_dir))
-    if done is not None:
-        done.wait()
 
 
 def _fold_store(spark: SparkSession, store_dir: str, retain_gens: int) -> bool:
@@ -678,8 +563,8 @@ def _fold_store(spark: SparkSession, store_dir: str, retain_gens: int) -> bool:
     cols = [m["key"], m.get("op_col", "op"), *m["order_cols"], *m["payload_cols"]]
     rows = _fold(spark, store_dir, m, cols)
     # an older store's fold records the schema it inferred
-    schema = m.get("schema") or _schema_json(rows.drop("_b"))
-    with _generation(store_dir, m) as gen:
+    schema = m.get("schema") or schema_json(rows.drop("_b"))
+    with generation(store_dir, m) as gen:
         buckets = _write_generation(rows, store_dir, gen)
 
         def replace_base(cur: dict) -> dict:
@@ -692,7 +577,7 @@ def _fold_store(spark: SparkSession, store_dir: str, retain_gens: int) -> bool:
                 "schema": cur.get("schema", schema),
             }
 
-        _commit_on_top(store_dir, m, replace_base)
+        commit_on_top(store_dir, m, replace_base, _commit_manifest)
     _cleanup(store_dir, retain_gens)
     return True
 
@@ -704,12 +589,12 @@ def fold_cdc_store(spark: SparkSession, store_dir: str, retain_gens: int = 3) ->
     meanwhile stay outstanding.  Raises ``ManifestConflict`` when a
     purge replaced the base during the fold."""
     store = os.path.abspath(store_dir)
-    while (done := _claim_fold(store)) is None:
+    while (done := claim_fold(store)) is None:
         _wait_for_fold(store)
     try:
         folded = _fold_store(spark, store_dir, retain_gens)
     finally:
-        _end_fold(store, done)
+        end_fold(store, done)
     m = _current_manifest(store_dir)
     return {"folded": folded, "seq": m["seq"], "deltas": len(_rels(m)[1])}
 
@@ -810,7 +695,7 @@ def purge_tombstones(
     kept = snap.where(
         (F.col(op_col) != "D") | ~(F.struct(*order_cols) < hz)
     )
-    with _generation(store_dir, cur) as gen:
+    with generation(store_dir, cur) as gen:
         written = _write_generation(kept, store_dir, gen)
         # no retry: a commit since ``cur`` may hold changes this purge did not fold
         _commit_manifest(
@@ -822,7 +707,7 @@ def purge_tombstones(
                 "payload_cols": payload,
                 "buckets": written,
                 "deltas": [],
-                "schema": cur.get("schema") or _schema_json(kept.drop("_b")),
+                "schema": cur.get("schema") or schema_json(kept.drop("_b")),
             },
         )
 

@@ -1,40 +1,43 @@
 """Streaming inverted-index (posting store) maintenance: arriving
 document batches are exploded into (doc_id, term, tf) postings and
-appended as delta files; conjunctive (AND) retrieval joins the query's
-terms against the TERM-BUCKETED base store without ever re-exploding
+committed as delta generations; conjunctive (AND) retrieval joins the
+query's terms against the TERM-BUCKETED base without ever re-exploding
 or re-shuffling the corpus.
 
 Third member of the incremental-store trio — same base-plus-delta
-discipline as the LSH signature store (``streaming/dedup_stream.py``)
-and the IVF cell store (``streaming/ann_stream.py``), applied to the
-retrieval surface (batch spelling: ``operators/text.ns_boolean_
-retrieval``).  Reference parity: the reference's only search path is
-pushing a Solr query string to DSE (`ref:datacrawler.py:138-151`);
-this is the engine-side index a corpus without a search backend
-maintains itself.
+store under one commit log (``streaming/generations.py``) as the LSH
+signature store (``streaming/dedup_stream.py``) and the IVF cell store
+(``streaming/ann_stream.py``), applied to the retrieval surface (batch
+spelling: ``operators/text.ns_boolean_retrieval``).  Reference parity:
+the reference's only search path is pushing a Solr query string to
+DSE (`ref:datacrawler.py:138-151`); this is the engine-side index a
+corpus without a search backend maintains itself.
 
 100 TB shape:
 
-- the BASE store is bucketed+sorted on the term (``write_posting_
-  store``): a term-equality query prunes to the matching buckets at
-  scan time (``SelectedBucketsCount`` in the plan — asserted in the
-  tests) and never shuffles the store;
+- a store ``store_dir`` has two parts: ``postings`` (base bucketed +
+  sorted on the term: a term-equality query prunes to the matching
+  buckets at scan time — ``SelectedBucketsCount`` in the plan,
+  asserted in the tests — and never shuffles the store) and
+  ``doclens``, the per-document lengths ranked retrieval needs (base
+  bucketed + sorted on doc_id);
 - each micro-batch explodes ONLY its own documents — O(batch tokens),
-  map-side combined — and lands in an overwrite-own ``batch=<id>``
-  delta directory (replay-safe, same contract as the other stores);
-- compaction folds delta postings back into the bucketed base between
-  streaming restarts or in-band via ``auto_compact``.
+  map-side combined — and commits its postings and doc lengths as one
+  delta generation; a replay of the last committed batch is skipped;
+- compaction folds both parts' deltas into a new bucketed base in one
+  call, in-band via ``auto_compact`` or from the control plane.
 """
 
 from __future__ import annotations
 
+import os
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming import StreamingQuery
-from pyspark.sql.utils import AnalysisException
 
-from cassandra_extractor_spark.streaming.maintenance import compact, fold_delta
+from cassandra_extractor_spark.streaming import generations
+from cassandra_extractor_spark.streaming.maintenance import compact
 from cassandra_extractor_spark.streaming.pipeline import stream_extract
 
 _POSTING_COLS = ["doc_id", "tok", "tf"]
@@ -70,88 +73,63 @@ def build_postings(docs: DataFrame) -> DataFrame:
     )
 
 
-def write_posting_store(postings: DataFrame, table_name: str, n_buckets: int = 16) -> None:
-    """Persist postings bucketed+sorted on the term: term-equality
+def write_posting_store(
+    postings: DataFrame, doclens: DataFrame, store_dir: str, n_buckets: int = 16
+) -> None:
+    """Create the posting store under ``store_dir`` (replacing what it
+    held): postings bucketed+sorted on the term, so term-equality
     retrieval prunes to matching buckets and a term-keyed join against
     the store is exchange-free on the store side — the same write-once
-    shuffle amortization as the LSH signature store."""
-    from cassandra_extractor_spark.operators.scale import write_bucketed
-
-    write_bucketed(
-        postings.select(*_POSTING_COLS), table_name, ["tok"], n_buckets, sort_cols=["tok"]
+    shuffle amortization as the LSH signature store; doc-length stats
+    bucketed+sorted on doc_id, so the ranked read joins the (tiny)
+    per-query candidate set against them exchange-free on the store
+    side."""
+    generations.create(
+        store_dir,
+        {
+            "postings": (postings.select(*_POSTING_COLS), _bucketed("tok", n_buckets)),
+            "doclens": (doclens.select(*_DOCLEN_COLS), _bucketed("doc_id", n_buckets)),
+        },
     )
 
 
-def write_doclen_store(doclens: DataFrame, table_name: str, n_buckets: int = 16) -> None:
-    """Persist doc-length stats bucketed+sorted on doc_id: the ranked
-    read joins the (tiny) per-query candidate set against this table
-    exchange-free on the store side."""
-    from cassandra_extractor_spark.operators.scale import write_bucketed
-
-    write_bucketed(
-        doclens.select(*_DOCLEN_COLS), table_name, ["doc_id"], n_buckets, sort_cols=["doc_id"]
-    )
+def _bucketed(col: str, n_buckets: int) -> dict:
+    return {"bucket": {"cols": [col], "sort": [col], "n_buckets": n_buckets}}
 
 
 def stream_posting_ingest(
     spark: SparkSession,
     source_path: str,
     schema: str,
-    delta_dir: str,
+    store_dir: str,
     checkpoint_dir: str,
     stats_sink: Callable[[DataFrame, int], None] | None = None,
-    doclen_delta_dir: str | None = None,
-    store_table: str | None = None,
     auto_compact: dict | None = None,
 ) -> StreamingQuery:
     """Start the streaming posting ingest over a file source of
-    ``(doc_id, text)`` batches, run by ``pipeline.stream_extract``
-    (trigger and checkpoint contract there).
+    ``(doc_id, text)`` batches into the store under ``store_dir``
+    (``write_posting_store``), run by ``pipeline.stream_extract``
+    (trigger and checkpoint contract there).  Each batch commits its
+    postings and its doc lengths (BM25 needs n_docs/avgdl over ALL
+    documents, including zero-token ones that have no postings) as one
+    delta.
 
     ``stats_sink(df, batch_id)``, if given, receives (n_docs,
-    n_postings) per batch for ingest monitoring.  ``doclen_delta_dir``,
-    if given, additionally lands per-batch (doc_id, dl) stats deltas
-    under the same overwrite-own ``batch=<id>`` contract — required for
-    store-backed RANKED retrieval (BM25 needs n_docs/avgdl over ALL
-    documents, including zero-token ones that have no postings).
+    n_postings) per batch for ingest monitoring.
 
-    ``auto_compact`` (off by default; requires ``store_table``, plus
-    the doclen table name under key ``doclen_table`` when doclen deltas
-    are ingested) runs the control plane's size-ratio policy in-band
-    every ``every_n_batches`` (default 8) batches and folds the delta
-    into the bucketed base when crossed — a long-running ingest then
-    keeps its read plans store-shaped without an operator curling
-    ``/maintenance/compact`` (keys: ``every_n_batches``, ``threshold``,
-    ``n_buckets``; see ``streaming/maintenance.py`` for the mid-stream
-    safety argument)."""
-    if auto_compact and not store_table:
-        raise ValueError("auto_compact requires store_table")
-    if auto_compact and auto_compact.get("doclen_table") and not doclen_delta_dir:
-        # fail at start-up, not at the first mid-stream policy check
-        raise ValueError("auto_compact doclen_table requires doclen_delta_dir")
-    if auto_compact and doclen_delta_dir and not auto_compact.get("doclen_table"):
-        # converse guard: doclen deltas accruing outside the size-ratio
-        # policy would grow unboundedly while only postings get folded
-        raise ValueError(
-            "auto_compact with doclen_delta_dir requires doclen_table, "
-            "otherwise doclen deltas are excluded from the size-ratio "
-            "policy and grow unboundedly"
-        )
+    ``auto_compact`` (off by default) runs the control plane's
+    size-ratio policy in-band every ``every_n_batches`` (default 8)
+    batches and folds both parts' deltas into the bucketed base when
+    crossed — a long-running ingest then keeps its read plans
+    store-shaped without an operator curling ``/maintenance/compact``
+    (keys: ``every_n_batches``, ``threshold``; see
+    ``streaming/maintenance.py``)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         postings = build_postings(batch_df)
-        (
-            postings.select(*_POSTING_COLS)
-            .write.mode("overwrite")
-            .parquet(f"{delta_dir}/batch={batch_id}")
+        generations.commit_delta(
+            store_dir, batch_id, {"postings": postings, "doclens": build_doclens(batch_df)}
         )
-        if doclen_delta_dir is not None:
-            (
-                build_doclens(batch_df)
-                .select(*_DOCLEN_COLS)
-                .write.mode("overwrite")
-                .parquet(f"{doclen_delta_dir}/batch={batch_id}")
-            )
         if stats_sink is not None:
             stats_sink(
                 postings.agg(
@@ -164,13 +142,7 @@ def stream_posting_ingest(
             compact(
                 spark,
                 "posting",
-                {
-                    **auto_compact,
-                    "table": store_table,
-                    "delta_dir": delta_dir,
-                    "doclen_delta_dir": doclen_delta_dir,
-                    "mode": "auto",
-                },
+                {**auto_compact, "store_dir": store_dir, "mode": "auto"},
                 batch_id,
             )
 
@@ -185,35 +157,19 @@ def stream_posting_ingest(
     )
 
 
-def _read_postings(
-    spark: SparkSession, store_table: str, delta_dir: str | None
-) -> DataFrame:
-    base = spark.table(store_table).select(*_POSTING_COLS)
-    if delta_dir is None:  # batch-built store: no streaming delta
-        return base
-    try:
-        delta = spark.read.parquet(delta_dir).select(*_POSTING_COLS)
-    except AnalysisException:
-        return base
-    return base.unionByName(delta)
-
-
 def boolean_query_against_store(
-    spark: SparkSession,
-    store_table: str,
-    delta_dir: str,
-    terms: tuple[str, ...],
+    spark: SparkSession, store_dir: str, terms: tuple[str, ...]
 ) -> DataFrame:
     """(doc_id, tf_total, tf_min): documents containing EVERY query
     term — the store-backed spelling of ``ns_boolean_retrieval``
     (row-identical over the same corpus; pinned by the parity test).
     The base-side term filter is a bucket-pruned scan (bucketed on
     tok); the delta side is small by construction.  The MAX per
-    (doc, term) collapse makes the read immune to the one legal
-    duplicate source — a crash between compaction's two phases leaves
-    the same posting in base AND delta with an identical tf, so MAX
-    is the identity on healthy data and the fix on crashed data
-    (a corpus doc is append-once by contract, as in the dedup store)."""
+    (doc, term) collapse makes the read immune to a document ingested
+    twice (a re-sent batch): both copies of a posting carry an
+    identical tf, so MAX is the identity on healthy data and the fix
+    on duplicated data (a corpus doc is append-once by contract, as in
+    the dedup store)."""
     # Spark's DisableUnnecessaryBucketedScan rule turns OFF bucketed
     # reading for filter-only plans (no downstream join/agg needs the
     # bucket partitioning) — which also forfeits bucket PRUNING, the
@@ -227,7 +183,7 @@ def boolean_query_against_store(
     # users).  Tables that benefit from auto-disable (joins on bucket
     # keys) keep their bucketed scans either way.
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    p = _read_postings(spark, store_table, delta_dir).where(F.col("tok").isin(*terms))
+    p = generations.read(spark, store_dir, "postings").where(F.col("tok").isin(*terms))
     per_term = p.groupBy("doc_id", "tok").agg(F.max("tf").alias("tf"))
     return (
         per_term.groupBy("doc_id")
@@ -242,26 +198,8 @@ def boolean_query_against_store(
     )
 
 
-def _read_doclens(
-    spark: SparkSession, doclen_table: str, doclen_delta_dir: str | None
-) -> DataFrame:
-    base = spark.table(doclen_table).select(*_DOCLEN_COLS)
-    if doclen_delta_dir is None:  # batch-built store: no streaming delta
-        return base
-    try:
-        delta = spark.read.parquet(doclen_delta_dir).select(*_DOCLEN_COLS)
-    except AnalysisException:
-        return base
-    return base.unionByName(delta)
-
-
 def bm25_query_against_store(
-    spark: SparkSession,
-    store_table: str,
-    delta_dir: str | None,
-    doclen_table: str,
-    doclen_delta_dir: str | None,
-    terms: tuple[str, ...] | None = None,
+    spark: SparkSession, store_dir: str, terms: tuple[str, ...] | None = None
 ) -> DataFrame:
     """(doc_id, bm25): Okapi BM25 ranking of every document against the
     query terms, served FROM THE STORE — the ranked completion of the
@@ -272,14 +210,15 @@ def bm25_query_against_store(
     come from the store instead of a corpus re-tokenization —
 
     - per-(doc, term) tf: bucket-pruned scan of the term-bucketed base
-      (``SelectedBucketsCount`` asserted in tests) + the small delta,
-      MAX-collapsed per the store's crash-window contract;
+      (``SelectedBucketsCount`` asserted in tests) + the small deltas,
+      MAX-collapsed (``boolean_query_against_store``);
     - df per term: counted off that same |query|-term candidate frame;
     - n_docs/avgdl: one map-side-combined aggregate over the doc-length
-      stats table (2 narrow columns; the one corpus-cardinality input,
-      reduced to a single broadcast row);
+      part (2 narrow columns; the one corpus-cardinality input, reduced
+      to a single broadcast row);
     - doc lengths for the candidates: broadcast the candidate tf frame
-      into the doc_id-bucketed stats table — exchange-free store side.
+      into the doc_id-bucketed doc-length base — exchange-free store
+      side.
 
     At 100 TB: the corpus is never re-tokenized; the only corpus-sized
     work is the doclen aggregate (a production store would additionally
@@ -296,10 +235,10 @@ def bm25_query_against_store(
     # session.get_spark; re-asserted here for foreign sessions — see
     # boolean_query_against_store for the full rationale)
     spark.conf.set("spark.sql.sources.bucketing.autoBucketedScan.enabled", "false")
-    p = _read_postings(spark, store_table, delta_dir).where(F.col("tok").isin(*terms))
+    p = generations.read(spark, store_dir, "postings").where(F.col("tok").isin(*terms))
     tf = p.groupBy("doc_id", "tok").agg(F.max("tf").cast("long").alias("tf"))
     dfreq = tf.groupBy("tok").agg(F.count("*").alias("df"))
-    dls = _read_doclens(spark, doclen_table, doclen_delta_dir).groupBy("doc_id").agg(
+    dls = generations.read(spark, store_dir, "doclens").groupBy("doc_id").agg(
         F.max("dl").alias("dl")
     )
     n_and_avg = dls.agg(F.count("*").alias("n_docs"), F.avg("dl").alias("avgdl"))
@@ -336,26 +275,25 @@ def bm25_query_against_store(
     )
 
 
-def ensure_session_bm25_store(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
-    """Build (once per session per corpus dir) the batch posting +
-    doc-length stats stores for ``sf_dir``'s documents table and return
-    their table names — the durable-on-disk analog of the dedup/ANN
-    session chains, backing the ``ns_bm25_store`` registry entry.
-    It is the ``bm25_store`` entry of ``dedup.SHARED_FRAMES``, so the
-    shared-frame invalidation forgets it and — via
-    ``release_session_bm25_stores`` — drops the managed tables
-    themselves: a forgotten store releases its disk instead of
-    orphaning.  A process that exits without invalidating leaves its
-    tables in its session's warehouse, which ``session.get_spark``
-    makes private and removes at exit unless the caller set one.
+def ensure_session_bm25_store(spark: SparkSession, sf_dir: str) -> str:
+    """Build (once per session per corpus dir) the batch posting store
+    for ``sf_dir``'s documents table and return its ``store_dir`` — the
+    durable-on-disk analog of the dedup/ANN session chains, backing the
+    ``ns_bm25_store`` registry entry.  It is the ``bm25_store`` entry
+    of ``dedup.SHARED_FRAMES``, so the shared-frame invalidation
+    forgets it and — via ``release_session_bm25_stores`` — removes the
+    store itself: a forgotten store releases its disk instead of
+    orphaning.  The store lives in the session's warehouse, which
+    ``session.get_spark`` makes private and removes at exit unless the
+    caller set one; so a process that exits without invalidating
+    leaves nothing behind.
 
-    The table tag folds in the session's ``applicationId``: the store
-    is a SESSION store, and keying the on-disk name by corpus alone let
-    two concurrent sessions that share a warehouse DROP/rmtree each
-    other's tables mid-read (observed as transient hash failures under
-    two concurrent gate runs).  A production deployment's durable
-    shared index is the explicitly-named ``write_posting_store`` path;
-    this cache is each session's private build of it."""
+    The store's directory name folds in the session's
+    ``applicationId``: the store is a SESSION store, and two
+    concurrent sessions that share a warehouse must not remove each
+    other's store mid-read.  A production deployment's durable shared
+    index is the explicitly-placed ``write_posting_store`` path; this
+    cache is each session's private build of it."""
     import hashlib
 
     from cassandra_extractor_spark.operators.dedup import _norm_dir
@@ -366,8 +304,8 @@ def ensure_session_bm25_store(spark: SparkSession, sf_dir: str) -> tuple[str, st
         return cache[key]
     nonce = f"{spark.sparkContext.applicationId}|{key}"
     tag = hashlib.md5(nonce.encode()).hexdigest()[:10]
-    postings_t = f"bm25_postings_{tag}"
-    doclens_t = f"bm25_doclens_{tag}"
+    warehouse = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
+    store_dir = os.path.join(warehouse, f"bm25_store_{tag}")
     # postings from the session-shared token stream (one corpus
     # tokenize per session; optimization r13, guide §1.2) — the same
     # (doc_id, tok != '') → count aggregation as ``build_postings``,
@@ -385,7 +323,6 @@ def ensure_session_bm25_store(spark: SparkSession, sf_dir: str) -> tuple[str, st
         .groupBy("doc_id", "tok")
         .agg(F.count("*").cast("long").alias("tf"))
     )
-    write_posting_store(session_postings, postings_t)
     # doclens ride the session-shared quality frame (optimization r14,
     # guide §1.2): ``n_tokens`` there IS ``size(tokens(text))`` — the
     # identical expression ``build_doclens`` computes — so the store
@@ -395,90 +332,37 @@ def ensure_session_bm25_store(spark: SparkSession, sf_dir: str) -> tuple[str, st
     session_doclens = shared_text_quality(spark, sf_dir).select(
         "doc_id", F.col("n_tokens").alias("dl")
     )
-    write_doclen_store(session_doclens, doclens_t)
-    cache[key] = (postings_t, doclens_t)
-    return cache[key]
-
-
-def drop_session_bm25_store(spark: SparkSession, entry: tuple[str, str]) -> None:
-    """Drop a session store's managed tables AND their warehouse
-    directories.  Invalidation calls this so the disk is released with
-    the cache entry — without it every hypothesis/differential corpus
-    left two orphaned ``bm25_*`` table directories behind, accruing
-    without bound across runs."""
-    from cassandra_extractor_spark.operators.scale import drop_managed_table
-
-    for t in entry:
-        drop_managed_table(spark, t)
+    write_posting_store(session_postings, session_doclens, store_dir)
+    cache[key] = store_dir
+    return store_dir
 
 
 def release_session_bm25_stores(spark: SparkSession, sf_dir: str | None) -> None:
     """Forget this session's store for the (normalized) ``sf_dir`` —
-    every store when None — and drop its tables."""
+    every store when None — and remove it."""
     cache: dict = spark.__dict__.get("_ce_posting_store") or {}
     for key in [k for k in cache if sf_dir in (None, k)]:
-        drop_session_bm25_store(spark, cache.pop(key))
+        generations.drop(spark, cache.pop(key))
 
 
 def ns_bm25_store(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: BM25 over the session posting store — same rows
     as ``ns_bm25`` (the oracle is literally ns_bm25's SQL), but served
     from the persisted index instead of re-tokenizing the corpus."""
-    postings_t, doclens_t = ensure_session_bm25_store(spark, sf_dir)
-    return bm25_query_against_store(spark, postings_t, None, doclens_t, None)
+    return bm25_query_against_store(spark, ensure_session_bm25_store(spark, sf_dir))
 
 
-def _fold_max(
-    spark: SparkSession,
-    table: str,
-    delta_dir: str,
-    cols: list[str],
-    write: Callable[..., None],
-    n_buckets: int,
-) -> int:
-    """Fold ``delta_dir`` into a bucketed table (``maintenance.fold_delta``)
-    merging base ∪ delta on ``cols[:-1]`` with MAX of the last column —
-    idempotent under the crash window (base committed, delta not yet
-    removed): re-absorbing an already-folded batch changes nothing,
-    because both copies of a row are identical."""
-    *keys, val = cols
-    return fold_delta(
-        spark,
-        delta_dir,
-        cols,
-        lambda delta: spark.table(table)
-        .select(*cols)
-        .unionByName(delta)
-        .groupBy(*keys)
-        .agg(F.max(val).cast("long").alias(val)),
-        lambda staged: write(staged, table, n_buckets=n_buckets),
-    )
+def compact_posting_store(spark: SparkSession, store_dir: str) -> int:
+    """Fold the committed postings and doc-length deltas into a new
+    bucketed base with the store's bucket specs, in one commit
+    (``generations.fold``); batches that land meanwhile stay
+    outstanding.  The merge keeps MAX(tf) per (doc_id, tok) and MAX(dl)
+    per doc_id: a document ingested twice carries identical rows, so
+    re-absorbing it changes nothing.  Returns the delta rows absorbed,
+    both parts counted (0 = nothing to do)."""
 
+    def merge(part: str, rows: DataFrame) -> DataFrame:
+        *keys, val = _POSTING_COLS if part == "postings" else _DOCLEN_COLS
+        return rows.groupBy(*keys).agg(F.max(val).cast("long").alias(val))
 
-def compact_doclen_store(
-    spark: SparkSession, doclen_table: str, doclen_delta_dir: str, n_buckets: int = 16
-) -> int:
-    """Fold doc-length deltas into the bucketed stats base — same
-    idempotent MAX-collapse contract as ``compact_posting_store``
-    (a document's length never changes; base∩delta duplicates from the
-    crash window are identical rows).  Returns delta rows absorbed."""
-    return _fold_max(
-        spark, doclen_table, doclen_delta_dir, _DOCLEN_COLS, write_doclen_store, n_buckets
-    )
-
-
-def compact_posting_store(
-    spark: SparkSession, store_table: str, delta_dir: str, n_buckets: int = 16
-) -> int:
-    """Fold the committed delta batches into the bucketed base and
-    remove exactly those.  Idempotent under the crash window (base
-    committed, delta not yet removed): the merge dedupes on (doc_id,
-    tok) keeping MAX(tf) — re-absorbing an already-folded batch changes
-    nothing, because a given (doc, term) posting is identical in both
-    copies.  Safe between restarts or in-band from the owning query's
-    serial ``foreachBatch`` hook (``auto_compact``; safety argument in
-    ``streaming/maintenance.py``); run beside an active ingest from
-    outside it, it loses none of the ingest's batches, but retrieval
-    can read the base mid-rewrite.  Returns delta posting rows absorbed
-    (0 = nothing to do)."""
-    return _fold_max(spark, store_table, delta_dir, _POSTING_COLS, write_posting_store, n_buckets)
+    return generations.fold(spark, store_dir, merge)

@@ -16,6 +16,7 @@ from cassandra_extractor_spark.operators.similarity import (
     _load_embeddings,
     ivf_topk,
 )
+from cassandra_extractor_spark.streaming import generations
 from cassandra_extractor_spark.streaming.ann_stream import (
     ann_store_topk,
     compact_ann_store,
@@ -105,10 +106,11 @@ def test_stream_ann_ingest_parity_restart_and_compaction(
     # PARTITION PRUNING: the probe read touches only the probed cells'
     # directories (c_id is a partition column in the delta layout)
     qcells_max = queries.count() * IVF_PROBES
-    pruned = spark.read.parquet(f"{store}/delta").where(F.col("c_id").isin([999]))
+    delta = f"{generations.generation_dirs(store)[1][0]}/vectors"
+    pruned = spark.read.parquet(delta).where(F.col("c_id").isin([999]))
     assert pruned.count() == 0  # filter is a partition filter: no rows
     plan = (
-        spark.read.parquet(f"{store}/delta")
+        spark.read.parquet(delta)
         .where(F.col("c_id").isin([0, 1]))
         ._jdf.queryExecution()
         .executedPlan()
@@ -120,7 +122,7 @@ def test_stream_ann_ingest_parity_restart_and_compaction(
     # COMPACTION: delta folds into base; results unchanged; idempotent
     total = sum(sum(v.values()) for v in stats.values())
     assert compact_ann_store(spark, store) == total
-    assert not (tmp_path / "annstore" / "delta").exists()
+    assert generations.current(store)["deltas"] == []
     got2 = ann_store_topk(spark, store, queries).collect()
     assert [(r.q_id, r.n_id, r.cos, r.rank) for r in got2] == [
         (r.q_id, r.n_id, r.cos, r.rank) for r in want
@@ -132,8 +134,8 @@ def test_stream_ann_ingest_parity_restart_and_compaction(
 def test_ann_store_replay_overwrites_and_duplicates_never_double_rank(
     spark, tmp_path, corpus_parts
 ):
-    """A replayed batch overwrites its own directory (no duplicate
-    vectors); a crash-window duplicate (same vector in base AND delta)
+    """A replayed batch is skipped by its batch id (no duplicate
+    vectors); a vector ingested twice (same vector in base AND delta)
     cannot occupy two top-k slots."""
     queries, cent, slices = corpus_parts
     store = str(tmp_path / "annstore2")
@@ -142,16 +144,15 @@ def test_ann_store_replay_overwrites_and_duplicates_never_double_rank(
 
     centdf = spark.read.parquet(f"{store}/centroids")
     assigned = assign_cells(slices[0], centdf)
-    # simulate foreachBatch replay: same batch dir written twice
-    for _ in range(2):
-        assigned.write.mode("overwrite").partitionBy("c_id").parquet(
-            f"{store}/delta/batch=0"
-        )
-    n_rows = spark.read.parquet(f"{store}/delta").count()
+    # simulate foreachBatch replay: the same batch committed twice
+    assert generations.commit_delta(store, 0, {"vectors": assigned})
+    assert not generations.commit_delta(store, 0, {"vectors": assigned})
+    n_rows = generations.read(spark, store, "vectors").count()
     assert n_rows == assigned.count()
 
-    # crash-window duplicate: copy the SAME vectors into base too
-    assigned.write.mode("overwrite").partitionBy("c_id").parquet(f"{store}/base")
+    # the SAME vectors in the base too: fold them, then send them again
+    assert compact_ann_store(spark, store) == n_rows
+    assert generations.commit_delta(store, 1, {"vectors": assigned})
     out = ann_store_topk(spark, store, queries)
     pdf = out.toPandas()
     assert not pdf.duplicated(["q_id", "n_id"]).any()
@@ -201,8 +202,6 @@ def test_auto_compaction_mid_stream_ann(spark, sf_dir, tmp_path, corpus_parts):
     (tmp_path / "stage").mkdir()
     store = str(tmp_path / "annstore")
     init_ann_centroids(spark, cent, store)
-    import os
-
     for i, s in enumerate(slices):
         _write_batch(spark, tmp_path, src, i, s)
     q = stream_ann_ingest(
@@ -214,13 +213,13 @@ def test_auto_compaction_mid_stream_ann(spark, sf_dir, tmp_path, corpus_parts):
         auto_compact={"every_n_batches": 2, "threshold": 1e-9},
     )
     q.awaitTermination(120)
-    # fold ran exactly once (after batch 1): base exists, delta holds
-    # only batch 2
-    assert os.path.isdir(f"{store}/base")
-    batches = {
-        d for d in os.listdir(f"{store}/delta") if d.startswith("batch=")
-    }
-    assert batches == {"batch=2"}, batches
+    # fold ran exactly once (after batch 1): the base holds batches
+    # 0-1, the one outstanding delta only batch 2
+    base, deltas = generations.generation_dirs(store)
+    assert generations.current(store)["batch_id"] == 2 and len(deltas) == 1
+    delta_ids = {r.vec_id for r in spark.read.parquet(f"{deltas[0]}/vectors").collect()}
+    assert delta_ids == {r.vec_id for r in slices[2].collect()}
+    assert spark.read.parquet(f"{base}/vectors").count() == slices[0].count() + slices[1].count()
     got = ann_store_topk(spark, store, queries).collect()
     want = ivf_topk(_load_embeddings(spark, sf_dir)).collect()
     assert [(r.q_id, r.n_id, r.cos, r.rank) for r in got] == [

@@ -324,8 +324,10 @@ def test_maintenance_compact_route(spark, tmp_path):
     import pandas as pd
     from pyspark.sql import functions as F
 
+    from cassandra_extractor_spark.streaming import generations
     from cassandra_extractor_spark.streaming.posting_stream import (
         boolean_query_against_store,
+        build_doclens,
         build_postings,
         write_posting_store,
     )
@@ -334,12 +336,11 @@ def test_maintenance_compact_route(spark, tmp_path):
         pd.DataFrame({"doc_id": [0, 1], "text": ["join scan merge", "join scan"]}),
         "doc_id LONG, text STRING",
     )
-    write_posting_store(
-        build_postings(docs.where(F.col("doc_id") == 0)), "compact_route_t", n_buckets=2
-    )
-    delta = str(tmp_path / "delta")
-    build_postings(docs.where(F.col("doc_id") == 1)).write.mode("overwrite").parquet(
-        f"{delta}/batch=0"
+    store = str(tmp_path / "store")
+    first, second = docs.where(F.col("doc_id") == 0), docs.where(F.col("doc_id") == 1)
+    write_posting_store(build_postings(first), build_doclens(first), store, n_buckets=2)
+    generations.commit_delta(
+        store, 0, {"postings": build_postings(second), "doclens": build_doclens(second)}
     )
     actuator = Actuator(spark, MetricsRegistry())
     server = actuator.serve()
@@ -354,26 +355,18 @@ def test_maintenance_compact_route(spark, tmp_path):
             with urllib.request.urlopen(req) as r:
                 return json.loads(r.read())
 
-        out = post(
-            "/maintenance/compact",
-            {"store": "posting", "table": "compact_route_t", "delta_dir": delta,
-             "n_buckets": 2},
-        )
-        assert out == {"status": "compacted", "store": "posting", "absorbed": 2}
-        # the folded base answers alone (delta gone)
+        out = post("/maintenance/compact", {"store": "posting", "store_dir": store})
+        # doc 1's two postings and its one doc length
+        assert out == {"status": "compacted", "store": "posting", "absorbed": 3}
+        # the folded base answers alone (no delta outstanding)
+        assert generations.current(store)["deltas"] == []
         got = {
             r.doc_id
-            for r in boolean_query_against_store(
-                spark, "compact_route_t", delta, ("join", "scan")
-            ).collect()
+            for r in boolean_query_against_store(spark, store, ("join", "scan")).collect()
         }
         assert got == {0, 1}
         # idempotent second run: nothing to absorb
-        out2 = post(
-            "/maintenance/compact",
-            {"store": "posting", "table": "compact_route_t", "delta_dir": delta,
-             "n_buckets": 2},
-        )
+        out2 = post("/maintenance/compact", {"store": "posting", "store_dir": store})
         assert out2["absorbed"] == 0
         # unknown store kind -> 500 with the error surfaced
         try:
@@ -384,7 +377,6 @@ def test_maintenance_compact_route(spark, tmp_path):
             assert "unknown store kind" in json.loads(e.read())["error"]
     finally:
         server.shutdown()
-        spark.sql("DROP TABLE IF EXISTS compact_route_t")
 
 
 def test_auto_compaction_policy(spark, tmp_path):
@@ -397,7 +389,9 @@ def test_auto_compaction_policy(spark, tmp_path):
     import pandas as pd
     from pyspark.sql import functions as F
 
+    from cassandra_extractor_spark.streaming import generations
     from cassandra_extractor_spark.streaming.posting_stream import (
+        build_doclens,
         build_postings,
         write_posting_store,
     )
@@ -408,12 +402,11 @@ def test_auto_compaction_policy(spark, tmp_path):
         ),
         "doc_id LONG, text STRING",
     )
-    write_posting_store(
-        build_postings(docs.where(F.col("doc_id") < 7)), "policy_t", n_buckets=2
-    )
-    delta = str(tmp_path / "delta")
-    build_postings(docs.where(F.col("doc_id") == 7)).write.mode("overwrite").parquet(
-        f"{delta}/batch=0"
+    store = str(tmp_path / "store")
+    first, last = docs.where(F.col("doc_id") < 7), docs.where(F.col("doc_id") == 7)
+    write_posting_store(build_postings(first), build_doclens(first), store, n_buckets=2)
+    generations.commit_delta(
+        store, 0, {"postings": build_postings(last), "doclens": build_doclens(last)}
     )
     actuator = Actuator(spark, MetricsRegistry())
     server = actuator.serve()
@@ -428,8 +421,7 @@ def test_auto_compaction_policy(spark, tmp_path):
             with _rq.urlopen(req) as r:
                 return json.loads(r.read())
 
-        base = {"store": "posting", "table": "policy_t", "delta_dir": delta,
-                "n_buckets": 2}
+        base = {"store": "posting", "store_dir": store}
         # check: reports, never folds
         chk = post({**base, "mode": "check", "threshold": 0.01})
         assert chk["should_compact"] is True and chk["compacted"] is False
@@ -437,11 +429,11 @@ def test_auto_compaction_policy(spark, tmp_path):
         # below threshold: auto is a no-op
         skip = post({**base, "mode": "auto", "threshold": 1e9})
         assert skip["compacted"] is False and skip["status"] == "policy"
-        assert (tmp_path / "delta").exists()
+        assert len(generations.current(store)["deltas"]) == 1
         # above threshold: auto folds exactly once
         did = post({**base, "mode": "auto", "threshold": 0.01})
         assert did["compacted"] is True and did["absorbed"] > 0
-        assert not (tmp_path / "delta").exists()
+        assert generations.current(store)["deltas"] == []
         # idempotent re-run: policy sees an empty delta, no fold
         again = post({**base, "mode": "auto", "threshold": 0.01})
         assert again["compacted"] is False and again["delta_bytes"] == 0
@@ -455,24 +447,22 @@ def test_auto_compaction_policy(spark, tmp_path):
             assert "unknown compaction mode" in json.loads(e.read())["error"]
     finally:
         server.shutdown()
-        spark.sql("DROP TABLE IF EXISTS policy_t")
 
 
 def test_posting_policy_counts_doclen_and_validates_pair(spark, tmp_path):
-    """(a) doclen_table without doclen_delta_dir is rejected up front
-    with a ValueError (not a raw KeyError mid-fold → opaque HTTP 500),
-    in every mode and on the in-band entry point too; (b) the
-    size-ratio policy counts the doclen store's bytes on both sides,
-    so a doclen delta alone can trip auto-compaction even when the
-    posting delta is empty (postings compacted out-of-band)."""
+    """(a) a ``store_dir`` that holds no store is rejected with a
+    descriptive error (not an opaque failure mid-fold), in every mode
+    and on the in-band entry point too; (b) the size-ratio policy counts
+    the doc-length part's bytes on both sides, so a batch of zero-token
+    documents (doc lengths, no postings) alone trips auto-compaction."""
     import pandas as pd
     import pytest
 
-    from cassandra_extractor_spark.streaming.maintenance import compact
+    from cassandra_extractor_spark.streaming import generations
+    from cassandra_extractor_spark.streaming.maintenance import compact, dir_bytes
     from cassandra_extractor_spark.streaming.posting_stream import (
         build_doclens,
         build_postings,
-        write_doclen_store,
         write_posting_store,
     )
 
@@ -480,41 +470,36 @@ def test_posting_policy_counts_doclen_and_validates_pair(spark, tmp_path):
         pd.DataFrame({"doc_id": [0, 1], "text": ["join scan", "merge sort"]}),
         "doc_id LONG, text STRING",
     )
-    write_posting_store(build_postings(docs), "dlpol_t", n_buckets=2)
-    write_doclen_store(build_doclens(docs), "dlpol_dl", n_buckets=2)
-    dl_delta = str(tmp_path / "dl_delta")
-    build_doclens(docs).write.mode("overwrite").parquet(f"{dl_delta}/batch=0")
+    empty = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [2, 3], "text": ["", "  "]}), "doc_id LONG, text STRING"
+    )
+    store = str(tmp_path / "store")
+    write_posting_store(build_postings(docs), build_doclens(docs), store, n_buckets=2)
     actuator = Actuator(spark, MetricsRegistry())
-    try:
-        bad = {"table": "dlpol_t", "delta_dir": str(tmp_path / "nodelta"),
-               "doclen_table": "dlpol_dl"}
-        # the descriptive error fires on every entry point: the route in
-        # each mode, and the in-band hook's call (a due batch id)
-        for mode in ("force", "auto", "check"):
-            with pytest.raises(ValueError, match="doclen_table requires doclen_delta_dir"):
-                actuator.compact_store("posting", {**bad, "mode": mode})
-        with pytest.raises(ValueError, match="doclen_table requires doclen_delta_dir"):
-            compact(spark, "posting", {**bad, "mode": "auto", "every_n_batches": 1}, 0)
-        base_params = {"table": "dlpol_t", "delta_dir": str(tmp_path / "nodelta"),
-                       "mode": "check"}
-        dl_params = {**base_params, "doclen_table": "dlpol_dl",
-                     "doclen_delta_dir": dl_delta}
-        p0 = actuator.compact_store("posting", base_params)
-        p1 = actuator.compact_store("posting", dl_params)
-        b0, d0 = p0["base_bytes"], p0["delta_bytes"]
-        b1, d1 = p1["base_bytes"], p1["delta_bytes"]
-        assert d0 == 0 and d1 > 0  # doclen delta bytes count
-        assert b1 > b0  # and the doclen base counts on the base side
-        assert p1["compacted"] is False and (tmp_path / "dl_delta").exists()
-        # the doclen-only delta trips the auto policy and folds
-        out = actuator.compact_store(
-            "posting", {**dl_params, "mode": "auto", "threshold": 1e-9, "n_buckets": 2}
-        )
-        assert out["compacted"] is True and out["absorbed"] == 2
-        assert not (tmp_path / "dl_delta").exists()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS dlpol_t")
-        spark.sql("DROP TABLE IF EXISTS dlpol_dl")
+    # the descriptive error fires on every entry point: the route in
+    # each mode, and the in-band hook's call (a due batch id)
+    bad = {"store_dir": str(tmp_path / "nostore")}
+    for mode in ("force", "auto", "check"):
+        with pytest.raises(FileNotFoundError, match="no store under"):
+            actuator.compact_store("posting", {**bad, "mode": mode})
+    with pytest.raises(FileNotFoundError, match="no store under"):
+        compact(spark, "posting", {**bad, "mode": "auto", "every_n_batches": 1}, 0)
+
+    assert generations.commit_delta(
+        store, 0, {"postings": build_postings(empty), "doclens": build_doclens(empty)}
+    )
+    assert build_postings(empty).count() == 0
+    params = {"store_dir": store, "mode": "check"}
+    p1 = actuator.compact_store("posting", params)
+    base, [delta] = generations.generation_dirs(store)
+    # both parts count, on both sides
+    assert p1["delta_bytes"] == dir_bytes(delta) > dir_bytes(f"{delta}/postings")
+    assert p1["base_bytes"] == dir_bytes(base) > dir_bytes(f"{base}/postings")
+    assert p1["compacted"] is False and generations.current(store)["deltas"]
+    # the doclen-only delta trips the auto policy and folds
+    out = actuator.compact_store("posting", {**params, "mode": "auto", "threshold": 1e-9})
+    assert out["compacted"] is True and out["absorbed"] == 2
+    assert generations.current(store)["deltas"] == []
 
 
 def test_signature_and_ann_over_the_compact_route(spark, sf_dir, tmp_path):
@@ -535,21 +520,22 @@ def test_signature_and_ann_over_the_compact_route(spark, sf_dir, tmp_path):
         _load_embeddings,
     )
     from cassandra_extractor_spark.sources.catalog import load_table
+    from cassandra_extractor_spark.streaming import generations
     from cassandra_extractor_spark.streaming.ann_stream import (
         _read_centroids,
         assign_cells,
         init_ann_centroids,
     )
-    from cassandra_extractor_spark.streaming.maintenance import dir_bytes, table_location
+    from cassandra_extractor_spark.streaming.maintenance import dir_bytes
 
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    sig_delta = str(tmp_path / "sig_delta")
+    sig_store = str(tmp_path / "sig")
 
     def land_signature(b):
         part = docs.where(F.col("doc_id").between(100 * b, 100 * b + 99))
-        bands_for(minhash_signatures_for(part)).select("doc_id", "band", "sig").write.mode(
-            "overwrite"
-        ).parquet(f"{sig_delta}/batch={b}")
+        generations.commit_delta(
+            sig_store, b, {"bands": bands_for(minhash_signatures_for(part))}
+        )
 
     e = _load_embeddings(spark, sf_dir)
     cent = e.where(
@@ -561,68 +547,59 @@ def test_signature_and_ann_over_the_compact_route(spark, sf_dir, tmp_path):
 
     def land_ann(b):
         part = corpus.where(F.col("vec_id") % 3 == b)
-        assign_cells(part, _read_centroids(spark, store)).write.mode("overwrite").partitionBy(
-            "c_id"
-        ).parquet(f"{store}/delta/batch={b}")
-
-    # kind → (route params, the base's bytes, delta dir, land batch b)
-    cases = {
-        "signature": (
-            {"table": "route_sig", "delta_dir": sig_delta, "n_buckets": 2},
-            lambda: dir_bytes(table_location(spark, "route_sig")),
-            sig_delta,
-            land_signature,
-        ),
-        "ann": (
-            {"store_dir": store},
-            lambda: dir_bytes(f"{store}/base"),
-            f"{store}/delta",
-            land_ann,
-        ),
-    }
-    actuator = Actuator(spark, MetricsRegistry())
-    try:
-        write_signature_store(
-            bands_for(minhash_signatures_for(docs.where(F.col("doc_id") < 100))),
-            "route_sig",
-            n_buckets=2,
+        generations.commit_delta(
+            store, b, {"vectors": assign_cells(part, _read_centroids(spark, store))}
         )
-        for kind, (params, base_bytes, delta_dir, land) in cases.items():
-            if kind == "ann":  # the ANN base comes from a first fold
-                land(0)
-                assert actuator.compact_store(kind, params)["absorbed"] > 0
-            land(1)
-            delta_bytes = dir_bytes(delta_dir)
-            chk = actuator.compact_store(kind, {**params, "mode": "check", "threshold": 0.0})
-            assert chk["store"] == kind and chk["status"] == "policy"
-            assert chk["base_bytes"] == base_bytes() > 0
-            assert chk["delta_bytes"] == delta_bytes > 0
-            assert chk["should_compact"] is True and chk["compacted"] is False
-            assert dir_bytes(delta_dir) == delta_bytes  # check never folds
-            skip = actuator.compact_store(kind, {**params, "mode": "auto", "threshold": 1e9})
-            assert skip["should_compact"] is False and skip["compacted"] is False
-            assert dir_bytes(delta_dir) == delta_bytes
-            did = actuator.compact_store(kind, {**params, "mode": "auto", "threshold": 0.0})
-            assert did["status"] == "compacted" and did["compacted"] is True
-            assert did["absorbed"] > 0 and dir_bytes(delta_dir) == 0
-            land(2)
-            forced = actuator.compact_store(kind, params)
-            assert list(forced) == ["status", "store", "absorbed"]
-            assert forced["absorbed"] > 0 and dir_bytes(delta_dir) == 0
-            again = actuator.compact_store(kind, params)
-            assert again == {"status": "compacted", "store": kind, "absorbed": 0}
-            after = actuator.compact_store(kind, {**params, "mode": "check"})
-            assert after["delta_bytes"] == 0 and after["base_bytes"] == base_bytes()
-        # every folded row reached the base, once
-        sig = spark.table("route_sig")
-        assert sig.count() == sig.distinct().count()
-        want = bands_for(minhash_signatures_for(docs.where(F.col("doc_id") < 300)))
-        assert sig.count() == want.count()
-        base = spark.read.parquet(f"{store}/base")
-        assert base.count() == base.select("vec_id").distinct().count()
-        assert base.count() == assign_cells(corpus, _read_centroids(spark, store)).count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS route_sig")
+
+    def base_bytes(store_dir):
+        return dir_bytes(generations.generation_dirs(store_dir)[0])
+
+    def delta_bytes(store_dir):
+        return sum(map(dir_bytes, generations.generation_dirs(store_dir)[1]))
+
+    # kind → (store dir, land batch b)
+    cases = {"signature": (sig_store, land_signature), "ann": (store, land_ann)}
+    actuator = Actuator(spark, MetricsRegistry())
+    write_signature_store(
+        bands_for(minhash_signatures_for(docs.where(F.col("doc_id") < 100))),
+        sig_store,
+        n_buckets=2,
+    )
+    for kind, (store_dir, land) in cases.items():
+        params = {"store_dir": store_dir}
+        if kind == "ann":  # the ANN base comes from a first fold
+            land(0)
+            assert actuator.compact_store(kind, params)["absorbed"] > 0
+        land(1)
+        outstanding = delta_bytes(store_dir)
+        chk = actuator.compact_store(kind, {**params, "mode": "check", "threshold": 0.0})
+        assert chk["store"] == kind and chk["status"] == "policy"
+        assert chk["base_bytes"] == base_bytes(store_dir) > 0
+        assert chk["delta_bytes"] == outstanding > 0
+        assert chk["should_compact"] is True and chk["compacted"] is False
+        assert delta_bytes(store_dir) == outstanding  # check never folds
+        skip = actuator.compact_store(kind, {**params, "mode": "auto", "threshold": 1e9})
+        assert skip["should_compact"] is False and skip["compacted"] is False
+        assert delta_bytes(store_dir) == outstanding
+        did = actuator.compact_store(kind, {**params, "mode": "auto", "threshold": 0.0})
+        assert did["status"] == "compacted" and did["compacted"] is True
+        assert did["absorbed"] > 0 and delta_bytes(store_dir) == 0
+        land(2)
+        forced = actuator.compact_store(kind, params)
+        assert list(forced) == ["status", "store", "absorbed"]
+        assert forced["absorbed"] > 0 and delta_bytes(store_dir) == 0
+        again = actuator.compact_store(kind, params)
+        assert again == {"status": "compacted", "store": kind, "absorbed": 0}
+        after = actuator.compact_store(kind, {**params, "mode": "check"})
+        assert after["delta_bytes"] == 0 and after["base_bytes"] == base_bytes(store_dir)
+    # every folded row reached the base, once
+    sig = generations.read(spark, sig_store, "bands")
+    assert sig.count() == sig.distinct().count()
+    want = bands_for(minhash_signatures_for(docs.where(F.col("doc_id") < 300)))
+    assert sig.count() == want.count()
+    base = generations.read(spark, store, "vectors")
+    assert base.count() == base.select("vec_id").distinct().count()
+    assert base.count() == assign_cells(corpus, _read_centroids(spark, store)).count()
 
 
 def test_cdc_retention_over_control_plane(spark, tmp_path):

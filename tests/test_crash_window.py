@@ -1,195 +1,146 @@
-"""Round-13 (r12 verdict #7): direct simulation of the compaction
-CRASH WINDOW for all three incremental stores.  The two-phase fold
-commits its rewritten base and the process dies BEFORE the delta is
-removed; on restart the streaming batch replays and overwrites its
-delta partition.  Each store's read path claims duplicate tolerance —
-set-semantic candidate join (signatures), MAX-collapse on (doc_id,
-tok) / doc_id (postings / doclens), candidate dedup on (q_id, n_id)
-(ANN) — previously argued in ``streaming/maintenance.py``'s docstring;
-here the window is EXECUTED: kill between fold and delta-remove, then
-replay, and assert reads are row-identical to a cleanly-folded store,
-both inside the window and after the re-run fold completes it."""
+"""The compaction CRASH WINDOW, executed for all three incremental
+stores.  A fold commits its new base and the process dies BEFORE the
+fold's cleanup runs; on restart the streaming batch the fold absorbed
+replays.  The manifest records the last committed ``batch_id``, so the
+replay is skipped, and every read equals a cleanly-folded store's,
+both inside the window and after the next fold.  The read paths keep
+their duplicate tolerance — set-semantic candidate join (signatures),
+MAX-collapse on (doc_id, tok) / doc_id (postings / doclens), candidate
+dedup on (q_id, n_id) (ANN) — for a batch sent twice under two ids."""
 
 from __future__ import annotations
 
-import shutil
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 from cassandra_extractor_spark.sources.catalog import load_table
+from cassandra_extractor_spark.streaming import generations
 
 
 @pytest.fixture()
-def no_rmtree(monkeypatch):
-    """Simulates the crash: the fold's base rewrite commits but the
-    delta-removal step never runs (process died in between)."""
+def die_before_cleanup(monkeypatch):
+    """Runs ``fold()`` as a process that dies after the fold's commit and
+    before its cleanup; returns the generation dirs it left behind."""
 
-    def arm():
-        monkeypatch.setattr(shutil, "rmtree", lambda *a, **k: None)
+    def killed(*_a, **_k):
+        raise RuntimeError("killed after the fold's commit")
 
-    def disarm():
+    def run(store, fold):
+        before = set(os.listdir(os.path.join(store, "data")))
+        monkeypatch.setattr(generations, "_cleanup", killed)
+        with pytest.raises(RuntimeError, match="killed"):
+            fold()
         monkeypatch.undo()
+        m = generations.current(store)
+        assert m["deltas"] == [] and m["base"] not in before  # the fold committed
+        return before
 
-    return arm, disarm
+    return run
+
+
+def _replay_is_skipped(store, batch_id, parts):
+    m = generations.current(store)
+    assert not generations.commit_delta(store, batch_id, parts)
+    assert generations.current(store) == m
 
 
 def test_signature_store_crash_window_reads_identical(
-    spark, sf_dir, tmp_path, no_rmtree
+    spark, sf_dir, tmp_path, die_before_cleanup
 ):
     from cassandra_extractor_spark.operators.dedup import (
         bands_for,
         incremental_dedup,
+        incremental_dedup_against_store,
         minhash_signatures_for,
         write_signature_store,
     )
-    from cassandra_extractor_spark.streaming.dedup_stream import (
-        _BAND_COLS,
-        compact_signature_store,
-    )
+    from cassandra_extractor_spark.streaming.dedup_stream import compact_signature_store
 
-    arm, disarm = no_rmtree
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     base_docs = docs.where(F.col("doc_id") < 300)
     batch_docs = docs.where((F.col("doc_id") >= 300) & (F.col("doc_id") < 400))
     probe = docs.where((F.col("doc_id") >= 400) & (F.col("doc_id") < 450))
-    delta = str(tmp_path / "delta")
+    store, clean = str(tmp_path / "store"), str(tmp_path / "clean")
 
-    def batch_bands():
-        return bands_for(minhash_signatures_for(batch_docs)).select(*_BAND_COLS)
+    def batch():
+        return {"bands": bands_for(minhash_signatures_for(batch_docs))}
 
-    try:
-        write_signature_store(
-            bands_for(minhash_signatures_for(base_docs)), "cw_sig", n_buckets=4
-        )
-        batch_bands().write.mode("overwrite").parquet(f"{delta}/batch=0")
-        # the clean twin: everything folded, no delta, no crash
-        write_signature_store(
-            bands_for(minhash_signatures_for(base_docs.unionByName(batch_docs))),
-            "cw_sig_clean",
-            n_buckets=4,
-        )
-        want = sorted(
-            map(
-                tuple,
-                incremental_dedup(spark.table("cw_sig_clean"), probe)[0].collect(),
-            )
-        )
-        assert want, "probe window produced no duplicate pairs — fixture too weak"
+    write_signature_store(bands_for(minhash_signatures_for(base_docs)), store, n_buckets=4)
+    assert generations.commit_delta(store, 0, batch())
+    # the clean twin: everything in the base, no delta, no crash
+    write_signature_store(
+        bands_for(minhash_signatures_for(base_docs.unionByName(batch_docs))), clean, n_buckets=4
+    )
+    want = sorted(map(tuple, incremental_dedup_against_store(spark, clean, probe)[0].collect()))
+    assert want, "probe window produced no duplicate pairs — fixture too weak"
 
-        arm()
-        absorbed = compact_signature_store(spark, "cw_sig", delta, n_buckets=4)
-        disarm()
-        assert absorbed > 0
-        # replay: the restarted batch overwrites its own delta partition
-        batch_bands().write.mode("overwrite").parquet(f"{delta}/batch=0")
+    die_before_cleanup(store, lambda: compact_signature_store(spark, store))
+    _replay_is_skipped(store, 0, batch())
+    got = sorted(map(tuple, incremental_dedup_against_store(spark, store, probe)[0].collect()))
+    assert got == want
+    # the healed base equals the clean twin row-for-row
+    healed = generations.read(spark, store, "bands")
+    assert healed.count() == healed.distinct().count()
+    assert healed.count() == generations.read(spark, clean, "bands").count()
 
-        # INSIDE the window: base holds the folded bands AND the delta
-        # still exists — the gate's read (base ∪ delta) sees every band
-        # twice; the set-semantic candidate join must not care
-        gate_view = spark.table("cw_sig").select(*_BAND_COLS).unionByName(
-            spark.read.parquet(delta).select(*_BAND_COLS)
-        )
-        got = sorted(map(tuple, incremental_dedup(gate_view, probe)[0].collect()))
-        assert got == want
-
-        # the restarted fold COMPLETES the crashed one: re-absorbing the
-        # already-folded bands changes nothing, the delta finally drops
-        absorbed2 = compact_signature_store(spark, "cw_sig", delta, n_buckets=4)
-        assert absorbed2 > 0  # it did re-absorb the replayed duplicates
-        got2 = sorted(
-            map(
-                tuple,
-                incremental_dedup(
-                    spark.table("cw_sig").select(*_BAND_COLS), probe
-                )[0].collect(),
-            )
-        )
-        assert got2 == want
-        # and it SELF-HEALED: the healed base equals the clean twin
-        # row-for-row (no replayed duplicates carried forever)
-        healed = spark.table("cw_sig").select(*_BAND_COLS)
-        assert healed.count() == healed.distinct().count()
-        assert healed.count() == spark.table("cw_sig_clean").count()
-    finally:
-        spark.sql("DROP TABLE IF EXISTS cw_sig")
-        spark.sql("DROP TABLE IF EXISTS cw_sig_clean")
+    # the same batch sent again under a new id: every band sits in base
+    # AND delta; the set-semantic candidate join must not care, and the
+    # next fold collapses the duplicates
+    assert generations.commit_delta(store, 1, batch())
+    got = sorted(map(tuple, incremental_dedup_against_store(spark, store, probe)[0].collect()))
+    assert got == want
+    assert compact_signature_store(spark, store) > 0
+    gate_view = generations.read(spark, store, "bands")
+    assert sorted(map(tuple, incremental_dedup(gate_view, probe)[0].collect())) == want
+    assert gate_view.count() == generations.read(spark, clean, "bands").count()
 
 
 def test_posting_store_crash_window_reads_identical(
-    spark, sf_dir, tmp_path, no_rmtree
+    spark, sf_dir, tmp_path, die_before_cleanup
 ):
     from cassandra_extractor_spark.streaming.posting_stream import (
         bm25_query_against_store,
         build_doclens,
         build_postings,
-        compact_doclen_store,
         compact_posting_store,
-        write_doclen_store,
         write_posting_store,
     )
 
-    arm, disarm = no_rmtree
     docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
     base_docs = docs.where(F.col("doc_id") < 300)
     batch_docs = docs.where((F.col("doc_id") >= 300) & (F.col("doc_id") < 400))
     both = base_docs.unionByName(batch_docs)
-    delta, dl_delta = str(tmp_path / "delta"), str(tmp_path / "dl_delta")
+    store, clean = str(tmp_path / "store"), str(tmp_path / "clean")
 
-    def write_deltas():
-        build_postings(batch_docs).write.mode("overwrite").parquet(
-            f"{delta}/batch=0"
-        )
-        build_doclens(batch_docs).write.mode("overwrite").parquet(
-            f"{dl_delta}/batch=0"
-        )
+    def batch():
+        return {"postings": build_postings(batch_docs), "doclens": build_doclens(batch_docs)}
 
-    try:
-        write_posting_store(build_postings(base_docs), "cw_post", n_buckets=2)
-        write_doclen_store(build_doclens(base_docs), "cw_dl", n_buckets=2)
-        write_deltas()
-        write_posting_store(build_postings(both), "cw_post_clean", n_buckets=2)
-        write_doclen_store(build_doclens(both), "cw_dl_clean", n_buckets=2)
-        want = [
-            (r.doc_id, r.bm25)
-            for r in bm25_query_against_store(
-                spark, "cw_post_clean", None, "cw_dl_clean", None
-            ).collect()
-        ]
-        assert any(s != 0.0 for _, s in want)
+    def ranked(store_dir):
+        return [(r.doc_id, r.bm25) for r in bm25_query_against_store(spark, store_dir).collect()]
 
-        arm()
-        assert compact_posting_store(spark, "cw_post", delta, n_buckets=2) > 0
-        assert compact_doclen_store(spark, "cw_dl", dl_delta, n_buckets=2) > 0
-        disarm()
-        write_deltas()  # replay on restart
+    write_posting_store(build_postings(base_docs), build_doclens(base_docs), store, n_buckets=2)
+    assert generations.commit_delta(store, 0, batch())
+    write_posting_store(build_postings(both), build_doclens(both), clean, n_buckets=2)
+    want = ranked(clean)
+    assert any(s != 0.0 for _, s in want)
 
-        # INSIDE the window: every batch posting and doc-length exists
-        # in base AND delta; MAX-collapse on identical rows is identity
-        got = [
-            (r.doc_id, r.bm25)
-            for r in bm25_query_against_store(
-                spark, "cw_post", delta, "cw_dl", dl_delta
-            ).collect()
-        ]
-        assert got == want
+    die_before_cleanup(store, lambda: compact_posting_store(spark, store))
+    _replay_is_skipped(store, 0, batch())
+    assert ranked(store) == want
 
-        # completing fold: re-absorb is a no-op on values, drops deltas
-        assert compact_posting_store(spark, "cw_post", delta, n_buckets=2) > 0
-        assert compact_doclen_store(spark, "cw_dl", dl_delta, n_buckets=2) > 0
-        got2 = [
-            (r.doc_id, r.bm25)
-            for r in bm25_query_against_store(
-                spark, "cw_post", None, "cw_dl", None
-            ).collect()
-        ]
-        assert got2 == want
-    finally:
-        for t in ("cw_post", "cw_dl", "cw_post_clean", "cw_dl_clean"):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+    # sent again under a new id: every batch posting and doc length in
+    # base AND delta; MAX-collapse on identical rows is the identity
+    assert generations.commit_delta(store, 1, batch())
+    assert ranked(store) == want
+    assert compact_posting_store(spark, store) > 0
+    assert ranked(store) == want
 
 
-def test_ann_store_crash_window_reads_identical(spark, sf_dir, tmp_path, no_rmtree):
+def test_ann_store_crash_window_reads_identical(
+    spark, sf_dir, tmp_path, die_before_cleanup
+):
     from cassandra_extractor_spark.operators.similarity import (
         N_IVF_CENTROIDS,
         N_QUERIES,
@@ -203,7 +154,6 @@ def test_ann_store_crash_window_reads_identical(spark, sf_dir, tmp_path, no_rmtr
         init_ann_centroids,
     )
 
-    arm, disarm = no_rmtree
     e = _load_embeddings(spark, sf_dir)
     queries = e.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), "emb"
@@ -220,37 +170,32 @@ def test_ann_store_crash_window_reads_identical(spark, sf_dir, tmp_path, no_rmtr
     for d in (store, clean):
         init_ann_centroids(spark, cent, d)
 
-    def write_delta(d, df):
-        assign_cells(df, _read_centroids(spark, d)).write.mode(
-            "overwrite"
-        ).partitionBy("c_id").parquet(f"{d}/delta/batch=0")
+    def cells(d, df):
+        return {"vectors": assign_cells(df, _read_centroids(spark, d))}
 
     # base via a completed fold of the first half
-    write_delta(store, base_vecs)
+    assert generations.commit_delta(store, 0, cells(store, base_vecs))
     assert compact_ann_store(spark, store) > 0
-    write_delta(store, batch_vecs)
+    assert generations.commit_delta(store, 1, cells(store, batch_vecs))
     # clean twin: both halves folded in one clean pass
-    write_delta(clean, corpus)
+    assert generations.commit_delta(clean, 0, cells(clean, corpus))
     assert compact_ann_store(spark, clean) > 0
     want = list(map(tuple, ann_store_topk(spark, clean, queries).collect()))
 
-    arm()
-    assert compact_ann_store(spark, store) > 0
-    disarm()
-    write_delta(store, batch_vecs)  # replay on restart
+    die_before_cleanup(store, lambda: compact_ann_store(spark, store))
+    _replay_is_skipped(store, 1, cells(store, batch_vecs))
+    assert list(map(tuple, ann_store_topk(spark, store, queries).collect())) == want
 
-    # INSIDE the window: the batch's vectors sit in base AND delta —
-    # the probe dedupes candidates on (q_id, n_id), so no duplicate
-    # can occupy two top-k slots
-    got = list(map(tuple, ann_store_topk(spark, store, queries).collect()))
-    assert got == want
+    # sent again under a new id: the batch's vectors sit in base AND
+    # delta — the probe dedupes candidates on (q_id, n_id), so no
+    # duplicate can occupy two top-k slots
+    assert generations.commit_delta(store, 2, cells(store, batch_vecs))
+    assert list(map(tuple, ann_store_topk(spark, store, queries).collect())) == want
 
-    # the completing fold SELF-HEALS: the replayed duplicates collapse
-    # (dropDuplicates on vec_id in the fold), so the healed base equals
-    # the clean twin's corpus exactly — not just at read time
+    # the next fold collapses the duplicates (dropDuplicates on vec_id),
+    # so the base equals the clean twin's corpus exactly
     assert compact_ann_store(spark, store) > 0
-    got2 = list(map(tuple, ann_store_topk(spark, store, queries).collect()))
-    assert got2 == want
-    base = spark.read.parquet(f"{store}/base")
+    assert list(map(tuple, ann_store_topk(spark, store, queries).collect())) == want
+    base = generations.read(spark, store, "vectors")
     assert base.count() == base.select("vec_id").distinct().count()
-    assert base.count() == spark.read.parquet(f"{clean}/base").count()
+    assert base.count() == generations.read(spark, clean, "vectors").count()

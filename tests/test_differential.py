@@ -649,10 +649,10 @@ def test_doc_query_differential(spark, tmp_path_factory, name, texts):
 
         assert s_hash == o_hash, (name, len(sdf), len(odf))
     finally:
-        # evict this tmp corpus's chain/store entries AND drop any
-        # session BM25 store tables it built — without this every
-        # hypothesis example of ns_bm25_store leaves two managed
-        # tables orphaned in the warehouse
+        # evict this tmp corpus's chain/store entries AND remove any
+        # session BM25 store it built — without this every hypothesis
+        # example of ns_bm25_store leaves its store orphaned in the
+        # warehouse
         from cassandra_extractor_spark.operators.dedup import invalidate_dedup_chain
 
         invalidate_dedup_chain(spark, str(d))

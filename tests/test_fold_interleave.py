@@ -1,30 +1,36 @@
-"""A fold deletes only the delta batches it read.
+"""A fold commits on top of whatever committed meanwhile, and keeps the
+generations a planned read lists.
 
-Every incremental store's fold (``maintenance.fold_delta``) lists the
-committed ``batch=<id>`` dirs, folds exactly those and removes exactly
-those.  Here an ingest batch commits while the fold writes the new
-base — after the fold's read, before its delete.  For each of the four
-folds that batch must survive the fold and be absorbed by the next."""
+Every incremental store's fold (``generations.fold``) reads one
+manifest, writes base ∪ its deltas as a new base generation and
+commits it with exactly the deltas it folded taken out.  Here an ingest
+batch commits while the fold writes the new base — after the fold's
+read, before its commit.  For each of the four folds that batch must
+survive the fold and be absorbed by the next.  And a read planned
+before a fold and run after its commit returns the pre-fold rows
+whole: the fold deletes none of the files that read listed."""
 
 from __future__ import annotations
 
-import os
 from typing import Callable, NamedTuple
 
 import pandas as pd
 import pytest
 
 from cassandra_extractor_spark.operators import dedup
-from cassandra_extractor_spark.streaming import ann_stream, dedup_stream, posting_stream
+from cassandra_extractor_spark.streaming import (
+    ann_stream,
+    dedup_stream,
+    generations,
+    posting_stream,
+)
 
 
 class Store(NamedTuple):
-    delta: str
-    land: Callable[[int], int]  # write batch b to the delta; its row count
+    store_dir: str
+    part: str  # the part whose rows the checks look at
+    land: Callable[[int], int]  # commit batch b; its row count over all parts
     fold: Callable[[], int]
-    writer: tuple[object, str]  # (module, name) of the base writer the fold calls
-    base_ids: Callable[[], set[int]]
-    drop: Callable[[], None]
 
 
 def _batch_ids(b: int) -> list[int]:
@@ -42,59 +48,51 @@ def _ids(df) -> set[int]:
     return {r[0] for r in df.select(df.columns[0]).distinct().collect()}
 
 
-def _land(df, path) -> int:
-    df.write.mode("overwrite").parquet(path)
-    return df.count()
-
-
-def _table_store(spark, tmp_path, build, cols, writer, fold, table) -> Store:
-    """A store whose base is a bucketed managed table."""
-    delta = str(tmp_path / "delta")
-    getattr(*writer)(build(_docs(spark, [0, 1])).select(*cols), table, n_buckets=2)
-    return Store(
-        delta,
-        lambda b: _land(build(_docs(spark, _batch_ids(b))).select(*cols), f"{delta}/batch={b}"),
-        lambda: fold(spark, table, delta, n_buckets=2),
-        writer,
-        lambda: _ids(spark.table(table)),
-        lambda: spark.sql(f"DROP TABLE IF EXISTS {table}"),
-    )
+def _commit(store_dir: str, b: int, parts: dict) -> int:
+    assert generations.commit_delta(store_dir, b, parts)
+    return sum(df.count() for df in parts.values())
 
 
 def _signature(spark, tmp_path) -> Store:
-    return _table_store(
-        spark,
-        tmp_path,
-        lambda docs: dedup.bands_for(dedup.minhash_signatures_for(docs)),
-        dedup_stream._BAND_COLS,
-        (dedup, "write_signature_store"),
-        dedup_stream.compact_signature_store,
-        "fi_sig",
+    store = str(tmp_path / "sig")
+
+    def bands(ids):
+        return dedup.bands_for(dedup.minhash_signatures_for(_docs(spark, ids)))
+
+    dedup.write_signature_store(bands([0, 1]), store, n_buckets=2)
+    return Store(
+        store,
+        "bands",
+        lambda b: _commit(store, b, {"bands": bands(_batch_ids(b))}),
+        lambda: dedup_stream.compact_signature_store(spark, store),
+    )
+
+
+def _posting_store(spark, tmp_path, part: str) -> Store:
+    store = str(tmp_path / "post")
+
+    def parts(ids):
+        docs = _docs(spark, ids)
+        return {
+            "postings": posting_stream.build_postings(docs),
+            "doclens": posting_stream.build_doclens(docs),
+        }
+
+    posting_stream.write_posting_store(*parts([0, 1]).values(), store, n_buckets=2)
+    return Store(
+        store,
+        part,
+        lambda b: _commit(store, b, parts(_batch_ids(b))),
+        lambda: posting_stream.compact_posting_store(spark, store),
     )
 
 
 def _posting(spark, tmp_path) -> Store:
-    return _table_store(
-        spark,
-        tmp_path,
-        posting_stream.build_postings,
-        posting_stream._POSTING_COLS,
-        (posting_stream, "write_posting_store"),
-        posting_stream.compact_posting_store,
-        "fi_post",
-    )
+    return _posting_store(spark, tmp_path, "postings")
 
 
 def _doclen(spark, tmp_path) -> Store:
-    return _table_store(
-        spark,
-        tmp_path,
-        posting_stream.build_doclens,
-        posting_stream._DOCLEN_COLS,
-        (posting_stream, "write_doclen_store"),
-        posting_stream.compact_doclen_store,
-        "fi_dl",
-    )
+    return _posting_store(spark, tmp_path, "doclens")
 
 
 def _ann(spark, tmp_path) -> Store:
@@ -109,73 +107,87 @@ def _ann(spark, tmp_path) -> Store:
     )
 
     def land(b: int) -> int:
-        ids = _batch_ids(b)
         vecs = spark.createDataFrame(
-            pd.DataFrame({"vec_id": ids, "emb": [[1.0, 0.2], [0.1, 1.0]]}),
+            pd.DataFrame({"vec_id": _batch_ids(b), "emb": [[1.0, 0.2], [0.1, 1.0]]}),
             "vec_id LONG, emb ARRAY<DOUBLE>",
         )
         cells = ann_stream.assign_cells(vecs, ann_stream._read_centroids(spark, store))
-        cells.write.mode("overwrite").partitionBy("c_id").parquet(f"{store}/delta/batch={b}")
-        return len(ids)
+        return _commit(store, b, {"vectors": cells})
 
-    return Store(
-        f"{store}/delta",
-        land,
-        lambda: ann_stream.compact_ann_store(spark, store),
-        (ann_stream, "write_ann_base"),
-        lambda: _ids(spark.read.parquet(f"{store}/base").select("vec_id")),
-        lambda: None,
-    )
+    return Store(store, "vectors", land, lambda: ann_stream.compact_ann_store(spark, store))
 
 
 STORES = {"signature": _signature, "posting": _posting, "doclen": _doclen, "ann": _ann}
 
 
+def _base_ids(spark, store: Store) -> set[int]:
+    base, _deltas = generations.generation_dirs(store.store_dir)
+    return _ids(spark.read.parquet(f"{base}/{store.part}"))
+
+
 @pytest.mark.parametrize("kind", sorted(STORES))
 def test_batch_landing_mid_fold_survives_and_is_folded_next(spark, tmp_path, monkeypatch, kind):
     store = STORES[kind](spark, tmp_path)
-    try:
-        first = store.land(0)
-        module, name = store.writer
-        real = getattr(module, name)
-        landed = []
+    first = store.land(0)
+    real = generations._write
+    landed = []
 
-        def writer(*args, **kwargs):
-            real(*args, **kwargs)
+    def write(rows, path, spec, base):
+        real(rows, path, spec, base)
+        if base and not landed:
             landed.append(store.land(1))  # an ingest batch commits mid-fold
 
-        monkeypatch.setattr(module, name, writer)
-        assert store.fold() == first
-        monkeypatch.undo()
-        assert landed, "the fold never called its store's writer"
-        assert not os.path.exists(f"{store.delta}/batch=0")
-        assert os.path.exists(f"{store.delta}/batch=1/_SUCCESS")  # not folded, not lost
-        assert set(_batch_ids(1)).isdisjoint(store.base_ids())
+    monkeypatch.setattr(generations, "_write", write)
+    assert store.fold() == first
+    monkeypatch.undo()
+    assert landed, "the fold never wrote a base"
+    m = generations.current(store.store_dir)
+    _base, deltas = generations.generation_dirs(store.store_dir)
+    assert m["batch_id"] == 1 and len(deltas) == 1  # batch 0 folded, batch 1 not lost
+    assert _ids(spark.read.parquet(f"{deltas[0]}/{store.part}")) == set(_batch_ids(1))
+    assert set(_batch_ids(0)) <= _base_ids(spark, store)
+    assert set(_batch_ids(1)).isdisjoint(_base_ids(spark, store))
 
-        assert store.fold() == landed[0]
-        assert not os.path.exists(store.delta)
-        assert set(_batch_ids(0) + _batch_ids(1)) <= store.base_ids()
-    finally:
-        store.drop()
+    assert store.fold() == landed[0]
+    assert generations.current(store.store_dir)["deltas"] == []
+    assert set(_batch_ids(0) + _batch_ids(1)) <= _base_ids(spark, store)
+
+
+@pytest.mark.parametrize("kind", sorted(STORES))
+def test_read_planned_before_a_fold_keeps_its_rows(spark, tmp_path, kind):
+    """A read planned against base ∪ delta and run after the fold
+    committed the next base returns the rows it was planned on."""
+    store = STORES[kind](spark, tmp_path)
+    store.land(0)
+    planned = generations.read(spark, store.store_dir, store.part)
+    want = sorted(map(str, generations.read(spark, store.store_dir, store.part).collect()))
+    base = generations.current(store.store_dir)["base"]
+    assert store.fold() > 0
+    assert generations.current(store.store_dir)["base"] != base
+    generations.read(spark, store.store_dir, store.part)  # registers the new base
+    assert sorted(map(str, planned.collect())) == want
+    assert set(_batch_ids(0)) <= _ids(planned)
 
 
 def test_fold_removes_an_empty_batch_and_leaves_the_base(spark, tmp_path):
     """A committed batch with no rows (an empty micro-batch writes a
-    footer-only file) goes with the fold that lists it, and the base
+    footer-only file) goes with the fold that reads it, and the base
     stays as it was: the next policy check sees no delta."""
     from cassandra_extractor_spark.streaming.maintenance import compact
 
     store = _posting(spark, tmp_path)
-    try:
-        base = store.base_ids()
-        empty = spark.createDataFrame([], "doc_id LONG, text STRING")
-        cols = posting_stream._POSTING_COLS
-        assert _land(posting_stream.build_postings(empty).select(*cols), f"{store.delta}/batch=0") == 0
-        params = {"table": "fi_post", "delta_dir": store.delta, "n_buckets": 2}
-        did = compact(spark, "posting", {**params, "mode": "auto"})
-        assert (did["delta_bytes"] > 0, did["absorbed"]) == (True, 0)
-        assert not os.path.exists(f"{store.delta}/batch=0")
-        assert compact(spark, "posting", {**params, "mode": "check"})["delta_bytes"] == 0
-        assert store.base_ids() == base
-    finally:
-        store.drop()
+    base = generations.current(store.store_dir)["base"]
+    base_ids = _base_ids(spark, store)
+    empty = spark.createDataFrame([], "doc_id LONG, text STRING")
+    parts = {
+        "postings": posting_stream.build_postings(empty),
+        "doclens": posting_stream.build_doclens(empty),
+    }
+    assert _commit(store.store_dir, 0, parts) == 0
+    params = {"store_dir": store.store_dir}
+    did = compact(spark, "posting", {**params, "mode": "auto"})
+    assert (did["delta_bytes"] > 0, did["absorbed"]) == (True, 0)
+    assert generations.current(store.store_dir)["deltas"] == []
+    assert compact(spark, "posting", {**params, "mode": "check"})["delta_bytes"] == 0
+    assert generations.current(store.store_dir)["base"] == base
+    assert _base_ids(spark, store) == base_ids

@@ -1,6 +1,6 @@
 """Streaming posting-store maintenance: batch parity of store-backed
 conjunctive retrieval with ns_boolean_retrieval, bucket-pruned base
-scans, checkpoint restart, replay overwrite, and idempotent compaction
+scans, checkpoint restart, replay skip, and idempotent compaction
 (SURVEY §2.5 retrieval surface, streaming spelling)."""
 
 from __future__ import annotations
@@ -13,8 +13,10 @@ from pyspark.sql import functions as F
 
 from cassandra_extractor_spark.operators.text import BOOL_QUERY, ns_boolean_retrieval
 from cassandra_extractor_spark.sources.catalog import load_table
+from cassandra_extractor_spark.streaming import generations
 from cassandra_extractor_spark.streaming.posting_stream import (
     boolean_query_against_store,
+    build_doclens,
     build_postings,
     compact_posting_store,
     stream_posting_ingest,
@@ -43,6 +45,13 @@ def doc_slices(spark, sf_dir):
     )
 
 
+def _resend(store, batch_id, docs):
+    """Commit ``docs`` again as a new batch — a re-sent batch, the shape
+    that puts the same postings in base and delta at once."""
+    parts = {"postings": build_postings(docs), "doclens": build_doclens(docs)}
+    assert generations.commit_delta(store, batch_id, parts)
+
+
 def test_posting_store_parity_restart_pruning_compaction(
     spark, sf_dir, tmp_path, doc_slices
 ):
@@ -50,85 +59,74 @@ def test_posting_store_parity_restart_pruning_compaction(
     src = tmp_path / "src"
     src.mkdir()
     (tmp_path / "stage").mkdir()
-    table = "posting_store_t"
+    store = str(tmp_path / "store")
     # base store: first slice indexed in batch; the rest arrives live
-    write_posting_store(build_postings(slices[0]), table, n_buckets=4)
-    try:
-        stats: dict[int, tuple[int, int]] = {}
+    write_posting_store(build_postings(slices[0]), build_doclens(slices[0]), store, n_buckets=4)
+    stats: dict[int, tuple[int, int]] = {}
 
-        def sink(df, batch_id):
-            r = df.collect()[0]
-            stats[batch_id] = (r["n_docs"], r["n_postings"])
+    def sink(df, batch_id):
+        r = df.collect()[0]
+        stats[batch_id] = (r["n_docs"], r["n_postings"])
 
-        def run():
-            q = stream_posting_ingest(
-                spark,
-                source_path=str(src),
-                schema=SCHEMA,
-                delta_dir=str(tmp_path / "delta"),
-                checkpoint_dir=str(tmp_path / "ckpt"),
-                stats_sink=sink,
-            )
-            q.awaitTermination(120)
+    def run():
+        q = stream_posting_ingest(
+            spark,
+            source_path=str(src),
+            schema=SCHEMA,
+            store_dir=store,
+            checkpoint_dir=str(tmp_path / "ckpt"),
+            stats_sink=sink,
+        )
+        q.awaitTermination(120)
 
-        _write_batch(spark, tmp_path, src, 0, slices[1])
-        run()
-        assert 0 in stats and stats[0][1] > 0
-        # restart for the third slice
-        _write_batch(spark, tmp_path, src, 1, slices[2])
-        run()
-        assert set(stats) == {0, 1}
+    _write_batch(spark, tmp_path, src, 0, slices[1])
+    run()
+    assert 0 in stats and stats[0][1] > 0
+    # restart for the third slice
+    _write_batch(spark, tmp_path, src, 1, slices[2])
+    run()
+    assert set(stats) == {0, 1}
 
-        # PARITY: store-backed AND-retrieval == the batch operator
-        got = boolean_query_against_store(
-            spark, table, str(tmp_path / "delta"), BOOL_QUERY
-        ).collect()
-        want = ns_boolean_retrieval(spark, sf_dir).collect()
-        assert [(r.doc_id, r.tf_total, r.tf_min) for r in got] == [
-            (r.doc_id, r.tf_total, r.tf_min) for r in want
-        ]
-        assert got, "query matched no documents — fixture terms wrong"
+    # PARITY: store-backed AND-retrieval == the batch operator
+    got = boolean_query_against_store(spark, store, BOOL_QUERY).collect()
+    want = ns_boolean_retrieval(spark, sf_dir).collect()
+    assert [(r.doc_id, r.tf_total, r.tf_min) for r in got] == [
+        (r.doc_id, r.tf_total, r.tf_min) for r in want
+    ]
+    assert got, "query matched no documents — fixture terms wrong"
 
-        # BUCKET PRUNING: the base-side term-equality scan selects a
-        # strict subset of the 4 buckets
-        base = spark.table(table).where(F.col("tok").isin(*BOOL_QUERY))
-        plan = base._jdf.queryExecution().executedPlan().toString()
-        assert "SelectedBucketsCount" in plan, plan[:2000]
-        sel = plan.split("SelectedBucketsCount: ", 1)[1].split(" ", 1)[0]
-        assert int(sel) < 4, plan[:2000]
+    # BUCKET PRUNING: the base-side term-equality scan selects a
+    # strict subset of the 4 buckets
+    base = generations.read(spark, store, "postings").where(F.col("tok").isin(*BOOL_QUERY))
+    plan = base._jdf.queryExecution().executedPlan().toString()
+    assert "SelectedBucketsCount" in plan, plan[:2000]
+    sel = plan.split("SelectedBucketsCount: ", 1)[1].split(" ", 1)[0]
+    assert int(sel) < 4, plan[:2000]
 
-        # restart with no new files: nothing re-fires
-        seen = dict(stats)
-        run()
-        assert stats == seen
+    # restart with no new files: nothing re-fires
+    seen = dict(stats)
+    run()
+    assert stats == seen
 
-        # COMPACTION: delta folds into the bucketed base, results
-        # unchanged, idempotent; a second fold with a stale delta copy
-        # (crash window) changes nothing
-        import shutil
-
-        shutil.copytree(str(tmp_path / "delta"), str(tmp_path / "delta_stale"))
-        absorbed = compact_posting_store(spark, table, str(tmp_path / "delta"), 4)
-        assert absorbed == stats[0][1] + stats[1][1]
-        assert not (tmp_path / "delta").exists()
-        got2 = boolean_query_against_store(
-            spark, table, str(tmp_path / "delta"), BOOL_QUERY
-        ).collect()
-        assert [(r.doc_id, r.tf_total, r.tf_min) for r in got2] == [
-            (r.doc_id, r.tf_total, r.tf_min) for r in want
-        ]
-        # crash-window replay: re-absorb the stale copy → identical store
-        absorbed2 = compact_posting_store(spark, table, str(tmp_path / "delta_stale"), 4)
-        assert absorbed2 == absorbed
-        got3 = boolean_query_against_store(
-            spark, table, str(tmp_path / "delta"), BOOL_QUERY
-        ).collect()
-        assert [(r.doc_id, r.tf_total, r.tf_min) for r in got3] == [
-            (r.doc_id, r.tf_total, r.tf_min) for r in want
-        ]
-        assert compact_posting_store(spark, table, str(tmp_path / "delta"), 4) == 0
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
+    # COMPACTION: both parts' deltas fold into the bucketed base,
+    # results unchanged, idempotent; the same documents sent again
+    # and folded change nothing
+    absorbed = compact_posting_store(spark, store)
+    n_docs = slices[1].count() + slices[2].count()  # one doc length each
+    assert absorbed == stats[0][1] + stats[1][1] + n_docs
+    assert generations.current(store)["deltas"] == []
+    got2 = boolean_query_against_store(spark, store, BOOL_QUERY).collect()
+    assert [(r.doc_id, r.tf_total, r.tf_min) for r in got2] == [
+        (r.doc_id, r.tf_total, r.tf_min) for r in want
+    ]
+    _resend(store, 2, slices[1].unionByName(slices[2]))
+    absorbed2 = compact_posting_store(spark, store)
+    assert absorbed2 == absorbed
+    got3 = boolean_query_against_store(spark, store, BOOL_QUERY).collect()
+    assert [(r.doc_id, r.tf_total, r.tf_min) for r in got3] == [
+        (r.doc_id, r.tf_total, r.tf_min) for r in want
+    ]
+    assert compact_posting_store(spark, store) == 0
 
 
 def _session_warehouse(body: str) -> Path:
@@ -157,8 +155,9 @@ def test_exiting_process_releases_its_session_store(sf_dir):
     """A process that builds a session BM25 store and exits WITHOUT
     invalidating (a gate run, a bench, a notebook) leaves nothing
     behind: a local session given no warehouse gets a private one,
-    removed at exit, and the checkout's ``spark-warehouse`` gets
-    nothing (it was where every tool's tables went)."""
+    which holds the store and is removed at exit, and the checkout's
+    ``spark-warehouse`` gets nothing (it was where every tool's tables
+    went)."""
     shared = ROOT / "spark-warehouse"
     before = _listing(shared)
     wh = _session_warehouse(f"""
@@ -167,9 +166,9 @@ from cassandra_extractor_spark.session import get_spark
 from cassandra_extractor_spark.streaming.posting_stream import (
     ensure_session_bm25_store)
 spark = get_spark("leaky-session", master="local[4]", shuffle_partitions=4)
-tables = ensure_session_bm25_store(spark, {sf_dir!r})
+store = ensure_session_bm25_store(spark, {sf_dir!r})
 wh = spark.conf.get("spark.sql.warehouse.dir").removeprefix("file:")
-assert all(os.path.isdir(os.path.join(wh, t)) for t in tables), os.listdir(wh)
+assert os.path.dirname(store) == wh and os.path.isdir(store), os.listdir(wh)
 print("WAREHOUSE", wh)
 """)
     assert not wh.exists(), wh
@@ -215,11 +214,7 @@ def test_auto_compaction_mid_stream(spark, sf_dir, tmp_path):
     stays value-identical to the batch reference across the fold."""
     from cassandra_extractor_spark.operators.text import ns_bm25
     from cassandra_extractor_spark.streaming.maintenance import batch_due
-    from cassandra_extractor_spark.streaming.posting_stream import (
-        bm25_query_against_store,
-        build_doclens,
-        write_doclen_store,
-    )
+    from cassandra_extractor_spark.streaming.posting_stream import bm25_query_against_store
 
     # cadence contract: every_n_batches=2 fires at batch ids 1, 3, …
     assert [b for b in range(6) if batch_due({"every_n_batches": 2}, b)] == [1, 3, 5]
@@ -229,47 +224,38 @@ def test_auto_compaction_mid_stream(spark, sf_dir, tmp_path):
     src = tmp_path / "src"
     src.mkdir()
     (tmp_path / "stage").mkdir()
-    table, dl_table = "autoc_post_t", "autoc_dl_t"
+    store = str(tmp_path / "store")
     base = docs.where(F.col("doc_id") % 4 == 3)
-    write_posting_store(build_postings(base), table, n_buckets=2)
-    write_doclen_store(build_doclens(base), dl_table, n_buckets=2)
-    try:
-        for i in range(3):
-            _write_batch(
-                spark, tmp_path, src, i, docs.where(F.col("doc_id") % 4 == i)
-            )
-        q = stream_posting_ingest(
-            spark,
-            source_path=str(src),
-            schema=SCHEMA,
-            delta_dir=str(tmp_path / "delta"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            doclen_delta_dir=str(tmp_path / "dl_delta"),
-            store_table=table,
-            auto_compact={
-                "every_n_batches": 2,
-                "threshold": 1e-9,
-                "n_buckets": 2,
-                "doclen_table": dl_table,
-            },
-        )
-        q.awaitTermination(180)
-        # the fold ran EXACTLY once (at batch 1): batches 0-1 absorbed
-        # into both bases, batch 2's delta still pending on both sides
-        assert {p.name for p in (tmp_path / "delta").iterdir()} == {"batch=2"}
-        assert {p.name for p in (tmp_path / "dl_delta").iterdir()} == {"batch=2"}
-        # read parity across the fold: store-backed BM25 == the
-        # corpus-recomputing batch operator over the same documents
-        got = bm25_query_against_store(
-            spark, table, str(tmp_path / "delta"), dl_table, str(tmp_path / "dl_delta")
-        )
-        want = ns_bm25(spark, sf_dir)
-        assert [(r.doc_id, r.bm25) for r in got.collect()] == [
-            (r.doc_id, r.bm25) for r in want.collect()
-        ]
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {dl_table}")
+    write_posting_store(build_postings(base), build_doclens(base), store, n_buckets=2)
+    for i in range(3):
+        _write_batch(spark, tmp_path, src, i, docs.where(F.col("doc_id") % 4 == i))
+    q = stream_posting_ingest(
+        spark,
+        source_path=str(src),
+        schema=SCHEMA,
+        store_dir=store,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        auto_compact={"every_n_batches": 2, "threshold": 1e-9},
+    )
+    q.awaitTermination(180)
+    # the fold ran EXACTLY once (at batch 1): batches 0-1 absorbed
+    # into both parts' base, batch 2's delta still pending on both
+    assert generations.current(store)["batch_id"] == 2
+    base_dir, deltas = generations.generation_dirs(store)
+    assert len(deltas) == 1
+    batch2 = {r.doc_id for r in docs.where(F.col("doc_id") % 4 == 2).collect()}
+    for part in ("postings", "doclens"):
+        ids = {r.doc_id for r in spark.read.parquet(f"{deltas[0]}/{part}").collect()}
+        assert ids <= batch2 and ids, part
+        base_ids = {r.doc_id for r in spark.read.parquet(f"{base_dir}/{part}").collect()}
+        assert base_ids.isdisjoint(batch2), part
+    # read parity across the fold: store-backed BM25 == the
+    # corpus-recomputing batch operator over the same documents
+    got = bm25_query_against_store(spark, store)
+    want = ns_bm25(spark, sf_dir)
+    assert [(r.doc_id, r.bm25) for r in got.collect()] == [
+        (r.doc_id, r.bm25) for r in want.collect()
+    ]
 
 
 def test_build_postings_matches_python(spark):
@@ -290,80 +276,60 @@ def test_bm25_store_ranked_retrieval_parity_and_pruning(
     spark, sf_dir, tmp_path, doc_slices
 ):
     """Store-backed RANKED retrieval (round-11): BM25 served from the
-    posting + doc-length stores must be row-identical to the corpus-
-    recomputing ns_bm25, across the streamed base+delta split, after
-    compaction of BOTH stores, and the term-filtered base scan must be
-    bucket-pruned."""
+    posting store's postings + doc lengths must be row-identical to the
+    corpus-recomputing ns_bm25, across the streamed base+delta split,
+    after compaction of BOTH parts, and the term-filtered base scan
+    must be bucket-pruned."""
     from cassandra_extractor_spark.operators.text import ns_bm25
-    from cassandra_extractor_spark.streaming.posting_stream import (
-        bm25_query_against_store,
-        build_doclens,
-        compact_doclen_store,
-        write_doclen_store,
-    )
+    from cassandra_extractor_spark.streaming.posting_stream import bm25_query_against_store
 
     docs, slices = doc_slices
     src = tmp_path / "src"
     src.mkdir()
     (tmp_path / "stage").mkdir()
-    table, dl_table = "bm25p_t", "bm25d_t"
-    write_posting_store(build_postings(slices[0]), table, n_buckets=4)
-    write_doclen_store(build_doclens(slices[0]), dl_table, n_buckets=4)
-    try:
-        q = stream_posting_ingest(
-            spark,
-            source_path=str(src),
-            schema=SCHEMA,
-            delta_dir=str(tmp_path / "delta"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            doclen_delta_dir=str(tmp_path / "dl_delta"),
-        )
-        _write_batch(spark, tmp_path, src, 0, slices[1])
-        _write_batch(spark, tmp_path, src, 1, slices[2])
-        q.awaitTermination(120)
-        q = stream_posting_ingest(
-            spark,
-            source_path=str(src),
-            schema=SCHEMA,
-            delta_dir=str(tmp_path / "delta"),
-            checkpoint_dir=str(tmp_path / "ckpt"),
-            doclen_delta_dir=str(tmp_path / "dl_delta"),
-        )
-        q.awaitTermination(120)
+    store = str(tmp_path / "store")
+    write_posting_store(build_postings(slices[0]), build_doclens(slices[0]), store, n_buckets=4)
+    q = stream_posting_ingest(
+        spark,
+        source_path=str(src),
+        schema=SCHEMA,
+        store_dir=store,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    _write_batch(spark, tmp_path, src, 0, slices[1])
+    _write_batch(spark, tmp_path, src, 1, slices[2])
+    q.awaitTermination(120)
+    q = stream_posting_ingest(
+        spark,
+        source_path=str(src),
+        schema=SCHEMA,
+        store_dir=store,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+    )
+    q.awaitTermination(120)
 
-        want = [(r.doc_id, r.bm25) for r in ns_bm25(spark, sf_dir).collect()]
-        ranked = bm25_query_against_store(
-            spark, table, str(tmp_path / "delta"), dl_table, str(tmp_path / "dl_delta")
-        )
-        assert [(r.doc_id, r.bm25) for r in ranked.collect()] == want
-        assert any(s != 0.0 for _, s in want), "fixture query matched nothing"
+    want = [(r.doc_id, r.bm25) for r in ns_bm25(spark, sf_dir).collect()]
+    ranked = bm25_query_against_store(spark, store)
+    assert [(r.doc_id, r.bm25) for r in ranked.collect()] == want
+    assert any(s != 0.0 for _, s in want), "fixture query matched nothing"
 
-        # bucket pruning on the term-filtered posting base
-        base = spark.table(table).where(F.col("tok").isin("table", "hash", "spark"))
-        plan = base._jdf.queryExecution().executedPlan().toString()
-        assert "SelectedBucketsCount" in plan, plan[:2000]
+    # bucket pruning on the term-filtered posting base
+    base = generations.read(spark, store, "postings").where(
+        F.col("tok").isin("table", "hash", "spark")
+    )
+    plan = base._jdf.queryExecution().executedPlan().toString()
+    assert "SelectedBucketsCount" in plan, plan[:2000]
 
-        # compact BOTH stores (doclen fold idempotent incl. crash window)
-        import shutil
-
-        shutil.copytree(str(tmp_path / "dl_delta"), str(tmp_path / "dl_stale"))
-        absorbed = compact_posting_store(spark, table, str(tmp_path / "delta"), 4)
-        assert absorbed > 0
-        dl_absorbed = compact_doclen_store(spark, dl_table, str(tmp_path / "dl_delta"), 4)
-        assert dl_absorbed > 0
-        ranked2 = bm25_query_against_store(
-            spark, table, str(tmp_path / "delta"), dl_table, str(tmp_path / "dl_delta")
-        )
-        assert [(r.doc_id, r.bm25) for r in ranked2.collect()] == want
-        assert (
-            compact_doclen_store(spark, dl_table, str(tmp_path / "dl_stale"), 4)
-            == dl_absorbed
-        )
-        ranked3 = bm25_query_against_store(spark, table, None, dl_table, None)
-        assert [(r.doc_id, r.bm25) for r in ranked3.collect()] == want
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        spark.sql(f"DROP TABLE IF EXISTS {dl_table}")
+    # compact BOTH parts in one call (idempotent: the same documents
+    # sent again and folded change nothing)
+    absorbed = compact_posting_store(spark, store)
+    assert absorbed > 0
+    ranked2 = bm25_query_against_store(spark, store)
+    assert [(r.doc_id, r.bm25) for r in ranked2.collect()] == want
+    _resend(store, 2, slices[1].unionByName(slices[2]))
+    assert compact_posting_store(spark, store) == absorbed
+    ranked3 = bm25_query_against_store(spark, store)
+    assert [(r.doc_id, r.bm25) for r in ranked3.collect()] == want
 
 
 def test_ns_bm25_store_registry_entry(spark, sf_dir):
@@ -382,21 +348,22 @@ def test_ns_bm25_store_registry_entry(spark, sf_dir):
     assert ensure_session_bm25_store(spark, sf_dir) is first
     # invalidation contract: the shared-chain invalidator is SCOPED —
     # it evicts this corpus's entry (other corpora built earlier in the
-    # session legitimately keep theirs) and drops its managed tables
+    # session legitimately keep theirs) and removes its store
+    import os
+
     from cassandra_extractor_spark.operators.dedup import _norm_dir, invalidate_dedup_chain
 
+    assert os.path.isdir(first)
     invalidate_dedup_chain(spark, sf_dir)
     assert _norm_dir(sf_dir) not in spark.__dict__["_ce_posting_store"]
-    for t in first:
-        assert not spark.catalog.tableExists(t), t
+    assert not os.path.exists(first)
 
 
 def test_two_process_store_isolation(spark, sf_dir):
     """Two engine sessions on one corpus + one warehouse must not
     destroy each other's session BM25 stores.  Round-12 regression
-    test: the on-disk table tag was keyed by corpus dir alone, and
-    every session build starts with DROP TABLE + rmtree — so a second
-    session's build clobbered the first's tables mid-read (observed as
+    test: the on-disk tag was keyed by corpus dir alone, so a second
+    session's build clobbered the first's store mid-read (observed as
     transient ns_bm25_store hash failures under two concurrent gate
     runs).  The tag now folds in the applicationId; this test proves a
     second process's build+invalidate cycle leaves the first session's
@@ -414,8 +381,8 @@ def test_two_process_store_isolation(spark, sf_dir):
     assert [(r.doc_id, r.bm25) for r in ns_bm25_store(spark, sf_dir).collect()] == want
     mine = ensure_session_bm25_store(spark, sf_dir)
     # second session, SAME warehouse dir: build the store for the SAME
-    # corpus, read it, then invalidate (dropping only its own
-    # app-id-tagged tables) and exit
+    # corpus, read it, then invalidate (removing only its own
+    # app-id-tagged store) and exit
     wh = spark.conf.get("spark.sql.warehouse.dir")
     script = f"""
 import sys
@@ -426,10 +393,10 @@ from cassandra_extractor_spark.streaming.posting_stream import (
     ensure_session_bm25_store, ns_bm25_store)
 spark = get_spark("second-session", master="local[4]", shuffle_partitions=4,
                   extra_conf={{"spark.sql.warehouse.dir": {wh!r}}})
-tables = ensure_session_bm25_store(spark, {sf_dir!r})
+store = ensure_session_bm25_store(spark, {sf_dir!r})
 n = ns_bm25_store(spark, {sf_dir!r}).count()
 invalidate_dedup_chain(spark, {sf_dir!r})
-print("TABLES", *tables)
+print("STORE", store)
 print("ROWS", n)
 spark.stop()
 """
@@ -442,42 +409,13 @@ spark.stop()
     )
     assert out.returncode == 0, out.stderr[-2000:]
     lines = dict(
-        l.split(" ", 1) for l in out.stdout.splitlines() if l.startswith(("TABLES", "ROWS"))
+        l.split(" ", 1) for l in out.stdout.splitlines() if l.startswith(("STORE", "ROWS"))
     )
-    theirs = tuple(lines["TABLES"].split())
     assert int(lines["ROWS"]) == len(want)
-    # distinct per-session table names — the isolation mechanism
-    assert set(theirs).isdisjoint(set(mine))
+    # distinct per-session store dirs — the isolation mechanism
+    assert lines["STORE"] != mine
     # and the parent's CACHED store survived the other session's full
     # build/read/invalidate cycle, value-identical (pre-nonce this read
-    # failed: the tables had been dropped out from under the cache)
+    # failed: the store had been removed out from under the cache)
     assert ensure_session_bm25_store(spark, sf_dir) is mine
     assert [(r.doc_id, r.bm25) for r in ns_bm25_store(spark, sf_dir).collect()] == want
-
-
-def test_auto_compact_doclen_param_pairing_rejected_at_start(spark, tmp_path):
-    """Round-13 (advisor): BOTH directions of the doclen param pairing
-    fail at stream start — doclen_table without doclen_delta_dir
-    (round-12 guard) AND doclen_delta_dir without doclen_table (the
-    converse: doclen deltas silently excluded from the size-ratio
-    policy would grow unboundedly while only postings fold)."""
-    src = tmp_path / "src"
-    src.mkdir()
-    common = dict(
-        source_path=str(src),
-        schema=SCHEMA,
-        delta_dir=str(tmp_path / "delta"),
-        checkpoint_dir=str(tmp_path / "ckpt"),
-        store_table="never_created",
-    )
-    with pytest.raises(ValueError, match="doclen_table requires doclen_delta_dir"):
-        stream_posting_ingest(
-            spark, auto_compact={"doclen_table": "dl_t"}, **common
-        )
-    with pytest.raises(ValueError, match="requires doclen_table"):
-        stream_posting_ingest(
-            spark,
-            doclen_delta_dir=str(tmp_path / "dl_delta"),
-            auto_compact={"threshold": 0.2},
-            **common,
-        )

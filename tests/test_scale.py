@@ -3,22 +3,30 @@ skew-bounded plans."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
-from cassandra_extractor_spark.operators.scale import write_bucketed
 from cassandra_extractor_spark.sources.catalog import load_table
+from cassandra_extractor_spark.streaming import generations
 
 
-def test_bucketed_join_has_no_shuffle(spark, sf_dir):
+def _bucketed(spark, store_dir, df, key, n_buckets):
+    """``df`` as the bucketed base of a one-part store, read back."""
+    bucket = {"cols": [key], "sort": [key], "n_buckets": n_buckets}
+    generations.create(store_dir, {"rows": (df, {"bucket": bucket})})
+    return generations.read(spark, store_dir, "rows")
+
+
+def test_bucketed_join_has_no_shuffle(spark, sf_dir, tmp_path):
     orders = load_table(spark, "orders", sf_dir)
     customer = load_table(spark, "customer", sf_dir)
-    write_bucketed(orders, "orders_b", ["o_custkey"], 8, sort_cols=["o_custkey"])
-    write_bucketed(
-        customer.withColumnRenamed("c_custkey", "o_custkey"), "customer_b", ["o_custkey"], 8,
-        sort_cols=["o_custkey"],
+    a = _bucketed(spark, str(tmp_path / "orders"), orders, "o_custkey", 8)
+    b = _bucketed(
+        spark,
+        str(tmp_path / "customer"),
+        customer.withColumnRenamed("c_custkey", "o_custkey"),
+        "o_custkey",
+        8,
     )
-    a, b = spark.table("orders_b"), spark.table("customer_b")
     # disable broadcast so the join strategy decision is about shuffles
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
@@ -28,25 +36,19 @@ def test_bucketed_join_has_no_shuffle(spark, sf_dir):
         assert joined.count() == orders.count()
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS orders_b")
-        spark.sql("DROP TABLE IF EXISTS customer_b")
 
 
-def test_layout_optimized_write_prunes_files(spark, sf_dir):
-    """A table bucketed on its key serves a point lookup on that key
+def test_layout_optimized_write_prunes_files(spark, sf_dir, tmp_path):
+    """A base bucketed on its key serves a point lookup on that key
     from one bucket's files: the scan prunes the other buckets."""
     orders = load_table(spark, "orders", sf_dir)
-    write_bucketed(orders, "orders_layout", ["o_orderkey"], 16)
-    try:
-        back = spark.table("orders_layout")
-        key = orders.select(F.min("o_orderkey")).first()[0]
-        point = back.where(F.col("o_orderkey") == key)
-        plan = point._jdf.queryExecution().executedPlan().toString()
-        assert "SelectedBucketsCount: 1 out of 16" in plan, plan
-        assert point.count() == 1
-        assert back.count() == orders.count()  # correctness preserved
-    finally:
-        spark.sql("DROP TABLE IF EXISTS orders_layout")
+    back = _bucketed(spark, str(tmp_path / "orders"), orders, "o_orderkey", 16)
+    key = orders.select(F.min("o_orderkey")).first()[0]
+    point = back.where(F.col("o_orderkey") == key)
+    plan = point._jdf.queryExecution().executedPlan().toString()
+    assert "SelectedBucketsCount: 1 out of 16" in plan, plan
+    assert point.count() == 1
+    assert back.count() == orders.count()  # correctness preserved
 
 
 def test_salted_join_matches_plain(spark, sf_dir):
@@ -460,7 +462,7 @@ def test_aqe_splits_skewed_join_partitions(spark):
                 spark.conf.set(k, v)
 
 
-def test_signature_store_join_never_shuffles_the_store(spark, sf_dir):
+def test_signature_store_join_never_shuffles_the_store(spark, sf_dir, tmp_path):
     """Persisted-signature incremental dedup: the store side of the
     bucket join must read WITHOUT an Exchange (bucketed layout reused);
     results must equal the in-memory incremental_dedup on the same
@@ -477,11 +479,12 @@ def test_signature_store_join_never_shuffles_the_store(spark, sf_dir):
     base_docs = docs.where(F.col("doc_id") >= 250)
     new_docs = docs.where(F.col("doc_id") < 250)
     base_bands = bands_for(minhash_signatures_for(base_docs))
-    write_signature_store(base_bands, "sig_store_t", n_buckets=8)
+    store = str(tmp_path / "sig_store")
+    write_signature_store(base_bands, store, n_buckets=8)
 
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        pairs, _nb = incremental_dedup_against_store(spark, "sig_store_t", new_docs)
+        pairs, _nb = incremental_dedup_against_store(spark, store, new_docs)
         plan = pairs._jdf.queryExecution().executedPlan().toString()
         # the store-side scan appears with its bucket layout and no
         # Exchange between it and the join: Sort sits DIRECTLY over the
@@ -498,7 +501,6 @@ def test_signature_store_join_never_shuffles_the_store(spark, sf_dir):
         assert store_rows == {tuple(r) for r in mem_pairs.collect()}
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        spark.sql("DROP TABLE IF EXISTS sig_store_t")
 
 
 def test_join_strategy_hints_control_physical_plan(spark, sf_dir):
@@ -930,53 +932,3 @@ def test_mixture_ops_materialize_the_corpus_pass_once(spark, sf_dir):
     # (n_domains rows), never over corpus rows
     opt = ns_waterfill_cap(spark, sf_dir)._jdf.queryExecution().optimizedPlan()
     assert _window_paths_pass_aggregate(opt), opt.toString()
-
-
-def _warehouse_path(spark, table):
-    import os
-
-    wh = spark.conf.get("spark.sql.warehouse.dir")
-    wh = wh[len("file:"):] if wh.startswith("file:") else wh
-    return os.path.join(wh, table)
-
-
-def test_write_bucketed_heals_orphan_table_location(spark):
-    """A run killed mid-write leaves ``<warehouse>/<table>`` behind with
-    no catalog row and no ``_SUCCESS`` marker; the next bucketed write
-    of that name must replace it instead of failing with
-    LOCATION_ALREADY_EXISTS."""
-    import os
-
-    table = "orphan_heal_b"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    orphan = _warehouse_path(spark, table)
-    os.makedirs(orphan, exist_ok=True)
-    with open(os.path.join(orphan, "part-00000-stale.parquet"), "w") as fh:
-        fh.write("left behind by a killed run")
-    try:
-        write_bucketed(spark.range(100).withColumnRenamed("id", "k"), table, ["k"], 4)
-        assert spark.table(table).count() == 100
-        assert not os.path.exists(os.path.join(orphan, "part-00000-stale.parquet"))
-        assert os.path.exists(os.path.join(orphan, "_SUCCESS"))
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-
-
-def test_write_bucketed_keeps_a_complete_unknown_location(spark):
-    """A complete location this session's catalog does not know may be
-    another live session's table (the catalog is per process): the
-    write fails loudly and the data survives."""
-    import os
-
-    table = "foreign_live_b"
-    spark.sql(f"DROP TABLE IF EXISTS {table}")
-    loc = _warehouse_path(spark, table)
-    spark.range(7).write.mode("overwrite").parquet(loc)  # ends with _SUCCESS
-    try:
-        with pytest.raises(Exception, match="LOCATION_ALREADY_EXISTS"):
-            write_bucketed(spark.range(100).withColumnRenamed("id", "k"), table, ["k"], 4)
-        assert spark.read.parquet(loc).count() == 7
-    finally:
-        import shutil
-
-        shutil.rmtree(loc, ignore_errors=True)

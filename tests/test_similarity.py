@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 
 from cassandra_extractor_spark.operators.similarity import N_QUERIES, TOP_K, ns_ann_cosine_topk
@@ -563,3 +564,52 @@ def test_neardup_embedding_oracle_drops_nan_and_zero_vectors():
     )
     pairs = con.execute(NS_ORACLES["ns_neardup_embedding"]).fetchall()
     assert [(v1, v2) for v1, v2, _ in pairs] == [(1, 2)]
+
+
+@pytest.mark.parametrize("kernel", ["dot", "l2sq"])
+def test_arrow_fold_kernels_bit_identical_to_hof_fold(spark, kernel):
+    """The Arrow-vectorized fold kernels must be BIT-identical to the
+    interpreted zip_with/aggregate folds they replaced at the
+    candidate-pair/corpus-encode hotspots — including the edge cases:
+    null arrays, unequal lengths (fold → NULL), empty arrays (fold
+    init 0.0), mixed widths in one batch, NaN/Inf elements, and
+    catastrophic-cancellation sums where any reassociation would
+    change the low bits."""
+    import math
+    import struct
+
+    if kernel == "dot":
+        from cassandra_extractor_spark.operators.dedup import dot_batch as dot
+        from cassandra_extractor_spark.operators.dedup import dot as dot_hof
+    else:
+        from cassandra_extractor_spark.operators.similarity import (
+            _l2sq_batch as dot,
+            _l2sq as dot_hof,
+        )
+
+    rows = [
+        ([0.1] * 64, [0.3] * 64),
+        ([1e16, 1.0, -1e16, 1.0], [1.0, 1.0, 1.0, 1.0]),  # cancellation
+        ([0.1, 0.2, 0.3, 0.4, 0.5, 0.6], [-0.6, 0.5, -0.4, 0.3, -0.2, 0.1]),
+        ([float("nan"), 1.0], [1.0, 1.0]),
+        ([float("inf"), 1.0], [1.0, -1.0]),
+        ([], []),
+        (None, [1.0, 2.0]),
+        ([1.0, 2.0], None),
+        ([1.0, 2.0, 3.0], [1.0, 2.0]),  # unequal → NULL
+        ([-0.0, 0.0], [0.0, -0.0]),  # signed-zero init path
+        ([1e-308, 1e-308], [1e-308, 1e-308]),  # subnormal products
+    ]
+    df = spark.createDataFrame(rows, "x: array<double>, y: array<double>")
+    got = df.select(dot(F.col("x"), F.col("y")).alias("d")).collect()
+    ref = df.select(dot_hof(F.col("x"), F.col("y")).alias("d")).collect()
+
+    def bits(v):
+        if v is None:
+            return None
+        return struct.pack("<d", v)  # NaN payload + signed zero visible
+
+    assert [bits(r["d"]) for r in got] == [bits(r["d"]) for r in ref]
+    # sanity on the known cases
+    assert got[5]["d"] == 0.0 and got[6]["d"] is None and got[8]["d"] is None
+    assert math.isnan(got[3]["d"])

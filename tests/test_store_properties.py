@@ -34,15 +34,17 @@ def test_posting_store_split_invariance(spark, tmp_path_factory, texts, split, o
     """base ∪ delta retrieval is split-invariant and matches a direct
     Python recomputation of the conjunctive query — for ANY split AND
     any base∩delta overlap (docs in [split−overlap, split) live in
-    BOTH sides: the crash-window duplicate shape, round 13
+    BOTH sides: the shape of a batch sent twice, round 13
     hypothesis-varied instead of only directly simulated)."""
+    from cassandra_extractor_spark.streaming import generations
     from cassandra_extractor_spark.streaming.posting_stream import (
         boolean_query_against_store,
+        build_doclens,
         build_postings,
         write_posting_store,
     )
 
-    d = tmp_path_factory.mktemp("pstore")
+    store = str(tmp_path_factory.mktemp("pstore"))
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
         "doc_id LONG, text STRING",
@@ -50,26 +52,20 @@ def test_posting_store_split_invariance(spark, tmp_path_factory, texts, split, o
     split = min(split, len(texts))
     base = docs.where(F.col("doc_id") < split)
     rest = docs.where(F.col("doc_id") >= max(0, split - overlap))
-    write_posting_store(build_postings(base), "posting_prop_t", n_buckets=2)
-    try:
-        if rest.count():
-            build_postings(rest).write.mode("overwrite").parquet(
-                f"{d}/delta/batch=0"
-            )
-        got = {
-            r.doc_id: (r.tf_total, r.tf_min)
-            for r in boolean_query_against_store(
-                spark, "posting_prop_t", f"{d}/delta", _TERMS
-            ).collect()
-        }
-        want = {}
-        for i, t in enumerate(texts):
-            tf = collections.Counter(w for w in t.split(" ") if w)
-            if all(tf[q] > 0 for q in _TERMS):
-                want[i] = (sum(tf[q] for q in _TERMS), min(tf[q] for q in _TERMS))
-        assert got == want
-    finally:
-        spark.sql("DROP TABLE IF EXISTS posting_prop_t")
+    write_posting_store(build_postings(base), build_doclens(base), store, n_buckets=2)
+    if rest.count():
+        parts = {"postings": build_postings(rest), "doclens": build_doclens(rest)}
+        generations.commit_delta(store, 0, parts)
+    got = {
+        r.doc_id: (r.tf_total, r.tf_min)
+        for r in boolean_query_against_store(spark, store, _TERMS).collect()
+    }
+    want = {}
+    for i, t in enumerate(texts):
+        tf = collections.Counter(w for w in t.split(" ") if w)
+        if all(tf[q] > 0 for q in _TERMS):
+            want[i] = (sum(tf[q] for q in _TERMS), min(tf[q] for q in _TERMS))
+    assert got == want
 
 
 # ---------------------------------------------------------------- ANN cells
@@ -93,8 +89,8 @@ _vec6 = st.lists(
 )
 def test_ann_store_split_invariance(spark, tmp_path_factory, vecs, split, overlap):
     """The cell-partitioned store built from ANY base/delta split of
-    the corpus — including any base∩delta overlap (the crash-window
-    duplicate shape: vectors in both batches) — answers probe top-k
+    the corpus — including any base∩delta overlap (vectors sent in
+    both batches) — answers probe top-k
     row-identically to the batch IVF operator over the same vectors
     and quantizer."""
     from cassandra_extractor_spark.operators.similarity import (
@@ -102,6 +98,7 @@ def test_ann_store_split_invariance(spark, tmp_path_factory, vecs, split, overla
         N_QUERIES,
         ivf_topk,
     )
+    from cassandra_extractor_spark.streaming import generations
     from cassandra_extractor_spark.streaming.ann_stream import (
         ann_store_topk,
         assign_cells,
@@ -127,9 +124,7 @@ def test_ann_store_split_invariance(spark, tmp_path_factory, vecs, split, overla
         (corpus.where(F.col("vec_id") < split), corpus.where(F.col("vec_id") >= lo))
     ):
         if part.count():
-            assign_cells(part, centdf).write.mode("overwrite").partitionBy(
-                "c_id"
-            ).parquet(f"{store}/delta/batch={i}")
+            generations.commit_delta(store, i, {"vectors": assign_cells(part, centdf)})
     queries = e.where(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("q_id"), "emb"
     )
@@ -155,23 +150,23 @@ def test_ann_store_split_invariance(spark, tmp_path_factory, vecs, split, overla
     overlap=st.integers(min_value=0, max_value=5),
 )
 def test_bm25_store_split_invariance(spark, tmp_path_factory, texts, split, overlap):
-    """Store-backed BM25 (postings + doclen stats, ANY base/delta
-    split — both stores split the same way an ingest would, including
-    any base∩delta overlap: the crash-window duplicate shape on BOTH
-    the posting and doclen sides simultaneously) is row-identical to
+    """Store-backed BM25 (postings + doc lengths, ANY base/delta
+    split — both parts split the same way an ingest would, including
+    any base∩delta overlap: documents sent twice, on BOTH the posting
+    and doclen sides simultaneously) is row-identical to
     the corpus-recomputing bm25_rank over the same docs, INCLUDING
     zero-token documents that have no posting rows but still shape
     avgdl and appear with score 0."""
     from cassandra_extractor_spark.operators.text import bm25_rank
+    from cassandra_extractor_spark.streaming import generations
     from cassandra_extractor_spark.streaming.posting_stream import (
         bm25_query_against_store,
         build_doclens,
         build_postings,
-        write_doclen_store,
         write_posting_store,
     )
 
-    d = tmp_path_factory.mktemp("bm25store")
+    store = str(tmp_path_factory.mktemp("bm25store"))
     docs = spark.createDataFrame(
         pd.DataFrame({"doc_id": range(len(texts)), "text": texts}),
         "doc_id LONG, text STRING",
@@ -179,27 +174,15 @@ def test_bm25_store_split_invariance(spark, tmp_path_factory, texts, split, over
     split = min(split, len(texts))
     base = docs.where(F.col("doc_id") < split)
     rest = docs.where(F.col("doc_id") >= max(0, split - overlap))
-    write_posting_store(build_postings(base), "bm25_prop_t", n_buckets=2)
-    write_doclen_store(build_doclens(base), "bm25_prop_dl", n_buckets=2)
-    try:
-        if rest.count():
-            build_postings(rest).write.mode("overwrite").parquet(
-                f"{d}/delta/batch=0"
-            )
-            build_doclens(rest).write.mode("overwrite").parquet(
-                f"{d}/dl_delta/batch=0"
-            )
-        got = [
-            (r.doc_id, r.bm25)
-            for r in bm25_query_against_store(
-                spark, "bm25_prop_t", f"{d}/delta", "bm25_prop_dl", f"{d}/dl_delta",
-                terms=_TERMS,
-            ).collect()
-        ]
-        want = [
-            (r.doc_id, r.bm25) for r in bm25_rank(docs, query=_TERMS).collect()
-        ]
-        assert got == want
-    finally:
-        spark.sql("DROP TABLE IF EXISTS bm25_prop_t")
-        spark.sql("DROP TABLE IF EXISTS bm25_prop_dl")
+    write_posting_store(build_postings(base), build_doclens(base), store, n_buckets=2)
+    if rest.count():
+        parts = {"postings": build_postings(rest), "doclens": build_doclens(rest)}
+        generations.commit_delta(store, 0, parts)
+    got = [
+        (r.doc_id, r.bm25)
+        for r in bm25_query_against_store(spark, store, terms=_TERMS).collect()
+    ]
+    want = [
+        (r.doc_id, r.bm25) for r in bm25_rank(docs, query=_TERMS).collect()
+    ]
+    assert got == want

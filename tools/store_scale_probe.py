@@ -67,6 +67,7 @@ def main() -> None:
     )
     from cassandra_extractor_spark.session import get_spark
     from cassandra_extractor_spark.sources.catalog import load_table
+    from cassandra_extractor_spark.streaming import generations
     from cassandra_extractor_spark.streaming.ann_stream import (
         _read_centroids,
         ann_store_topk,
@@ -78,7 +79,6 @@ def main() -> None:
         bm25_query_against_store,
         build_doclens,
         build_postings,
-        write_doclen_store,
         write_posting_store,
     )
 
@@ -130,41 +130,33 @@ def main() -> None:
         )
 
         # --- signature store: fixed batch gate vs store size
-        sig_table = f"ssp_sig_{tag}"
-        write_signature_store(
-            bands_for(minhash_signatures_for(docs)), sig_table, n_buckets=16
-        )
+        sig_dir = os.path.join(BASE, tag, "sig_store")
+        write_signature_store(bands_for(minhash_signatures_for(docs)), sig_dir, n_buckets=16)
         probe(
             "dedup_gate_fixed_batch",
             tag,
-            lambda: incremental_dedup_against_store(spark, sig_table, probe_docs)[0],
+            lambda: incremental_dedup_against_store(spark, sig_dir, probe_docs)[0],
         )
 
-        # --- posting + doclen store: fixed ranked query vs store size
-        post_table, dl_table = f"ssp_post_{tag}", f"ssp_dl_{tag}"
-        write_posting_store(build_postings(docs), post_table, n_buckets=16)
-        write_doclen_store(build_doclens(docs), dl_table, n_buckets=16)
-        probe(
-            "bm25_fixed_query",
-            tag,
-            lambda: bm25_query_against_store(spark, post_table, None, dl_table, None),
-        )
+        # --- posting store (postings + doc lengths): fixed ranked query vs store size
+        post_dir = os.path.join(BASE, tag, "posting_store")
+        write_posting_store(build_postings(docs), build_doclens(docs), post_dir, n_buckets=16)
+        probe("bm25_fixed_query", tag, lambda: bm25_query_against_store(spark, post_dir))
 
         # --- ANN store: fixed 10-query probe vs store size
         store_dir = os.path.join(BASE, tag, "ann_store")
-        if not os.path.isdir(f"{store_dir}/base"):
+        if generations.current(store_dir) is None:
             init_ann_centroids(spark, cent, store_dir)
-            assign_cells(emb_tier, _read_centroids(spark, store_dir)).write.mode(
-                "overwrite"
-            ).partitionBy("c_id").parquet(f"{store_dir}/delta/batch=0")
+            cells = assign_cells(emb_tier, _read_centroids(spark, store_dir))
+            generations.commit_delta(store_dir, 0, {"vectors": cells})
             compact_ann_store(spark, store_dir)
         probe(
             "ann_probe_fixed_queries", tag, lambda: ann_store_topk(spark, store_dir, queries)
         )
         warmed = True
 
-        for t in (sig_table, post_table, dl_table):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
+        for d in (sig_dir, post_dir):
+            generations.drop(spark, d)
 
     lines = [
         "## store-size probe — fixed batch/query against a 10× store (round 13)",
